@@ -33,6 +33,11 @@ ENGINE_CONF = {
     # serialized shuffle writer instead of the M-×-R-file bypass-merge
     # path at small reduce counts (see GraftSession.configure)
     "spark.shuffle.sort.bypassMergeThreshold": "8",
+    # generated-class cache sized above one pipeline's working set, keyed
+    # without the AQE-order-dependent stage id, so warm runs do not
+    # recompile (maxEntries is static: set before the session starts)
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

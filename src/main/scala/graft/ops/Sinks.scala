@@ -87,7 +87,7 @@ object Sinks {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (nOut >= files.length) return (files.length, files.length)
     val tmp = tmp0
-    spark.read.parquet(path).coalesce(nOut)
+    Tables.parquet(spark, path).coalesce(nOut)
       .write.mode("overwrite").parquet(tmp.toString)
     val bak = bak0
     if (!fs.rename(p, bak))
@@ -405,14 +405,14 @@ object Sinks {
       val vs = versions(spark, path)
       if (vs.isEmpty)
         throw new java.util.NoSuchElementException(s"no snapshots at $path")
-      spark.read.parquet(vs.map(v => s"$path/${dataDirOf(spark, path, v)}"): _*)
+      Tables.parquet(spark, vs.map(v => s"$path/${dataDirOf(spark, path, v)}"): _*)
     }
 
     /** Time-travel read: `version = None` reads the latest snapshot. */
     def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
       val v = version.orElse(versions(spark, path).lastOption)
         .getOrElse(throw new java.util.NoSuchElementException(s"no snapshots at $path"))
-      spark.read.parquet(s"$path/${dataDirOf(spark, path, v)}")
+      Tables.parquet(spark, s"$path/${dataDirOf(spark, path, v)}")
     }
 
     /** Drop all but the newest `keepLast` snapshots: their manifests go

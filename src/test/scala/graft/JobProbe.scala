@@ -6,7 +6,10 @@ package graft
   * that triggered them). Runs one registered query (1 warm run on the
   * warm dir + 1 measured run on the target), then prints every job of
   * the measured run in submission order: id, wall (submit→end), task
-  * count, task-time sum, stage count, and the job's callsite.
+  * count, task-time sum, stage count, and the job's callsite. The
+  * header line carries the measured run's codegen compile count next to
+  * its job count: a warm run that still compiles means the generated-
+  * class cache is thrashing.
   *
   * `SPARK_GRAFT_CPUS=32 java -cp <test-classes:classes:spark jars>
   *   graft.JobProbe <name> <sfDir> [warmDir]`
@@ -43,12 +46,14 @@ object JobProbe {
     val warm = if (args.length > 2) args(2) else d
     SparkEntry.queries(name)(spark, warm).count()
     jobs.synchronized(jobs.clear()); stageTasks.synchronized(stageTasks.clear())
+    val c0 = org.apache.spark.SparkTestHooks.codegenCompiles
     val t0 = System.nanoTime()
     val n = SparkEntry.queries(name)(spark, d).count()
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiles = org.apache.spark.SparkTestHooks.codegenCompiles - c0
     Thread.sleep(300) // listener bus drain
     println(f"[jobprobe] $name wall=$wall%.2f s rows=$n cpus=$cpus parts=$parts " +
-      f"jobs=${jobs.size}")
+      f"jobs=${jobs.size} compiles=$compiles")
     var wallSum = 0L
     jobs.synchronized(jobs.toSeq).foreach { case (id, j) =>
       val (nt, sum) = j.stages.toSeq

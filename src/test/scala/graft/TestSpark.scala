@@ -8,4 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(cpus = 4, partitions = 8)
+
+  /** The smallest scale of the shared fixture tables (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
 }
