@@ -90,8 +90,7 @@ object PyBridge {
     import org.apache.spark.sql.functions.{col, concat_ws, md5}
     val pop = df.select(col("doc_id"), col("source"), col("n_chars"),
       col("text"), col("lang"))
-    val alloc = ops.Relational.neymanAlloc(
-      pop.select("doc_id", "source", "n_chars"), budget).localCheckpoint()
+    val alloc = ops.Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), budget)
     ops.Scale.quotaSample(pop, Seq("source"),
       md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
       Right(alloc.select(col("source"), col("n_h"))),
@@ -99,15 +98,9 @@ object PyBridge {
   }
 
   /** One-pass corpus card over a `(source, lang, n_chars, text)` frame,
-    * materialized (one row per source — bounded) with the card's shared
-    * scan released, exactly the release pipeline's corpusCard stage.
+    * materialized as a local relation sorted by source (one row per
+    * source — bounded), exactly the release pipeline's corpusCard stage.
     */
-  def corpusCardFrame(spark: SparkSession, df: DataFrame): DataFrame = {
-    val (report, release) = ops.Llm.corpusCard(
-      df.select("source", "lang", "n_chars", "text"))
-    val rows = report.collect()
-    release()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), ops.Llm.corpusCardSchema)
-  }
+  def corpusCardFrame(spark: SparkSession, df: DataFrame): DataFrame =
+    ops.Llm.corpusCardLocal(df.select("source", "lang", "n_chars", "text"))
 }

@@ -168,6 +168,47 @@ object TextKernels {
     new GenericArrayData(out)
   }
 
+  /** Distinct 3-word shingles of `split(text, ' ')` — the LSH verify
+    * set. Unlike [[tokenOffsets]], Spark's `split` keeps EVERY empty
+    * token, trailing ones included, so tokens are exactly the
+    * space-separated byte runs (spaces + 1 of them). A shingle is three
+    * consecutive tokens joined by U+0001: the byte slice from the first
+    * token's start to the third token's end with its two separator
+    * spaces replaced by 0x01 — one copy per shingle, no decode. Fewer
+    * than 3 tokens → the whole text as the single element. Distinct in
+    * first-occurrence order (`array_distinct`). Linear in the text
+    * length; the `transform` formulation re-split the text per shingle.
+    */
+  def shingleSet(u: UTF8String): ArrayData = {
+    val nb = u.numBytes
+    val bytes = u.getBytes
+    var spaces = 0
+    var i = 0
+    while (i < nb) { if (bytes(i) == ' '.toByte) spaces += 1; i += 1 }
+    if (spaces < 2) return new GenericArrayData(Array[Any](UTF8String.fromBytes(bytes)))
+    // starts(t) = first byte of token t; starts(nTok) = nb + 1 so that
+    // token t always ends at starts(t + 1) - 1
+    val nTok = spaces + 1
+    val starts = new Array[Int](nTok + 1)
+    var t = 1
+    i = 0
+    while (i < nb) { if (bytes(i) == ' '.toByte) { starts(t) = i + 1; t += 1 }; i += 1 }
+    starts(nTok) = nb + 1
+    val seen = new java.util.HashSet[UTF8String]()
+    val out = new java.util.ArrayList[Any]()
+    t = 0
+    while (t + 2 < nTok) {
+      val s = starts(t)
+      val sh = java.util.Arrays.copyOfRange(bytes, s, starts(t + 3) - 1)
+      sh(starts(t + 1) - 1 - s) = 1
+      sh(starts(t + 2) - 1 - s) = 1
+      val v = UTF8String.fromBytes(sh)
+      if (seen.add(v)) out.add(v)
+      t += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
   /** 64-bit SimHash: sign of per-bit ±1 votes over splitmix-mixed FNV
     * word hashes. Mirrors the UDF reference (`Llm.simhashUdf`): a NULL
     * document casts no votes (sig 0), an empty document votes once for

@@ -424,6 +424,34 @@ case class WordNGrams(child: Expression, n: Int, stride: Int) extends UnaryExpre
     copy(child = newChild)
 }
 
+/** Distinct 3-word shingles of a document as a codegen expression over
+  * the byte-level [[TextKernels.shingleSet]] kernel: the LSH verify set,
+  * equal to `array_distinct` over the `transform` of `split(text, " ")`
+  * windows joined by U+0001 (fewer than 3 tokens → `[text]`). NULL →
+  * NULL, as the builtin form gives under ANSI mode.
+  */
+case class ShingleSet(child: Expression) extends UnaryExpression {
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.types.{ArrayType, StringType}
+
+  override def prettyName: String = "graft_shingles"
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires STRING input, got ${child.dataType.sql}")
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.shingleSet(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.shingleSet($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
+    copy(child = newChild)
+}
+
 /** Content-defined chunks of a document as a codegen expression over
   * the byte-level [[TextKernels.cdcChunks]] kernel (boundary = low-4-
   * bits-zero splitmix64 of the token's FNV hash; see the kernel
@@ -1028,6 +1056,10 @@ object Vec {
     import org.apache.spark.sql.functions.lit
     call_function("graft_word_ngrams", text, lit(n), lit(stride))
   }
+  def shingles(text: Column): Column = {
+    ensureRegistered()
+    call_function("graft_shingles", text)
+  }
   def cdcChunks(text: Column): Column = {
     ensureRegistered()
     call_function("graft_cdc_chunks", text)
@@ -1098,6 +1130,9 @@ object Vec {
       new ExpressionInfo(classOf[WordNGrams].getName, "graft_word_ngrams"),
       (es: Seq[Expression]) => WordNGrams(es(0),
         foldToInt(es(1), "n"), foldToInt(es(2), "stride"))),
+    (FunctionIdentifier("graft_shingles"),
+      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
+      (es: Seq[Expression]) => ShingleSet(es(0))),
     (FunctionIdentifier("graft_cdc_chunks"),
       new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
       (es: Seq[Expression]) => CdcChunks(es(0))),

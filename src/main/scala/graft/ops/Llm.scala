@@ -340,16 +340,11 @@ object Llm {
     * counterpart of the hashed shingle universe [[minhashSigUdf]] /
     * `graft_minhash` estimate over (same windows, same <3-word
     * whole-text degenerate case; string identity instead of fnv1a/mix
-    * hashing, so no collision caveat). Builtin collection expressions
-    * only — no UDF in the verify path.
+    * hashing, so no collision caveat). The native `graft_shingles`
+    * kernel, linear in the text (TextExpressionsSpec pins it to the
+    * builtin `split`/`transform`/`array_distinct` form).
     */
-  private def shingleSet(text: Column): Column = {
-    val ws = split(text, " ")
-    when(size(ws) < 3, array(coalesce(text, lit(""))))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(ws) - 2),
-        i => concat_ws("\u0001", slice(ws, i, lit(3))))))
-  }
+  private def shingleSet(text: Column): Column = graft.functions.Vec.shingles(text)
 
   /** One row per (doc, band): the LSH bucket key stream both
     * [[minhashPairs]] and [[minhashBucketStats]] aggregate.
@@ -1835,26 +1830,32 @@ object Llm {
     */
   def q_pipeline_release(s: SparkSession, d: String): DataFrame = {
     val (p, base) = releasePipeline(s, d)
-    // Materialize the read-back NOW (bounded: one row per source) so the
-    // whole scratch tree — corpus snapshot AND card snapshot — can be
-    // deleted before returning; repeated Verify/Bench/smoke runs must not
-    // accumulate directories under java.io.tmpdir. The returned rows
-    // still come from the committed snapshot bytes (the publish stage's
-    // read-back), so the round-trip gate semantics are unchanged.
-    val published = p("result").collect()
-    val schema = p("result").schema
     // release the dedupNear survivor-id checkpoint (dim-sized, but the
     // bench runs this gate repeatedly — blocks must not accumulate); it
     // is the single LogicalRDD leaf of the `deduped` slot
     unpersistCheckpoint(p("deduped"))
+    // the publish stage already read the committed card back into a
+    // local relation (one row per source), so the whole scratch tree —
+    // corpus snapshot AND card snapshot — can go before returning;
+    // repeated Verify/Bench/smoke runs must not accumulate directories
+    // under java.io.tmpdir
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    s.createDataFrame(s.sparkContext.parallelize(published.toSeq, 1), schema)
+    p("result")
   }
 
   /** Builds and RUNS the release composition, returning the pipeline
     * context (every stage slot inspectable — PipelineDataSpec counts
     * corpus-snapshot rescans in the composed plan) and the scratch base
     * the caller must delete. [[q_pipeline_release]] is the gate wrapper.
+    *
+    * Shape: every per-source decision is one Spark action whose small
+    * result the driver holds — the Neyman allocation, the sampler's
+    * survivor cut and miss check, the card, and the card read-back —
+    * and the card and the result are local relations. Measured jobs of
+    * a warm run over sf0.001 (JobProbe, 4 cores): ingest 1, dedupNear
+    * 15, neymanSample 8 (20 with the checkpointed SQL allocation and
+    * sampler), corpusCard 4 (11 with the checkpointed card), publish 2;
+    * with the collect of the result, 30 in all (SessionSpec; 52 before).
     */
   private[graft] def releasePipeline(
       s: SparkSession, d: String): (graft.pipeline.DPP, java.nio.file.Path) = {
@@ -1915,22 +1916,23 @@ object Llm {
       Prev >> fn("neymanSample") { df =>
         val pop = df.select(col("doc_id"), col("source"), col("n_chars"),
           col("text"), col("lang"))
-        val alloc = Relational.neymanAlloc(
-          pop.select("doc_id", "source", "n_chars"), 200L).localCheckpoint()
+        val alloc = Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), 200L)
         Scale.quotaSample(pop, Seq("source"),
           md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
           Right(alloc.select(col("source"), col("n_h"))),
           groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
       } >> p.sampled,
       Prev >> fn("corpusCard") { df =>
-        val (report, release) = corpusCard(df.select("source", "lang", "n_chars", "text"))
-        val rows = report.collect()
-        release() // card is one row per source — bounded by design
-        s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), corpusCardSchema)
+        corpusCardLocal(df.select("source", "lang", "n_chars", "text"))
       } >> p.card,
       Prev >> fn("publish") { card =>
-        Sinks.Snapshots.commit(s, card, cardSnap)
-        Sinks.Snapshots.read(s, cardSnap).orderBy("source")
+        // a local relation scans as up to one partition per core: one
+        // partition keeps the card one file
+        Sinks.Snapshots.commit(s, card.coalesce(1), cardSnap)
+        // read the committed bytes back (one row per source) and sort
+        // them on the driver: the result is a local relation
+        val back = Sinks.Snapshots.read(s, cardSnap)
+        sortedBySource(back.collect(), back.schema, s)
       } >> p.result)
     (p, base)
   }
@@ -3647,33 +3649,6 @@ object Llm {
       .orderBy("split")
   }
 
-  /** One-pass corpus card (the dataset-release summary every corpus
-    * ships with): per source — docs, exact token totals, length
-    * percentiles (p50/p95 over n_chars, exact interpolated), language
-    * mix entropy in micro-nats (exact integer counts → one rounded ln
-    * per term), and the exact-duplicate rate by normalized-text md5.
-    *
-    * Genuinely single-pass at the corpus grain: the three statistic
-    * families group on DIFFERENT keys ((source), (source,lang),
-    * (source,k)), so three separate aggregates would re-scan the
-    * doc-grain projection once each — measured as the 3× cache-read
-    * bill at the sf100 page-cache wall. GROUPING SETS computes all
-    * three grains off ONE corpus scan (Expand triples the rows INSIDE
-    * the scan stage; the shuffle carries map-combined partials). The
-    * percentile buffers hold n_chars doubles only — 3× doc-count across
-    * the three sets, megabytes at the fourth decade — and every other
-    * aggregate is constant-state. The grouping-sets output (doc-count-
-    * sized: the text column does not survive the aggregate) is
-    * localCheckpoint'ed, so the three statistic consumers share ONE
-    * materialized LogicalRDD leaf — the corpus parquet is scanned
-    * exactly once, by construction (PlanSpec asserts it on the
-    * optimized plan); the values outside each family's own set are
-    * computed-and-ignored (aggregate inputs bind to the original
-    * columns, so they cannot be set-gated).
-    * The card itself is one row per source — bounded by the
-    * stratification key BY DESIGN — so [[q_corpus_card]] computes it
-    * eagerly and returns a local relation.
-    */
   /** Bootstrap confidence intervals for a corpus metric WITHOUT
     * resampling the corpus — the online/Poisson bootstrap (Oza &
     * Russell 2001; Kleiner et al.'s little-bootstrap lineage): each of
@@ -3724,20 +3699,70 @@ object Llm {
       .orderBy("source")
   }
 
-  def q_corpus_card(s: SparkSession, d: String): DataFrame = {
-    val (report, release) = corpusCard(documents(s, d))
-    val rows = report.collect()
-    release() // the doc-count-sized cache must not outlive the card
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), corpusCardSchema)
+  /** One-pass corpus card (the dataset-release summary every corpus
+    * ships with): per source — docs, exact token totals, length
+    * percentiles (p50/p95 over n_chars, exact interpolated), language
+    * mix entropy in micro-nats (exact integer counts → one rounded ln
+    * per term), and the exact-duplicate rate by normalized-text md5.
+    * The card is one row per source — bounded by the stratification key
+    * BY DESIGN — so it is computed eagerly and returned as a local
+    * relation sorted by source.
+    */
+  def q_corpus_card(s: SparkSession, d: String): DataFrame =
+    corpusCardLocal(documents(s, d))
+
+  /** The card of `docs` (`source, lang, n_chars, text`) collected into a
+    * local relation sorted by source: a later collect fires no job.
+    */
+  private[graft] def corpusCardLocal(docs: DataFrame): DataFrame =
+    sortedBySource(corpusCard(docs).collect(), corpusCardSchema, docs.sparkSession)
+
+  /** Rows keyed by a leading string `source` column as a local relation,
+    * sorted on the driver in [[sparkStringOrder]] — the
+    * one-row-per-source results need no range exchange.
+    */
+  private[graft] def sortedBySource(rows: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType, s: SparkSession): DataFrame =
+    s.createDataFrame(
+      java.util.Arrays.asList(rows.sortBy(_.getString(0))(sparkStringOrder): _*), schema)
+
+  /** Spark's ascending string order on the driver: UTF-8 bytes, nulls
+    * first.
+    */
+  private[ops] val sparkStringOrder: Ordering[String] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    Ordering.by((x: String) => Option(x).map(UTF8String.fromString))(
+      Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
   }
 
-  /** The lazy report plan behind [[q_corpus_card]] (exposed so PlanSpec
-    * can assert the single-scan shape on the executed plan). Returns the
-    * report and a release handle for the grouping-sets cache.
+  /** The lazy report plan behind [[q_corpus_card]], unsorted (PlanSpec
+    * asserts its single-scan shape on the optimized plan).
+    *
+    * Genuinely single-pass at the corpus grain: the three statistic
+    * families group on DIFFERENT keys ((source), (source,lang),
+    * (source,k)), so three separate aggregates would re-scan the
+    * doc-grain projection once each — measured as the 3× cache-read
+    * bill at the sf100 page-cache wall. GROUPING SETS computes all
+    * three grains off ONE corpus scan (Expand triples the rows INSIDE
+    * the scan stage; the shuffle carries map-combined partials). The
+    * percentile buffers hold n_chars doubles only — 3× doc-count across
+    * the three sets, megabytes at the fourth decade — and every other
+    * aggregate is constant-state; the values outside each family's own
+    * set are computed-and-ignored (aggregate inputs bind to the original
+    * columns, so they cannot be set-gated).
+    *
+    * The report is ONE query over the grouping-sets output: a per-source
+    * window gives the language total `n`, and one `groupBy("source")`
+    * picks each family by its `gid` with conditional aggregates. Both
+    * shuffle on `source`, so the window's exchange serves the aggregate
+    * too. This replaces a checkpoint of the grouping-sets output read by
+    * three derivations and two joins: the release pipeline's card step
+    * fires 4 jobs per warm run over sf0.001, down from 11. Docs without
+    * a source are left out, as the joins on `source` left them out.
     */
-  private[graft] def corpusCard(docs: DataFrame): (DataFrame, () => Unit) = {
+  private[graft] def corpusCard(docs: DataFrame): DataFrame = {
     val norm = graft.functions.Vec.normText(col("text"))
-    val g = docs
+    val g = docs.filter(col("source").isNotNull)
       .select(col("source"), col("lang"), col("n_chars"),
         graft.functions.Vec.wordCount(col("text")).as("n_tokens"),
         md5(norm).as("k"))
@@ -3752,39 +3777,22 @@ object Llm {
         percentile(col("n_chars"), lit(0.5)).as("p50"),
         percentile(col("n_chars"), lit(0.95)).as("p95"),
         grouping_id().as("gid"))
-      // doc-count-sized, NOT corpus-sized (no text survives), so the
-      // dim-sized-checkpoint rule applies: localCheckpoint truncates the
-      // plan to ONE shared LogicalRDD leaf. Neither exchange reuse (the
-      // consumers prune different columns, so their exchanges diverge)
-      // nor .persist (the report self-joins three derivations of this
-      // frame; DeduplicateRelations re-aliases two branches and they
-      // re-optimize PAST the cache — plan-verified) makes the card
-      // single-scan; the checkpoint guarantees it by construction
-      .localCheckpoint()
     // gid bit = 1 where the column is aggregated away, order (source,lang,k):
     // (source) = 011b = 3, (source,lang) = 001b = 1, (source,k) = 010b = 2
-    val base = gs.filter(col("gid") === 3).select(
-      col("source"), col("c").as("n_docs"), col("tok").as("n_tokens"),
-      col("p50").as("p50_chars"), col("p95").as("p95_chars"))
-    val dups = gs.filter(col("gid") === 2)
-      .groupBy("source").agg((sum("c") - count(lit(1))).as("n_dups"))
+    def in(gid: Int, c: Column): Column = when(col("gid") === gid, c)
     // each −p·ln p term rounded then DECIMAL-summed (the q_entropy /
     // dsum contract: partial-agg order can't change the sum)
-    val langEnt = gs.filter(col("gid") === 1)
-      .withColumn("n", sum("c").over(Window.partitionBy("source")))
-      .withColumn("p", col("c").cast("double") / col("n").cast("double"))
-      .withColumn("term",
-        round(-col("p") * log(col("p")) * 1000000 + lit(1e-9), 0)
-          .cast(org.apache.spark.sql.types.DecimalType(18, 0)))
-      .groupBy("source")
-      .agg(sum(col("term")).cast("long").as("lang_entropy_micro"))
-    val report = base.join(dups, "source").join(langEnt, "source")
-      .select(col("source"), col("n_docs"), col("n_tokens"),
-        round(col("p50_chars") + lit(1e-9), 1).as("p50_chars"),
-        round(col("p95_chars") + lit(1e-9), 1).as("p95_chars"),
-        col("n_dups"), col("lang_entropy_micro"))
-      .orderBy("source")
-    (report, () => unpersistCheckpoint(gs))
+    val p = col("c").cast("double") / col("n").cast("double")
+    gs.withColumn("n", sum(in(1, col("c"))).over(Window.partitionBy("source")))
+      .groupBy("source").agg(
+        max(in(3, col("c"))).as("n_docs"),
+        max(in(3, col("tok"))).as("n_tokens"),
+        round(max(in(3, col("p50"))) + lit(1e-9), 1).as("p50_chars"),
+        round(max(in(3, col("p95"))) + lit(1e-9), 1).as("p95_chars"),
+        (sum(in(2, col("c"))) - count(in(2, lit(1)))).as("n_dups"),
+        sum(in(1, round(-p * log(p) * 1000000 + lit(1e-9), 0)
+          .cast(org.apache.spark.sql.types.DecimalType(18, 0))))
+          .cast("long").as("lang_entropy_micro"))
   }
 
   private[graft] val corpusCardSchema = org.apache.spark.sql.types.StructType(Seq(

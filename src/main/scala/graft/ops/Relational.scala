@@ -3083,9 +3083,9 @@ object Relational {
     // The allocation relation already aggregated the stratum sizes, so
     // it feeds quotaSample BOTH the quotas and the group counts — the
     // sampler's internal count scan drops out and the corpus is read
-    // ONCE (the survivor prefilter). The tiny alloc is checkpointed so
-    // its two consumers read one materialization, not two agg scans.
-    val alloc = neymanAlloc(docs, 200L).localCheckpoint()
+    // ONCE (the survivor prefilter). The alloc is a local relation, so
+    // its two consumers read it without a job.
+    val alloc = neymanAlloc(docs, 200L)
     Scale.quotaSample(docs, Seq("source"),
       md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
       Right(alloc.select(col("source"), col("n_h"))),
@@ -3097,10 +3097,25 @@ object Relational {
   /** The Neyman allocation relation behind [[q_sample_neyman]] and
     * [[q_sample_weights]]: per stratum — population size `n` and the
     * optimal sample quota `n_h` (largest-remainder corrected, capped at
-    * the stratum size). One stratum-key aggregate; broadcast-sized.
+    * the stratum size).
+    *
+    * Shape: ONE Spark action — the stratum-key aggregate of `n` and
+    * `s_micro` (one row per source, collected). The allocation itself
+    * is exact integer arithmetic on those rows, so the driver runs it in
+    * `BigInt`: the floor shares `base = budget·w div Σw`, the remainders,
+    * the deficit, and the rank by (remainder desc, source asc, nulls
+    * first). The result is a local relation: its consumers (the sampler's
+    * quota and count inputs) read it without a job, where the SQL
+    * formulation (stratum aggregate + total + deficit cross joins + a
+    * global rank window, checkpointed by callers) ran its subtree once
+    * per consumer. An all-zero weight total divides by zero: under ANSI
+    * mode it raises the same DIVIDE_BY_ZERO error the SQL raised, and
+    * otherwise every stratum gets `n_h = n`, the SQL's null-share result.
     */
   private[graft] def neymanAlloc(docs: DataFrame, budget: Long): DataFrame = {
-    val st = docs.groupBy("source").agg(
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val strata = docs.groupBy("source").agg(
       count(lit(1)).as("n"),
       sum(col("n_chars").cast(DecimalType(38, 0))).as("s1"),
       sum((col("n_chars") * col("n_chars")).cast(DecimalType(38, 0))).as("s2"))
@@ -3110,26 +3125,38 @@ object Relational {
           round(sqrt(col("var_num").cast("double")
             / (col("n") * (col("n") - 1)).cast("double")) * 1000000 + lit(1e-9)))
           .otherwise(lit(0.0)).cast("long"))
-      // DECIMAL(38,0) from here: 200·n·s_micro crosses Long at
-      // n ≈ 2.3e7 docs per stratum (s_micro ~ 2e9) — the oracle runs
-      // HUGEINT, the engine must not wrap/throw first
-      .withColumn("w", (col("n") * col("s_micro")).cast(DecimalType(38, 0)))
-    val tot = st.agg(sum("w").cast(DecimalType(38, 0)).as("bigw"))
-    val wRem = Window.orderBy(col("rem").desc, col("source"))
-    val alloc = st.crossJoin(broadcast(tot))
-      .withColumn("base", expr(s"cast($budget * w div bigw as decimal(38,0))"))
-      .withColumn("rem", (lit(budget) * col("w") - col("base") * col("bigw"))
-        .cast(DecimalType(38, 0)))
-      .crossJoin(broadcast(
-        st.crossJoin(tot).agg(
-          (lit(budget) - sum(expr(s"$budget * w div bigw")))
-            .cast("long").as("deficit"))))
-      .withColumn("rk", row_number().over(wRem).cast("long"))
-      .withColumn("n_h",
-        least(col("base").cast("long")
-          + when(col("rk") <= col("deficit"), 1L).otherwise(0L), col("n")))
-      .select(col("source"), col("n").cast("long").as("n"), col("n_h"))
-    alloc
+      .select(col("source"), col("n"), col("s_micro"))
+      .collect()
+    val sources = strata.map(_.getString(0))
+    val n = strata.map(_.getLong(1))
+    // BigInt throughout: 200·n·s_micro crosses Long at n ≈ 2.3e7 docs
+    // per stratum (s_micro ~ 2e9) — the oracle runs HUGEINT
+    val w = strata.map(r => BigInt(r.getLong(1)) * BigInt(r.getLong(2)))
+    val bigW = w.sum
+    val nH: Array[Long] =
+      if (strata.isEmpty) Array.empty
+      else if (bigW == 0) {
+        if (docs.sparkSession.sessionState.conf.ansiEnabled)
+          throw org.apache.spark.sql.GraftSqlBridge.divideByZeroError()
+        n
+      } else {
+        val b = BigInt(budget)
+        val base = w.map(b * _ / bigW)
+        val rem = w.indices.map(i => b * w(i) - base(i) * bigW)
+        val deficit = (b - base.sum).toLong
+        val ranked = w.indices.sortWith { (i, j) =>
+          if (rem(i) != rem(j)) rem(i) > rem(j)
+          else Llm.sparkStringOrder.lt(sources(i), sources(j))
+        }
+        val bonus = new Array[Long](w.length)
+        ranked.take(deficit.toInt).foreach(bonus(_) = 1L)
+        w.indices.map(i => math.min(base(i).toLong + bonus(i), n(i))).toArray
+      }
+    val rows = strata.indices.map(i => Row(sources(i), n(i), nH(i)))
+    docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("source", StringType), StructField("n", LongType),
+        StructField("n_h", LongType))))
   }
 
   /** Post-stratification / design weights for the Neyman sample — the

@@ -42,27 +42,39 @@ object Scale {
     * group's ENTIRE partition to keep n_h rows — with few groups a 5 TB
     * stratum becomes one spilling task (measured: skew 2.3 at sf100).
     *
-    * Shape: (1) one scan-stage group-count aggregate sizes a per-group
+    * Shape: (1) the per-group counts (one scan-stage aggregate, unless
+    * the caller supplies them) and the quota relation are collected —
+    * both are group-cardinality-sized by contract — and the driver
+    * joins them, checks the allocation hygiene, and sizes a per-group
     * hash THRESHOLD at ~2× the quota plus a small-group cushion;
     * (2) the prefilter keeps only rows whose hash prefix falls below it
-    * — a scan-stage cut, so the per-group rank window sees ~2·n_h rows
-    * instead of the stratum; (3) the draw is still EXACT: the survivor
+    * — a scan-stage cut against the broadcast stats table, so the
+    * per-group rank window sees ~2·n_h rows instead of the stratum;
+    * (3) the draw is still EXACT: the survivor
     * set is downward-closed in the hash order (a 60-bit numeric prefix
     * of the md5 hex is order-consistent with it), so the n_h lowest
     * survivors ARE the n_h lowest rows whenever the group kept ≥
     * min(n_h, group size) survivors — which a per-group COUNT CHECK
     * verifies, falling back to the exact whole-group rank for only the
     * (overwhelmingly rare: the cut is Binomial with mean 2·n_h + 16)
-    * groups that miss. The check is a group-cardinality-sized driver
-    * read; the fallback branch never enters the plan when no group
-    * misses.
+    * groups that miss. The check is one grouped count over the survivor
+    * checkpoint, compared on the driver; the fallback branch never
+    * enters the plan when no group misses.
+    *
+    * Actions: the survivor checkpoint and the miss check, plus the count
+    * aggregate when `groupCounts` is absent; a local-relation quota or
+    * count input (the Neyman allocation) is read without a job. In the
+    * release pipeline the sampling step (allocation + sampler) fires 8
+    * jobs per warm run over sf0.001, where the checkpointed stats table,
+    * its two hygiene actions and a miss-check join made it 20.
     *
     * `quotas`: Left(k) = flat per-group quota; Right(df) = per-group
-    * allocation relation (groupCols + `n_h`), broadcast-sized by
-    * construction (one row per group) — it must COVER every group in
-    * the data exactly once: a missing or duplicated allocation row
-    * fails loudly (a silent inner join here would shrink or duplicate
-    * the sample with no signal). Returns the input columns plus
+    * allocation relation (groupCols + `n_h`), one row per group — it
+    * must COVER every group in the data exactly once: a missing or
+    * duplicated allocation row fails loudly (a silent inner join here
+    * would shrink or duplicate the sample with no signal). Group keys
+    * match with SQL equality, so a null key never finds its quota.
+    * Returns the input columns plus
     * `n_h` and the in-group rank `rn` (1 ≤ rn ≤ min(n_h, group size)),
     * ordered by (`hash`, `tie`) within the group. Shuffles: the count
     * agg [map-combined, tiny output] and the survivor rank [~2·n_h rows
@@ -79,40 +91,65 @@ object Scale {
                   tie: Seq[Column], quotas: Either[Long, DataFrame],
                   oversample: Double = 2.0, cushion: Double = 16.0,
                   groupCounts: Option[DataFrame] = None): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = df.sparkSession
     val grp = groupCols.map(col)
+    val k = groupCols.size
+    def key(r: Row): Seq[Any] = (0 until k).map(r.get)
     val counts = groupCounts.getOrElse(
       df.groupBy(grp: _*).agg(count(lit(1)).as("__grp_n")))
-    val stats0 = quotas match {
-      case Left(k)  => counts.withColumn("n_h", lit(k))
-      case Right(q) => counts.join(q, groupCols, "left")
+      .select(grp :+ col("__grp_n"): _*)
+    val keyFields = counts.schema.fields.take(k).toSeq
+    // the left join of the counts with the quotas, on the driver:
+    // (key, __grp_n, n_h) with a null n_h where no quota row matched
+    val (nhField, joined) = quotas match {
+      case Left(q) =>
+        (StructField("n_h", LongType, nullable = false),
+          counts.collect().toSeq.map(r => (key(r), r.get(k), q: Any)))
+      case Right(q) =>
+        val qdf = q.select(grp :+ col("n_h"): _*)
+        val byKey = qdf.collect().toSeq.groupBy(key)
+        (qdf.schema("n_h"), counts.collect().toSeq.flatMap { r =>
+          val g = key(r)
+          val hits = if (g.contains(null)) Nil else byKey.getOrElse(g, Nil)
+          if (hits.isEmpty) Seq((g, r.get(k), null))
+          else hits.map(h => (g, r.get(k), h.get(k)))
+        })
     }
-    // 60-bit threshold: the first 15 hex chars of the md5 as an integer;
-    // equal-length lowercase hex compares identically as string or number
-    val hexSpan = lit(1152921504606846976L) // 16^15 = 2^60
-    val stats = stats0
-      .withColumn("__needed", least(col("n_h"), col("__grp_n")))
-      .withColumn("__thresh",
-        least(lit(1.0),
-          (col("n_h").cast("double") * oversample + cushion) / col("__grp_n").cast("double"))
-          .multiply(hexSpan.cast("double")).cast("long"))
-      .localCheckpoint() // group-cardinality-sized; read 2-3 times below
-    // allocation-relation hygiene, read off the tiny checkpoint: a group
-    // the quota relation missed surfaces as a null n_h (left join above),
-    // a duplicated allocation row as a doubled group — both are caller
-    // bugs that previously shrank/duplicated the sample SILENTLY
+    // allocation-relation hygiene: a group the quota relation missed
+    // surfaces as a null n_h, a duplicated allocation row as a doubled
+    // group — both are caller bugs that would otherwise shrink/duplicate
+    // the sample SILENTLY
+    def groupList(gs: Seq[Seq[Any]]): String = gs.take(5).map(_.mkString("/")).mkString(", ")
     if (quotas.isRight) {
-      val bad = stats.filter(col("n_h").isNull).select(grp: _*).limit(5).collect()
+      val bad = joined.collect { case (g, _, null) => g }
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"quotaSample: quota relation is missing allocation rows for groups " +
-          s"${bad.map(_.toSeq.mkString("/")).mkString(", ")} ... — every group in " +
+          s"${groupList(bad)} ... — every group in " +
           "the data needs exactly one n_h row")
-      val dup = stats.groupBy(grp: _*).agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > 1).select(grp: _*).limit(5).collect()
+      val dup = joined.groupBy(_._1).collect { case (g, rs) if rs.size > 1 => g }.toSeq
       if (dup.nonEmpty) throw new IllegalArgumentException(
         s"quotaSample: quota relation has duplicate allocation rows for groups " +
-          s"${dup.map(_.toSeq.mkString("/")).mkString(", ")} ... — the join would " +
+          s"${groupList(dup)} ... — the join would " +
           "duplicate survivors")
     }
+    // __needed = least(n_h, __grp_n); __thresh is the 60-bit hash cut:
+    // least(1.0, (n_h·oversample + cushion) / __grp_n) · 16^15 as a long
+    // (the first 15 hex chars of the md5 as an integer; equal-length
+    // lowercase hex compares identically as string or number). The same
+    // double operations as the SQL expressions, so the same bits; NaN
+    // orders above 1.0 there, as in Spark's least.
+    val hexSpan = 1152921504606846976L // 16^15 = 2^60
+    val statRows = joined.map { case (g, grpN, nh) =>
+      val n = grpN.asInstanceOf[Number].longValue
+      val h = nh.asInstanceOf[Number]
+      val frac = (h.doubleValue * oversample + cushion) / n.toDouble
+      val cut = if (frac.isNaN || frac > 1.0) 1.0 else frac
+      Row.fromSeq(g ++ Seq(grpN, nh, math.min(h.longValue, n), (cut * hexSpan.toDouble).toLong))
+    }
+    val stats = spark.createDataFrame(java.util.Arrays.asList(statRows: _*),
+      StructType(keyFields ++ Seq(counts.schema("__grp_n"), nhField,
+        StructField("__needed", LongType), StructField("__thresh", LongType))))
     val hv = conv(substring(hash, 1, 15), 16, 10).cast("long")
     // the survivor cut is ~ groups·(2·n_h+16) rows — dim-sized by
     // construction, so one checkpoint lets the rank, the count check,
@@ -127,20 +164,17 @@ object Scale {
       .filter(col("rn") <= col("__needed"))
     // count check: a group is exact iff it kept at least `needed`
     // survivors (downward-closure makes the lowest `needed` global)
-    val missRows = stats
-      .join(surv.groupBy(grp: _*).agg(count(lit(1)).as("__got")), groupCols, "left")
-      .filter(coalesce(col("__got"), lit(0L)) < col("__needed"))
-      .select(grp: _*).collect()
+    val got = surv.groupBy(grp: _*).agg(count(lit(1)))
+      .collect().map(r => key(r) -> r.getLong(k)).toMap
+    val missRows = statRows.filter(r => got.getOrElse(key(r), 0L) < r.getLong(k + 2))
+      .map(r => Row.fromSeq(key(r)))
     val out =
       if (missRows.isEmpty) ranked
       else {
         // exact fallback for ONLY the missed groups: whole-group rank,
         // fed through a broadcast semi-join BELOW the window
-        val missDf = df.sparkSession.createDataFrame(
-          df.sparkSession.sparkContext.parallelize(missRows.toSeq, 1),
-          org.apache.spark.sql.types.StructType(
-            groupCols.map(c => org.apache.spark.sql.types.StructField(c,
-              stats.schema(c).dataType))))
+        val missDf = spark.createDataFrame(
+          java.util.Arrays.asList(missRows: _*), StructType(keyFields))
         val exact = df
           .join(broadcast(missDf), groupCols, "left_semi")
           .join(broadcast(stats), groupCols)
@@ -725,9 +759,9 @@ object Scale {
     *
     * The returned frame READS the round checkpoints, which otherwise
     * stay pinned until GC reclaims the RDDs — a long-lived session
-    * calling this repeatedly should use [[kCoreWithRelease]] (the
-    * `corpusCard` (result, release) shape) and call release() once the
-    * result is consumed/persisted.
+    * calling this repeatedly should use [[kCoreWithRelease]] (a
+    * (result, release) pair) and call release() once the result is
+    * consumed/persisted.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 100): DataFrame =

@@ -28,4 +28,10 @@ object GraftSqlBridge {
     */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The error an ANSI-mode division by zero raises (`DIVIDE_BY_ZERO`),
+    * for driver-side arithmetic that must fail as the SQL it replaces.
+    */
+  def divideByZeroError(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -7,9 +7,10 @@ package graft
   * warm dir + 1 measured run on the target), then prints every job of
   * the measured run in submission order: id, wall (submit→end), task
   * count, task-time sum, stage count, and the job's callsite. The
-  * header line carries the measured run's codegen compile count next to
-  * its job count: a warm run that still compiles means the generated-
-  * class cache is thrashing.
+  * first line gives the cold run's wall, job count and codegen compile
+  * count; the header of the measured run carries the same counts: a
+  * warm run that still compiles means the generated-class cache is
+  * thrashing.
   *
   * `SPARK_GRAFT_CPUS=32 java -cp <test-classes:classes:spark jars>
   *   graft.JobProbe <name> <sfDir> [warmDir]`
@@ -44,14 +45,21 @@ object JobProbe {
         }
     })
     val warm = if (args.length > 2) args(2) else d
+    val cc0 = org.apache.spark.SparkTestHooks.codegenCompiles
+    val ct0 = System.nanoTime()
     SparkEntry.queries(name)(spark, warm).count()
+    val coldWall = (System.nanoTime() - ct0) / 1e9
+    val coldCompiles = org.apache.spark.SparkTestHooks.codegenCompiles - cc0
+    org.apache.spark.SparkTestHooks.drainListeners(spark.sparkContext)
+    println(f"[jobprobe] $name cold wall=$coldWall%.2f s " +
+      f"jobs=${jobs.synchronized(jobs.size)} compiles=$coldCompiles")
     jobs.synchronized(jobs.clear()); stageTasks.synchronized(stageTasks.clear())
     val c0 = org.apache.spark.SparkTestHooks.codegenCompiles
     val t0 = System.nanoTime()
     val n = SparkEntry.queries(name)(spark, d).count()
     val wall = (System.nanoTime() - t0) / 1e9
     val compiles = org.apache.spark.SparkTestHooks.codegenCompiles - c0
-    Thread.sleep(300) // listener bus drain
+    org.apache.spark.SparkTestHooks.drainListeners(spark.sparkContext)
     println(f"[jobprobe] $name wall=$wall%.2f s rows=$n cpus=$cpus parts=$parts " +
       f"jobs=${jobs.size} compiles=$compiles")
     var wallSum = 0L

@@ -24,4 +24,26 @@ class SessionSpec extends AnyFunSuite {
     // working set (~170 classes) on every run.
     assert(runs(2) <= 8, s"third run compiled ${runs(2)} classes (all runs: $runs)")
   }
+
+  test("a warm release-pipeline run fires one job per small decision, not per derivation") {
+    // The sampler and the card decide on small collected results: the
+    // Neyman allocation, the sampler's quota table and miss check, and
+    // the card are one Spark action each. Measured over sf0.001 in the
+    // TestSpark session: 52 jobs when they ran as checkpointed SQL
+    // relations, 30 now.
+    graft.ops.Llm.q_pipeline_release(spark, TestSpark.sf0001).collect()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    SparkTestHooks.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      graft.ops.Llm.q_pipeline_release(spark, TestSpark.sf0001).collect()
+      SparkTestHooks.drainListeners(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get <= 32, s"warm release run fired ${jobs.get} jobs")
+  }
 }

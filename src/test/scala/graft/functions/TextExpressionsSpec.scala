@@ -322,6 +322,34 @@ class TextExpressionsSpec extends AnyFunSuite {
     assert(rows(0).getSeq[Long](1) == rows(1).getSeq[Long](1))
   }
 
+  test("graft_shingles ≡ the split/transform/array_distinct shingle form, order included") {
+    import spark.implicits._
+    // the verify-set expression the kernel replaced, kept here as the
+    // reference: it re-splits the text inside the lambda per shingle
+    def reference(text: org.apache.spark.sql.Column) = {
+      val ws = split(text, " ")
+      when(size(ws) < 3, array(coalesce(text, lit(""))))
+        .otherwise(array_distinct(transform(
+          sequence(lit(1), size(ws) - 2),
+          i => concat_ws("\u0001", slice(ws, i, lit(3))))))
+    }
+    val edges = Seq("a b c ", "a b c  ", " a b c", "  a b", "a  b c", "a b", "a", "", " ",
+      "  ", "   ", "a b c a b c a b c", "x y x y x y", "é ü 😀 中 文",
+      "one two three four five").map(Option(_)) :+ None
+    val docs = graft.ops.Tables.documents(spark, sf).select("text")
+      .unionByName(edges.toDF("text"))
+    val rows = docs.select(col("text"), Vec.shingles(col("text")).as("nat"),
+      reference(col("text")).as("ref")).collect()
+    val bad = rows.filterNot(r => r.get(1) == r.get(2))
+    assert(bad.isEmpty, s"${bad.length} mismatches, first: ${bad.headOption}")
+    // null text → null set, as the builtin form gives under ANSI mode
+    assert(rows.exists(r => r.isNullAt(0) && r.isNullAt(1)))
+    val plan = graft.ops.Tables.documents(spark, sf)
+      .select(Vec.shingles(col("text"))).queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Project [graft_shingles"),
+      s"no codegen span around graft_shingles:\n$plan")
+  }
+
   test("kernels run inside whole-stage codegen (no UDF/BatchEvalPython in plan)") {
     val df = graft.ops.Tables.documents(spark, sf)
       .select(Vec.minhash(col("text")).as("s"))

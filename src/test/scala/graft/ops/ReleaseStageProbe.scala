@@ -55,24 +55,19 @@ object ReleaseStageProbe {
     val sampled = stage("neymanSample") {
       val pop = deduped.select(col("doc_id"), col("source"), col("n_chars"),
         col("text"), col("lang"))
-      val alloc = Relational.neymanAlloc(
-        pop.select("doc_id", "source", "n_chars"), 200L).localCheckpoint()
+      val alloc = Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), 200L)
       Scale.quotaSample(pop, Seq("source"),
         md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
         Right(alloc.select(col("source"), col("n_h"))),
         groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
     }
     val card = stage("corpusCard") {
-      val (report, release) = Llm.corpusCard(
-        sampled.select("source", "lang", "n_chars", "text"))
-      val rows = report.collect()
-      release()
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-        Llm.corpusCardSchema)
+      Llm.corpusCardLocal(sampled.select("source", "lang", "n_chars", "text"))
     }
     stage("publish") {
-      Sinks.Snapshots.commit(s, card, cardSnap)
-      Sinks.Snapshots.read(s, cardSnap).orderBy("source")
+      Sinks.Snapshots.commit(s, card.coalesce(1), cardSnap)
+      val back = Sinks.Snapshots.read(s, cardSnap)
+      Llm.sortedBySource(back.collect(), back.schema, s)
     }
 
     // rescans of the corpus snapshot inside the PRODUCTION (un-barriered)
