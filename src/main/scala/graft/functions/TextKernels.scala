@@ -172,41 +172,78 @@ object TextKernels {
     * set. Unlike [[tokenOffsets]], Spark's `split` keeps EVERY empty
     * token, trailing ones included, so tokens are exactly the
     * space-separated byte runs (spaces + 1 of them). A shingle is three
-    * consecutive tokens joined by U+0001: the byte slice from the first
-    * token's start to the third token's end with its two separator
-    * spaces replaced by 0x01 — one copy per shingle, no decode. Fewer
-    * than 3 tokens → the whole text as the single element. Distinct in
+    * consecutive tokens joined by U+0001, cut from one rewritten copy of
+    * the text, no decode (see [[shingles]]). Fewer than 3 tokens → the
+    * whole text as the single element. Distinct in
     * first-occurrence order (`array_distinct`). Linear in the text
     * length; the `transform` formulation re-split the text per shingle.
     */
   def shingleSet(u: UTF8String): ArrayData = {
+    val all = shingles(u)
+    val seen = new java.util.HashSet[UTF8String](all.length * 2)
+    val out = new java.util.ArrayList[Any](all.length)
+    var i = 0
+    while (i < all.length) { if (seen.add(all(i))) out.add(all(i)); i += 1 }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** Exact Jaccard of the [[shingleSet]]s of two texts:
+    * |A∩B| / (|A| + |B| − |A∩B|) over the distinct shingles, the value of
+    * `size(array_intersect(A, B)) / size(array_union(A, B))`. Both sets
+    * are non-empty (a text always has at least one shingle), so the
+    * denominator is ≥ 1. One tokenizer pass per text; the shingles are
+    * views into one copy of each text.
+    */
+  def shingleJaccard(a: UTF8String, b: UTF8String): Double = {
+    val as = shingles(a)
+    val setA = new java.util.HashSet[UTF8String](as.length * 2)
+    var i = 0
+    while (i < as.length) { setA.add(as(i)); i += 1 }
+    val bs = shingles(b)
+    val setB = new java.util.HashSet[UTF8String](bs.length * 2)
+    var inter = 0
+    i = 0
+    while (i < bs.length) {
+      if (setB.add(bs(i)) && setA.contains(bs(i))) inter += 1
+      i += 1
+    }
+    inter.toDouble / (setA.size + setB.size - inter)
+  }
+
+  /** Every 3-word shingle of `split(text, ' ')` in order, duplicates
+    * kept — the tokenizer behind [[shingleSet]] and [[shingleJaccard]].
+    * The text is copied once with every space replaced by U+0001, so a
+    * shingle is the byte slice from its first token's start to its third
+    * token's end of that copy, wrapped without a further copy. Fewer
+    * than 3 tokens → the text itself.
+    */
+  private def shingles(u: UTF8String): Array[UTF8String] = {
     val nb = u.numBytes
-    val bytes = u.getBytes
     var spaces = 0
     var i = 0
-    while (i < nb) { if (bytes(i) == ' '.toByte) spaces += 1; i += 1 }
-    if (spaces < 2) return new GenericArrayData(Array[Any](UTF8String.fromBytes(bytes)))
+    while (i < nb) { if (u.getByte(i) == ' '.toByte) spaces += 1; i += 1 }
+    if (spaces < 2) return Array(UTF8String.fromBytes(u.getBytes))
+    // getBytes may return the input's own buffer: copy before rewriting
+    val bytes = new Array[Byte](nb)
+    u.writeToMemory(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
     // starts(t) = first byte of token t; starts(nTok) = nb + 1 so that
     // token t always ends at starts(t + 1) - 1
     val nTok = spaces + 1
     val starts = new Array[Int](nTok + 1)
     var t = 1
     i = 0
-    while (i < nb) { if (bytes(i) == ' '.toByte) { starts(t) = i + 1; t += 1 }; i += 1 }
+    while (i < nb) {
+      if (bytes(i) == ' '.toByte) { bytes(i) = 1; starts(t) = i + 1; t += 1 }
+      i += 1
+    }
     starts(nTok) = nb + 1
-    val seen = new java.util.HashSet[UTF8String]()
-    val out = new java.util.ArrayList[Any]()
+    val out = new Array[UTF8String](nTok - 2)
     t = 0
     while (t + 2 < nTok) {
-      val s = starts(t)
-      val sh = java.util.Arrays.copyOfRange(bytes, s, starts(t + 3) - 1)
-      sh(starts(t + 1) - 1 - s) = 1
-      sh(starts(t + 2) - 1 - s) = 1
-      val v = UTF8String.fromBytes(sh)
-      if (seen.add(v)) out.add(v)
+      out(t) = UTF8String.fromBytes(bytes, starts(t), starts(t + 3) - 1 - starts(t))
       t += 1
     }
-    new GenericArrayData(out.toArray)
+    out
   }
 
   /** 64-bit SimHash: sign of per-bit ±1 votes over splitmix-mixed FNV

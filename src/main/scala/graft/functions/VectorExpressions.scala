@@ -452,6 +452,38 @@ case class ShingleSet(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Exact shingle-set Jaccard of two documents as a codegen expression
+  * over [[TextKernels.shingleJaccard]]: the value of
+  * `size(array_intersect(graft_shingles(a), graft_shingles(b))) /
+  * size(array_union(graft_shingles(a), graft_shingles(b)))` from one
+  * tokenizer pass per text, with no shingle array materialized. NULL if
+  * either text is NULL.
+  */
+case class ShingleJaccard(left: Expression, right: Expression) extends BinaryExpression {
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.types.StringType
+
+  override def prettyName: String = "graft_shingle_jaccard"
+  override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == StringType && right.dataType == StringType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two STRING inputs, got ${left.dataType.sql}, ${right.dataType.sql}")
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    TextKernels.shingleJaccard(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextKernels.shingleJaccard($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ShingleJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Content-defined chunks of a document as a codegen expression over
   * the byte-level [[TextKernels.cdcChunks]] kernel (boundary = low-4-
   * bits-zero splitmix64 of the token's FNV hash; see the kernel
@@ -1060,6 +1092,10 @@ object Vec {
     ensureRegistered()
     call_function("graft_shingles", text)
   }
+  def shingleJaccard(a: Column, b: Column): Column = {
+    ensureRegistered()
+    call_function("graft_shingle_jaccard", a, b)
+  }
   def cdcChunks(text: Column): Column = {
     ensureRegistered()
     call_function("graft_cdc_chunks", text)
@@ -1133,6 +1169,9 @@ object Vec {
     (FunctionIdentifier("graft_shingles"),
       new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
       (es: Seq[Expression]) => ShingleSet(es(0))),
+    (FunctionIdentifier("graft_shingle_jaccard"),
+      new ExpressionInfo(classOf[ShingleJaccard].getName, "graft_shingle_jaccard"),
+      (es: Seq[Expression]) => ShingleJaccard(es(0), es(1))),
     (FunctionIdentifier("graft_cdc_chunks"),
       new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
       (es: Seq[Expression]) => CdcChunks(es(0))),

@@ -127,84 +127,64 @@ object Llm {
     docs.select(col("doc_id"), graft.functions.Vec.minhash(col("text")).as("sigs"))
 
   /** MinHash-LSH near-duplicate pairs: shingle → minhash → band →
-    * bucket-join → EXACT verify. Candidates only meet inside a
-    * (band, band-sig) bucket, so the pair join is a plain equi-join
-    * shuffled on the bucket key; candidate pairs are then confirmed by
-    * exact shingle-set Jaccard ≥ 0.5 (candidates→verify, the standard
-    * at-scale near-dup pipeline — the est-only variant keeps the upper
-    * tail of the estimator and measures 0.21 precision, see
-    * [[minhashPairs]]). Hash-exact DuckDB oracle: the full
-    * shingle→minhash→band→cap→pair→verify pipeline is replicated in
-    * HUGEINT SQL ([[graft.OracleSql.dedupMinhash]]); OpsSpec additionally
-    * gates recall ≥ 0.8 AND precision 1.0 vs exact ground truth.
+    * bucket → EXACT verify. Candidates only meet inside a (band,
+    * band-sig) bucket, and candidate pairs are then confirmed by exact
+    * shingle-set Jaccard ≥ 0.5 (candidates→verify, the standard at-scale
+    * near-dup pipeline, see [[minhashPairs]]). Hash-exact DuckDB oracle:
+    * the full shingle→minhash→band→cap→pair→verify pipeline is
+    * replicated in HUGEINT SQL ([[graft.OracleSql.dedupMinhash]]);
+    * OpsSpec additionally gates recall ≥ 0.8 AND precision 1.0 vs exact
+    * ground truth.
     */
   def q_dedup_minhash(s: SparkSession, d: String): DataFrame =
     minhashPairs(documents(s, d), threshold = 0.5)
 
-  /** Most recent shared candidate cache. The cache must outlive
-    * [[minhashPairs]] (the consuming action is the caller's), so it
-    * cannot be unpersisted inside the builder — instead live candidate
-    * caches are bounded to ONE per JVM: a new cache over a DIFFERENT
-    * plan evicts the previous (re-running the same corpus keeps the
-    * reuse win — `sameResult` guard), and a long-lived session can call
-    * [[unpersistCandidates]] explicitly.
+  /** No-op. [[minhashPairs]] keeps no cache or checkpoint, so there is
+    * nothing to release; kept because callers written against the
+    * earlier cached shape still call it.
     */
-  private val lastCandCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  private def registerCandCache(c: DataFrame): DataFrame = {
-    val prev = lastCandCache.getAndSet(c)
-    if (prev != null &&
-        !prev.queryExecution.analyzed.sameResult(c.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    c
-  }
-
-  /** Most recent verify-shingle checkpoint (see [[minhashPairs]]): the
-    * shingle table is consumed by BOTH verify joins, so it is computed
-    * once behind a lazy localCheckpoint. Checkpoint blocks are never
-    * reusable across calls (each call marks a fresh RDD), so the slot
-    * only exists for release: the next call — or
-    * [[unpersistCandidates]] — frees the previous blocks.
-    */
-  private val lastShingleScratch =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  private def registerShingleScratch(c: DataFrame): DataFrame = {
-    val prev = lastShingleScratch.getAndSet(c)
-    if (prev != null) unpersistCheckpoint(prev)
-    c
-  }
-
-  /** Drop the shared LSH candidate cache and the verify-shingle
-    * checkpoint (storage hygiene for long sessions; the next
-    * [[minhashPairs]] call simply re-caches).
-    */
-  def unpersistCandidates(): Unit = {
-    val prev = lastCandCache.getAndSet(null)
-    if (prev != null) prev.unpersist(blocking = false)
-    val prevSh = lastShingleScratch.getAndSet(null)
-    if (prevSh != null) unpersistCheckpoint(prevSh)
-  }
+  def unpersistCandidates(): Unit = ()
 
   /** Default LSH bucket cap: a bucket of n candidates emits n·(n-1)/2
     * pairs, so 256 bounds any single bucket at ~32k pairs and bounds the
-    * `collect_list` buffer at 256 × (32-long sig + id) ≈ 70 KB. Buckets
-    * above the cap are degenerate by construction — at corpus scale only
+    * `collect_list` buffer at 256 doc ids (2 KB). Buckets above the cap
+    * are degenerate by construction — at corpus scale only
     * boilerplate/empty documents collide thousands deep, and those carry
     * no near-dup signal worth a quadratic blowup.
     */
   val DefaultMaxBucket = 256
 
   /** Reusable transform: near-duplicate pairs of any `(doc_id, text)`
-    * DataFrame via MinHash-LSH banding.
+    * DataFrame via MinHash-LSH banding, verified on the texts. Output
+    * `(id1, id2, est_jaccard, jaccard)` with id1 < id2 and exact
+    * `jaccard ≥ threshold`, ordered by (id1, id2).
     *
-    * Shape: ONE scan (signatures computed once), ONE shuffle (window +
-    * groupBy share the (band, band-sig) hash partitioning), pairs
-    * generated inside each bucket by a double explode — versus the
-    * classic self-join formulation, which scans and computes signatures
-    * twice and shuffles both sides. Candidate volume is Σ|bucket|² —
-    * inherent to LSH, controlled by the band width — never n².
+    * Filter, then refine:
+    *  - Candidates. ONE scan computes the signatures and explodes them
+    *    into `(doc_id, band, bsig)` rows; ONE exchange on (band, bsig)
+    *    serves both the bucket window and the groupBy; each bucket's
+    *    `collect_list` of doc ids expands into its id pairs by a double
+    *    explode, made distinct across bands. Only ids and bucket keys
+    *    cross the exchange: ~160 B per document before compression,
+    *    where the 32-long signature on each of the 8 band rows would
+    *    move ~2.2 KB. Candidate volume is Σ|bucket|², inherent to LSH
+    *    and controlled by the band width, never n².
+    *  - Verify. The distinct pairs join `(doc_id, text)` on id1, then on
+    *    id2, and keep the pairs whose exact shingle-set Jaccard
+    *    (`graft_shingle_jaccard`, one pass per text) reaches
+    *    `threshold`. LSH proposes, verification disposes: banding
+    *    selects the upper tail of the 32-component estimator, so a
+    *    true-J≈0.3 pair that collides typically reads est ≥ 0.5
+    *    (est-only filtering measured 0.21 precision at sf0.01). The
+    *    joins move pair-sized rows plus one text per candidate side.
+    *  - `est_jaccard` is computed for output rows only, from the two
+    *    texts with the kernels the buckets came from (`graft_minhash`,
+    *    `graft_sigmatch`), so it equals the bucket-side estimate and a
+    *    consumer that prunes the column never computes it.
+    *
+    * The whole transform runs inside the consumer's action: no cache,
+    * no checkpoint, no session-wide state, so concurrent callers in one
+    * session cannot free each other's blocks.
     *
     * Skew safety (the 100 TB case): bucket sizes are counted with a
     * whole-partition WINDOW count — `WindowExec` buffers each partition
@@ -218,136 +198,38 @@ object Llm {
     * the cap discarded).
     */
   def minhashPairs(docs: DataFrame, threshold: Double,
-                   maxBucket: Int = DefaultMaxBucket,
-                   verify: Boolean = true,
-                   shareCandidates: Boolean = true): DataFrame = {
+                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    import graft.functions.Vec
     val wb = Window.partitionBy("band", "bsig")
-    // CacheManager substitutes cached data by ANALYZED-plan equality on
-    // any matching SUBTREE — so a shareCandidates=false run in a session
-    // where a shared run already cached the identical candidate plan
-    // would silently read the InMemoryRelation anyway, and the cached
-    // blocks would compete with connectedComponents' localCheckpoints
-    // (the measured 2× clusters regression the flag exists to avoid).
-    // A mid-chain Filter(true) breaks whole-plan subtree equality
-    // (it survives analysis, where substitution happens) and is folded
-    // away by the optimizer — zero runtime cost.
-    // shareCandidates=false exists to keep the storage pool clear for
-    // the caller's own iterative localCheckpoints — so also EVICT any
-    // still-live cache a previous shared run registered (the
-    // Filter(true) plan-identity breaker below stops substitution but
-    // not the old blocks' pool pressure).
-    if (!shareCandidates) unpersistCandidates()
-    val exploded0 = minhashExploded(docs)
-    val exploded = if (shareCandidates) exploded0 else exploded0.where(lit(true))
-    val cand = exploded
+    val cand = minhashExploded(docs).select("doc_id", "band", "bsig")
       .withColumn("__bn", count(lit(1)).over(wb))
       .filter(col("__bn") <= maxBucket)
-      .drop("__bn")
       .groupBy("band", "bsig")
-      .agg(collect_list(struct(col("doc_id"), col("sigs"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(col("items")).as("a"), col("items"))
-      .select(col("a"), explode(col("items")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        // Native codegen matched-component count — NOT aggregate/zip_with
-        // HOF lambdas, which evaluate interpreted at ≈40×/element
-        // (PERF.md Finding 1) and sat on the 145M-candidate sf100 hot
-        // loop. HOF parity is pinned by VectorExpressionsSpec.
-        (graft.functions.Vec.sigMatch(col("a.sigs"), col("b.sigs"))
-          .cast("double") / NumHashes).as("est_jaccard"))
-      .dropDuplicates("id1", "id2")
-    if (!verify)
-      cand.filter(col("est_jaccard") >= threshold).orderBy("id1", "id2")
-    else {
-      // LSH proposes, exact verification disposes. Banding SELECTS the
-      // upper tail of the 32-component estimator — conditioned on a band
-      // collision the matched components are in the estimate, so a
-      // true-J≈0.3 pair that collides typically reads est ≥ 0.5
-      // (measured precision of est-only filtering vs exact J ≥ 0.35:
-      // 0.21 at sf0.01). The production fix is the standard
-      // candidates→verify pipeline: exact shingle-set Jaccard on the
-      // candidate pairs only. Cost stays LSH-shaped — candidate volume
-      // is Σ|bucket|² (cap-bounded), the shingle re-scan is semi-joined
-      // down to candidate docs, and the two verify joins move
-      // candidate-sized rows, never corpus².
-      // The candidate set is consumed THREE times (two id-projection
-      // union branches + the verify join); a LAZY cache shares the
-      // expensive explode/window/dedup pipeline across the consumers
-      // within one action without localCheckpoint's extra materialize
-      // job (measured: eager checkpoint cost +50% at sf0.1 while lazy
-      // cache is neutral there and keeps the sf10 reuse win). Blocks
-      // are candidate-sized (id1, id2, est); MEMORY_AND_DISK, evicted
-      // LRU — a long-lived session can unpersist via the returned
-      // plan's InMemoryRelation if it must. shareCandidates=false exists
-      // for ITERATIVE downstream consumers (connectedComponents): their
-      // per-round localCheckpoints compete with the cache for the same
-      // storage pool and thrash it (measured at sf10/16g: clusters
-      // 50.7 s uncached vs 100.3 s cached, while the plain pairs gate is
-      // 37.2 s -> 25.0 s WITH the cache — opposite preferences, so the
-      // caller chooses).
-      val candCk = if (shareCandidates) registerCandCache(cand.cache()) else cand
-      // Both id projections re-read `cand` — which is NOT a triple
-      // recompute even uncached: within the one action AQE's
-      // ReuseExchange dedups the (band,bsig) bucket exchange AND the
-      // dropDuplicates pair exchange across the three consumers, so the
-      // marginal cost per consumer is a pair-sized read. (r15-opt
-      // measured the "derive ids from the bucket frame before the pair
-      // step" alternative at sf10: 1.4-1.7× WORSE — it re-runs the
-      // bucket WINDOW over the full exploded rows, which exchange reuse
-      // had already made unnecessary.)
-      val ids = candCk.select(col("id1").as("doc_id"))
-        .union(candCk.select(col("id2").as("doc_id"))).distinct()
-      // The shingle table feeds BOTH verify joins. Written as two
-      // renamed projections of one plan it executed as two INDEPENDENT
-      // broadcast builds (AQE does not recognise the builds as
-      // reusable), each re-running the docs semi-join + the shingleSet
-      // projection — and each inheriting the SCAN's partitioning, so at
-      // small inputs the expensive per-doc shingle pass ran serially,
-      // twice (r16 JobProbe: two ~1.6 s single-task broadcast-build
-      // jobs on q_dedup_minhash at sf0.1). The lazy checkpoint makes
-      // the pass run ONCE — the first build materializes the blocks,
-      // the second reads them — and the PINNED-width doc_id repartition
-      // gives it exchange-sized parallelism (keyless/unpinned
-      // repartition is AQE-coalescable, and AQE sizes by BYTES: the
-      // shingle input is byte-small but CPU-heavy, so coalescing
-      // serialized it again when measured). numShufflePartitions is the
-      // deployment's scale lever, so the width is conf-sized, not a
-      // local constant. Candidate-doc text moves once; the two scans +
-      // two serial shingle passes this replaces cost strictly more at
-      // every scale. Blocks are released on the next minhashPairs call
-      // or via [[unpersistCandidates]] (iterative consumers release
-      // eagerly once their edge frame is materialized).
-      val shParts = docs.sparkSession.sessionState.conf.numShufflePartitions
-      val sh = registerShingleScratch(docs.join(ids, Seq("doc_id"), "left_semi")
-        .repartition(shParts, col("doc_id"))
-        .select(col("doc_id"), shingleSet(col("text")).as("sh"))
-        .localCheckpoint(eager = false))
-      candCk
-        .join(sh.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-        .join(sh.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-            size(array_union(col("sh1"), col("sh2"))))
-        .filter(col("jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard", "jaccard")
-        .orderBy("id1", "id2")
-    }
+      .agg(collect_list(col("doc_id")).as("ids"))
+      .filter(size(col("ids")) > 1)
+      .select(explode(col("ids")).as("id1"), col("ids"))
+      .select(col("id1"), explode(col("ids")).as("id2"))
+      .filter(col("id1") < col("id2"))
+      .distinct()
+    val text = docs.select("doc_id", "text")
+    cand
+      .join(text.select(col("doc_id").as("id1"), col("text").as("t1")), Seq("id1"))
+      .join(text.select(col("doc_id").as("id2"), col("text").as("t2")), Seq("id2"))
+      .withColumn("jaccard", Vec.shingleJaccard(col("t1"), col("t2")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id1"), col("id2"),
+        // native matched-component count, not aggregate/zip_with HOF
+        // lambdas (interpreted at ≈40×/element, PERF.md Finding 1)
+        (Vec.sigMatch(Vec.minhash(col("t1")), Vec.minhash(col("t2")))
+          .cast("double") / NumHashes).as("est_jaccard"),
+        col("jaccard"))
+      .orderBy("id1", "id2")
   }
 
-  /** The distinct 3-word shingle set of a text as strings — the exact
-    * counterpart of the hashed shingle universe [[minhashSigUdf]] /
-    * `graft_minhash` estimate over (same windows, same <3-word
-    * whole-text degenerate case; string identity instead of fnv1a/mix
-    * hashing, so no collision caveat). The native `graft_shingles`
-    * kernel, linear in the text (TextExpressionsSpec pins it to the
-    * builtin `split`/`transform`/`array_distinct` form).
-    */
-  private def shingleSet(text: Column): Column = graft.functions.Vec.shingles(text)
-
   /** One row per (doc, band): the LSH bucket key stream both
-    * [[minhashPairs]] and [[minhashBucketStats]] aggregate.
+    * [[minhashPairs]] and [[minhashBucketStats]] aggregate. `sigs` is
+    * read only by [[contaminationFuzzy]]'s band-meet estimate; the other
+    * consumers project it away before their exchange.
     */
   private def minhashExploded(docs: DataFrame): DataFrame =
     minhashSigs(docs)
@@ -390,13 +272,8 @@ object Llm {
     */
   def q_dedup_clusters(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val pairs = minhashPairs(docs, threshold = 0.5, shareCandidates = false)
-      .select("id1", "id2")
+    val pairs = minhashPairs(docs, threshold = 0.5).select("id1", "id2")
     val cc = Scale.connectedComponents(docs.select("doc_id"), "doc_id", pairs, "id1", "id2")
-    // connectedComponents materialized its symmetric edge frame eagerly,
-    // so the pair pipeline (and its shingle checkpoint) is dead — free
-    // the blocks before the label rounds compete for the storage pool
-    unpersistCandidates()
     cc.select(col("id").as("doc_id"), col("label").as("cluster"),
         (col("id") === col("label")).as("keep"))
       .orderBy("doc_id")
@@ -414,12 +291,8 @@ object Llm {
     */
   def q_dedup_keep_best(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val pairs = minhashPairs(docs, threshold = 0.5, shareCandidates = false)
-      .select("id1", "id2")
+    val pairs = minhashPairs(docs, threshold = 0.5).select("id1", "id2")
     val cc = Scale.connectedComponents(docs.select("doc_id"), "doc_id", pairs, "id1", "id2")
-    // edge frame is materialized (see q_dedup_clusters) — release the
-    // pair pipeline's scratch before the window pass
-    unpersistCandidates()
     val cl = cc.select(col("id").as("doc_id"), col("label").as("cluster"))
     val w = Window.partitionBy("cluster").orderBy(col("n_bytes").desc, col("doc_id").asc)
     cl.join(docs.select(col("doc_id"), length(col("text")).cast("long").as("n_bytes")), "doc_id")
@@ -1853,9 +1726,9 @@ object Llm {
     * survivor cut and miss check, the card, and the card read-back —
     * and the card and the result are local relations. Measured jobs of
     * a warm run over sf0.001 (JobProbe, 4 cores): ingest 1, dedupNear
-    * 15, neymanSample 8 (20 with the checkpointed SQL allocation and
-    * sampler), corpusCard 4 (11 with the checkpointed card), publish 2;
-    * with the collect of the result, 30 in all (SessionSpec; 52 before).
+    * 10 (two actions; the LSH pairs run inside the second), neymanSample
+    * 8, corpusCard 4, publish 2; with the collect of the result, 25 in
+    * all (SessionSpec).
     */
   private[graft] def releasePipeline(
       s: SparkSession, d: String): (graft.pipeline.DPP, java.nio.file.Path) = {
@@ -1879,8 +1752,8 @@ object Llm {
         Scale.dedupKeepFirst(df, Seq(col("norm_key")), Seq(col("doc_id")))) >> p.uniq,
       Prev >> fn("dedupNear") { df =>
         // Materialize the exact-dedup survivors' (doc_id, text) ONCE:
-        // the LSH pipeline consumes this frame three ways (band
-        // signatures, the verify shingle re-scan, and the keep-id
+        // the LSH pipeline consumes this frame four ways (band
+        // signatures, the two verify text joins, and the keep-id
         // anti-join probe side), and the consumers prune DIFFERENT
         // columns, so their exchanges diverge and each re-derived the
         // normalize kernel + exact-dedup window from the snapshot
@@ -1908,9 +1781,6 @@ object Llm {
         val keepIds = uniqText.select("doc_id").join(drop, Seq("doc_id"), "left_anti")
           .localCheckpoint()
         unpersistCheckpoint(uniqText) // keepIds is materialized — dead blocks
-        // the LSH candidate cache + shingle checkpoint fed only `drop`,
-        // which keepIds has absorbed — free them before the sampler tier
-        unpersistCandidates()
         p("corpus").join(keepIds, Seq("doc_id"), "left_semi")
       } >> p.deduped,
       Prev >> fn("neymanSample") { df =>

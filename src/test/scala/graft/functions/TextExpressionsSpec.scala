@@ -350,6 +350,46 @@ class TextExpressionsSpec extends AnyFunSuite {
       s"no codegen span around graft_shingles:\n$plan")
   }
 
+  test("graft_shingle_jaccard ≡ array_intersect/array_union over graft_shingles") {
+    import spark.implicits._
+    // the verify expression the kernel replaced, kept here as the reference
+    def reference(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
+      val (sa, sb) = (Vec.shingles(a), Vec.shingles(b))
+      size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb))
+    }
+    val edges = Seq("a b c ", "a b c  ", " a b c", "  a b", "a  b c", "a b", "a", "", " ",
+      "  ", "a b c a b c a b c", "x y x y x y", "x y x y", "é ü 😀 中 文", "ü 😀 中 文 é",
+      "a\u0001b c d", "a b\u0001c d", "one two three four five", "two three four five six")
+      .map(Option(_)) :+ None
+    val edgePairs = for (a <- edges; b <- edges) yield (a, b)
+    // corpus pairs: neighbours (mostly disjoint), a doc against itself,
+    // and against a prefix/suffix edit of itself (partial overlap)
+    val texts = graft.ops.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    val corpusPairs = texts.as("x").join(texts.as("y"), col("y.doc_id") === col("x.doc_id") + 1)
+      .select(col("x.text").as("a"), col("y.text").as("b"))
+      .unionByName(texts.select(col("text").as("a"), col("text").as("b")))
+      .unionByName(texts.select(col("text").as("a"),
+        concat(substring_index(col("text"), " ", 6), lit(" tail words here")).as("b")))
+      .unionByName(texts.select(col("text").as("a"),
+        concat(lit("lead in "), col("text")).as("b")))
+    val rows = corpusPairs.unionByName(edgePairs.toDF("a", "b"))
+      .select(col("a"), col("b"), Vec.shingleJaccard(col("a"), col("b")).as("nat"),
+        reference(col("a"), col("b")).as("ref"))
+      .collect()
+    val (withNull, both) = rows.partition(r => r.isNullAt(0) || r.isNullAt(1))
+    assert(withNull.nonEmpty && withNull.forall(_.isNullAt(2)),
+      "a null text on either side must give null")
+    val bad = both.filterNot(r => !r.isNullAt(2) && r.getDouble(2) == r.getDouble(3))
+    assert(bad.isEmpty, s"${bad.length} mismatches, first: ${bad.headOption}")
+    val partial = both.count(r => r.getDouble(2) > 0 && r.getDouble(2) < 1)
+    assert(partial > 100, s"only $partial pairs with partial overlap")
+    val plan = texts.select(Vec.shingleJaccard(col("text"), lit("a b c d")))
+      .queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project \[graft_shingle_jaccard""".r.findFirstIn(plan).isDefined,
+      s"no codegen span around graft_shingle_jaccard:\n$plan")
+  }
+
   test("kernels run inside whole-stage codegen (no UDF/BatchEvalPython in plan)") {
     val df = graft.ops.Tables.documents(spark, sf)
       .select(Vec.minhash(col("text")).as("s"))

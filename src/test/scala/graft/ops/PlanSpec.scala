@@ -79,6 +79,33 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("minhash LSH shuffles bucket ids, not signatures; no cache, no checkpoint") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.ArrayType
+    val df = Llm.minhashPairs(Tables.documents(spark, sf), threshold = 0.5)
+    df.collect() // the final adaptive plan
+    object H extends AdaptiveSparkPlanHelper
+    val bucketExchanges = H.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)).toSet == Set("band", "bsig")
+        case _ => false
+      }) => e
+    }
+    assert(bucketExchanges.nonEmpty, s"no (band, bsig) exchange:\n${df.queryExecution.executedPlan}")
+    bucketExchanges.foreach { e =>
+      val arrays = e.output.filter(_.dataType.isInstanceOf[ArrayType])
+      assert(arrays.isEmpty, s"bucket exchange carries ${arrays.mkString(", ")}:\n$e")
+    }
+    val scratch = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }
+    assert(scratch.isEmpty, s"cached or checkpointed relations in the plan: $scratch")
+  }
+
   test("range join stays keyed on the equi-part (no BNLJ)") {
     val plan = planOf(Relational.q_join_range(spark, sf))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),

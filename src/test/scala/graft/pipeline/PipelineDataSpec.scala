@@ -64,12 +64,12 @@ class PipelineDataSpec extends AnyFunSuite {
   test("release pipeline: corpus-snapshot rescans in the composed plan stay bounded") {
     // Each corpus-snapshot scan is a full corpus read at 100 TB — the
     // composed release pipeline must never silently regress toward
-    // rescan-per-stage. Measured today (ReleaseStageProbe): pre-LSH
-    // slots read the snapshot once; the near-dup stage's anti-join
-    // peaks at 3 (probe side + the two LSH candidate branches); the
-    // sampling stage's internal localCheckpoint barrier cuts lineage,
-    // so everything downstream (incl. the published card) reads it 0
-    // times. Bounds assert those ceilings.
+    // rescan-per-stage. Pre-LSH slots read the snapshot once; the
+    // near-dup stage reads it once more, to re-attach payloads to its
+    // checkpointed survivor ids (the LSH pairs themselves read the
+    // checkpointed survivor texts, not the snapshot); the sampling
+    // stage's internal localCheckpoint barrier cuts lineage, so
+    // everything downstream (incl. the published card) reads it 0 times.
     val (p, base) = graft.ops.Llm.releasePipeline(spark, sf)
     try {
       def snapScans(slot: String): Int =
@@ -83,8 +83,8 @@ class PipelineDataSpec extends AnyFunSuite {
         }.size
       assert(snapScans("normed") == 1 && snapScans("kept") == 1
         && snapScans("uniq") == 1, "pre-LSH stages must read the snapshot once")
-      assert(snapScans("deduped") <= 3,
-        s"near-dup stage rescans regressed: ${snapScans("deduped")} > 3")
+      assert(snapScans("deduped") == 1,
+        s"near-dup stage rescans regressed: ${snapScans("deduped")} != 1")
       assert(snapScans("sampled") == 0 && snapScans("result") == 0,
         "the sampling barrier must cut corpus lineage; the published card reads only the card snapshot")
     } finally
