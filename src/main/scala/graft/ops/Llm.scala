@@ -3711,13 +3711,17 @@ object Llm {
   def q_budget_trim(s: SparkSession, d: String): DataFrame =
     budgetTrim(documents(s, d), TrimBudget)
 
-  /** The prefiltered trim behind [[q_budget_trim]]; `oversample` /
-    * `cushionDocs` size the threshold (exposed so OpsSpec can force the
-    * under-cut -> exact-fallback path with oversample = 0).
+  /** The prefiltered trim behind [[q_budget_trim]]. */
+  private[ops] def budgetTrim(docs: DataFrame, budget: Long): DataFrame =
+    budgetTrimCut(docs, budget, oversample = 2.0, cushionDocs = 16.0)
+
+  /** [[budgetTrim]] with its survivor threshold sized as
+    * `oversample · budget` tokens plus `cushionDocs` docs per source.
+    * Specs pass an under-cut (oversample 0) to force every source
+    * through the exact fallback.
     */
-  private[ops] def budgetTrim(docs: DataFrame, budget: Long,
-                              oversample: Double = 2.0,
-                              cushionDocs: Double = 16.0): DataFrame = {
+  private[graft] def budgetTrimCut(docs: DataFrame, budget: Long,
+                                   oversample: Double, cushionDocs: Double): DataFrame = {
     val s = docs.sparkSession
     val base = docs
       .select(col("doc_id"), col("source"),

@@ -4199,9 +4199,9 @@ object Relational {
     // are >30 min apart, so the event_id tail of the total order never
     // decides between rows that could reorder the running sum.
     // The day-grain rollup is FOLDED into the terasort's own pass
-    // ([[Scale.globalCumMaxPerGroup]]): the per-partition running sum
-    // feeds a map-side (pid, day) partial agg in the same stage, and
-    // the partition offsets come from that micro-table — vs the r14
+    // ([[Scale.globalCumMaxPerGroup]]): the per-bucket running sum
+    // feeds a map-side (bucket, day) partial agg in the same stage, and
+    // the bucket offsets come from that micro-table — vs the r14
     // globalCumSum + groupBy form this removes the n-row
     // localCheckpoint, the separate offset-count scan, the broadcast
     // join back onto n rows, and the n-row day agg (sf100 A/B:
@@ -4222,9 +4222,10 @@ object Relational {
         col("delta"),
         Seq((expr("ts_us div 86400000000"), "day")),
         "peak_concurrency",
-        Seq((when(col("delta") === 1L, 1L).otherwise(0L), "n_session_starts")),
+        bucketKey = col("ts_us").cast("double"),
+        extraSums = Seq((when(col("delta") === 1L, 1L).otherwise(0L), "n_session_starts")),
         numPartitions = fanout,
-        keyBoundaries = boundaries)
+        boundaries = Some(boundaries))
       .orderBy("day")
   }
 

@@ -1,9 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.functions.BucketIndex
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, StringType,
+  StructField, StructType}
 
 /** Reusable at-scale operator patterns. Each transform documents its
   * shuffle behavior — the unit of reasoning for a 1000-executor plan.
@@ -89,9 +91,20 @@ object Scale {
     */
   def quotaSample(df: DataFrame, groupCols: Seq[String], hash: Column,
                   tie: Seq[Column], quotas: Either[Long, DataFrame],
-                  oversample: Double = 2.0, cushion: Double = 16.0,
-                  groupCounts: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+                  groupCounts: Option[DataFrame] = None): DataFrame =
+    quotaSampleCut(df, groupCols, hash, tie, quotas, groupCounts,
+      oversample = 2.0, cushion = 16.0)
+
+  /** [[quotaSample]] with its survivor threshold sized as
+    * `n_h · oversample + cushion` rows per group. Specs pass an
+    * under-cut (oversample 0) to force every group through the exact
+    * fallback.
+    */
+  private[graft] def quotaSampleCut(df: DataFrame, groupCols: Seq[String], hash: Column,
+                                    tie: Seq[Column], quotas: Either[Long, DataFrame],
+                                    groupCounts: Option[DataFrame],
+                                    oversample: Double, cushion: Double): DataFrame = {
+    import org.apache.spark.sql.types.LongType
     val spark = df.sparkSession
     val grp = groupCols.map(col)
     val k = groupCols.size
@@ -225,375 +238,235 @@ object Scale {
         16, 10).cast("double"),
       lit(0.0)) / lit(math.pow(2.0, 8.0 * bytes))
 
-  /** Shared prep of the terasort helpers: returns `(statsSource,
-    * sorted, checkpoint)` where `sorted` carries the partition-unit
-    * column `pid` in sorted order and `statsSource` yields the same
-    * `pid` → rows mapping cheaply for the offset pass; both read ONE
-    * materialization.
+  // ---- the terasort: global running order without a single-task funnel
+  //
+  // Every global running-order helper below has one shape: tag each row
+  // with an ORDINAL bucket of a monotone key, range-partition on the
+  // bucket, sort (bucket, order) within partitions, run the window per
+  // bucket, and add each bucket's start offset — a driver-side
+  // cumulative sum over the per-bucket totals (a bucket-count-sized
+  // collect, the footprint AQE's partition statistics already have).
+  // Every stage is wide and the sort is range-partitioned and
+  // spillable: the 100 TB shape. Results depend only on the total
+  // order, never on the sampled boundaries, so they are reproducible
+  // across partitionings, retries and cluster sizes.
+
+  /** Column carrying the terasort bucket id; no helper returns it. */
+  private val Bucket = "__ts_bucket"
+
+  /** `df` plus the ordinal terasort bucket of `bucketKey`: the count of
+    * boundaries ≤ the key, from the `graft_bucket` codegen kernel
+    * ([[graft.functions.BucketIndex]]).
     *
-    * Two shapes:
-    *
-    * - `bucketKey == null` (legacy): range-partition on the order keys,
-    *   `spark_partition_id()` as `pid`, checkpoint the SORTED rows.
-    *   Correct for any order, but the pid window downstream pays a
-    *   planner-inserted second full exchange + re-sort:
-    *   `RangePartitioning(order)` does not satisfy
-    *   `ClusteredDistribution(pid)` (the planner cannot know pid is
-    *   constant per partition) — the r15 CumProbe finding.
-    *
-    * - `bucketKey != null` (ONE-SHUFFLE): `bucketKey` must be a
-    *   NON-NULL double-valued expression over `df`'s columns that is
-    *   monotone NON-DECREASING w.r.t. the total `order` (direction
-    *   included — negate for desc; compose ties as
-    *   `leading + fraction` with [[hexFrac]]/[[strFrac]]). Rows carry
-    *   an ORDINAL bucket id (codegen binary search against quantile
-    *   boundaries of `bucketKey` — sampled from the pre-sort
-    *   checkpoint when `bucketBoundaries` is null, so the sampling
-    *   pass reads cached blocks, not the input subtree), and
-    *   `repartitionByRange(bucket)` IS a distribution the pid window
-    *   accepts: the window and everything after it ride the terasort's
-    *   own exchange, nothing re-shuffles. Ties in `bucketKey` never
-    *   split across buckets, so heavy ties bound parallelism — refine
-    *   the proxy with a tiebreak fraction when the leading key is
-    *   tie-heavy. Offsets aggregate over the PRE-SORT checkpoint
-    *   (bucket id is a row function, not a placement), saving the
-    *   n-row sorted checkpoint the legacy shape pays.
+    * `bucketKey` must be a NON-NULL double-valued expression over `df`'s
+    * columns, monotone NON-DECREASING in the helper's total `order`
+    * (direction included — negate for desc; refine a tie-heavy leading
+    * key as `leading + fraction` with [[hexFrac]]/[[strFrac]]). Ties in
+    * the key never split across buckets, so they bound parallelism,
+    * never correctness. `boundaries` may be unsorted, duplicated or out
+    * of range; an empty array is one bucket. Without them the keyed
+    * input is localCheckpoint'ed and `4 × parts` quantiles are sampled
+    * from those cached blocks — ≥4 buckets per partition let the range
+    * packer balance multi-bucket partitions.
     */
-  private def terasortPrep(df: DataFrame, order: Seq[Column], parts: Int,
-                           bucketKey: Column, bucketBoundaries: Array[Double],
-                           pid: String): (DataFrame, DataFrame) = {
-    if (bucketKey == null) {
-      val sorted = df.repartitionByRange(parts, order: _*)
-        .sortWithinPartitions(order: _*)
-        .withColumn(pid, spark_partition_id())
-        .localCheckpoint()
-      (sorted, sorted)
-    } else {
-      val src0 = df.withColumn("__bk", bucketKey.cast("double")).localCheckpoint()
-      val bounds = (if (bucketBoundaries != null) bucketBoundaries
-        else {
-          // ≥4 buckets per partition so the range packer can balance
-          // multi-bucket partitions (hash placement collides ~Poisson;
-          // ordinal ranges pack evenly — the r15 q_peak_concurrency fix)
-          val m = 4 * parts
-          src0.stat.approxQuantile("__bk",
-            (1 until m).map(_.toDouble / m).toArray, 0.001)
-        }).distinct.sorted
-      val bucket =
-        if (bounds.isEmpty) lit(0)
-        else org.apache.spark.sql.GraftSqlBridge.column(
-          graft.functions.BucketIndex(
-            org.apache.spark.sql.GraftSqlBridge.expression(col("__bk")),
-            bounds))
-      val src = src0.withColumn(pid, bucket).drop("__bk")
-      val sorted = src.repartitionByRange(parts, col(pid))
-        .sortWithinPartitions(col(pid) +: order: _*)
-      (src, sorted)
+  private def withBucket(df: DataFrame, bucketKey: Column,
+                         boundaries: Option[Array[Double]], parts: Int): DataFrame = {
+    def assign(d: DataFrame, key: Column, bounds: Array[Double]): DataFrame = {
+      val sorted = bounds.distinct.sorted
+      d.withColumn(Bucket,
+        if (sorted.isEmpty) lit(0)
+        else GraftSqlBridge.column(BucketIndex(GraftSqlBridge.expression(key), sorted)))
+    }
+    boundaries match {
+      case Some(b) => assign(df, bucketKey.cast("double"), b)
+      case None =>
+        val keyed = df.withColumn("__ts_key", bucketKey.cast("double")).localCheckpoint()
+        val m = 4 * parts
+        val sampled = keyed.stat.approxQuantile("__ts_key",
+          (1 until m).map(_.toDouble / m).toArray, 0.001)
+        assign(keyed, col("__ts_key"), sampled).drop("__ts_key")
     }
   }
 
-  /** Deterministic global row-sequencing: assigns `posCol` = 1..N in the
-    * total order of `order`, WITHOUT funnelling the dataset through a
-    * single task (the partition-less `row_number()` window plan). Shape:
-    * range-partition on the order keys, sort within partitions, then add
-    * each partition's start offset to the per-partition `row_number` —
-    * the offsets are a P-row driver-side cumulative sum over partition
-    * counts (the same per-partition-stats footprint AQE collects), so
-    * every stage is wide. This is the terasort ranking recipe: the sort
-    * is range-partitioned and spillable, exactly the 100 TB shape.
-    *
-    * Positions depend only on the total order, never on the sampled
-    * range boundaries, so output is reproducible across partitionings,
-    * retries, and cluster sizes. `order` must be a TOTAL order (add a
-    * unique tiebreak) or positions within ties are nondeterministic.
-    *
-    * Pass `bucketKey` (a non-null double proxy monotone in `order` —
-    * see [[terasortPrep]]) to take the ONE-SHUFFLE path: without it the
-    * pid window pays a hidden second full exchange + re-sort. The
-    * checkpointed input (sorted rows legacy; pre-sort rows bucketed) is
-    * materialized once; release via [[Llm.unpersistCheckpoint]].
+  /** Bucketed rows range-partitioned on the bucket and sorted by
+    * (bucket, `order`) within partitions. A range partitioning on the
+    * bucket satisfies the per-bucket window's distribution and the sort
+    * is its required ordering, so the window and everything after it
+    * ride this one exchange (a partition-id column would not:
+    * the planner would add a second full exchange and re-sort).
     */
-  def globalSequence(df: DataFrame, order: Seq[Column],
-                     posCol: String, numPartitions: Int = 0,
-                     bucketKey: Column = null,
-                     bucketBoundaries: Array[Double] = null): DataFrame = {
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (statsSrc, sorted) =
-      terasortPrep(df, order, parts, bucketKey, bucketBoundaries, "__gs_pid")
-    val counts = statsSrc.groupBy("__gs_pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (pid, n) => val o = acc; acc += n; (pid, o) }
-    import spark.implicits._
-    val offsetsDf = offsets.toSeq.toDF("__gs_pid", "__gs_off")
-    // window partitioned by pid: parallelism = P, never a global funnel
-    val w = Window.partitionBy("__gs_pid").orderBy(order: _*)
-    sorted.join(broadcast(offsetsDf), Seq("__gs_pid"))
-      .withColumn(posCol, col("__gs_off") + row_number().over(w))
-      .drop("__gs_pid", "__gs_off")
+  private def rangeSorted(bucketed: DataFrame, order: Seq[Column], parts: Int): DataFrame =
+    bucketed.repartitionByRange(parts, col(Bucket))
+      .sortWithinPartitions(col(Bucket) +: order: _*)
+
+  private def runningWindow(order: Seq[Column]) =
+    Window.partitionBy(Bucket).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  private def partitions(df: DataFrame, numPartitions: Int): Int =
+    if (numPartitions > 0) numPartitions
+    else df.sparkSession.sessionState.conf.numShufflePartitions
+
+  /** Bucket start offsets from the collected per-bucket sums
+    * `perBucket` (rows of bucket id, Σv₀, …, Σvₙ₋₁; empty buckets are
+    * absent): a local relation of (bucket, `__ts_off<i>`), each offset
+    * cast back to its sum type `types(i)`, plus the grand totals as
+    * literals of those types. Exact types (long/decimal) accumulate in
+    * BigDecimal and travel as canonical strings, which round-trip
+    * losslessly; double sums (float values sum as double) accumulate in
+    * Double, so NaN/Infinity flow through instead of failing in
+    * BigDecimal's parser.
+    */
+  private def offsets(spark: SparkSession, perBucket: Array[Row],
+                      types: Seq[DataType]): (DataFrame, Seq[Column]) = {
+    val zero: IndexedSeq[Any] = types.toIndexedSeq.map {
+      case DoubleType => 0.0
+      case _          => java.math.BigDecimal.ZERO
+    }
+    def add(acc: Any, v: Any): Any = (acc, v) match {
+      case (_, null)                                          => acc
+      case (a: Double, n: Number)                             => a + n.doubleValue
+      case (a: java.math.BigDecimal, b: java.math.BigDecimal) => a.add(b)
+      case (a: java.math.BigDecimal, n: Number)               => a.add(new java.math.BigDecimal(n.toString))
+    }
+    def shipped(acc: Any): Any = acc match {
+      case b: java.math.BigDecimal => b.toPlainString
+      case d                       => d
+    }
+    var acc = zero
+    val rows = perBucket.sortBy(_.getInt(0)).map { r =>
+      val row = Row.fromSeq(r.get(0) +: acc.map(shipped))
+      acc = acc.indices.map(i => add(acc(i), r.get(i + 1)))
+      row
+    }
+    val schema = StructType(StructField(Bucket, IntegerType) +: zero.indices.map(i =>
+      StructField(s"__ts_o$i", if (zero(i).isInstanceOf[Double]) DoubleType else StringType)))
+    val offs = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col(Bucket) +: types.indices.map(i =>
+        col(s"__ts_o$i").cast(types(i)).as(s"__ts_off$i")): _*)
+    (offs, types.indices.map(i => lit(shipped(acc(i))).cast(types(i))))
   }
+
+  /** The running-sum core of [[globalSequence]], [[globalCumSum]] and
+    * [[globalCumSums]]: each `(value, name)` adds `name` = Σ `value` over
+    * every row at-or-before the current one in the total `order`, cast
+    * to the value's sum type; also returns the grand totals. One range
+    * sort, one bucket-count-sized collect, N running sums.
+    *
+    * `order` must be a TOTAL order (add a unique tiebreak) or running
+    * values at ties are nondeterministic; see [[withBucket]] for the
+    * `bucketKey` contract. Values should be exact (long/decimal); double
+    * sums carry the usual float-sum caveats.
+    *
+    * Checkpoints (the contract of all four helpers): the keyed input is
+    * localCheckpoint'ed once, so the boundary sample, the per-bucket
+    * sums and the output pass read one materialization
+    * ([[globalCumMaxPerGroup]] checkpoints its micro-table instead, and
+    * the keyed input only when it samples its own boundaries). The
+    * helpers do not release these blocks: Spark's ContextCleaner drops
+    * them once the result is unreferenced, and a caller running a
+    * helper in a loop can free them early with [[Llm.unpersistCheckpoint]].
+    */
+  private def runningSums(df: DataFrame, order: Seq[Column], values: Seq[(Column, String)],
+                          bucketKey: Column, numPartitions: Int): (DataFrame, Seq[Column]) = {
+    val parts = partitions(df, numPartitions)
+    val bucketed = withBucket(df, bucketKey, None, parts)
+    val sums = values.indices.map(i => sum(values(i)._1).as(s"__ts_s$i"))
+    val stats = bucketed.groupBy(Bucket).agg(sums.head, sums.tail: _*)
+    val types = values.indices.map(i => stats.schema(s"__ts_s$i").dataType)
+    val (offs, totals) = offsets(df.sparkSession, stats.collect(), types)
+    val w = runningWindow(order)
+    val out = values.zipWithIndex.foldLeft(
+      rangeSorted(bucketed, order, parts).join(broadcast(offs), Seq(Bucket))) {
+        case (d, ((v, name), i)) =>
+          d.withColumn(name, (col(s"__ts_off$i") + sum(v).over(w)).cast(types(i)))
+      }
+    (out.drop(Bucket +: values.indices.map(i => s"__ts_off$i"): _*), totals)
+  }
+
+  /** Deterministic global row-sequencing: `posCol` = 1..N (long) in the
+    * total order of `order`, WITHOUT the partition-less `row_number()`
+    * window that funnels the dataset through one task — the running
+    * count of the terasort core ([[runningSums]]).
+    */
+  def globalSequence(df: DataFrame, order: Seq[Column], posCol: String,
+                     bucketKey: Column, numPartitions: Int = 0): DataFrame =
+    runningSums(df, order, Seq((lit(1L), posCol)), bucketKey, numPartitions)._1
 
   /** Deterministic global running sum: `cumCol` = Σ `value` over all rows
     * at-or-before the current row in the total order of `order`, WITHOUT
     * the partition-less `sum().over(Window.orderBy(...))` plan that
-    * funnels the dataset through one task. Same terasort shape as
-    * [[globalSequence]]: range-partition on the order keys, sort within
-    * partitions, run the running sum per partition, then add each
-    * partition's start offset — the offsets are a P-row driver-side
-    * cumulative sum over per-partition totals (the same footprint AQE's
-    * partition statistics already collect), accumulated in BigDecimal so
-    * DECIMAL/long sums stay exact. Optionally also attaches the grand
-    * total as `totalCol` (free: it is the final driver accumulator),
-    * replacing the `sum().over(Window.partitionBy(lit(1)))` total-window
-    * anti-pattern.
-    *
-    * `order` must be a TOTAL order (add a unique tiebreak) or the running
-    * sum at tied rows is nondeterministic. `value` must be an expression
-    * over `df`'s columns whose `sum()` is exact under reordering (long /
-    * decimal — for double/float the offsets accumulate in Double and the
-    * usual float-sum caveats apply, but NaN/Infinity partition sums pass
-    * through rather than erroring).
-    *
-    * The sorted input is localCheckpoint'ed once so the offset pass and
-    * the output pass read the same materialization; callers running this
-    * repeatedly can release the blocks afterwards via
-    * [[Llm.unpersistCheckpoint]] (same contract as [[globalSequence]]).
-    * Pass `bucketKey` (monotone double proxy of `order`, nulls
-    * disallowed — see [[terasortPrep]]) for the ONE-SHUFFLE path that
-    * elides the hidden pid exchange + re-sort.
+    * funnels the dataset through one task ([[runningSums]]). Optionally
+    * also attaches the grand total as `totalCol` (free: it is the final
+    * driver accumulator), replacing the
+    * `sum().over(Window.partitionBy(lit(1)))` total-window anti-pattern.
+    * For double/float values NaN/Infinity pass through rather than
+    * erroring.
     */
   def globalCumSum(df: DataFrame, order: Seq[Column], value: Column,
-                   cumCol: String, totalCol: String = null,
-                   numPartitions: Int = 0,
-                   bucketKey: Column = null,
-                   bucketBoundaries: Array[Double] = null): DataFrame = {
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (statsSrc, sorted) =
-      terasortPrep(df, order, parts, bucketKey, bucketBoundaries, "__cs_pid")
-    val stats = statsSrc.groupBy("__cs_pid").agg(sum(value).as("__cs_sum"))
-    val sumType = stats.schema("__cs_sum").dataType
-    val fractional = sumType match {
-      case org.apache.spark.sql.types.DoubleType |
-           org.apache.spark.sql.types.FloatType => true
-      case _ => false
-    }
-    import spark.implicits._
-    // exact types (long/decimal) accumulate in BigDecimal; double/float
-    // accumulate in Double so NaN/Infinity partition sums flow through
-    // instead of exploding inside BigDecimal's string parser
-    val (offsetsDf, totalStr) = if (fractional) {
-      val perPart = stats.collect()
-        .map { r =>
-          val s = r.get(1) match {
-            case null      => 0.0
-            case n: Number => n.doubleValue()
-          }
-          (r.getInt(0), s)
-        }
-        .sortBy(_._1)
-      var acc = 0.0
-      val offsets = perPart.map { case (pid, sm) => val o = acc; acc += sm; (pid, o) }
-      (offsets.toSeq.toDF("__cs_pid", "__cs_off_d")
-         .select(col("__cs_pid"), col("__cs_off_d").cast(sumType).as("__cs_off")),
-       acc.toString)
-    } else {
-      val perPart = stats.collect()
-        .map { r =>
-          val s = r.get(1) match {
-            case null                    => java.math.BigDecimal.ZERO
-            case b: java.math.BigDecimal => b
-            case n: Number               => new java.math.BigDecimal(n.toString)
-          }
-          (r.getInt(0), s)
-        }
-        .sortBy(_._1)
-      var acc = java.math.BigDecimal.ZERO
-      val offsets = perPart.map { case (pid, sm) => val o = acc; acc = acc.add(sm); (pid, o) }
-      // offsets travel as strings and are cast back to the exact sum type —
-      // decimal/long round-trip losslessly through their canonical string form
-      (offsets.toSeq.map { case (pid, o) => (pid, o.toPlainString) }
-         .toDF("__cs_pid", "__cs_off_s")
-         .select(col("__cs_pid"), col("__cs_off_s").cast(sumType).as("__cs_off")),
-       acc.toPlainString)
-    }
-    // window partitioned by pid: parallelism = P, never a global funnel
-    val w = Window.partitionBy("__cs_pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = sorted.join(broadcast(offsetsDf), Seq("__cs_pid"))
-      .withColumn(cumCol, (col("__cs_off") + sum(value).over(w)).cast(sumType))
-      .drop("__cs_pid", "__cs_off")
-    if (totalCol == null) cum
-    else cum.withColumn(totalCol, lit(totalStr).cast(sumType))
+                   cumCol: String, bucketKey: Column, totalCol: String = null,
+                   numPartitions: Int = 0): DataFrame = {
+    val (cum, totals) = runningSums(df, order, Seq((value, cumCol)), bucketKey, numPartitions)
+    if (totalCol == null) cum else cum.withColumn(totalCol, totals.head)
   }
 
-  /** Multi-column form of [[globalCumSum]]: one range sort, one P-row
-    * driver collect, N running sums — for operators that need several
-    * synchronized cumulative counters over ONE total order (e.g. a
-    * per-category CDF grid for a KS statistic). Values must be exact
-    * (long/decimal) expressions; offsets accumulate in BigDecimal and
-    * round-trip through canonical strings, as in [[globalCumSum]].
-    * Same localCheckpoint contract — release via
-    * [[Llm.unpersistCheckpoint]] when run repeatedly — and the same
-    * optional one-shuffle `bucketKey` path (see [[terasortPrep]]).
+  /** Multi-column form of [[globalCumSum]]: one range sort, one collect,
+    * N synchronized running sums over ONE total order (e.g. a
+    * per-category CDF grid for a KS statistic).
     */
-  def globalCumSums(df: DataFrame, order: Seq[Column],
-                    values: Seq[(Column, String)],
-                    numPartitions: Int = 0,
-                    bucketKey: Column = null,
-                    bucketBoundaries: Array[Double] = null): DataFrame = {
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val (statsSrc, sorted) =
-      terasortPrep(df, order, parts, bucketKey, bucketBoundaries, "__mcs_pid")
-    val sumCols = values.zipWithIndex.map { case ((v, _), i) => sum(v).as(s"__mcs_s$i") }
-    val stats = statsSrc.groupBy("__mcs_pid").agg(sumCols.head, sumCols.tail: _*)
-    val sumTypes = values.indices.map(i => stats.schema(s"__mcs_s$i").dataType)
-    val perPart = stats.collect()
-      .map { r =>
-        val sums = values.indices.map { i =>
-          r.get(i + 1) match {
-            case null                    => java.math.BigDecimal.ZERO
-            case b: java.math.BigDecimal => b
-            case n: Number               => new java.math.BigDecimal(n.toString)
-          }
-        }
-        (r.getInt(0), sums)
-      }
-      .sortBy(_._1)
-    val accs = Array.fill(values.size)(java.math.BigDecimal.ZERO)
-    val offsets = perPart.map { case (pid, sums) =>
-      val o = accs.toSeq.map(_.toPlainString)
-      values.indices.foreach(i => accs(i) = accs(i).add(sums(i)))
-      Row.fromSeq(pid +: o)
-    }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__mcs_pid",
-        org.apache.spark.sql.types.IntegerType) +:
-      values.indices.map(i => org.apache.spark.sql.types.StructField(
-        s"__mcs_o$i", org.apache.spark.sql.types.StringType)))
-    val offsetsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsets.toSeq, 1), offSchema)
-    val w = Window.partitionBy("__mcs_pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    values.zipWithIndex.foldLeft(
-      sorted.join(broadcast(offsetsDf), Seq("__mcs_pid"))) {
-        case (acc, ((v, name), i)) =>
-          acc.withColumn(name,
-            (col(s"__mcs_o$i").cast(sumTypes(i)) + sum(v).over(w)).cast(sumTypes(i)))
-      }
-      .drop("__mcs_pid" +: values.indices.map(i => s"__mcs_o$i"): _*)
-  }
+  def globalCumSums(df: DataFrame, order: Seq[Column], values: Seq[(Column, String)],
+                    bucketKey: Column, numPartitions: Int = 0): DataFrame =
+    runningSums(df, order, values, bucketKey, numPartitions)._1
 
   /** Per-GROUP extremes of a global running sum WITHOUT materializing
-    * the running sum: one terasort, then ONE fused pass (per-partition
+    * the running sum: one terasort, then ONE fused pass (per-bucket
     * window running sum feeding a map-side partial agg in the same
-    * stage) reduces the n input rows to a P×|groups| micro-table. The
-    * partition offsets are recovered from that micro-table itself (the
-    * per-partition `value` totals, summed in pid order, BigDecimal-
-    * exact) — so, unlike [[globalCumSum]] followed by a groupBy, there
-    * is NO second scan of the sorted rows, no n-row localCheckpoint,
-    * and no broadcast join back onto n rows. Correct because the
-    * offset is constant within a partition, so the group's max of the
-    * GLOBAL running sum decomposes exactly:
-    * max_g(cum) = max_p(offset_p + maxLocalCum_{p,g}).
+    * stage) reduces the n input rows to a buckets×|groups| micro-table.
+    * The bucket offsets are recovered from that micro-table itself (the
+    * per-bucket `value` totals, summed in bucket order) — so, unlike
+    * [[globalCumSum]] followed by a groupBy, there is NO second scan of
+    * the sorted rows, no n-row output pass and no broadcast join back
+    * onto n rows. Correct because the offset is constant within a
+    * bucket, so the group's max of the GLOBAL running sum decomposes
+    * exactly: max_g(cum) = max_b(offset_b + maxLocalCum_{b,g}).
     *
     * `groups` are (expression, outputName) pairs; `extraSums` are
     * (expression, outputName) pairs summed per group (sums re-aggregate
-    * losslessly across the two levels; a non-decomposable agg does
-    * not belong here). `value` and every extraSum must be exact
-    * (long/decimal); `order` must totally order rows or running sums
-    * at ties are nondeterministic. Output: one row per group —
-    * group columns ++ `maxCol` ++ extraSum columns. The micro-table
-    * (P·|groups| rows, localCheckpoint'ed once so the offset pass and
-    * the final rollup read one materialization) is the only driver /
-    * broadcast footprint — the same class as [[globalCumSum]]'s P-row
-    * offset pass.
+    * losslessly across the two levels; a non-decomposable agg does not
+    * belong here). `value` and every extraSum must be exact
+    * (long/decimal); `order` must totally order rows. Output: one row
+    * per group — group columns ++ `maxCol` ++ extraSum columns.
+    * `boundaries` are explicit bucket boundaries of `bucketKey` (see
+    * [[withBucket]]); a caller that can take quantiles from a cheaper
+    * source than `df` (a pruned scan) passes them, which also skips the
+    * keyed-input checkpoint.
     */
   def globalCumMaxPerGroup(df: DataFrame, order: Seq[Column], value: Column,
                            groups: Seq[(Column, String)], maxCol: String,
+                           bucketKey: Column,
                            extraSums: Seq[(Column, String)] = Nil,
                            numPartitions: Int = 0,
-                           keyBoundaries: Array[Double] = null): DataFrame = {
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+                           boundaries: Option[Array[Double]] = None): DataFrame = {
+    val parts = partitions(df, numPartitions)
     val groupNames = groups.map(_._2)
-    // ONE-SHUFFLE terasort: a `spark_partition_id()` column after
-    // `repartitionByRange` does NOT satisfy the pid window's
-    // ClusteredDistribution (the planner cannot know pid is constant
-    // per partition), so that spelling pays a hidden SECOND full
-    // exchange + re-sort on hashpartitioning(pid) — the r15 taskstats
-    // found it as the skewed 294k-ms stage behind q_peak_concurrency.
-    // With caller-provided quantile `keyBoundaries` of the LEADING
-    // order key (plain ascending numeric; cheap to sample from the
-    // pruned source scan) the rows carry an ORDINAL bucket id instead:
-    // `repartitionByRange` on that id is a RangePartitioning that DOES
-    // satisfy the window's distribution, and the (bucket, order)
-    // partition sort is its required ordering — so the window and the
-    // micro-agg ride the terasort's own exchange, nothing re-shuffles.
-    // Boundaries should be ≥4× the partition count so the range
-    // packer balances multi-bucket partitions (same-bucket ties never
-    // split — a bucket is a function of the key). Pass null to take
-    // the original range-partition path (correct for any order,
-    // one planner-inserted pid exchange + sort extra).
-    val bucketed = if (keyBoundaries != null && keyBoundaries.nonEmpty) {
-      val bounds = keyBoundaries.distinct.sorted
-      // bucket assignment is a codegen binary-search kernel — both
-      // SQL-level spellings (interpreted higher-order aggregate; a
-      // when-tree that blows the stage past codegen method limits)
-      // measured 2-4× slower end to end at sf100 (see BucketIndex)
-      val bucket = org.apache.spark.sql.GraftSqlBridge.column(
-        graft.functions.BucketIndex(
-          org.apache.spark.sql.GraftSqlBridge.expression(
-            order.head.cast("double")), bounds))
-      df.withColumn("__gm_pid", bucket)
-        .repartitionByRange(parts, col("__gm_pid"))
-        .sortWithinPartitions(col("__gm_pid") +: order: _*)
-    } else
-      df.repartitionByRange(parts, order: _*)
-        .sortWithinPartitions(order: _*)
-        .withColumn("__gm_pid", spark_partition_id())
-    val w = Window.partitionBy("__gm_pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prepared = groups.foldLeft(
-      bucketed
-        .withColumn("__gm_cum", sum(value).over(w))
+      rangeSorted(withBucket(df, bucketKey, boundaries, parts), order, parts)
+        .withColumn("__gm_cum", sum(value).over(runningWindow(order)))
         .withColumn("__gm_v", value)) { case (d, (c, n)) => d.withColumn(n, c) }
     val microAggs = Seq(max("__gm_cum").as("__gm_max"),
       sum("__gm_v").as("__gm_sum")) ++
       extraSums.map { case (c, n) => sum(c).as(n) }
     val micro = prepared
-      .groupBy(("__gm_pid" +: groupNames).map(col): _*)
+      .groupBy((Bucket +: groupNames).map(col): _*)
       .agg(microAggs.head, microAggs.tail: _*)
       .localCheckpoint()
     val sumType = micro.schema("__gm_sum").dataType
-    val perPart = micro.groupBy("__gm_pid").agg(sum("__gm_sum").as("__gm_t"))
-      .collect()
-      .map { r =>
-        val s = r.get(1) match {
-          case null                    => java.math.BigDecimal.ZERO
-          case b: java.math.BigDecimal => b
-          case n: Number               => new java.math.BigDecimal(n.toString)
-        }
-        (r.getInt(0), s)
-      }
-      .sortBy(_._1)
-    var acc = java.math.BigDecimal.ZERO
-    val offsets = perPart.map { case (pid, sm) =>
-      val o = acc; acc = acc.add(sm); (pid, o.toPlainString)
-    }
-    import spark.implicits._
-    val offsetsDf = offsets.toSeq.toDF("__gm_pid", "__gm_off_s")
-      .select(col("__gm_pid"), col("__gm_off_s").cast(sumType).as("__gm_off"))
+    val (offs, _) = offsets(df.sparkSession,
+      micro.groupBy(Bucket).agg(sum("__gm_sum")).collect(), Seq(sumType))
     val finalAggs = Seq(
-      max((col("__gm_off") + col("__gm_max")).cast(sumType)).as(maxCol)) ++
+      max((col("__ts_off0") + col("__gm_max")).cast(sumType)).as(maxCol)) ++
       extraSums.map { case (_, n) => sum(col(n)).as(n) }
-    micro.join(broadcast(offsetsDf), Seq("__gm_pid"))
+    micro.join(broadcast(offs), Seq(Bucket))
       .groupBy(groupNames.map(col): _*)
       .agg(finalAggs.head, finalAggs.tail: _*)
   }
@@ -1221,18 +1094,6 @@ object Scale {
       .groupBy("a").agg(count(lit(1)).as("n_two_hop"))
   }
 
-  /** Distributed PageRank over an edge list (damped, fixed iteration
-    * count — link/citation authority scoring). Per iteration: one
-    * equi-join of the (edge, out-degree) relation against current ranks
-    * and one partial+final aggregation on the destination — rank rows
-    * only, never the raw graph, move through the shuffle. The edge ×
-    * out-degree relation is materialized ONCE (`localCheckpoint`; at
-    * cluster scale, a persisted/bucketed table on `src`, which also
-    * co-locates every iteration's join). Contributions accumulate as
-    * DECIMAL so results are partitioning-independent (same property as
-    * [[graft.ops.Relational.dsum]]). Dangling nodes contribute nothing
-    * (standard per-node formulation: `(1-d) + d·Σ contrib`).
-    */
   /** Synchronous label propagation (Raghavan et al. 2007, Phys. Rev. E
     * 76) with a DETERMINISTIC tie-break: every node starts labeled by
     * its own id; each round every node adopts the most frequent label
@@ -1279,6 +1140,18 @@ object Scale {
     labels
   }
 
+  /** Distributed PageRank over an edge list (damped, fixed iteration
+    * count — link/citation authority scoring). Per iteration: one
+    * equi-join of the (edge, out-degree) relation against current ranks
+    * and one partial+final aggregation on the destination — rank rows
+    * only, never the raw graph, move through the shuffle. The edge ×
+    * out-degree relation is materialized ONCE (`localCheckpoint`; at
+    * cluster scale, a persisted/bucketed table on `src`, which also
+    * co-locates every iteration's join). Contributions accumulate as
+    * DECIMAL so results are partitioning-independent (same property as
+    * [[graft.ops.Relational.dsum]]). Dangling nodes contribute nothing
+    * (standard per-node formulation: `(1-d) + d·Σ contrib`).
+    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damping: Double = 0.85): DataFrame = {
     val deg = edges.groupBy(col(srcCol).as("__s")).agg(count(lit(1)).as("__outdeg"))

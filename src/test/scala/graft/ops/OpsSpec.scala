@@ -12,6 +12,45 @@ class OpsSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** Runs a terasort helper and collects its result, then checks the
+    * one-shuffle shape over every query the call fired (checkpoints,
+    * bucket sums, the output pass): exactly one range exchange, and the
+    * plan holding it re-shuffles on no scratch (`__`) column — the
+    * per-bucket window rides the range exchange.
+    */
+  private def terasortShape(run: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out =
+      try {
+        val df = run
+        df.collect()
+        org.apache.spark.SparkTestHooks.drainListeners(spark.sparkContext)
+        df
+      } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    def rangeExchanges(p: SparkPlan) = H.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    val sorts = plans.asScala.toSeq.filter(rangeExchanges(_).nonEmpty)
+    assert(sorts.map(rangeExchanges(_).size).sum == 1,
+      s"expected one range exchange over ${plans.size} queries:\n${sorts.mkString("\n")}")
+    assert(!sorts.head.toString.contains("hashpartitioning(__"),
+      s"the terasort pass re-shuffles on a scratch column:\n${sorts.head}")
+    out
+  }
+
   test("q_join_asof matches a driver-side reference on sf0.001") {
     import spark.implicits._
     val events = Tables.events(spark, sf)
@@ -849,7 +888,7 @@ class OpsSpec extends AnyFunSuite {
       assert(got == want, s"prefiltered trim diverges at budget=$budget")
       // oversample 0 + half-doc cushion: every source under-cuts, the
       // exact whole-source fallback must reproduce the same trim
-      val forced = Llm.budgetTrim(docs, budget, oversample = 0.0, cushionDocs = 0.5)
+      val forced = Llm.budgetTrimCut(docs, budget, oversample = 0.0, cushionDocs = 0.5)
         .select("doc_id", "source", "n_tokens", "cum_tokens")
         .collect().map(_.toSeq).toSet
       assert(forced == want, s"fallback trim diverges at budget=$budget")
@@ -1062,7 +1101,8 @@ class OpsSpec extends AnyFunSuite {
     val df = spark.range(1, 501).toDF("id")
       .withColumn("k", md5(col("id").cast("string")))
       .repartition(7) // deliberately scrambled input partitioning
-    val got = Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", 5)
+    val got = terasortShape(
+        Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", Scale.hexKeyProxy(col("k")), 5))
       .select("id", "pos").as[(Long, Long)].collect().toMap
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
     val want = df.withColumn("pos", row_number().over(w).cast("long"))
@@ -1276,8 +1316,8 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("v", (pmod(col("id") * 37, lit(1000)).cast("double") / 100)
         .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
       .repartition(7) // deliberately scrambled input partitioning
-    val got = Scale.globalCumSum(df, Seq(col("k"), col("id")), col("v"),
-        "cum", totalCol = "tot", numPartitions = 5)
+    val got = terasortShape(Scale.globalCumSum(df, Seq(col("k"), col("id")), col("v"),
+        "cum", Scale.hexKeyProxy(col("k")), totalCol = "tot", numPartitions = 5))
       .select(col("id"), col("cum").cast("string"), col("tot").cast("string"))
       .as[(Long, String, String)].collect()
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
@@ -1291,7 +1331,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got.sortBy(_._1).toSeq == want.sortBy(_._1).toSeq)
     // desc order + long values: the other branch of the driver-side sum
     val gotDesc = Scale.globalCumSum(df.withColumn("lv", col("id") * 2),
-        Seq(col("id").desc), col("lv"), "cum", numPartitions = 5)
+        Seq(col("id").desc), col("lv"), "cum", -col("id").cast("double"), numPartitions = 5)
       .select("id", "cum").as[(Long, Long)].collect().toMap
     val wDesc = org.apache.spark.sql.expressions.Window.orderBy(col("id").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -1312,10 +1352,10 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("v", (pmod(col("id") * 37, lit(19)) - 9).cast("long"))
       .withColumn("g", pmod(col("id"), lit(7)))
       .repartition(6) // deliberately scrambled input partitioning
-    val got = Scale.globalCumMaxPerGroup(df, Seq(col("k"), col("id")), col("v"),
-        Seq((col("g") * 2, "g2")), "mx",
+    val got = terasortShape(Scale.globalCumMaxPerGroup(df, Seq(col("k"), col("id")), col("v"),
+        Seq((col("g") * 2, "g2")), "mx", Scale.hexKeyProxy(col("k")),
         Seq((when(col("v") > 0, 1L).otherwise(0L), "n_pos")),
-        numPartitions = 5)
+        numPartitions = 5))
       .select("g2", "mx", "n_pos").as[(Long, Long, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -1326,14 +1366,14 @@ class OpsSpec extends AnyFunSuite {
         sum(when(col("v") > 0, 1L).otherwise(0L)).as("n_pos"))
       .select("g2", "mx", "n_pos").as[(Long, Long, Long)].collect().toSet
     assert(got == want && got.size == 7)
-    // explicit keyBoundaries → the ONE-SHUFFLE ordinal-bucket path (the
-    // md5 head above takes the range-partition fallback); same totals
-    // law against a naive running sum ordered by (id). Boundaries are
-    // deliberately UNEVEN and include an exact key value (ties must
-    // stay whole) and an out-of-range bound (empty bucket).
-    val got2 = Scale.globalCumMaxPerGroup(df, Seq(col("id")), col("v"),
-        Seq((col("g"), "g")), "mx", Seq((lit(1L), "n_rows")), numPartitions = 5,
-        keyBoundaries = Array(17.0, 100.0, 250.0, 250.0, 490.0, 9999.0))
+    // explicit boundaries (the md5 key above samples its own); same
+    // totals law against a naive running sum ordered by (id).
+    // Boundaries are deliberately UNEVEN and include an exact key value
+    // (ties must stay whole) and an out-of-range bound (empty bucket).
+    val got2 = terasortShape(Scale.globalCumMaxPerGroup(df, Seq(col("id")), col("v"),
+        Seq((col("g"), "g")), "mx", col("id").cast("double"),
+        Seq((lit(1L), "n_rows")), numPartitions = 5,
+        boundaries = Some(Array(17.0, 100.0, 250.0, 250.0, 490.0, 9999.0))))
       .select("g", "mx", "n_rows").as[(Long, Long, Long)].collect().toSet
     val w2 = org.apache.spark.sql.expressions.Window.orderBy(col("id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -1352,20 +1392,21 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("a", pmod(col("id") * 13, lit(7)))
       .withColumn("b", pmod(col("id") * 29, lit(11)))
       .repartition(6)
-    val got = Scale.globalCumSums(df, Seq(col("k"), col("id")),
-        Seq((col("a"), "ca"), (col("b"), "cb")), numPartitions = 5)
+    val bk = Scale.hexKeyProxy(col("k"))
+    val got = terasortShape(Scale.globalCumSums(df, Seq(col("k"), col("id")),
+        Seq((col("a"), "ca"), (col("b"), "cb")), bk, numPartitions = 5))
       .select("id", "ca", "cb").as[(Long, Long, Long)].collect()
       .map { case (id, b, c) => id -> ((b, c)) }.toMap
     val wantA = Scale.globalCumSum(df, Seq(col("k"), col("id")), col("a"),
-      "ca", numPartitions = 5).select("id", "ca").as[(Long, Long)].collect().toMap
+      "ca", bk, numPartitions = 5).select("id", "ca").as[(Long, Long)].collect().toMap
     val wantB = Scale.globalCumSum(df, Seq(col("k"), col("id")), col("b"),
-      "cb", numPartitions = 5).select("id", "cb").as[(Long, Long)].collect().toMap
+      "cb", bk, numPartitions = 5).select("id", "cb").as[(Long, Long)].collect().toMap
     df.select("id").as[Long].collect().foreach { id =>
       assert(got(id) == ((wantA(id), wantB(id))), s"row $id")
     }
   }
 
-  test("one-shuffle bucketKey terasort ≡ legacy ≡ partition-less window, all proxy shapes") {
+  test("one-shuffle bucketKey terasort ≡ partition-less window, all proxy shapes") {
     import spark.implicits._
     val df = spark.range(1, 501).toDF("id")
       .withColumn("k", md5(col("id").cast("string")))
@@ -1380,46 +1421,34 @@ class OpsSpec extends AnyFunSuite {
         .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
       .repartition(7) // deliberately scrambled input partitioning
 
-    def exchanges(d: org.apache.spark.sql.DataFrame): String = {
-      d.collect(); d.queryExecution.executedPlan.toString
-    }
-
     // (1) hex leading key (md5): self-sampled boundaries
-    val hexGot = Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", 5,
-        bucketKey = Scale.hexKeyProxy(col("k")))
+    val hexGot = Scale.globalSequence(df, Seq(col("k"), col("id")), "pos",
+        Scale.hexKeyProxy(col("k")), 5)
     val w1 = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
     val want1 = df.withColumn("pos", row_number().over(w1).cast("long"))
       .select("id", "pos").as[(Long, Long)].collect().toMap
     assert(hexGot.select("id", "pos").as[(Long, Long)].collect().toMap == want1)
-    // the pid window must RIDE the terasort exchange: no hidden
-    // hashpartitioning(__gs_pid) re-shuffle in the executed plan
-    val hexPlan = exchanges(hexGot)
-    assert(!hexPlan.contains("hashpartitioning(__gs_pid"),
-      s"bucketed path re-shuffled on pid:\n$hexPlan")
-    val legacyPlan = exchanges(
-      Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", 5))
-    assert(legacyPlan.contains("hashpartitioning(__gs_pid"),
-      "legacy path should show the planner-inserted pid exchange (CumProbe)")
 
     // (2) adversarial EXPLICIT boundaries: duplicates, unsorted,
     // out-of-range, an exact data value (ties stay whole) — and the
-    // degenerate empty array (single bucket, still correct)
-    val hexBounds = Array(1.0e14, 5.0e13, 5.0e13, 2.2e14, -4.0, 9.9e99)
-    val got2 = Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", 5,
-        bucketKey = Scale.hexKeyProxy(col("k")), bucketBoundaries = hexBounds)
-      .select("id", "pos").as[(Long, Long)].collect().toMap
-    assert(got2 == want1)
-    val got2e = Scale.globalSequence(df, Seq(col("k"), col("id")), "pos", 5,
-        bucketKey = Scale.hexKeyProxy(col("k")),
-        bucketBoundaries = Array.empty[Double])
-      .select("id", "pos").as[(Long, Long)].collect().toMap
-    assert(got2e == want1)
+    // degenerate empty array (single bucket, still correct). Explicit
+    // boundaries live on globalCumMaxPerGroup: one group per row turns
+    // its per-group peak of the running count into the row's position.
+    val exactKey = hexGot.filter(col("pos") === 250)
+      .select(Scale.hexKeyProxy(col("k"))).as[Double].head()
+    def positions(bounds: Array[Double]) =
+      Scale.globalCumMaxPerGroup(df, Seq(col("k"), col("id")), lit(1L),
+          Seq((col("id"), "id")), "pos", Scale.hexKeyProxy(col("k")),
+          numPartitions = 5, boundaries = Some(bounds))
+        .select("id", "pos").as[(Long, Long)].collect().toMap
+    assert(positions(Array(1.0e14, 5.0e13, 5.0e13, 2.2e14, exactKey, -4.0, 9.9e99)) == want1)
+    assert(positions(Array.empty[Double]) == want1)
 
     // (3) zipf shape: (freq DESC, string w) via -freq + strFrac(w)
     val wz = org.apache.spark.sql.expressions.Window.orderBy(col("freq").desc, col("w"))
     val wantZ = df.withColumn("r", row_number().over(wz).cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
-    val gotZ = Scale.globalSequence(df, Seq(col("freq").desc, col("w")), "r", 5,
+    val gotZ = Scale.globalSequence(df, Seq(col("freq").desc, col("w")), "r", numPartitions = 5,
         bucketKey = -col("freq").cast("double") + Scale.strFrac(col("w")))
       .select("id", "r").as[(Long, Long)].collect().toMap
     assert(gotZ == wantZ)
@@ -1429,7 +1458,7 @@ class OpsSpec extends AnyFunSuite {
         org.apache.spark.sql.expressions.Window.orderBy(col("freq").desc, col("id")))
         .cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
-    val gotR = Scale.globalSequence(df, Seq(col("freq").desc, col("id")), "r", 5,
+    val gotR = Scale.globalSequence(df, Seq(col("freq").desc, col("id")), "r", numPartitions = 5,
         bucketKey = -col("freq").cast("double")
           + col("id").cast("double") * lit(math.pow(2.0, -63)))
       .select("id", "r").as[(Long, Long)].collect().toMap
@@ -1444,7 +1473,7 @@ class OpsSpec extends AnyFunSuite {
         org.apache.spark.sql.expressions.Window.orderBy(col("lang"), col("k"), col("id")))
         .cast("long"))
       .select("id", "r").as[(Long, Long)].collect().toMap
-    val gotL = Scale.globalSequence(dfl, Seq(col("lang"), col("k"), col("id")), "r", 5,
+    val gotL = Scale.globalSequence(dfl, Seq(col("lang"), col("k"), col("id")), "r", numPartitions = 5,
         bucketKey = array_position(typedLit(langs.toSeq), col("lang")).cast("double")
           + Scale.hexFrac(col("k")))
       .select("id", "r").as[(Long, Long)].collect().toMap
@@ -1459,19 +1488,22 @@ class OpsSpec extends AnyFunSuite {
       .select(col("id"), col("cum").cast("string"), col("tot").cast("string"))
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
     val gotC = Scale.globalCumSum(df, Seq(col("dec").desc, col("id")), col("dec"),
-        "cum", totalCol = "tot", numPartitions = 5, bucketKey = -col("dec"))
+        "cum", -col("dec"), totalCol = "tot", numPartitions = 5)
       .select(col("id"), col("cum").cast("string"), col("tot").cast("string"))
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
     assert(gotC == wantC)
 
-    // (7) globalCumSums bucketed ≡ its own legacy path
+    // (7) globalCumSums, decimal leading key, two synchronized counters
+    val wm = org.apache.spark.sql.expressions.Window.orderBy(col("dec"), col("id"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
     val gotM = Scale.globalCumSums(df, Seq(col("dec"), col("id")),
-        Seq((col("freq"), "cf"), (col("id"), "ci")), numPartitions = 5,
-        bucketKey = col("dec"))
+        Seq((col("freq"), "cf"), (col("id"), "ci")), col("dec"), numPartitions = 5)
       .select("id", "cf", "ci").as[(Long, Long, Long)].collect()
       .map { case (i, a, b) => i -> ((a, b)) }.toMap
-    val wantM = Scale.globalCumSums(df, Seq(col("dec"), col("id")),
-        Seq((col("freq"), "cf"), (col("id"), "ci")), numPartitions = 5)
+    val wantM = df
+      .withColumn("cf", sum(col("freq")).over(wm))
+      .withColumn("ci", sum(col("id")).over(wm))
       .select("id", "cf", "ci").as[(Long, Long, Long)].collect()
       .map { case (i, a, b) => i -> ((a, b)) }.toMap
     assert(gotM == wantM)
@@ -1512,7 +1544,7 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("v", (col("id") % 7).cast("double") / 4)
       .repartition(5)
     val got = Scale.globalCumSum(df, Seq(col("id")), col("v"), "cum",
-        totalCol = "tot", numPartitions = 4)
+        col("id").cast("double"), totalCol = "tot", numPartitions = 4)
       .select("id", "cum", "tot").as[(Long, Double, Double)].collect().sortBy(_._1)
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -1527,7 +1559,7 @@ class OpsSpec extends AnyFunSuite {
     val poisoned = df.withColumn("v",
       when(col("id") === 42, lit(Double.NaN)).otherwise(col("v")))
     val nanRows = Scale.globalCumSum(poisoned, Seq(col("id")), col("v"), "cum",
-        totalCol = "tot", numPartitions = 4)
+        col("id").cast("double"), totalCol = "tot", numPartitions = 4)
       .select("id", "cum").as[(Long, Double)].collect()
     assert(nanRows.length == 200, "NaN input must not crash globalCumSum")
     assert(nanRows.filter(_._1 >= 42).forall(r => r._2.isNaN),

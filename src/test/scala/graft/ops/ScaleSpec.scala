@@ -90,8 +90,8 @@ class ScaleSpec extends AnyFunSuite {
     // forced under-cut: oversample 0 + cushion 0.5 keeps ~0.5 expected
     // survivors per group — every group misses its count check and must
     // route through the exact whole-group fallback, same rows out
-    val forced = Scale.quotaSample(ev, Seq("event_type"), hash, Seq(col("event_id")),
-      Left(20L), oversample = 0.0, cushion = 0.5)
+    val forced = Scale.quotaSampleCut(ev, Seq("event_type"), hash, Seq(col("event_id")),
+      Left(20L), groupCounts = None, oversample = 0.0, cushion = 0.5)
       .select("event_type", "rn", "event_id", "value").collect().map(_.toSeq).toSet
     assert(forced == want, "the count-check fallback must reproduce the exact draw")
     // per-group quota relation (the Neyman shape): quotas differ by group
