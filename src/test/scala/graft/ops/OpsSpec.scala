@@ -1392,18 +1392,21 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("a", pmod(col("id") * 13, lit(7)))
       .withColumn("b", pmod(col("id") * 29, lit(11)))
       .repartition(6)
-    val bk = Scale.hexKeyProxy(col("k"))
     val got = terasortShape(Scale.globalCumSums(df, Seq(col("k"), col("id")),
-        Seq((col("a"), "ca"), (col("b"), "cb")), bk, numPartitions = 5))
+        Seq((col("a"), "ca"), (col("b"), "cb")), Scale.hexKeyProxy(col("k")),
+        numPartitions = 5))
       .select("id", "ca", "cb").as[(Long, Long, Long)].collect()
       .map { case (id, b, c) => id -> ((b, c)) }.toMap
-    val wantA = Scale.globalCumSum(df, Seq(col("k"), col("id")), col("a"),
-      "ca", bk, numPartitions = 5).select("id", "ca").as[(Long, Long)].collect().toMap
-    val wantB = Scale.globalCumSum(df, Seq(col("k"), col("id")), col("b"),
-      "cb", bk, numPartitions = 5).select("id", "cb").as[(Long, Long)].collect().toMap
-    df.select("id").as[Long].collect().foreach { id =>
-      assert(got(id) == ((wantA(id), wantB(id))), s"row $id")
-    }
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"), col("id"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
+    val want = df
+      .withColumn("ca", sum(col("a")).over(w))
+      .withColumn("cb", sum(col("b")).over(w))
+      .select("id", "ca", "cb").as[(Long, Long, Long)].collect()
+      .map { case (id, b, c) => id -> ((b, c)) }.toMap
+    assert(want.size == 400)
+    assert(got == want)
   }
 
   test("one-shuffle bucketKey terasort ≡ partition-less window, all proxy shapes") {

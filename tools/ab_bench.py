@@ -13,14 +13,12 @@ commits each leg's full JSON line to a file.
 Usage:
   python3 tools/ab_bench.py --control <git-ref> [--out-prefix BENCH_LOCAL_r14]
       [--sf /root/testdata/sf0.1] [--cpus 4] [--runs 3] [--heap 8g]
-      [--queries q1,q2,...] [--skip-compile] [--control-classes DIR]
+      [--queries q1,q2,...] [--skip-compile]
 
 The candidate is ALWAYS the current working tree's compiled classes
 (target/scala-2.13/classes — compile first). The control ref is checked
 out into a git worktree under /tmp and compiled there once (reused on
 re-runs when the worktree already sits on the requested ref).
-`--control-classes DIR` uses an already compiled control tree instead
-(e.g. a `git archive` copy built with `sbt compile`); no worktree is made.
 
 Outputs: <out-prefix>_control1.json, <out-prefix>_candidate.json,
 <out-prefix>_control2.json (full per-query maps), plus a stdout summary
@@ -147,8 +145,6 @@ def main():
                     help="comma-separated subset (default: full suite)")
     ap.add_argument("--skip-compile", action="store_true",
                     help="reuse an existing compiled control worktree as-is")
-    ap.add_argument("--control-classes", default="",
-                    help="compiled classes of the control tree; skips the worktree")
     args = ap.parse_args()
 
     cand_classes = os.path.join(REPO, "target/scala-2.13/classes")
@@ -156,8 +152,7 @@ def main():
         print("candidate classes missing — run `sbt compile` first",
               file=sys.stderr)
         return 1
-    ctrl_classes = (os.path.abspath(args.control_classes) if args.control_classes
-                    else prepare_control(args.control, args.skip_compile))
+    ctrl_classes = prepare_control(args.control, args.skip_compile)
 
     pre = os.path.join(REPO, args.out_prefix)
     c1 = run_bench(ctrl_classes, f"{pre}_control1.json", args)
