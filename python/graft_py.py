@@ -19,36 +19,31 @@ Everything crosses py4j as Java-friendly types only (the Scala side is
 so they compose with any downstream pyspark code.
 """
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-#: Session conf the engine's scale story depends on — mirrors
-#: graft.GraftSession.configure (see that scaladoc for the per-knob why).
-ENGINE_CONF = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # serialized shuffle writer instead of the M-×-R-file bypass-merge
-    # path at small reduce counts (see GraftSession.configure)
-    "spark.shuffle.sort.bypassMergeThreshold": "8",
-    # generated-class cache sized above one pipeline's working set, keyed
-    # without the AQE-order-dependent stage id, so warm runs do not
-    # recompile (maxEntries is static: set before the session starts)
-    "spark.sql.codegen.cache.maxEntries": "1000",
-    "spark.sql.codegen.useIdInClassName": "false",
-}
+
+def engine_conf(launch_conf=None):
+    """The session conf the engine's scale story depends on, read from
+    graft.GraftSession.conf (see that scaladoc for the per-knob why).
+
+    Starts the driver JVM first if none runs yet, with ``launch_conf``
+    (a dict): settings such as ``spark.driver.extraClassPath`` take
+    effect only at JVM launch."""
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll((launch_conf or {}).items()))
+    return dict(SparkContext._jvm.graft.PyBridge.engineConf())
 
 
 def session(cpus=4, partitions=0, app="graft", extra_conf=None):
-    """Build a local engine session (cluster users: apply ENGINE_CONF and
-    ``spark.sql.extensions=graft.functions.GraftExtensions`` at submit
-    time instead)."""
+    """Build a local engine session (cluster users: apply engine_conf()
+    and ``spark.sql.extensions=graft.functions.GraftExtensions`` at
+    submit time instead)."""
+    extra = extra_conf or {}
     b = SparkSession.builder.master(f"local[{cpus}]").appName(app)
     b = b.config("spark.sql.shuffle.partitions",
                  str(partitions if partitions > 0 else cpus))
-    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
+    for k, v in {**engine_conf(extra), **extra}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     install(spark)

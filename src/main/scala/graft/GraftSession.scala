@@ -81,20 +81,38 @@ object GraftSession {
     graft.plans.TextKernelRewrite.ensureRegistered(spark)
   }
 
-  def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
+  /** Applies [[conf]] and the shuffle fan-out to a session builder. */
+  def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+    conf.foldLeft(b.config("spark.sql.shuffle.partitions", shufflePartitions)) {
+      case (acc, (k, v)) => acc.config(k, v)
+    }
+
+  /** Generated-class cache size set by [[configure]]: ~5× the largest
+    * measured working set, so no Guava segment overflows. Measured cost
+    * ~23 KB of retained heap per entry (perfbench curate
+    * `peak_heap_mb` +1.9 MB for +84 entries), which bounds the cache at
+    * ~23 MB of driver heap when full.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** The session conf the engine depends on at every scale, one entry
+    * per knob with its reason. [[configure]] applies it; the Python
+    * facade reads the same map (`PyBridge.engineConf`), so the two
+    * cannot drift. The shuffle fan-out is per session, not in the map.
+    */
+  val conf: Map[String, String] = Map(
     // deterministic timestamps across engines (DuckDB oracle parity)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.shuffle.partitions", shufflePartitions)
+    "spark.sql.session.timeZone" -> "UTC",
     // AQE: runtime re-planning — coalesces small post-shuffle partitions,
     // splits skewed ones, and switches SMJ→broadcast when a side turns
     // out tiny. Default-on in Spark 4; pinned here because the engine's
     // scale story depends on it.
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // keep scan tasks ~128 MB so a 100 TB table yields bounded task counts
     // without giant per-task memory footprints
-    .config("spark.sql.files.maxPartitionBytes", String.valueOf(128L * 1024 * 1024))
+    "spark.sql.files.maxPartitionBytes" -> String.valueOf(128L * 1024 * 1024),
     // Below this reduce-partition count the sort-shuffle manager takes the
     // bypass-merge path: one DiskBlockObjectWriter PER REDUCE PARTITION PER
     // MAP TASK — an M×R file-create storm (measured r15-opt: the
@@ -105,12 +123,12 @@ object GraftSession {
     // any R, so it never enters that regime; bypass stays for genuinely
     // tiny fan-outs where its no-sort write is the textbook win. Scale-
     // neutral: at production fan-outs (R > 200) bypass never fires anyway.
-    .config("spark.shuffle.sort.bypassMergeThreshold", "8")
+    "spark.shuffle.sort.bypassMergeThreshold" -> "8",
     // some events.parquet vintages carry TIMESTAMP(NANOS), which
     // Spark's reader rejects; read nanos as raw longs (Tables.events
     // normalizes either encoding). Set once here so table reads are
     // order-independent — never mutated per-read.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // Generated-class cache: a warm session re-running a pipeline must
     // find every whole-stage/expression class it compiled last run.
     // Spark's default (100 entries, split LRU over 4 Guava segments of
@@ -121,7 +139,7 @@ object GraftSession {
     // thread context class loader) pair: a stage compiled on the driver
     // and in its tasks takes two. Static conf: it only takes effect when
     // set before the session starts.
-    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     // The cache is keyed by source text, and a whole-stage class name
     // carries its codegen stage id by default — which AQE assigns in
     // stage-completion order, so the same stage can come back as
@@ -129,16 +147,10 @@ object GraftSession {
     // warm release runs). Without the id in the name, identical stages
     // share one class; the id stays in the plan string and the
     // generated code's `codegenStageId` comment.
-    .config("spark.sql.codegen.useIdInClassName", "false")
-    .config("spark.ui.enabled", "false")
-
-  /** Generated-class cache size set by [[configure]]: ~5× the largest
-    * measured working set, so no Guava segment overflows. Measured cost
-    * ~23 KB of retained heap per entry (perfbench curate
-    * `peak_heap_mb` +1.9 MB for +84 entries), which bounds the cache at
-    * ~23 MB of driver heap when full.
-    */
-  val CodegenCacheEntries = 1000
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    // an embedded library session serves no web UI (and binds no port)
+    "spark.ui.enabled" -> "false"
+  )
 
   /** SQL extension registration for spark-submit deployments:
     * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.

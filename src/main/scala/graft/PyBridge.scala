@@ -34,6 +34,14 @@ object PyBridge {
   /** The flagship DPP-orchestrated entry query. */
   def entry(spark: SparkSession): DataFrame = SparkEntry.entry(spark)
 
+  /** The engine's session conf ([[GraftSession.conf]]): what the Python
+    * facade sets on its session builder before the session starts.
+    */
+  def engineConf(): java.util.Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    GraftSession.conf.asJava
+  }
+
   /** Engine wiring (native SQL functions, as-of strategy, bloom/range
     * join rules, text-kernel rewrites) for a session built without
     * `spark.sql.extensions=graft.functions.GraftExtensions`. Idempotent.
@@ -84,23 +92,18 @@ object PyBridge {
 
   /** Neyman-allocation stratified sample of `budget` docs by `source`
     * over a `(doc_id, source, n_chars, text, lang)` frame — the release
-    * pipeline's neymanSample stage (deterministic md5 draw, retry-stable).
+    * pipeline's neymanSample stage ([[ops.Llm.releaseSample]]): the
+    * sample carries the card features (`n_tokens`, `k`) in place of
+    * `text`.
     */
-  def neymanSample(df: DataFrame, budget: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat_ws, md5}
-    val pop = df.select(col("doc_id"), col("source"), col("n_chars"),
-      col("text"), col("lang"))
-    val alloc = ops.Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), budget)
-    ops.Scale.quotaSample(pop, Seq("source"),
-      md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
-      Right(alloc.select(col("source"), col("n_h"))),
-      groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
-  }
+  def neymanSample(df: DataFrame, budget: Long): DataFrame =
+    ops.Llm.releaseSample(df, budget)
 
-  /** One-pass corpus card over a `(source, lang, n_chars, text)` frame,
-    * materialized as a local relation sorted by source (one row per
-    * source — bounded), exactly the release pipeline's corpusCard stage.
+  /** Corpus card over a `(source, lang, n_chars, n_tokens, k)` feature
+    * frame (the output of [[neymanSample]]), materialized as a local
+    * relation sorted by source (one row per source — bounded): the
+    * release pipeline's corpusCard stage ([[ops.Llm.cardLocal]]).
     */
   def corpusCardFrame(spark: SparkSession, df: DataFrame): DataFrame =
-    ops.Llm.corpusCardLocal(df.select("source", "lang", "n_chars", "text"))
+    ops.Llm.cardLocal(df)
 }

@@ -1051,9 +1051,12 @@ case class WordStats(child: Expression, stops: Seq[String]) extends UnaryExpress
 object Vec {
   private def ensureRegistered(): SparkSession = {
     val spark = SparkSession.active
-    if (!spark.catalog.functionExists("graft_dot")) register(spark)
+    // the registry lookup, not `catalog.functionExists`: that parses the
+    // name with the SQL parser on every column construction
+    if (!spark.sessionState.functionRegistry.functionExists(DotId)) register(spark)
     spark
   }
+  private val DotId = FunctionIdentifier("graft_dot")
   def dot(a: Column, b: Column): Column = {
     ensureRegistered()
     call_function("graft_dot", a, b)
@@ -1141,7 +1144,7 @@ object Vec {
   }
 
   private val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
+    (DotId,
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (es: Seq[Expression]) => DotProduct(es(0), es(1))),
     (FunctionIdentifier("graft_l2norm"),

@@ -215,7 +215,12 @@ object Llm {
     cand
       .join(text.select(col("doc_id").as("id1"), col("text").as("t1")), Seq("id1"))
       .join(text.select(col("doc_id").as("id2"), col("text").as("t2")), Seq("id2"))
-      .withColumn("jaccard", Vec.shingleJaccard(col("t1"), col("t2")))
+      // the kernel runs in a one-element Generate: predicate pushdown
+      // does not cross it, so the threshold filter and the output read
+      // one evaluation (a projected column would be inlined into the
+      // join condition and computed again for the output)
+      .select(col("id1"), col("id2"), col("t1"), col("t2"),
+        explode(array(Vec.shingleJaccard(col("t1"), col("t2")))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"),
         // native matched-component count, not aggregate/zip_with HOF
@@ -1703,10 +1708,11 @@ object Llm {
     */
   def q_pipeline_release(s: SparkSession, d: String): DataFrame = {
     val (p, base) = releasePipeline(s, d)
-    // release the dedupNear survivor-id checkpoint (dim-sized, but the
-    // bench runs this gate repeatedly — blocks must not accumulate); it
-    // is the single LogicalRDD leaf of the `deduped` slot
-    unpersistCheckpoint(p("deduped"))
+    // release the pipeline's two checkpoints, each the single LogicalRDD
+    // leaf of its slot: the quality-kept texts under `uniq` and the
+    // survivor ids under `deduped` (the bench runs this gate repeatedly
+    // — blocks must not accumulate)
+    Seq("uniq", "deduped").foreach(slot => unpersistCheckpoint(p(slot)))
     // the publish stage already read the committed card back into a
     // local relation (one row per source), so the whole scratch tree —
     // corpus snapshot AND card snapshot — can go before returning;
@@ -1724,11 +1730,14 @@ object Llm {
     * Shape: every per-source decision is one Spark action whose small
     * result the driver holds — the Neyman allocation, the sampler's
     * survivor cut and miss check, the card, and the card read-back —
-    * and the card and the result are local relations. Measured jobs of
-    * a warm run over sf0.001 (JobProbe, 4 cores): ingest 1, dedupNear
-    * 10 (two actions; the LSH pairs run inside the second), neymanSample
-    * 8, corpusCard 4, publish 2; with the collect of the result, 25 in
-    * all (SessionSpec).
+    * and the card and the result are local relations. Document text
+    * crosses no shuffle at bench scale: the exact dedup and the sample
+    * cut decide on narrow rows ([[releaseDedupExact]], [[releaseSample]]).
+    * Measured jobs of a warm run over sf0.001 (JobProbe, 4 cores):
+    * ingest 1, dedupExact 1 (the kept-text checkpoint), dedupNear 10
+    * (one action; the LSH pairs run inside it), neymanSample 8,
+    * corpusCard 4, publish 2; with the collect of the result, 26 in all
+    * (SessionSpec).
     */
   private[graft] def releasePipeline(
       s: SparkSession, d: String): (graft.pipeline.DPP, java.nio.file.Path) = {
@@ -1748,21 +1757,9 @@ object Llm {
         .withColumn("n_tok", size(split(col("text"), " ")))) >> p.normed,
       Prev >> fn("quality")(_
         .filter(col("lang").isin("es", "de", "zh") && col("n_tok") >= 5)) >> p.kept,
-      Prev >> fn("dedupExact")(df =>
-        Scale.dedupKeepFirst(df, Seq(col("norm_key")), Seq(col("doc_id")))) >> p.uniq,
+      Prev >> fn("dedupExact")(releaseDedupExact) >> p.uniq,
       Prev >> fn("dedupNear") { df =>
-        // Materialize the exact-dedup survivors' (doc_id, text) ONCE:
-        // the LSH pipeline consumes this frame four ways (band
-        // signatures, the two verify text joins, and the keep-id
-        // anti-join probe side), and the consumers prune DIFFERENT
-        // columns, so their exchanges diverge and each re-derived the
-        // normalize kernel + exact-dedup window from the snapshot
-        // (measured at sf0.1: two serial ~0.75 s single-task
-        // re-derivations inside one action). Corpus-sized but
-        // text-only; released as soon as the survivor ids below are
-        // materialized.
-        val uniqText = df.select("doc_id", "text").localCheckpoint()
-        val drop = minhashPairs(uniqText, threshold = 0.5)
+        val drop = minhashPairs(df, threshold = 0.5)
           .select(col("id2").as("doc_id")).distinct()
         // Checkpoint the SURVIVOR IDS (dim-sized: one long per kept doc)
         // and re-attach payloads with a semi-join against the committed
@@ -1770,31 +1767,19 @@ object Llm {
         // downstream tier runs several independent driver actions
         // (Neyman alloc + the quota sampler's survivor cut/checks), and
         // each one re-executed its whole subtree per action: without
-        // this barrier the normalize kernel + exact-dedup window + LSH
-        // candidate pipeline re-derived from the snapshot in EVERY such
-        // job (measured at sf0.1: eight serial ~0.8 s single-task
+        // this barrier the LSH candidate pipeline re-derived in EVERY
+        // such job (measured at sf0.1: eight serial ~0.8 s single-task
         // re-derivations inside the neymanSample tier, 94 of the
-        // query's 115 jobs). Now the expensive chain materializes
-        // exactly once, and every later action pays one column-pruned
-        // snapshot scan + an id semi-join (broadcast at bench scale;
-        // plannable as SMJ/bloom at cluster scale).
-        val keepIds = uniqText.select("doc_id").join(drop, Seq("doc_id"), "left_anti")
+        // query's 115 jobs). Now it materializes exactly once, and every
+        // later action pays one column-pruned snapshot scan + an id
+        // semi-join (broadcast at bench scale; plannable as SMJ/bloom
+        // at cluster scale).
+        val keepIds = df.select("doc_id").join(drop, Seq("doc_id"), "left_anti")
           .localCheckpoint()
-        unpersistCheckpoint(uniqText) // keepIds is materialized — dead blocks
         p("corpus").join(keepIds, Seq("doc_id"), "left_semi")
       } >> p.deduped,
-      Prev >> fn("neymanSample") { df =>
-        val pop = df.select(col("doc_id"), col("source"), col("n_chars"),
-          col("text"), col("lang"))
-        val alloc = Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), 200L)
-        Scale.quotaSample(pop, Seq("source"),
-          md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
-          Right(alloc.select(col("source"), col("n_h"))),
-          groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
-      } >> p.sampled,
-      Prev >> fn("corpusCard") { df =>
-        corpusCardLocal(df.select("source", "lang", "n_chars", "text"))
-      } >> p.card,
+      Prev >> fn("neymanSample")(releaseSample(_, 200L)) >> p.sampled,
+      Prev >> fn("corpusCard")(cardLocal) >> p.card,
       Prev >> fn("publish") { card =>
         // a local relation scans as up to one partition per core: one
         // partition keeps the card one file
@@ -1805,6 +1790,46 @@ object Llm {
         sortedBySource(back.collect(), back.schema, s)
       } >> p.result)
     (p, base)
+  }
+
+  /** The release pipeline's exact dedup: of the rows sharing a
+    * `norm_key`, keep the one with the min `doc_id` — equal to
+    * `Scale.dedupKeepFirst(df, Seq(norm_key), Seq(doc_id))` when
+    * `doc_id` is unique and non-null (the documents key).
+    *
+    * The quality-kept `(doc_id, text, norm_key)` are checkpointed once
+    * (one snapshot read, no exchange): the pipeline's one corpus-sized
+    * checkpoint, read by the LSH that follows. The survivors are decided
+    * on the narrow `(norm_key, doc_id)` rows — a min per key, combined
+    * map-side, so the exchange carries one partial row per key and
+    * partition — and re-attached by a semi-join on `doc_id`. The
+    * re-attach broadcasts the id set when it is small; at cluster scale
+    * it is a sort-merge semi-join that moves the text once by `doc_id`,
+    * no more than a window over the whole rows would. The caller owns
+    * the checkpoint ([[q_pipeline_release]] releases it).
+    */
+  private[graft] def releaseDedupExact(df: DataFrame): DataFrame = {
+    val kept = df.select("doc_id", "text", "norm_key").localCheckpoint()
+    val firsts = kept.groupBy("norm_key").agg(min("doc_id").as("doc_id"))
+    kept.join(firsts.select("doc_id"), Seq("doc_id"), "left_semi")
+  }
+
+  /** The release pipeline's Neyman-allocation stratified sample of
+    * `budget` docs by `source` (deterministic md5 draw, retry-stable)
+    * over a `(doc_id, source, n_chars, text, lang)` frame. The card
+    * features are computed in the population's scan stage and replace
+    * `text` ([[cardFeatures]]), so the sampler's survivor checkpoint and
+    * rank exchange carry narrow rows. Output: `source, doc_id, n_chars,
+    * lang, n_tokens, k, n_h, rn`, the input of [[cardLocal]].
+    */
+  private[graft] def releaseSample(df: DataFrame, budget: Long): DataFrame = {
+    val pop = cardFeatures(df.select(col("doc_id"), col("source"), col("n_chars"),
+      col("text"), col("lang")))
+    val alloc = Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), budget)
+    Scale.quotaSample(pop, Seq("source"),
+      md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
+      Right(alloc.select(col("source"), col("n_h"))),
+      groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
   }
 
   private val ChunkW = 8 // words per chunk for cross-doc chunk dedup
@@ -3579,13 +3604,14 @@ object Llm {
     * relation sorted by source.
     */
   def q_corpus_card(s: SparkSession, d: String): DataFrame =
-    corpusCardLocal(documents(s, d))
+    cardLocal(cardFeatures(documents(s, d)))
 
-  /** The card of `docs` (`source, lang, n_chars, text`) collected into a
-    * local relation sorted by source: a later collect fires no job.
+  /** The card ([[cardOf]]) of a `(source, lang, n_chars, n_tokens, k)`
+    * feature frame collected into a local relation sorted by source: a
+    * later collect fires no job. The release pipeline's card step.
     */
-  private[graft] def corpusCardLocal(docs: DataFrame): DataFrame =
-    sortedBySource(corpusCard(docs).collect(), corpusCardSchema, docs.sparkSession)
+  private[graft] def cardLocal(features: DataFrame): DataFrame =
+    sortedBySource(cardOf(features).collect(), corpusCardSchema, features.sparkSession)
 
   /** Rows keyed by a leading string `source` column as a local relation,
     * sorted on the driver in [[sparkStringOrder]] — the
@@ -3606,7 +3632,10 @@ object Llm {
   }
 
   /** The lazy report plan behind [[q_corpus_card]], unsorted (PlanSpec
-    * asserts its single-scan shape on the optimized plan).
+    * asserts its single-scan shape on the optimized plan): the aggregate
+    * [[cardOf]] over the per-doc [[cardFeatures]]. The release pipeline
+    * computes the features in its sampling step, so its card step runs
+    * the aggregate alone over narrow rows.
     *
     * Genuinely single-pass at the corpus grain: the three statistic
     * families group on DIFFERENT keys ((source), (source,lang),
@@ -3630,12 +3659,24 @@ object Llm {
     * fires 4 jobs per warm run over sf0.001, down from 11. Docs without
     * a source are left out, as the joins on `source` left them out.
     */
-  private[graft] def corpusCard(docs: DataFrame): DataFrame = {
-    val norm = graft.functions.Vec.normText(col("text"))
-    val g = docs.filter(col("source").isNotNull)
-      .select(col("source"), col("lang"), col("n_chars"),
-        graft.functions.Vec.wordCount(col("text")).as("n_tokens"),
-        md5(norm).as("k"))
+  private[graft] def corpusCard(docs: DataFrame): DataFrame =
+    cardOf(cardFeatures(docs))
+
+  /** The card's per-doc features: `text` replaced by its token count
+    * `n_tokens` and its normalized-text md5 `k` (the exact-duplicate
+    * key); the other columns pass through.
+    */
+  private[graft] def cardFeatures(docs: DataFrame): DataFrame =
+    docs.withColumn("n_tokens", graft.functions.Vec.wordCount(col("text")))
+      .withColumn("k", md5(graft.functions.Vec.normText(col("text"))))
+      .drop("text")
+
+  /** The card aggregate over a `(source, lang, n_chars, n_tokens, k)`
+    * feature frame ([[cardFeatures]]).
+    */
+  private[graft] def cardOf(features: DataFrame): DataFrame = {
+    val g = features.filter(col("source").isNotNull)
+      .select(col("source"), col("lang"), col("n_chars"), col("n_tokens"), col("k"))
     val gs = g.groupingSets(
         Seq(Seq(col("source")),
           Seq(col("source"), col("lang")),

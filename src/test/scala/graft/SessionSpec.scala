@@ -29,12 +29,14 @@ class SessionSpec extends AnyFunSuite {
   test("a warm release-pipeline run fires one job per small decision, not per derivation") {
     // The sampler and the card decide on small collected results: the
     // Neyman allocation, the sampler's quota table and miss check, and
-    // the card are one Spark action each; the near-dup step is two
-    // actions (the survivor-text and survivor-id checkpoints), with the
-    // LSH pairs computed inside the second. Measured over sf0.001 in the
-    // TestSpark session: 52 jobs when the sampler and the card ran as
-    // checkpointed SQL relations, 30 with the near-dup step's candidate
-    // cache and lazy shingle checkpoint, 25 now.
+    // the card are one Spark action each; the exact-dedup step is one
+    // action (the kept-text checkpoint) and the near-dup step one more
+    // (the survivor-id checkpoint), with the LSH pairs computed inside
+    // it. Measured over sf0.001 in the TestSpark session: 52 jobs when
+    // the sampler and the card ran as checkpointed SQL relations, 30
+    // with the near-dup step's candidate cache and lazy shingle
+    // checkpoint, 25 with a survivor-text checkpoint after the exact
+    // dedup, 26 now.
     graft.ops.Llm.q_pipeline_release(spark, TestSpark.sf0001).collect()
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger

@@ -20,30 +20,18 @@ class OpsSpec extends AnyFunSuite {
     */
   private def terasortShape(run: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    import graft.ExecutedPlans.Adaptive
+    val (out, plans) = graft.ExecutedPlans.of(spark) {
+      val df = run
+      df.collect()
+      df
     }
-    spark.listenerManager.register(listener)
-    val out =
-      try {
-        val df = run
-        df.collect()
-        org.apache.spark.SparkTestHooks.drainListeners(spark.sparkContext)
-        df
-      } finally spark.listenerManager.unregister(listener)
-    object H extends AdaptiveSparkPlanHelper
-    def rangeExchanges(p: SparkPlan) = H.collect(p) {
+    def rangeExchanges(p: SparkPlan) = Adaptive.collect(p) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
-    val sorts = plans.asScala.toSeq.filter(rangeExchanges(_).nonEmpty)
+    val sorts = plans.filter(rangeExchanges(_).nonEmpty)
     assert(sorts.map(rangeExchanges(_).size).sum == 1,
       s"expected one range exchange over ${plans.size} queries:\n${sorts.mkString("\n")}")
     assert(!sorts.head.toString.contains("hashpartitioning(__"),

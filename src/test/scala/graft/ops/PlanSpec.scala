@@ -106,6 +106,18 @@ class PlanSpec extends AnyFunSuite {
     assert(scratch.isEmpty, s"cached or checkpointed relations in the plan: $scratch")
   }
 
+  test("minhash LSH verify evaluates the Jaccard kernel once per output pair") {
+    // a projected kernel column is inlined into the pushed-down threshold
+    // filter (the id2 join condition) and computed again for the output
+    import graft.ExecutedPlans.Adaptive
+    val df = Llm.q_dedup_minhash(spark, sf)
+    assert(df.collect().nonEmpty)
+    val kernels = Adaptive.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(
+      _.collect { case j: graft.functions.ShingleJaccard => j }))
+    assert(kernels.size == 1,
+      s"${kernels.size} Jaccard kernels in the plan:\n${df.queryExecution.executedPlan}")
+  }
+
   test("range join stays keyed on the equi-part (no BNLJ)") {
     val plan = planOf(Relational.q_join_range(spark, sf))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),

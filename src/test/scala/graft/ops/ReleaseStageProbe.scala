@@ -45,25 +45,15 @@ object ReleaseStageProbe {
       .withColumn("n_tok", size(split(col("text"), " "))))
     val kept = stage("quality")(normed
       .filter(col("lang").isin("es", "de", "zh") && col("n_tok") >= 5))
-    val uniq = stage("dedupExact")(
-      Scale.dedupKeepFirst(kept, Seq(col("norm_key")), Seq(col("doc_id"))))
+    val uniq = stage("dedupExact")(Llm.releaseDedupExact(kept))
     val deduped = stage("dedupNear") {
-      val drop = Llm.minhashPairs(uniq.select("doc_id", "text"), threshold = 0.5)
+      val drop = Llm.minhashPairs(uniq, threshold = 0.5)
         .select(col("id2").as("doc_id")).distinct()
-      uniq.join(drop, Seq("doc_id"), "left_anti")
+      ingested.join(uniq.select("doc_id").join(drop, Seq("doc_id"), "left_anti"),
+        Seq("doc_id"), "left_semi")
     }
-    val sampled = stage("neymanSample") {
-      val pop = deduped.select(col("doc_id"), col("source"), col("n_chars"),
-        col("text"), col("lang"))
-      val alloc = Relational.neymanAlloc(pop.select("doc_id", "source", "n_chars"), 200L)
-      Scale.quotaSample(pop, Seq("source"),
-        md5(concat_ws(":", col("source"), col("doc_id"))), Seq(col("doc_id")),
-        Right(alloc.select(col("source"), col("n_h"))),
-        groupCounts = Some(alloc.select(col("source"), col("n").as("__grp_n"))))
-    }
-    val card = stage("corpusCard") {
-      Llm.corpusCardLocal(sampled.select("source", "lang", "n_chars", "text"))
-    }
+    val sampled = stage("neymanSample")(Llm.releaseSample(deduped, 200L))
+    val card = stage("corpusCard")(Llm.cardLocal(sampled))
     stage("publish") {
       Sinks.Snapshots.commit(s, card.coalesce(1), cardSnap)
       val back = Sinks.Snapshots.read(s, cardSnap)

@@ -64,10 +64,11 @@ class PipelineDataSpec extends AnyFunSuite {
   test("release pipeline: corpus-snapshot rescans in the composed plan stay bounded") {
     // Each corpus-snapshot scan is a full corpus read at 100 TB — the
     // composed release pipeline must never silently regress toward
-    // rescan-per-stage. Pre-LSH slots read the snapshot once; the
-    // near-dup stage reads it once more, to re-attach payloads to its
-    // checkpointed survivor ids (the LSH pairs themselves read the
-    // checkpointed survivor texts, not the snapshot); the sampling
+    // rescan-per-stage. The slots before the exact dedup read the
+    // snapshot once; the exact dedup reads its checkpoint of the
+    // quality-kept texts, 0 times; the near-dup stage reads the snapshot
+    // once, to re-attach payloads to its checkpointed survivor ids (the
+    // LSH pairs themselves read the kept-text checkpoint); the sampling
     // stage's internal localCheckpoint barrier cuts lineage, so
     // everything downstream (incl. the published card) reads it 0 times.
     val (p, base) = graft.ops.Llm.releasePipeline(spark, sf)
@@ -81,12 +82,42 @@ class PipelineDataSpec extends AnyFunSuite {
                  org.apache.spark.sql.execution.datasources.HadoopFsRelation]
                  .location.rootPaths.exists(_.toString.contains("corpus_snapshot")) => r
         }.size
-      assert(snapScans("normed") == 1 && snapScans("kept") == 1
-        && snapScans("uniq") == 1, "pre-LSH stages must read the snapshot once")
+      assert(snapScans("normed") == 1 && snapScans("kept") == 1,
+        "the stages before the exact dedup must read the snapshot once")
+      assert(snapScans("uniq") == 0, "the exact dedup must read its checkpoint, not the snapshot")
       assert(snapScans("deduped") == 1,
         s"near-dup stage rescans regressed: ${snapScans("deduped")} != 1")
       assert(snapScans("sampled") == 0 && snapScans("result") == 0,
         "the sampling barrier must cut corpus lineage; the published card reads only the card snapshot")
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("release pipeline: document text crosses no shuffle; 3 queries scan the snapshot") {
+    // The exact dedup and the sample cut decide on keys: the dedup picks
+    // min doc_id per norm_key on narrow rows, and the sampler ranks the
+    // card features, not the text. Every query of the run is checked,
+    // the ones behind the steps' checkpoints and collects included. The
+    // snapshot is scanned by the kept-text checkpoint, the survivor
+    // re-attach of the Neyman allocation and the sampler's survivor cut.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.ExecutedPlans.Adaptive
+    // the steps run as the pipeline is built; the result is a local relation
+    val ((p, base), plans) = graft.ExecutedPlans.of(spark)(graft.ops.Llm.releasePipeline(spark, sf))
+    try {
+      val textExchanges = plans.flatMap(Adaptive.collect(_) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "text") => e
+      })
+      assert(textExchanges.isEmpty,
+        s"exchanges carrying text:\n${textExchanges.mkString("\n")}")
+      val snapQueries = plans.count(q => Adaptive.find(q) {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.toString.contains("corpus_snapshot"))
+        case _ => false
+      }.isDefined)
+      assert(snapQueries <= 3, s"$snapQueries queries scan the corpus snapshot")
+      assert(p("result").collect().nonEmpty)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
