@@ -1709,9 +1709,9 @@ object Llm {
   def q_pipeline_release(s: SparkSession, d: String): DataFrame = {
     val (p, base) = releasePipeline(s, d)
     // release the pipeline's two checkpoints, each the single LogicalRDD
-    // leaf of its slot: the quality-kept texts under `uniq` and the
-    // survivor ids under `deduped` (the bench runs this gate repeatedly
-    // — blocks must not accumulate)
+    // leaf of its slot: the exact-dedup survivors' texts under `uniq` and
+    // the near-dup survivor ids under `deduped` (the bench runs this gate
+    // repeatedly — blocks must not accumulate)
     Seq("uniq", "deduped").foreach(slot => unpersistCheckpoint(p(slot)))
     // the publish stage already read the committed card back into a
     // local relation (one row per source), so the whole scratch tree —
@@ -1734,8 +1734,9 @@ object Llm {
     * crosses no shuffle at bench scale: the exact dedup and the sample
     * cut decide on narrow rows ([[releaseDedupExact]], [[releaseSample]]).
     * Measured jobs of a warm run over sf0.001 (JobProbe, 4 cores):
-    * ingest 1, dedupExact 1 (the kept-text checkpoint), dedupNear 10
-    * (one action; the LSH pairs run inside it), neymanSample 8,
+    * ingest 1, dedupExact 3 (one action: the key aggregate, the
+    * survivor-id broadcast and the survivor-text checkpoint), dedupNear
+    * 8 (one action; the LSH pairs run inside it), neymanSample 8,
     * corpusCard 4, publish 2; with the collect of the result, 26 in all
     * (SessionSpec).
     */
@@ -1793,25 +1794,29 @@ object Llm {
   }
 
   /** The release pipeline's exact dedup: of the rows sharing a
-    * `norm_key`, keep the one with the min `doc_id` — equal to
-    * `Scale.dedupKeepFirst(df, Seq(norm_key), Seq(doc_id))` when
-    * `doc_id` is unique and non-null (the documents key).
+    * `norm_key`, keep the one with the min `doc_id`, as `(doc_id, text)`
+    * — the rows of `Scale.dedupKeepFirst(df, Seq(norm_key), Seq(doc_id))`
+    * when `doc_id` is unique and non-null (the documents key).
     *
-    * The quality-kept `(doc_id, text, norm_key)` are checkpointed once
-    * (one snapshot read, no exchange): the pipeline's one corpus-sized
-    * checkpoint, read by the LSH that follows. The survivors are decided
-    * on the narrow `(norm_key, doc_id)` rows — a min per key, combined
-    * map-side, so the exchange carries one partial row per key and
-    * partition — and re-attached by a semi-join on `doc_id`. The
-    * re-attach broadcasts the id set when it is small; at cluster scale
-    * it is a sort-merge semi-join that moves the text once by `doc_id`,
-    * no more than a window over the whole rows would. The caller owns
-    * the checkpoint ([[q_pipeline_release]] releases it).
+    * The survivors are decided on the narrow `(norm_key, doc_id)` rows —
+    * a min per key, combined map-side, so the exchange carries one
+    * partial row per key and partition — and re-attached to the texts by
+    * a semi-join on `doc_id`. The re-attach broadcasts the id set when it
+    * is small; at cluster scale it is a sort-merge semi-join that moves
+    * the text once by `doc_id`, no more than a window over the whole rows
+    * would. Only the key side computes `norm_key`.
+    *
+    * The survivors are checkpointed by the same action: the pipeline's
+    * one corpus-sized checkpoint, which the LSH that follows reads four
+    * ways. A checkpoint of the rows before the dedup made each of those
+    * reads repeat the min-per-key aggregate and its broadcast semi-join
+    * inside the near-dup action. The caller owns the checkpoint
+    * ([[q_pipeline_release]] releases it).
     */
   private[graft] def releaseDedupExact(df: DataFrame): DataFrame = {
-    val kept = df.select("doc_id", "text", "norm_key").localCheckpoint()
-    val firsts = kept.groupBy("norm_key").agg(min("doc_id").as("doc_id"))
-    kept.join(firsts.select("doc_id"), Seq("doc_id"), "left_semi")
+    val firsts = df.groupBy("norm_key").agg(min("doc_id").as("doc_id"))
+    df.select("doc_id", "text").join(firsts.select("doc_id"), Seq("doc_id"), "left_semi")
+      .localCheckpoint()
   }
 
   /** The release pipeline's Neyman-allocation stratified sample of

@@ -30,7 +30,7 @@ class SessionSpec extends AnyFunSuite {
     // The sampler and the card decide on small collected results: the
     // Neyman allocation, the sampler's quota table and miss check, and
     // the card are one Spark action each; the exact-dedup step is one
-    // action (the kept-text checkpoint) and the near-dup step one more
+    // action (the survivor-text checkpoint) and the near-dup step one more
     // (the survivor-id checkpoint), with the LSH pairs computed inside
     // it. Measured over sf0.001 in the TestSpark session: 52 jobs when
     // the sampler and the card ran as checkpointed SQL relations, 30

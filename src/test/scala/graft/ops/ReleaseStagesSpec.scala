@@ -34,6 +34,7 @@ class ReleaseStagesSpec extends AnyFunSuite {
       val df = docs.toDF("doc_id", "text", "norm_key")
       val got = Llm.releaseDedupExact(df)
       val want = Scale.dedupKeepFirst(df, Seq(col("norm_key")), Seq(col("doc_id")))
+        .select("doc_id", "text")
       try (rows(got) == rows(want)) :| s"docs=$docs got=${rows(got)} want=${rows(want)}"
       finally Llm.unpersistCheckpoint(got)
     }

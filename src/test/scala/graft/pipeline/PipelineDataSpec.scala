@@ -65,10 +65,10 @@ class PipelineDataSpec extends AnyFunSuite {
     // Each corpus-snapshot scan is a full corpus read at 100 TB — the
     // composed release pipeline must never silently regress toward
     // rescan-per-stage. The slots before the exact dedup read the
-    // snapshot once; the exact dedup reads its checkpoint of the
-    // quality-kept texts, 0 times; the near-dup stage reads the snapshot
+    // snapshot once; the exact dedup's slot is its checkpoint of the
+    // survivors' texts, 0 times; the near-dup stage reads the snapshot
     // once, to re-attach payloads to its checkpointed survivor ids (the
-    // LSH pairs themselves read the kept-text checkpoint); the sampling
+    // LSH pairs themselves read the survivor-text checkpoint); the sampling
     // stage's internal localCheckpoint barrier cuts lineage, so
     // everything downstream (incl. the published card) reads it 0 times.
     val (p, base) = graft.ops.Llm.releasePipeline(spark, sf)
@@ -98,7 +98,7 @@ class PipelineDataSpec extends AnyFunSuite {
     // min doc_id per norm_key on narrow rows, and the sampler ranks the
     // card features, not the text. Every query of the run is checked,
     // the ones behind the steps' checkpoints and collects included. The
-    // snapshot is scanned by the kept-text checkpoint, the survivor
+    // snapshot is scanned by the survivor-text checkpoint, the survivor
     // re-attach of the Neyman allocation and the sampler's survivor cut.
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
