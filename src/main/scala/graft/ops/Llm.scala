@@ -1808,8 +1808,8 @@ object Llm {
     *
     * The survivors are checkpointed by the same action: the pipeline's
     * one corpus-sized checkpoint, which the LSH that follows reads four
-    * ways. A checkpoint of the rows before the dedup made each of those
-    * reads repeat the min-per-key aggregate and its broadcast semi-join
+    * ways. Checkpointed before the dedup instead, each of those reads
+    * would repeat the min-per-key aggregate and its broadcast semi-join
     * inside the near-dup action. The caller owns the checkpoint
     * ([[q_pipeline_release]] releases it).
     */
