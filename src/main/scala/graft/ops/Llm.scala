@@ -910,29 +910,32 @@ object Llm {
     // right for test-scale corpora. The train set is cached for the
     // iteration loop (training is eager) and released before returning.
     // Only the NList×Dim centroid matrix reaches the driver.
-    val trainSet =
-      (if (trainFraction >= 100.0) emb
-       else Scale.hashSample(emb, Seq(col("vec_id")), trainFraction)).cache()
-    var centroids: Array[(Int, Seq[Double])] = emb
-      .filter(col("vec_id") % 31 === 0).orderBy("vec_id").limit(NList)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
-    val vsum = udaf(Udafs.VecSum)
-    for (_ <- 1 to 2) {
-      val assigned = trainSet.withColumn("cell", element_at(cellFn(centroids, 1)(col("e")), 1))
-      // centroid update via the JVM vector-sum aggregate — no n·dim
-      // explode; the shuffle carries only per-cell partial buffers
-      val means = assigned
-        .groupBy("cell").agg(vsum(col("e")).as("s"))
-        .collect().map { r =>
-          val st = r.getStruct(1)
-          val (sums, n) = (st.getSeq[Double](0), st.getLong(1))
-          (r.getInt(0), sums.map(_ / n))
-        }.toMap
-      // empty cells keep their previous centroid
-      centroids = centroids.map { case (cid, c) => (cid, means.getOrElse(cid, c)) }
-    }
-    trainSet.unpersist()
+    val centroids = Scratch.scope { scratch =>
+      val trainSet = scratch.persist(
+        if (trainFraction >= 100.0) emb
+        else Scale.hashSample(emb, Seq(col("vec_id")), trainFraction),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var trained: Array[(Int, Seq[Double])] = emb
+        .filter(col("vec_id") % 31 === 0).orderBy("vec_id").limit(NList)
+        .collect().zipWithIndex
+        .map { case (r, i) => (i, r.getSeq[Double](1)) }
+      val vsum = udaf(Udafs.VecSum)
+      for (_ <- 1 to 2) {
+        val assigned = trainSet.withColumn("cell", element_at(cellFn(trained, 1)(col("e")), 1))
+        // centroid update via the JVM vector-sum aggregate — no n·dim
+        // explode; the shuffle carries only per-cell partial buffers
+        val means = assigned
+          .groupBy("cell").agg(vsum(col("e")).as("s"))
+          .collect().map { r =>
+            val st = r.getStruct(1)
+            val (sums, n) = (st.getSeq[Double](0), st.getLong(1))
+            (r.getInt(0), sums.map(_ / n))
+          }.toMap
+        // empty cells keep their previous centroid
+        trained = trained.map { case (cid, c) => (cid, means.getOrElse(cid, c)) }
+      }
+      trained
+    }(_ => Nil)
 
     val corpus = emb
       .withColumn("cell", element_at(cellFn(centroids, 1)(col("e")), 1))
@@ -1043,26 +1046,20 @@ object Llm {
     * symbolized word table).
     */
   def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int)
-      : (Seq[(String, String, Long)], DataFrame) = {
+      : (Seq[(String, String, Long)], DataFrame) = Scratch.scope { scratch =>
     // LAZY checkpoints throughout the round loop: each round's pair-count
     // job is a FULL aggregation over every partition of `words`, so it
     // materializes the (lazily-marked) checkpoint as a side effect — the
     // merge-apply pass fuses into the count pass and each round costs ONE
     // job, not two (and at vocabulary scale, one pass over the word
-    // table, not two). The release discipline shifts by one round: a
-    // round's parent checkpoint is freed only AFTER the next full job has
-    // persisted every partition of its child (releasing earlier would cut
-    // the truncated lineage out from under unmaterialized partitions).
-    var words = docs
+    // table, not two).
+    var words = scratch.checkpoint(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(concat(split(col("w"), ""), array(lit("</w>"))).as("syms"), col("cnt"))
-      .localCheckpoint(eager = false)
+      .select(concat(split(col("w"), ""), array(lit("</w>"))).as("syms"), col("cnt")),
+      eager = false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    // the superseded checkpoint awaiting release once the NEXT full job
-    // has materialized `words` (null = nothing pending)
-    var pending: DataFrame = null
     var round = 0
     var exhausted = false
     while (round < numMerges && !exhausted) {
@@ -1075,29 +1072,25 @@ object Llm {
         .agg(sum(col("cnt")).as("freq"))
         .orderBy(col("freq").desc, col("l"), col("r"))
         .limit(1).collect()
-      // the aggregate above touched every partition of `words` — its
-      // checkpoint is now fully persisted and the parent blocks are dead
-      if (pending != null) { unpersistCheckpoint(pending); pending = null }
+      // the aggregate above touched every partition of `words`
+      scratch.keep(words)
       if (top.isEmpty) exhausted = true
       else {
         val (l, r, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((l, r, f))
-        pending = words
-        words = words
+        words = scratch.checkpoint(words
           .withColumn("syms",
-            graft.functions.Vec.bpeApply(col("syms"), Seq((l, r))))
-          .localCheckpoint(eager = false)
+            graft.functions.Vec.bpeApply(col("syms"), Seq((l, r)))), eager = false)
       }
       round += 1
     }
-    // loop exit leaves the final round's checkpoint unmaterialized and
-    // its parent pending: force it (one full pass — exactly the eager
-    // materialization the final round skipped) before the release, so
-    // the returned table owns its blocks and storage holds ONE
-    // checkpoint, same contract as before (OpsSpec pins it)
-    if (pending != null) { words.count(); unpersistCheckpoint(pending) }
+    // a loop that ended on a merge leaves the final round's checkpoint
+    // unmaterialized: force it (one full pass — exactly the eager
+    // materialization the final round skipped), so the returned table
+    // owns its blocks and storage holds ONE checkpoint (OpsSpec pins it)
+    if (!exhausted && merges.nonEmpty) words.count()
     (merges.toSeq, words)
-  }
+  }(r => Seq(r._2))
 
   /** BPE ENCODING with a trained merge list — the apply side of
     * [[bpeTrain]], i.e. what actually tokenizes the corpus before
@@ -1279,18 +1272,6 @@ object Llm {
         sum(col("term")).cast("long").as("entropy_micro"))
       .orderBy("doc_id")
   }
-
-  /** Frees the storage behind an (eager) `localCheckpoint`ed DataFrame.
-    * Checkpoint blocks are persisted at the RDD layer, not through the
-    * CacheManager, so `Dataset.unpersist` cannot reach them; the plan of
-    * a checkpointed Dataset is a single `LogicalRDD` over the persisted
-    * RDD. Callers must only release a checkpoint nothing will read again
-    * (locally-checkpointed blocks are not recomputable).
-    */
-  private[ops] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Gate query for [[bpeTrain]]: the first 10 merge rules learned from
     * the documents corpus, with rank and corpus frequency. Exact
@@ -1708,11 +1689,10 @@ object Llm {
     */
   def q_pipeline_release(s: SparkSession, d: String): DataFrame = {
     val (p, base) = releasePipeline(s, d)
-    // release the pipeline's two checkpoints, each the single LogicalRDD
-    // leaf of its slot: the exact-dedup survivors' texts under `uniq` and
-    // the near-dup survivor ids under `deduped` (the bench runs this gate
-    // repeatedly — blocks must not accumulate)
-    Seq("uniq", "deduped").foreach(slot => unpersistCheckpoint(p(slot)))
+    // the result is a local relation: free the checkpoints behind every
+    // stage slot (the bench runs this gate repeatedly — blocks must not
+    // accumulate)
+    Scratch.release(p.snapshot.values.toSeq: _*)
     // the publish stage already read the committed card back into a
     // local relation (one row per source), so the whole scratch tree —
     // corpus snapshot AND card snapshot — can go before returning;
@@ -1810,8 +1790,8 @@ object Llm {
     * one corpus-sized checkpoint, which the LSH that follows reads four
     * ways. Checkpointed before the dedup instead, each of those reads
     * would repeat the min-per-key aggregate and its broadcast semi-join
-    * inside the near-dup action. The caller owns the checkpoint
-    * ([[q_pipeline_release]] releases it).
+    * inside the near-dup action. The caller owns the checkpoint:
+    * [[q_pipeline_release]] frees it with [[Scratch.release]].
     */
   private[graft] def releaseDedupExact(df: DataFrame): DataFrame = {
     val firsts = df.groupBy("norm_key").agg(min("doc_id").as("doc_id"))
@@ -2256,12 +2236,11 @@ object Llm {
     * selection is deterministic.
     */
   def mmrSelect(vecs: DataFrame, queryVec: Seq[Double], k: Int,
-                lambda: Double): DataFrame = {
+                lambda: Double): DataFrame = Scratch.scope { scratch =>
     val spark = vecs.sparkSession
     import spark.implicits._
-    val base = vecs.select(col("vec_id"), col("e"))
-      .withColumn("relq", cosine(col("e"), typedLit(queryVec)))
-      .localCheckpoint()
+    val base = scratch.checkpoint(vecs.select(col("vec_id"), col("e"))
+      .withColumn("relq", cosine(col("e"), typedLit(queryVec))))
     var selected = Vector.empty[(Int, Long, Double)] // rank, id, score
     var selVecs = Vector.empty[Seq[Double]]
     for (rank <- 1 to k) {
@@ -2283,9 +2262,8 @@ object Llm {
         selVecs :+= top(0).getSeq[Double](1)
       }
     }
-    unpersistCheckpoint(base)
     selected.toDF("rank", "vec_id", "score")
-  }
+  }(Seq(_))
 
   /** Gate for [[mmrSelect]]: k = 10, λ = 0.7, query = the smallest
     * vec_id's embedding. No oracle (iterative greedy float argmax is
@@ -3914,7 +3892,7 @@ object Llm {
     // the four model components re-derives the full corpus explode —
     // the executed plan showed EIGHT parquet scans (no exchange reuse
     // across differing agg parents). With the checkpoint c1/c2/N reduce
-    // the small cached table. Release via [[unpersistCheckpoint]].
+    // the small cached table. Release via [[Scratch.release]].
     val types = docTypes.groupBy("w1", "w2").agg(sum("cnt").as("c12"))
       .localCheckpoint()
     val left = types.groupBy("w1").agg(sum("c12").as("c1"))
@@ -4173,7 +4151,7 @@ object Llm {
     * pool size (exposed so SelectionSpec can force the
     * certificate-failure → pool-growth → restart path with m0 = 1).
     */
-  private[ops] def selectCover(docs: DataFrame, k: Int, m0: Long): DataFrame = {
+  private[ops] def selectCover(docs: DataFrame, k: Int, m0: Long): DataFrame = Scratch.scope { scratch =>
     val s = docs.sparkSession
     val dt0 = docs
       .withColumn("ws", split(col("text"), " "))
@@ -4182,12 +4160,12 @@ object Llm {
         .as("bg"))
       .distinct()
     val vocab = dt0.groupBy("bg").agg(count(lit(1)).as("df")).filter(col("df") >= 5)
-    val dt = dt0.join(vocab.select("bg"), Seq("bg"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val dt = scratch.persist(dt0.join(vocab.select("bg"), Seq("bg"), "left_semi"),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // corpus touch 1: initial per-doc gains (doc-count-sized, not
     // corpus-sized — small enough to keep hot for the pool cuts)
-    val gains0 = dt.groupBy("doc_id").agg(count(lit(1)).as("gain"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gains0 = scratch.persist(dt.groupBy("doc_id").agg(count(lit(1)).as("gain")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = gains0.count()
     var covered = Set.empty[String]
     val out = collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
@@ -4237,15 +4215,13 @@ object Llm {
       // a task round-trip per partition for a dim-sized frame — size
       // the cache by the DATA (8 partitions covers any m the
       // certificate can grow to) instead of the session fan-out
-      val pool = dt.join(broadcast(poolIds.select("doc_id")), Seq("doc_id"), "left_semi")
-        .repartition(8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // lazy checkpoints, bpeTrain's round-loop discipline: each round's
-      // top-pick TakeOrdered scans every poolGains partition, so it
-      // materializes the previous round's (lazily-marked) checkpoint —
-      // the gain-decrement pass fuses into the argmax job and each round
-      // costs one fewer job; the superseded checkpoint is released one
-      // round later, once its child is fully persisted.
+      val pool = scratch.persist(
+        dt.join(broadcast(poolIds.select("doc_id")), Seq("doc_id"), "left_semi").repartition(8),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // lazy checkpoints: each round's top-pick TakeOrdered scans every
+      // poolGains partition, so it materializes the previous round's
+      // (lazily-marked) checkpoint — the gain-decrement pass fuses into
+      // the argmax job and each round costs one fewer job.
       // Partitioning is sized by the POOL (16 bytes/doc, one partition
       // per ~4M pool docs), not inherited from gains0's fan-out: the
       // k argmax rounds each scan every poolGains partition, so a
@@ -4270,9 +4246,7 @@ object Llm {
             .select(col("doc_id"),
               (col("gain") - coalesce(col("dec"), lit(0L))).as("gain"))
         }
-      var poolGains = pg0.repartition(pgParts, col("doc_id"))
-        .localCheckpoint(eager = false)
-      var pendingPG: DataFrame = null
+      var poolGains = scratch.checkpoint(pg0.repartition(pgParts, col("doc_id")), eager = false)
       var certified = true
       var exhausted = false
       var rank = out.size + 1
@@ -4286,9 +4260,8 @@ object Llm {
           .orderBy(col("gain").desc, col("doc_id")).limit(1)
           .join(pool, Seq("doc_id"))
           .select(col("doc_id"), col("gain"), col("bg")).collect()
-        // the TakeOrdered side above touched every poolGains partition —
-        // the previous round's blocks are dead now
-        if (pendingPG != null) { unpersistCheckpoint(pendingPG); pendingPG = null }
+        // the TakeOrdered side above touched every poolGains partition
+        scratch.keep(poolGains, pool, dt, gains0)
         if (top.isEmpty) {
           // pool ran dry: exact iff no excluded doc could still gain
           if (t.isDefined) certified = false else exhausted = true
@@ -4315,22 +4288,16 @@ object Llm {
             // session fan-out every round
             val dec = broadcast(pool.join(broadcast(deltaDf), Seq("bg"), "left_semi")
               .groupBy("doc_id").agg(count(lit(1)).as("dec")))
-            pendingPG = poolGains
-            poolGains = poolGains.join(dec, Seq("doc_id"), "left_outer")
+            poolGains = scratch.checkpoint(poolGains.join(dec, Seq("doc_id"), "left_outer")
               .select(col("doc_id"),
-                (col("gain") - coalesce(col("dec"), lit(0L))).as("gain"))
-              .localCheckpoint(eager = false) // next round's argmax materializes it
+                (col("gain") - coalesce(col("dec"), lit(0L))).as("gain")),
+              eager = false) // next round's argmax materializes it
             rank += 1
           }
         }
       }
-      pool.unpersist(blocking = false)
-      // the LAST round's poolGains checkpoint and its possibly-pending
-      // parent (the lazy-loop discipline frees all earlier ones) must
-      // not outlive the call; poolGains is discarded unmaterialized, so
-      // releasing both is safe
-      if (pendingPG != null) unpersistCheckpoint(pendingPG)
-      unpersistCheckpoint(poolGains)
+      // this pool's blocks are done with: a retry extracts a new pool
+      scratch.keep(dt, gains0)
       if (certified) done = true
       else if (m >= nDocs)
         throw new IllegalStateException(
@@ -4338,11 +4305,9 @@ object Llm {
             s"(m=$m >= nDocs=$nDocs) — unreachable by construction")
       else m = math.min(m * 8, nDocs) // re-extraction is one corpus scan; jump fast
     }
-    gains0.unpersist(blocking = false)
-    dt.unpersist(blocking = false)
     import s.implicits._
     out.toSeq.toDF("rank", "doc_id", "gain", "cum_cover")
-  }
+  }(Seq(_))
 
   /** Reciprocal Rank Fusion (Cormack et al. 2009) of a LEXICAL and a
     * SEMANTIC ranker — the standard hybrid-retrieval combiner

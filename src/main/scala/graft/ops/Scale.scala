@@ -371,7 +371,7 @@ object Scale {
     * the keyed input only when it samples its own boundaries). The
     * helpers do not release these blocks: Spark's ContextCleaner drops
     * them once the result is unreferenced, and a caller running a
-    * helper in a loop can free them early with [[Llm.unpersistCheckpoint]].
+    * helper in a loop can free them early with [[Scratch.release]].
     */
   private def runningSums(df: DataFrame, order: Seq[Column], runs: Seq[Running],
                           bucketKey: Column, numPartitions: Int): (DataFrame, Seq[Column]) = {
@@ -554,18 +554,14 @@ object Scale {
     */
   def connectedComponents(nodes: DataFrame, nodeCol: String,
                           edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20): DataFrame = {
+                          maxIter: Int = 20): DataFrame = Scratch.scope { scratch =>
     // materialize the symmetric edge list ONCE — edges may be an
     // expensive pipeline (e.g. minhash candidate generation), and every
     // iteration joins against it
-    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .localCheckpoint()
-    var labels = nodes.select(col(nodeCol).as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    // the previous round's checkpoint blocks are dead once the new round
-    // materializes — release them or storage grows linearly in iterations
-    var prevCkpt = labels
+    val sym = scratch.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b"))))
+    var labels = scratch.checkpoint(nodes.select(col(nodeCol).as("id")).distinct()
+      .withColumn("label", col("id")))
     val labelType = labels.schema("label").dataType
     var converged = false
     var i = 0
@@ -592,22 +588,18 @@ object Scale {
       // pointer jumping: follow label→label-of-label, so the min id
       // spreads geometrically and convergence needs O(log diameter)
       // iterations, not O(diameter)
-      val compressed = hopped.as("h")
+      val compressed = scratch.checkpoint(hopped.as("h")
         .join(hopped.select(col("id").as("lid"), col("label").as("llabel")).as("l2"),
           col("h.label") === col("l2.lid"), "left")
         .select(col("h.id").as("id"),
           least(col("h.label"), coalesce(col("llabel"), col("h.label"))).as("label"),
-          col("h.changed"))
-        .localCheckpoint(eager = false)
-      // the convergence probe IS the materialization job (bpeTrain's
-      // fused-round discipline): a count() aggregate touches every
-      // partition, so the lazily-marked checkpoint persists fully as a
-      // side effect and the round costs ONE job instead of an eager
-      // checkpoint job + an isEmpty probe. Only then are the previous
-      // round's blocks dead.
+          col("h.changed")), eager = false)
+      // the convergence probe IS the materialization job: a count()
+      // aggregate touches every partition, so the lazily-marked
+      // checkpoint persists fully as a side effect and the round costs
+      // ONE job instead of an eager checkpoint job + an isEmpty probe
       converged = compressed.filter(col("changed")).count() == 0L
-      Llm.unpersistCheckpoint(prevCkpt)
-      prevCkpt = compressed
+      scratch.keep(compressed, sym)
       labels = compressed.drop("changed")
       i += 1
     }
@@ -616,9 +608,8 @@ object Scale {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter iterations — raise maxIter")
-    Llm.unpersistCheckpoint(sym) // the returned labels no longer read it
     labels
-  }
+  }(Seq(_))
 
   /** k-core decomposition by iterative peeling (Seidman 1983; the
     * BZ/peeling formulation every graph system ships): repeatedly
@@ -632,85 +623,47 @@ object Scale {
     * Returns (id, peeled_round): the 1-based round the vertex fell, or
     * 0 for k-core members. Each round is one degree aggregate over the
     * surviving edges plus two anti-joins — every stage wide, nothing
-    * driver-sized except the per-round removed COUNT. Rounds are
-    * checkpointed with the [[connectedComponents]] release discipline
-    * (superseded survivor/edge checkpoints freed as soon as the next
-    * round materializes; the per-round removed sets stay alive — they
-    * ARE the result). Real graphs peel in few rounds (degeneracy
-    * ordering is shallow); a pathological chain unravels one layer per
-    * round, hence the loud `maxRounds` guard instead of a silent
-    * truncation.
-    *
-    * The returned frame READS the round checkpoints, which otherwise
-    * stay pinned until GC reclaims the RDDs — a long-lived session
-    * calling this repeatedly should use [[kCoreWithRelease]] (a
-    * (result, release) pair) and call release() once the result is
-    * consumed/persisted.
+    * driver-sized except the per-round removed COUNT. Each round
+    * checkpoints its survivor and edge sets; the per-round removed sets
+    * are checkpoints the result reads. Real graphs peel in few rounds
+    * (degeneracy ordering is shallow); a pathological chain unravels one
+    * layer per round, hence the loud `maxRounds` guard instead of a
+    * silent truncation.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 100): DataFrame =
-    kCoreWithRelease(edges, srcCol, dstCol, k, maxRounds)._1
-
-  /** [[kCore]] with an explicit checkpoint-release handle: release()
-    * frees every checkpoint block the result depends on (per-round
-    * removed sets + the final survivor set). Call it only AFTER the
-    * result has been consumed (collected, written, or re-checkpointed) —
-    * the frame is unreadable afterwards.
-    */
-  def kCoreWithRelease(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-                       maxRounds: Int = 100): (DataFrame, () => Unit) = {
+            maxRounds: Int = 100): DataFrame = Scratch.scope { scratch =>
     require(k >= 1, "kCore needs k >= 1")
-    var live = edges.select(col(srcCol).as("a"), col(dstCol).as("b")).localCheckpoint()
-    var survivors = live.select(col("a").as("id")).distinct().localCheckpoint()
+    var live = scratch.checkpoint(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
+    var survivors = scratch.checkpoint(live.select(col("a").as("id")).distinct())
     var removed = List.empty[DataFrame]
-    // superseded survivor/edge checkpoints awaiting release: lazily-
-    // checkpointed frames from round r are only fully persisted once
-    // round r+1's probe job has scanned them, so their parents are
-    // released one round late (the bpeTrain shift-by-one discipline)
-    var pendingRelease: List[DataFrame] = Nil
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
       round += 1
       val deg = live.groupBy("a").agg(count(lit(1)).as("deg"))
       // left join: a survivor with NO surviving edges has degree 0
-      val rem = survivors.join(deg, col("id") === col("a"), "left")
+      val rem = scratch.checkpoint(survivors.join(deg, col("id") === col("a"), "left")
         .filter(coalesce(col("deg"), lit(0L)) < k)
-        .select(col("id"))
-        .localCheckpoint(eager = false) // alive until the final union — it IS output
+        .select(col("id")), eager = false)
       // the probe IS the materialization job: count() touches every
       // partition of rem AND (through its lineage) of the previous
       // round's lazy survivor/edge checkpoints — one job per round
       // instead of three eager checkpoint jobs + an isEmpty probe
-      val remEmpty = rem.count() == 0L
-      pendingRelease.foreach(Llm.unpersistCheckpoint)
-      pendingRelease = Nil
-      if (remEmpty) {
-        done = true
-        Llm.unpersistCheckpoint(rem) // empty probe frame: not output
-      } else {
+      done = rem.count() == 0L
+      scratch.keep(rem :: survivors :: live :: removed: _*)
+      if (!done) {
         removed ::= rem.withColumn("peeled_round", lit(round.toLong))
-        val prevSurv = survivors
-        val prevLive = live
-        survivors = prevSurv.join(rem, Seq("id"), "left_anti")
-          .localCheckpoint(eager = false)
-        live = prevLive
+        survivors = scratch.checkpoint(survivors.join(rem, Seq("id"), "left_anti"), eager = false)
+        live = scratch.checkpoint(live
           .join(rem.select(col("id").as("a")), Seq("a"), "left_anti")
-          .join(rem.select(col("id").as("b")), Seq("b"), "left_anti")
-          .localCheckpoint(eager = false)
-        pendingRelease = List(prevSurv, prevLive)
+          .join(rem.select(col("id").as("b")), Seq("b"), "left_anti"), eager = false)
       }
     }
     if (!done)
       throw new IllegalStateException(
         s"kCore(k=$k) did not converge in $maxRounds peel rounds — raise maxRounds")
-    // the final edge checkpoint is not part of the result — free it now
-    Llm.unpersistCheckpoint(live)
-    val core = survivors.withColumn("peeled_round", lit(0L))
-    val pinned = survivors :: removed
-    (removed.foldLeft(core)(_ unionByName _),
-      () => pinned.foreach(Llm.unpersistCheckpoint))
-  }
+    removed.foldLeft(survivors.withColumn("peeled_round", lit(0L)))(_ unionByName _)
+  }(Seq(_))
 
   /** Upsert (merge) for immutable columnar storage: rows from `updates`
     * replace base rows sharing the key; unmatched base rows survive.
@@ -809,7 +762,7 @@ object Scale {
     * more than `tol` (squared L2).
     */
   def kMeans(df: DataFrame, vecCol: String, k: Int, maxIters: Int = 10,
-             tol: Double = 1e-9, trackWcss: Boolean = false): KMeansModel = {
+             tol: Double = 1e-9, trackWcss: Boolean = false): KMeansModel = Scratch.scope { scratch =>
     val spark = df.sparkSession
     def nearest(cents: Array[Array[Double]]) = {
       val bc = spark.sparkContext.broadcast(cents)
@@ -825,7 +778,8 @@ object Scale {
         (best, bestD)
       }
     }
-    val vecs = df.select(col(vecCol).cast("array<double>").as("__v")).cache()
+    val vecs = scratch.persist(df.select(col(vecCol).cast("array<double>").as("__v")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // deterministic init: spread starting points with a stride over a
     // hash ranking (stable under repartitioning; no Math.random)
     var centroids: Array[Array[Double]] = vecs
@@ -856,9 +810,8 @@ object Scale {
     }
     val assigned = df.withColumn("cluster",
       nearest(centroids)(col(vecCol).cast("array<double>")).getField("_1"))
-    vecs.unpersist()
     KMeansModel(centroids, assigned, wcss.reverse)
-  }
+  }(m => Seq(m.assigned))
 
   /** Binned range join (point-in-interval): joins `points` rows whose
     * `pointCol` falls in `[startCol, endCol)` of an `intervals` row,
@@ -1115,41 +1068,31 @@ object Scale {
     * wanting convergence loop until the label frame reaches a fixed
     * point. Per round: one equi-join of the m-row symmetrized edge
     * list against the n-row label frame, one (node, label) count agg,
-    * one degree-bounded top-1 window — never node × node. Same
-    * checkpoint-release loop discipline as [[pageRank]].
+    * one degree-bounded top-1 window — never node × node. Rounds are
+    * checkpointed lazily, as in [[hits]].
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 3): DataFrame = {
+                       iters: Int = 3): DataFrame = Scratch.scope { scratch =>
     // symmetrize + dedupe: neighbors see each other in both directions
-    val ud = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+    val ud = scratch.checkpoint(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .union(edges.select(col(dstCol).as("__src"), col(srcCol).as("__dst")))
-      .distinct().localCheckpoint()
-    val nodes = ud.select(col("__src").as("id")).distinct().localCheckpoint()
+      .distinct())
+    val nodes = scratch.checkpoint(ud.select(col("__src").as("id")).distinct())
     var labels = nodes.withColumn("label", col("id"))
     val w = Window.partitionBy("__src").orderBy(col("__c").desc, col("__nl").asc)
-    // lazy round checkpoints + one forced materialization at exit — see
-    // [[hits]] for the discipline (iters jobs collapse into one)
-    val roundCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (_ <- 1 to iters) {
       val counted = ud
         .join(labels.select(col("id"), col("label").as("__nl")),
           col("__dst") === col("id"))
         .groupBy(col("__src"), col("__nl")).agg(count(lit(1)).as("__c"))
-      labels = counted
+      labels = scratch.checkpoint(counted
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
-        .select(col("__src").as("id"), col("__nl").as("label"))
-        .localCheckpoint(eager = false)
-      roundCkpts += labels
+        .select(col("__src").as("id"), col("__nl").as("label")), eager = false)
     }
-    if (iters > 0) {
-      labels.count() // materialize the whole round chain in one job
-      roundCkpts.dropRight(1).foreach(Llm.unpersistCheckpoint)
-      Llm.unpersistCheckpoint(ud)
-      Llm.unpersistCheckpoint(nodes)
-    }
+    if (iters > 0) labels.count() // materialize the whole round chain in one job
     labels
-  }
+  }(Seq(_))
 
   /** Distributed PageRank over an edge list (damped, fixed iteration
     * count — link/citation authority scoring). Per iteration: one
@@ -1164,36 +1107,27 @@ object Scale {
     * (standard per-node formulation: `(1-d) + d·Σ contrib`).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 5, damping: Double = 0.85): DataFrame = {
+               iters: Int = 5, damping: Double = 0.85): DataFrame = Scratch.scope { scratch =>
     val deg = edges.groupBy(col(srcCol).as("__s")).agg(count(lit(1)).as("__outdeg"))
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .join(deg, col("__src") === col("__s")).drop("__s")
-      .localCheckpoint()
-    val nodes = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id"))).distinct().localCheckpoint()
+    val e = scratch.checkpoint(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+      .join(deg, col("__src") === col("__s")).drop("__s"))
+    val nodes = scratch.checkpoint(edges.select(col(srcCol).as("id"))
+      .union(edges.select(col(dstCol).as("id"))).distinct())
     var ranks = nodes.withColumn("rank", lit(1.0))
-    // lazy round checkpoints + one forced materialization at exit — see
-    // [[hits]] for the discipline (iters jobs collapse into one)
-    val roundCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // lazy round checkpoints, as in [[hits]]
     for (_ <- 1 to iters) {
       val contrib = e.join(ranks, col("__src") === col("id"))
         .groupBy(col("__dst"))
         .agg(sum((col("rank") / col("__outdeg")).cast(DecimalType(28, 12))).as("__c"))
-      ranks = nodes.join(contrib, col("id") === col("__dst"), "left")
+      ranks = scratch.checkpoint(nodes.join(contrib, col("id") === col("__dst"), "left")
         .select(col("id"),
           (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("__c").cast("double"), lit(0.0))).as("rank"))
-        .localCheckpoint(eager = false)
-      roundCkpts += ranks
+            lit(damping) * coalesce(col("__c").cast("double"), lit(0.0))).as("rank")),
+        eager = false)
     }
-    if (iters > 0) {
-      ranks.count() // materialize the whole round chain in one job
-      roundCkpts.dropRight(1).foreach(Llm.unpersistCheckpoint)
-      Llm.unpersistCheckpoint(e)
-      Llm.unpersistCheckpoint(nodes)
-    }
+    if (iters > 0) ranks.count() // materialize the whole round chain in one job
     ranks
-  }
+  }(Seq(_))
 
   /** HITS hubs & authorities (Kleinberg 1999, JACM 46(5) §3) with a
     * FIXED iteration count and NO per-round normalization: starting
@@ -1204,28 +1138,24 @@ object Scale {
     * stay far below 2^53 (growth ≤ (d_in·d_out)^iters per round pair).
     * Normalization does not change the ranking HITS exists to produce;
     * callers wanting unit scores divide by the max once at the end
-    * (the gate reports both). Same loop discipline as [[pageRank]]:
-    * per-round localCheckpoint with superseded-round release, two
-    * shuffles per round (group on dst, group on src), never
-    * node × node.
+    * (the gate reports both). Same loop as [[pageRank]]: a checkpoint
+    * per round, two shuffles per round (group on dst, group on src),
+    * never node × node.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 5): DataFrame = {
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .localCheckpoint()
-    val nodes = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id"))).distinct().localCheckpoint()
+           iters: Int = 5): DataFrame = Scratch.scope { scratch =>
+    val e = scratch.checkpoint(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")))
+    val nodes = scratch.checkpoint(edges.select(col(srcCol).as("id"))
+      .union(edges.select(col(dstCol).as("id"))).distinct())
     var scores = nodes.select(col("id"), lit(1L).as("hub"), lit(1L).as("auth"))
-    // LAZY checkpoints through the fixed-iteration loop (the bpeTrain
-    // discipline, driver-probe-free variant): each round's checkpoint
-    // still truncates the CATALYST plan immediately (withA feeds both
-    // the hub pass and the round output, so an uncheckpointed plan
-    // doubles per round), but nothing materializes until ONE count() at
-    // loop exit — iters eager-materialization jobs collapse into a
-    // single job whose stages are the same shuffles. Storage holds all
-    // rounds' node-frames during that job (id+2 longs per node per
-    // round); every superseded round is released right after the force.
-    val roundCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // LAZY checkpoints through the fixed-iteration loop: each round's
+    // checkpoint still truncates the CATALYST plan immediately (withA
+    // feeds both the hub pass and the round output, so an
+    // uncheckpointed plan doubles per round), but nothing materializes
+    // until ONE count() at loop exit — iters eager-materialization jobs
+    // collapse into a single job whose stages are the same shuffles.
+    // Storage holds all rounds' node-frames during that job (id+2 longs
+    // per node per round).
     for (_ <- 1 to iters) {
       // authority pass: a(v) = Σ hub of in-neighbors
       val aNew = e.join(scores.select(col("id"), col("hub")), col("__src") === col("id"))
@@ -1236,17 +1166,11 @@ object Scale {
       val hNew = e.join(withA.select(col("id").as("__aid"), col("auth")),
           col("__dst") === col("__aid"))
         .groupBy(col("__src")).agg(sum(col("auth")).as("__h"))
-      scores = withA.join(hNew, col("id") === col("__src"), "left")
-        .select(col("id"), coalesce(col("__h"), lit(0L)).as("hub"), col("auth"))
-        .localCheckpoint(eager = false)
-      roundCkpts += scores
+      scores = scratch.checkpoint(withA.join(hNew, col("id") === col("__src"), "left")
+        .select(col("id"), coalesce(col("__h"), lit(0L)).as("hub"), col("auth")),
+        eager = false)
     }
-    if (iters > 0) {
-      scores.count() // materialize the whole round chain in one job
-      roundCkpts.dropRight(1).foreach(Llm.unpersistCheckpoint)
-      Llm.unpersistCheckpoint(e)
-      Llm.unpersistCheckpoint(nodes)
-    }
+    if (iters > 0) scores.count() // materialize the whole round chain in one job
     scores
-  }
+  }(Seq(_))
 }

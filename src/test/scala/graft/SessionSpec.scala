@@ -53,21 +53,39 @@ class SessionSpec extends AnyFunSuite {
     assert(jobs.get <= 27, s"warm release run fired ${jobs.get} jobs")
   }
 
+  test("warm release-pipeline runs leave no checkpoint behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val left = Seq.fill(3) {
+      graft.ops.Llm.q_pipeline_release(spark, TestSpark.sf0001).collect()
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    assert(left.forall(_ == 0), s"blocks held after each of three runs: $left")
+  }
+
   test("concurrent release and near-dup pipelines in one session match the serial results") {
-    def release() = graft.ops.Llm.q_pipeline_release(spark, TestSpark.sf0001).collect().toSeq
-    def pairs() = graft.ops.Llm.q_dedup_minhash(spark, TestSpark.sf0001).collect().toSeq
-    val (releaseRef, pairsRef) = (release(), pairs())
-    assert(releaseRef.nonEmpty && pairsRef.nonEmpty)
-    // two threads, each running both pipelines in opposite order, so in
-    // every round a release run overlaps a near-dup run
+    // the release and near-dup pipelines, and the iterative operators
+    // that make and free their own scratch blocks mid-call
+    val pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "q_pipeline_release" -> graft.ops.Llm.q_pipeline_release,
+      "q_dedup_minhash" -> graft.ops.Llm.q_dedup_minhash,
+      "q_dedup_clusters" -> graft.ops.Llm.q_dedup_clusters,
+      "q_select_cover" -> graft.ops.Llm.q_select_cover,
+      "q_bpe_train" -> graft.ops.Llm.q_bpe_train)
+    def run(i: Int) = pipelines(i)._2(spark, TestSpark.sf0001).collect().toSeq
+    val refs = pipelines.indices.map(run)
+    assert(refs.forall(_.nonEmpty))
+    // two threads, each running every pipeline in opposite order, so in
+    // every round each pipeline overlaps the others
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val threads = Seq(0, 1).map { t =>
       new Thread(() => {
-        for (round <- 1 to 3; step <- Seq(t, 1 - t)) {
-          val what = if (step == 0) "q_pipeline_release" else "q_dedup_minhash"
+        val order = if (t == 0) pipelines.indices else pipelines.indices.reverse
+        for (round <- 1 to 3; i <- order) {
+          val what = pipelines(i)._1
           try {
-            val (got, want) = if (step == 0) (release(), releaseRef) else (pairs(), pairsRef)
-            if (got != want) errors.add(s"thread $t round $round: $what differs from the serial run")
+            if (run(i) != refs(i)) errors.add(s"thread $t round $round: $what differs from the serial run")
           } catch {
             case e: Exception => errors.add(s"thread $t round $round: $what failed: $e")
           }

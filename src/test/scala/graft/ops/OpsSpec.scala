@@ -1557,7 +1557,7 @@ class OpsSpec extends AnyFunSuite {
       "rows at/after the NaN carry NaN, per float-sum semantics")
   }
 
-  test("unpersistCheckpoint frees localCheckpoint storage; bpeTrain does not accumulate it") {
+  test("Scratch.release frees localCheckpoint storage; bpeTrain does not accumulate it") {
     import spark.implicits._
     def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
     val before = persistedIds
@@ -1565,8 +1565,8 @@ class OpsSpec extends AnyFunSuite {
     assert(ck.count() == 3)
     val added = persistedIds -- before
     assert(added.nonEmpty, "localCheckpoint must persist blocks")
-    Llm.unpersistCheckpoint(ck)
-    assert((persistedIds -- before).isEmpty, "unpersistCheckpoint must release them")
+    Scratch.release(ck)
+    assert((persistedIds -- before).isEmpty, "Scratch.release must release them")
     // bpeTrain: one checkpoint per merge round must NOT stay cached per
     // round — at vocabulary scale (~30k merges) that growth is unbounded
     val pre = persistedIds
@@ -1575,7 +1575,7 @@ class OpsSpec extends AnyFunSuite {
     assert(merges.size == 8)
     val live = (persistedIds -- pre).size
     assert(live <= 1, s"only the final round's checkpoint may remain, found $live")
-    Llm.unpersistCheckpoint(words)
+    Scratch.release(words)
   }
 
   test("semanticDedup: identical vectors collapse to the min id; dissimilar vectors survive") {

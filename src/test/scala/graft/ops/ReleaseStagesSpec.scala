@@ -36,7 +36,7 @@ class ReleaseStagesSpec extends AnyFunSuite {
       val want = Scale.dedupKeepFirst(df, Seq(col("norm_key")), Seq(col("doc_id")))
         .select("doc_id", "text")
       try (rows(got) == rows(want)) :| s"docs=$docs got=${rows(got)} want=${rows(want)}"
-      finally Llm.unpersistCheckpoint(got)
+      finally Scratch.release(got)
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, res.status.toString)

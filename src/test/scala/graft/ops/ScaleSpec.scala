@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -241,23 +242,70 @@ class ScaleSpec extends AnyFunSuite {
   test("iterative loops release superseded checkpoints (bounded executor storage)") {
     import spark.implicits._
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    // connectedComponents: ~8 pointer-jumping rounds on a 200-node path;
-    // per-round checkpoints must not accumulate (linear growth = OOM at
-    // real iteration counts). Final labels + nothing else may remain.
-    val pre = persisted
+    def reads(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    def cachedNothing = spark.sharedState.cacheManager.isEmpty
+    // a call leaves exactly the blocks its result reads: per-round
+    // checkpoints must not accumulate (linear growth = OOM at real
+    // iteration counts), and no cached table stays in the session
+    def leavesItsReads(what: String)(call: => DataFrame): DataFrame = {
+      val pre = persisted
+      val out = call
+      val left = persisted -- pre
+      assert(left == reads(out), s"$what left blocks $left; its result reads ${reads(out)}")
+      assert(cachedNothing, s"$what left a cached table in the session")
+      out
+    }
+    // a call that throws leaves no block and no cached table behind
+    def leavesNothingOnThrow(what: String)(call: => Any): Unit = {
+      val pre = persisted
+      intercept[IllegalStateException](call)
+      assert((persisted -- pre).isEmpty, s"$what left blocks ${persisted -- pre} after throwing")
+      assert(cachedNothing, s"$what left a cached table in the session")
+    }
     val n = 200
     val nodes = (1 to n).map(_.toLong).toDF("id")
     val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
-    val labels = Scale.connectedComponents(nodes, "id", edges, "src", "dst", maxIter = 12)
+    // connectedComponents: ~8 pointer-jumping rounds on a 200-node path
+    val labels = leavesItsReads("connectedComponents") {
+      Scale.connectedComponents(nodes, "id", edges, "src", "dst", maxIter = 12)
+    }
     assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(1L))
-    val ccLive = (persisted -- pre).size
-    assert(ccLive <= 1, s"only the final labels checkpoint may remain, found $ccLive")
-    // pageRank: 5 rounds; only the final ranks checkpoint may remain
-    val pre2 = persisted
-    val ranks = Scale.pageRank(edges, "src", "dst", iters = 5)
-    assert(ranks.count() == n)
-    val prLive = (persisted -- pre2).size
-    assert(prLive <= 1, s"only the final ranks checkpoint may remain, found $prLive")
+    leavesNothingOnThrow("connectedComponents(maxIter = 2)") {
+      Scale.connectedComponents(nodes, "id", edges, "src", "dst", maxIter = 2)
+    }
+    for (iters <- Seq(0, 5)) {
+      val ranks = leavesItsReads(s"pageRank(iters = $iters)")(Scale.pageRank(edges, "src", "dst", iters))
+      assert(ranks.count() == n)
+      val scores = leavesItsReads(s"hits(iters = $iters)")(Scale.hits(edges, "src", "dst", iters))
+      assert(scores.count() == n)
+    }
+    for (iters <- Seq(0, 3)) {
+      val lp = leavesItsReads(s"labelPropagation(iters = $iters)") {
+        Scale.labelPropagation(edges, "src", "dst", iters)
+      }
+      assert(lp.count() == n)
+    }
+    // kCore leaves exactly the blocks its result reads: K4 plus a
+    // pendant chain peels in three rounds at k = 2
+    val k4 = for (a <- 1L to 4L; b <- 1L to 4L if a != b) yield (a, b)
+    val chain = Seq((4L, 5L), (5L, 6L), (6L, 7L)).flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val kEdges = (k4 ++ chain).toDF("src", "dst")
+    val core = leavesItsReads("kCore")(Scale.kCore(kEdges, "src", "dst", k = 2))
+    assert(core.count() == 7)
+    leavesNothingOnThrow("kCore(maxRounds = 2)")(Scale.kCore(kEdges, "src", "dst", k = 2, maxRounds = 2))
+    val vecs = Seq(Array(0.0, 0.0), Array(0.0, 1.0), Array(9.0, 9.0), Array(9.0, 8.0)).toDF("v")
+    leavesItsReads("kMeans")(Scale.kMeans(vecs, "v", k = 2).assigned)
+    val docs = Seq.fill(50)("low lower lowest low low new newer").toDF("text")
+    leavesItsReads("bpeTrain")(Llm.bpeTrain(docs, "text", numMerges = 8)._2)
+    val emb = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    val q = emb.orderBy("vec_id").head().getSeq[Double](1)
+    leavesItsReads("mmrSelect")(Llm.mmrSelect(emb, q, k = 3, lambda = 0.7))
+    // m0 = 1 forces the certificate failure → pool growth → retry path
+    leavesItsReads("selectCover")(Llm.selectCover(Tables.documents(spark, sf), k = 8, m0 = 1L))
+    leavesItsReads("q_sim_ivf")(Llm.q_sim_ivf(spark, sf))
   }
 
   test("connectedComponents fails loudly instead of returning split components") {
@@ -296,14 +344,6 @@ class ScaleSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Scale.kCore(edges, "src", "dst", k = 2, maxRounds = 2)
     }
-    // release handle: same result, and release() frees the round
-    // checkpoints the frame reads (a re-read afterwards must fail —
-    // the lineage was truncated, so the blocks WERE the data)
-    val (relDf, release) = Scale.kCoreWithRelease(edges, "src", "dst", k = 2)
-    val got = relDf.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == out2, "kCoreWithRelease must return the same decomposition")
-    release()
-    intercept[org.apache.spark.SparkException] { relDf.count() }
   }
 
   test("q_graph_kcore: peel depth is a structural constant ≤ 2 (the oracle's 3-round unroll has slack)") {

@@ -1,29 +1,30 @@
 #!/usr/bin/env python3
-"""Bracketed A/B bench: control -> candidate -> control in ONE window.
+"""Alternating A/B bench: control and candidate legs, interleaved, in ONE window.
 
 Same-box drift reaches +/-20% across hours and +/-6% between back-to-back
-runs (PERF.md rounds 11-13), so a raw round-over-round total is
-uninterpretable. The house discipline (r12, mandated as a committed
-artifact by the r13 verdict): bench the CONTROL tree before AND after
-the candidate in one window, quote the candidate against the ADJACENT
-control, and quote the control's self-drift as the noise bound. This
-tool runs all three legs with the flat classpath (no sbt lock) and
-commits each leg's full JSON line to a file.
+runs (PERF.md rounds 11-13), and a single control->candidate->control trio
+cannot resolve per-gate changes of 10-30 %: two trios of the same two trees
+minutes apart disagreed by 0.27 on one gate's ratio. So this tool runs
+`--rounds` rounds of one control leg and one candidate leg each, swapping
+which side runs first every round, and reads each gate by its median per
+side against the control's own spread (the distance between the quartiles
+of its control legs). A gate whose candidate median lies within that
+distance of the control median shows no change the legs can resolve.
 
 Usage:
-  python3 tools/ab_bench.py --control <git-ref> [--out-prefix BENCH_LOCAL_r14]
+  python3 tools/ab_bench.py --control <git-ref> [--rounds 5]
+      [--out-prefix BENCH_LOCAL_AB] [--workdir /tmp]
       [--sf /root/testdata/sf0.1] [--cpus 4] [--runs 3] [--heap 8g]
       [--queries q1,q2,...] [--skip-compile]
 
 The candidate is ALWAYS the current working tree's compiled classes
-(target/scala-2.13/classes — compile first). The control ref is checked
-out into a git worktree under /tmp and compiled there once (reused on
-re-runs when the worktree already sits on the requested ref).
+(target/scala-2.13/classes — compile first). The control ref is exported
+with `git archive` into <workdir>/graft_ab_<sha> and compiled there once
+(reused on re-runs while its compile marker names the same commit).
 
-Outputs: <out-prefix>_control1.json, <out-prefix>_candidate.json,
-<out-prefix>_control2.json (full per-query maps), plus a stdout summary
-of candidate-vs-adjacent-control per-query ratios and control
-self-drift.
+Outputs: <out-prefix>.json holding every leg's full Bench JSON line
+(`control` and `candidate` lists, in run order) and the per-gate summary,
+plus the same summary on stdout.
 """
 import argparse
 import json
@@ -48,43 +49,32 @@ def sh(cmd, **kw):
     return subprocess.run(cmd, check=True, **kw)
 
 
-def prepare_control(ref, skip_compile):
-    wt = f"/tmp/graft_ab_{ref.replace('/', '_')}"
-    head = None
-    if os.path.isdir(wt):
-        r = subprocess.run(["git", "-C", wt, "rev-parse", "HEAD"],
-                           capture_output=True, text=True)
-        head = r.stdout.strip() if r.returncode == 0 else None
+def prepare_control(ref, workdir, skip_compile):
     want = subprocess.run(["git", "-C", REPO, "rev-parse", ref],
                           capture_output=True, text=True,
                           check=True).stdout.strip()
-    if head != want:
-        if os.path.isdir(wt):
-            subprocess.run(["git", "-C", REPO, "worktree", "remove",
-                            "--force", wt], check=False)
-        sh(["git", "-C", REPO, "worktree", "add", "--force", wt, ref])
-    classes = os.path.join(wt, "target/scala-2.13/classes")
+    tree = os.path.join(workdir, f"graft_ab_{want[:12]}")
+    classes = os.path.join(tree, "target/scala-2.13/classes")
     # the marker is written ONLY after a successful compile and keyed on
-    # the commit sha — a worktree left by an interrupted sbt run (classes/
-    # exists but half-built) never passes for a compiled control leg
-    marker = os.path.join(wt, "target", ".graft_ab_compiled")
-    marker_ok = os.path.isdir(classes) and os.path.isfile(marker) and \
-        open(marker).read().strip() == want
-    if marker_ok and skip_compile:
-        pass
-    elif marker_ok:
-        # clean reuse is safe without --skip-compile too: control worktrees
-        # are never edited, so sha-keyed classes are current by definition
-        pass
-    else:
-        if skip_compile:
-            sys.exit(f"--skip-compile: no verified compile marker for {want}"
-                     f" in {wt} — run once without --skip-compile first")
-        if os.path.isfile(marker):
-            os.remove(marker)
-        sh(["sbt", "-batch", "compile"], cwd=wt)
-        with open(marker, "w") as f:
-            f.write(want + "\n")
+    # the commit sha — a tree left by an interrupted sbt run (classes/
+    # exists but half-built) never passes for a compiled control leg;
+    # exported trees are never edited, so sha-keyed classes are current
+    marker = os.path.join(tree, "target", ".graft_ab_compiled")
+    if os.path.isdir(classes) and os.path.isfile(marker) and \
+            open(marker).read().strip() == want:
+        return classes
+    if skip_compile:
+        sys.exit(f"--skip-compile: no verified compile marker for {want}"
+                 f" in {tree} — run once without --skip-compile first")
+    os.makedirs(tree, exist_ok=True)
+    archive = subprocess.Popen(["git", "-C", REPO, "archive", want],
+                               stdout=subprocess.PIPE)
+    sh(["tar", "-x", "-C", tree], stdin=archive.stdout)
+    if archive.wait() != 0:
+        sys.exit(f"git archive {want} failed")
+    sh(["sbt", "-batch", "compile"], cwd=tree)
+    with open(marker, "w") as f:
+        f.write(want + "\n")
     return classes
 
 
@@ -107,36 +97,51 @@ def run_bench(classes, out_file, args):
         return json.loads(f.readline())
 
 
-def summarize(c1, cand, c2):
-    q1, qc, q2 = c1["queries"], cand["queries"], c2["queries"]
-    common = sorted(set(q1) & set(qc) & set(q2))
-    if not common:
-        print("no common queries between legs")
-        return
-    # adjacent control = elementwise mean of the two brackets
-    ratios = {k: qc[k] / ((q1[k] + q2[k]) / 2) for k in common
-              if q1[k] + q2[k] > 0}
-    drift = {k: q2[k] / q1[k] for k in common if q1[k] > 0}
-    med = statistics.median(ratios.values())
-    med_drift = statistics.median(drift.values())
-    print(f"\n== A/B summary over {len(common)} common queries ==")
-    print(f"control1 total {c1['value']:.1f}s  candidate total "
-          f"{cand['value']:.1f}s  control2 total {c2['value']:.1f}s")
-    print(f"median candidate/control ratio: {med:.3f}")
-    print(f"median control self-drift (c2/c1): {med_drift:.3f} "
-          "(the noise bound — candidate deltas inside it are weather)")
-    worst = sorted(ratios.items(), key=lambda kv: -kv[1])[:8]
-    print("largest candidate/control ratios:")
-    for k, r in worst:
-        print(f"  {k}: {r:.2f} (ctrl {q1[k]:.3f}/{q2[k]:.3f}s, "
-              f"cand {qc[k]:.3f}s, self-drift {drift.get(k, float('nan')):.2f})")
+def quartile_distance(xs):
+    """Distance between the first and third quartiles (0 below 2 legs)."""
+    if len(xs) < 2:
+        return 0.0
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[2] - q[0]
+
+
+def summarize(control, candidate):
+    """Per gate: the median per side, the control's interquartile
+    distance, and whether the medians differ by more than it."""
+    legs = control + candidate
+    common = sorted(set.intersection(*(set(l["queries"]) for l in legs)))
+    gates = {}
+    for q in common:
+        ctrl = [l["queries"][q] for l in control]
+        cand = [l["queries"][q] for l in candidate]
+        mc, mk, iqr = statistics.median(ctrl), statistics.median(cand), \
+            quartile_distance(ctrl)
+        gates[q] = {"control_median": mc, "candidate_median": mk,
+                    "control_iqr": iqr,
+                    "resolved": abs(mk - mc) > iqr}
+    print(f"\n== {len(control)} control / {len(candidate)} candidate legs, "
+          f"{len(common)} common gates ==")
+    print(f"{'gate':40s} {'control':>9s} {'candidate':>9s} {'ratio':>6s} "
+          f"{'ctrl IQR':>9s}  verdict")
+    for q, g in gates.items():
+        mc, mk = g["control_median"], g["candidate_median"]
+        ratio = mk / mc if mc > 0 else float("nan")
+        verdict = ("faster" if mk < mc else "slower") if g["resolved"] \
+            else "within control IQR"
+        print(f"{q:40s} {mc:9.3f} {mk:9.3f} {ratio:6.2f} "
+              f"{g['control_iqr']:9.3f}  {verdict}")
+    return gates
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--control", required=True,
-                    help="git ref of the control tree (e.g. the prior round's close commit)")
+                    help="git ref of the control tree (e.g. the parent commit)")
+    ap.add_argument("--rounds", type=int, default=5,
+                    help="rounds of one control and one candidate leg each")
     ap.add_argument("--out-prefix", default="BENCH_LOCAL_AB")
+    ap.add_argument("--workdir", default="/tmp",
+                    help="where the control tree is exported and legs are written")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--cpus", type=int, default=4)
     ap.add_argument("--runs", type=int, default=3)
@@ -144,7 +149,7 @@ def main():
     ap.add_argument("--queries", default="",
                     help="comma-separated subset (default: full suite)")
     ap.add_argument("--skip-compile", action="store_true",
-                    help="reuse an existing compiled control worktree as-is")
+                    help="require an already compiled control tree")
     args = ap.parse_args()
 
     cand_classes = os.path.join(REPO, "target/scala-2.13/classes")
@@ -152,13 +157,23 @@ def main():
         print("candidate classes missing — run `sbt compile` first",
               file=sys.stderr)
         return 1
-    ctrl_classes = prepare_control(args.control, args.skip_compile)
+    ctrl_classes = prepare_control(args.control, args.workdir, args.skip_compile)
 
-    pre = os.path.join(REPO, args.out_prefix)
-    c1 = run_bench(ctrl_classes, f"{pre}_control1.json", args)
-    cand = run_bench(cand_classes, f"{pre}_candidate.json", args)
-    c2 = run_bench(ctrl_classes, f"{pre}_control2.json", args)
-    summarize(c1, cand, c2)
+    control, candidate = [], []
+    for r in range(args.rounds):
+        # alternate which side runs first, so a drifting box loads both
+        order = [("control", ctrl_classes, control),
+                 ("candidate", cand_classes, candidate)]
+        for side, classes, legs in (order if r % 2 == 0 else order[::-1]):
+            leg = os.path.join(args.workdir, f"ab_leg_r{r}_{side}.json")
+            legs.append(run_bench(classes, leg, args))
+    gates = summarize(control, candidate)
+    out = os.path.join(REPO, f"{args.out_prefix}.json")
+    with open(out, "w") as f:
+        json.dump({"control_ref": args.control, "rounds": args.rounds,
+                   "control": control, "candidate": candidate,
+                   "gates": gates}, f)
+    print("wrote", out)
     return 0
 
 
