@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** The library's session factory: one place for the configuration that
   * matters at cluster scale, documented per knob. Local test/bench
@@ -66,19 +69,29 @@ object GraftSession {
     spark
   }
 
+  /** The optimizer rules the engine adds to every session. The
+    * extensions class and [[install]] both read this list.
+    */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.BloomJoinRule, graft.plans.RangeJoinRule, graft.plans.TextKernelRewriteRule)
+
+  /** The planner strategies the engine adds to every session, read like
+    * [[optimizerRules]].
+    */
+  val plannerStrategies: Seq[SparkStrategy] = Seq(graft.plans.AsofJoinStrategy)
+
   /** Engine wiring for sessions built WITHOUT
     * `spark.sql.extensions=graft.functions.GraftExtensions`: registers
-    * the native SQL functions, the as-of join strategy, and the
-    * bloom-prefilter + binned-range join rules through the public
-    * runtime hooks (FunctionRegistry / experimental.extraStrategies /
+    * the native SQL functions, [[plannerStrategies]] and
+    * [[optimizerRules]] through the public runtime hooks
+    * (FunctionRegistry / experimental.extraStrategies /
     * experimental.extraOptimizations). Idempotent.
     */
   def install(spark: SparkSession): Unit = {
     graft.functions.Vec.register(spark)
-    graft.plans.Asof.ensureRegistered(spark)
-    graft.plans.BloomJoin.ensureRegistered(spark)
-    graft.plans.RangeJoin.ensureRegistered(spark)
-    graft.plans.TextKernelRewrite.ensureRegistered(spark)
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    exp.extraStrategies ++= plannerStrategies.filterNot(exp.extraStrategies.contains)
+    exp.extraOptimizations ++= optimizerRules.filterNot(exp.extraOptimizations.contains)
   }
 
   /** Applies [[conf]] and the shuffle fan-out to a session builder. */

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for the vector kernels of the similarity
@@ -1042,89 +1041,34 @@ case class WordStats(child: Expression, stops: Seq[String]) extends UnaryExpress
     copy(child = newChild)
 }
 
-/** Column-API surface for the native vector expressions. Routed through
-  * the session FunctionRegistry + `call_function` (the public
-  * Expression→Column path in Spark 4; `Column(expr)` construction is
-  * sql-private). Registration happens lazily per session at
-  * plan-construction time — driver-side, once per query, negligible.
+/** Column-API surface for the native vector expressions: each method
+  * wraps the expression over its argument columns directly, so a column
+  * resolves in whichever session plans it. The SQL names
+  * (`graft_dot`, …) are for SQL text and come from [[register]] or the
+  * extensions class.
   */
 object Vec {
-  private def ensureRegistered(): SparkSession = {
-    val spark = SparkSession.active
-    // the registry lookup, not `catalog.functionExists`: that parses the
-    // name with the SQL parser on every column construction
-    if (!spark.sessionState.functionRegistry.functionExists(DotId)) register(spark)
-    spark
-  }
-  private val DotId = FunctionIdentifier("graft_dot")
-  def dot(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("graft_dot", a, b)
-  }
-  def l2norm(a: Column): Column = {
-    ensureRegistered()
-    call_function("graft_l2norm", a)
-  }
+  private def e(c: Column): Expression = GraftSqlBridge.expression(c)
+  private def col(x: Expression): Column = GraftSqlBridge.column(x)
+
+  def dot(a: Column, b: Column): Column = col(DotProduct(e(a), e(b)))
+  def l2norm(a: Column): Column = col(L2Norm(e(a)))
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-  def minhash(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_minhash", text)
-  }
-  def winnow(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_winnow", text)
-  }
-  def simhash(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_simhash", text)
-  }
-  def embSig(vec: Column): Column = {
-    ensureRegistered()
-    call_function("graft_embsig", vec)
-  }
-  def sigMatch(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("graft_sigmatch", a, b)
-  }
-  def wordNGrams(text: Column, n: Int, stride: Int = 1): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_word_ngrams", text, lit(n), lit(stride))
-  }
-  def shingles(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_shingles", text)
-  }
-  def shingleJaccard(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("graft_shingle_jaccard", a, b)
-  }
-  def cdcChunks(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_cdc_chunks", text)
-  }
-  def nfc(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_nfc", text)
-  }
-  def normText(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_normtext", text)
-  }
-  def stopCount(text: Column, stops: Seq[String]): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_stopcount", text, lit(stops.toArray))
-  }
-  def wordStats(text: Column, stops: Seq[String]): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_wordstats", text, lit(stops.toArray))
-  }
-  def charStats(text: Column): Column = {
-    ensureRegistered()
-    call_function("graft_charstats", text)
-  }
+  def minhash(text: Column): Column = col(MinHashSig(e(text)))
+  def winnow(text: Column): Column = col(WinnowFingerprints(e(text)))
+  def simhash(text: Column): Column = col(SimHash64(e(text)))
+  def embSig(vec: Column): Column = col(HyperplaneSig(e(vec)))
+  def sigMatch(a: Column, b: Column): Column = col(SigMatch(e(a), e(b)))
+  def wordNGrams(text: Column, n: Int, stride: Int = 1): Column =
+    col(WordNGrams(e(text), n, stride))
+  def shingles(text: Column): Column = col(ShingleSet(e(text)))
+  def shingleJaccard(a: Column, b: Column): Column = col(ShingleJaccard(e(a), e(b)))
+  def cdcChunks(text: Column): Column = col(CdcChunks(e(text)))
+  def nfc(text: Column): Column = col(NfcNormalize(e(text)))
+  def normText(text: Column): Column = col(NormText(e(text)))
+  def stopCount(text: Column, stops: Seq[String]): Column = col(StopCount(e(text), stops))
+  def wordStats(text: Column, stops: Seq[String]): Column = col(WordStats(e(text), stops))
+  def charStats(text: Column): Column = col(CharStats(e(text)))
   /** `size(split(text, " "))` token count without the regex split or the
     * per-row array: tokens = spaces + 1 (split keeps empty segments, so
     * every single space is a boundary; 0x20 never occurs inside a UTF-8
@@ -1134,17 +1078,15 @@ object Vec {
     import org.apache.spark.sql.functions.{length, translate, lit}
     (length(text) - length(translate(text, " ", "")) + lit(1)).cast("long")
   }
-  def bpeApply(syms: Column, merges: Seq[(String, String)]): Column = {
-    ensureRegistered()
-    import org.apache.spark.sql.functions.lit
-    // "l r" is unambiguous: symbols come from split(text, ' ') and can
-    // never contain a space
-    call_function("graft_bpe_apply", syms,
-      lit(merges.map { case (l, r) => s"$l $r" }.toArray))
-  }
+  /** "l r" is the merge's SQL-literal form, as `graft_bpe_apply` takes
+    * it; unambiguous because symbols come from split(text, ' ') and can
+    * never contain a space.
+    */
+  def bpeApply(syms: Column, merges: Seq[(String, String)]): Column =
+    col(BpeApply(e(syms), merges.map { case (l, r) => s"$l $r" }))
 
   private val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (DotId,
+    (FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (es: Seq[Expression]) => DotProduct(es(0), es(1))),
     (FunctionIdentifier("graft_l2norm"),
@@ -1258,9 +1200,7 @@ object Vec {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
     Vec.inject(extensions)
-    extensions.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    extensions.injectOptimizerRule(_ => graft.plans.BloomJoinRule)
-    extensions.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
-    extensions.injectOptimizerRule(_ => graft.plans.TextKernelRewriteRule)
+    graft.GraftSession.plannerStrategies.foreach(s => extensions.injectPlannerStrategy(_ => s))
+    graft.GraftSession.optimizerRules.foreach(r => extensions.injectOptimizerRule(_ => r))
   }
 }

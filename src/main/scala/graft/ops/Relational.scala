@@ -147,7 +147,8 @@ object Relational {
     * and a hard broadcast-size ceiling on the interval side. Rewritten
     * through [[Scale.binnedRangeJoin]]: quantize time into 7-day bins,
     * explode each interval to the bins it overlaps, equi-join on the
-    * bin id + residual range predicate. Both sides can then be
+    * bin id + residual range predicate ([[graft.plans.RangeJoinRule]]'s
+    * rewrite at that `binSize`). Both sides can then be
     * arbitrarily large (plain shuffle join) and each pair is emitted
     * exactly once. The shape: "lineitems shipped within 7 days of a
     * watched order's date" — watched = every 1000th orderkey, so the
@@ -769,7 +770,8 @@ object Relational {
     * where the dim exceeds the broadcast threshold). The exact join
     * scrubs bloom false positives, so the oracle is the plain join SQL.
     * BloomJoinRuleSpec asserts the rewrite fires; `Scale
-    * .bloomPrefilterJoin` remains the explicit manual form.
+    * .bloomPrefilterJoin` is the same injection, applied on request
+    * and sized by the caller.
     */
   def q_join_bloom(s: SparkSession, d: String): DataFrame = {
     val dim = part(s, d).filter(col("p_size") <= 10).select(col("p_partkey"), col("p_brand"))

@@ -2,7 +2,9 @@ package graft.ops
 
 import graft.functions.BucketIndex
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType,
   StringType, StructField, StructType}
@@ -712,6 +714,12 @@ object Scale {
     * filtering — `spark.sql.optimizer.runtime.bloomFilter.enabled` —
     * applies the same idea adaptively; this is the explicit, always-on
     * formulation with a caller-controlled size/fpp budget.)
+    *
+    * The prefilter is [[graft.plans.BloomJoinRule]]'s injection applied
+    * to the plain join unconditionally: a `bloom_filter_agg` scalar
+    * subquery over the dim keys, run with the query (calling this fires
+    * no job), sized `expectedKeys` at `fpp` up to Spark's runtime
+    * bloom-filter caps (4M items, 64M bits).
     */
   def bloomPrefilterJoin(fact: DataFrame, dim: DataFrame,
                          factKey: String, dimKey: String,
@@ -724,19 +732,23 @@ object Scale {
     require(Set("inner", "left_semi", "leftsemi", "semi").contains(joinType),
       s"bloomPrefilterJoin requires a match-only join type (inner/left_semi), got '$joinType': " +
         "prefiltering the fact side drops the unmatched rows outer/anti types must keep")
-    val bf = dim.stat.bloomFilter(dimKey, expectedKeys, fpp)
-    val bc = fact.sparkSession.sparkContext.broadcast(bf)
-    import org.apache.spark.sql.types._
-    val keep = fact.schema(factKey).dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        udf { k: java.lang.Long => k != null && bc.value.mightContainLong(k) }
-          .apply(col(factKey).cast("long"))
-      case StringType =>
-        udf { k: String => k != null && bc.value.mightContainString(k) }
-          .apply(col(factKey))
-      case t => throw new IllegalArgumentException(s"bloom key type $t unsupported")
+    require(expectedKeys > 0, s"expectedKeys must be positive, got $expectedKeys")
+    require(fpp > 0 && fpp < 1, s"fpp must lie in (0, 1), got $fpp")
+    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expectedKeys, fpp)
+    rewriteJoin(fact.join(dim, col(factKey) === dim(dimKey), joinType))(
+      graft.plans.BloomJoinRule.prefilter(_, expectedKeys, numBits))
+  }
+
+  /** The plain join `joined`, its analyzed `Join` replaced by `rewrite`
+    * (evaluated under the frame's session conf).
+    */
+  private def rewriteJoin(joined: DataFrame)(rewrite: Join => LogicalPlan): DataFrame = {
+    val spark = joined.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val j = joined.queryExecution.analyzed match {
+      case j: Join => j
+      case p => throw new IllegalStateException(s"expected a join plan, got ${p.nodeName}")
     }
-    fact.filter(keep).join(dim, col(factKey) === dim(dimKey), joinType)
+    GraftSqlBridge.ofRows(spark, SQLConf.withExistingConf(spark.sessionState.conf)(rewrite(j)))
   }
 
   /** Result of [[kMeans]]: final centroids (k × dim, driver-side — small
@@ -825,7 +837,9 @@ object Scale {
     * join becomes a plain shuffle EQUI-join on the bin id plus the
     * residual range predicate, so both sides can be arbitrarily large
     * and each matching pair is emitted exactly once (a point's single
-    * bin is matched by the one interval copy in that bin).
+    * bin is matched by the one interval copy in that bin). This is
+    * [[graft.plans.RangeJoinRule]]'s rewrite of the plain join, with
+    * this call's `binSize` — its `maxBinsPerRow` guard included.
     *
     * Cost model: compares per bin ≈ |points in bin| × |interval copies
     * in bin| — choose `binSize` near the TYPICAL interval length so
@@ -834,36 +848,20 @@ object Scale {
     * skew) is an ordinary join-key skew: AQE skew-join splits it, or
     * pre-salt with [[saltedJoin]].
     *
-    * Columns must be integer-valued (cast timestamps to an epoch
-    * integer first). Bins are computed with integral floor-division
-    * (`(x - pmod(x, bin)) div bin`), exact over the whole Long range —
-    * a double-division floor goes inexact above 2^53 (epoch-ns longs)
-    * and silently drops pairs near bin boundaries. Degenerate
-    * intervals (`end <= start`) match nothing and are dropped before
-    * the explode.
+    * Columns must be integral (cast timestamps to an epoch integer
+    * first); other types raise `IllegalArgumentException`. Bins are
+    * computed with integral floor-division (`Math.floorDiv(x, bin)`),
+    * exact over the whole Long range — a double-division floor
+    * goes inexact above 2^53 (epoch-ns longs) and silently drops pairs
+    * near bin boundaries. Degenerate intervals (`end <= start`) match
+    * nothing and are dropped before the explode.
     */
   def binnedRangeJoin(points: DataFrame, intervals: DataFrame,
                       pointCol: String, startCol: String, endCol: String,
                       binSize: Long): DataFrame = {
     require(binSize > 0, s"binSize must be positive, got $binSize")
-    // floor(x / binSize) in pure Long arithmetic: x - pmod(x, bin) is
-    // exactly divisible by bin, so `div`'s truncation direction is moot
-    def bin(c: Column): Column = {
-      val x = c.cast("long")
-      call_function("div", x - pmod(x, lit(binSize)), lit(binSize))
-    }
-    val p = points.withColumn("__pbin", bin(col(pointCol)))
-    val i = intervals
-      .filter(col(endCol) > col(startCol))
-      .withColumn("__ibin", explode(sequence(
-        bin(col(startCol)),
-        // end is EXCLUSIVE: the last candidate bin is the one holding
-        // end-1, so an interval ending exactly on a bin boundary does
-        // not replicate into the bin it cannot match
-        bin(col(endCol) - 1))))
-    p.join(i, col("__pbin") === col("__ibin") &&
-        col(pointCol) >= col(startCol) && col(pointCol) < col(endCol))
-      .drop("__pbin", "__ibin")
+    binnedJoin(points.join(intervals,
+      col(pointCol) >= col(startCol) && col(pointCol) < col(endCol)), binSize)
   }
 
   /** Binned interval-OVERLAP join: joins every `left` interval
@@ -882,13 +880,14 @@ object Scale {
     * the later start lies inside BOTH intervals whenever they overlap
     * (it is < both ends), so that bin is always shared and unique.
     * Result is therefore identical to the nested-loop join, row for
-    * row, with no post-hoc `distinct`.
+    * row, with no post-hoc `distinct`. This is
+    * [[graft.plans.RangeJoinRule]]'s overlap rewrite of the plain join.
     *
     * Cost model: compares per bin ≈ |left copies| × |right copies| —
     * pick `binSize` near the typical interval length on the DENSER
-    * side so replication stays ~2×. Integral floor-division binning
-    * (exact over the whole Long range) and the half-open degenerate
-    * drop follow [[binnedRangeJoin]]. The four column names must be
+    * side so replication stays ~2×. Integral bounds and floor-division
+    * binning follow [[binnedRangeJoin]]. Empty and inverted intervals
+    * (`end <= start`) match nothing. The four column names must be
     * distinct (alias before calling).
     */
   def binnedOverlapJoin(left: DataFrame, right: DataFrame,
@@ -898,20 +897,17 @@ object Scale {
     require(binSize > 0, s"binSize must be positive, got $binSize")
     require(Set(lStart, lEnd, rStart, rEnd).size == 4,
       s"bound column names must be distinct, got ($lStart,$lEnd)×($rStart,$rEnd)")
-    def bin(c: Column): Column = {
-      val x = c.cast("long")
-      call_function("div", x - pmod(x, lit(binSize)), lit(binSize))
-    }
-    val l = left.filter(col(lEnd) > col(lStart))
-      .withColumn("__lbin", explode(sequence(bin(col(lStart)), bin(col(lEnd) - 1))))
-    val r = right.filter(col(rEnd) > col(rStart))
-      .withColumn("__rbin", explode(sequence(bin(col(rStart)), bin(col(rEnd) - 1))))
-    l.join(r, col("__lbin") === col("__rbin") &&
-        col(lStart) < col(rEnd) && col(rStart) < col(lEnd) &&
-        // emit-once: only in the bin holding the later start
-        col("__lbin") === bin(greatest(col(lStart), col(rStart))))
-      .drop("__lbin", "__rbin")
+    binnedJoin(left.join(right,
+      col(lStart) < col(rEnd) && col(rStart) < col(lEnd) &&
+        col(lStart) < col(lEnd) && col(rStart) < col(rEnd)), binSize)
   }
+
+  private def binnedJoin(joined: DataFrame, binSize: Long): DataFrame =
+    rewriteJoin(joined) { j =>
+      graft.plans.RangeJoinRule.rewrite(j, binSize).getOrElse(
+        throw new IllegalArgumentException(
+          s"binned join needs integral bounds (cast timestamps to an epoch integer): ${j.condition.get.sql}"))
+    }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): k-means-cluster the embedding corpus, then

@@ -331,33 +331,21 @@ object Sinks {
         s"snapshot commit lost the version race $maxAttempts times at $path")
     }
 
-    private def dataDirOf(spark: SparkSession, path: String, version: Int): String = {
+    private def dataDirOf(spark: SparkSession, path: String, version: Int): String =
+      """"data_dir":\s*"([^"]+)"""".r.findFirstMatchIn(manifestBody(spark, path, version))
+        .getOrElse(throw new java.io.IOException(s"corrupt manifest v$version at $path"))
+        .group(1)
+
+    /** The manifest text of `version`; `NoSuchElementException` when it
+      * does not exist (a lost race, to `commit`'s verify step).
+      */
+    private def manifestBody(spark: SparkSession, path: String, version: Int): String = {
       val (f, _) = fs(spark, path)
       val mf = new org.apache.hadoop.fs.Path(manifestDir(path), f"v$version%05d.json")
       if (!f.exists(mf))
         throw new java.util.NoSuchElementException(s"no snapshot v$version at $path")
       val in = f.open(mf)
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      in.close()
-      val body = new String(bos.toByteArray, "UTF-8")
-      val m = """"data_dir":\s*"([^"]+)"""".r.findFirstMatchIn(body)
-        .getOrElse(throw new java.io.IOException(s"corrupt manifest $mf"))
-      m.group(1)
-    }
-
-    private def manifestBody(spark: SparkSession, path: String, version: Int): String = {
-      val (f, _) = fs(spark, path)
-      val mf = new org.apache.hadoop.fs.Path(manifestDir(path), f"v$version%05d.json")
-      val in = f.open(mf)
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      in.close()
-      new String(bos.toByteArray, "UTF-8")
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
 
     /** The batch id of the most recent STREAMING commit — found by

@@ -90,7 +90,6 @@ object syntax {
     def writeRangeSorted(path: String, byCol: String, files: Int): Unit =
       Sinks.rangeSortedParquet(df, path, byCol, files)
 
-    /** [[Sinks.zOrderedParquet]]: two-dimension-skippable layout. */
     /** [[Scale.quotaSample]]: prefiltered per-group fixed-N draw. */
     def quotaSample(groupCols: Seq[String], hash: Column, tie: Seq[Column],
                     quotas: Either[Long, DataFrame]): DataFrame =
@@ -100,6 +99,7 @@ object syntax {
     def kCore(srcCol: String, dstCol: String, k: Int): DataFrame =
       Scale.kCore(df, srcCol, dstCol, k)
 
+    /** [[Sinks.zOrderedParquet]]: two-dimension-skippable layout. */
     def writeZOrdered(path: String, c1: String, c2: String, files: Int): Unit =
       Sinks.zOrderedParquet(df, path, c1, c2, files)
   }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, BloomFilterMightContain, EqualTo, Expression, IsNotNull, Literal, ScalarSubquery, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.optimizer.ColumnPruning
@@ -8,8 +7,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LogicalPlan, SHUFFLE_HASH, SHUFFLE_MERGE}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Planner-tier bloom-prefilter join (the rule form of
-  * `Scale.bloomPrefilterJoin`): when an equi-join's one side carries a
+/** Planner-tier bloom-prefilter join: when an equi-join's one side carries a
   * selective filter and is small enough to sketch, inject a
   * `BloomFilterMightContain(scalar-subquery(bloom_filter_agg(dim key)))`
   * predicate onto the OTHER (fact) side — so non-matching fact rows die
@@ -30,25 +28,23 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * carries a bloom predicate is left alone), so it is safe in both a
   * fixed-point optimizer batch (`GraftExtensions.injectOptimizerRule`)
   * and the once-per-query `experimental.extraOptimizations` hook
-  * ([[BloomJoin.ensureRegistered]]).
+  * (`GraftSession.install`).
   *
-  * Tunables (SQL conf):
-  *   - `spark.graft.bloomJoin.enabled` (default true)
-  *   - `spark.graft.bloomJoin.creationSideThreshold` — max creation-side
-  *     size in bytes to build a bloom over (default 128 MB ≈ 100M keys
-  *     at the default 3% fpp of `BloomFilter.create(n)`)
-  *   - `spark.graft.bloomJoin.sizeRatio` — app side must be at least
-  *     this many times larger than the creation side (default 2)
+  * The explicit `Scale.bloomPrefilterJoin` is the same injection
+  * ([[prefilter]]), sized by the caller's key count and fpp instead of
+  * the creation side's row-count estimate, and applied without the
+  * size and selectivity checks below.
   */
 object BloomJoinRule extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.bloomJoin.enabled", "true").toBoolean
-  private def creationThreshold: Long =
-    conf.getConfString("spark.graft.bloomJoin.creationSideThreshold",
-      String.valueOf(128L * 1024 * 1024)).toLong
-  private def sizeRatio: Long =
-    conf.getConfString("spark.graft.bloomJoin.sizeRatio", "2").toLong
+  /** Max creation-side size in bytes to build a bloom over: 128 MB ≈
+    * 100M keys at the 3% fpp of `BloomFilter.create(n)`.
+    */
+  private val CreationThreshold: Long = 128L * 1024 * 1024
+  /** The application side must be at least this many times larger than
+    * the creation side.
+    */
+  private val SizeRatio: Long = 2
 
   /** A filter that actually discards rows (not just null-pruning) marks
     * the creation side as selective — the precondition for the bloom to
@@ -96,13 +92,26 @@ object BloomJoinRule extends Rule[LogicalPlan] {
         .exists(s => s == SHUFFLE_MERGE || s == SHUFFLE_HASH)
   }
 
-  private def inject(app: LogicalPlan, appKey: Expression,
-                     creation: LogicalPlan, creationKey: Expression): LogicalPlan = {
-    val rowCount = creation.stats.rowCount.map(_.longValue).filter(_ > 0L)
-    val agg = rowCount match {
-      case Some(n) => new BloomFilterAggregate(new XxHash64(Seq(creationKey)), n)
-      case None => new BloomFilterAggregate(new XxHash64(Seq(creationKey)))
+  /** The equi-key pairs of a join condition, each as (left-side
+    * expression, right-side expression).
+    */
+  private def equiKeys(j: Join): Seq[(Expression, Expression)] =
+    j.condition.toSeq.flatMap(splitConjunctive).collect {
+      case EqualTo(l, r)
+          if l.references.nonEmpty && l.references.subsetOf(j.left.outputSet) &&
+             r.references.subsetOf(j.right.outputSet) => (l, r)
+      case EqualTo(l, r)
+          if r.references.nonEmpty && r.references.subsetOf(j.left.outputSet) &&
+             l.references.subsetOf(j.right.outputSet) => (r, l)
     }
+
+  /** `app` filtered by a bloom over `creationKey`'s hashes; `bloom`
+    * builds the sized aggregate over those hashes.
+    */
+  private def inject(app: LogicalPlan, appKey: Expression,
+                     creation: LogicalPlan, creationKey: Expression)
+                    (bloom: Expression => BloomFilterAggregate): LogicalPlan = {
+    val agg = bloom(new XxHash64(Seq(creationKey)))
     val alias = Alias(agg.toAggregateExpression(), "graft_bloom")()
     // prune the creation side to the key column before it runs as a
     // standalone subquery job (the main optimizer will not revisit it)
@@ -111,50 +120,49 @@ object BloomJoinRule extends Rule[LogicalPlan] {
     Filter(BloomFilterMightContain(subquery, new XxHash64(Seq(appKey))), app)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  /** Sized by the creation side's row-count estimate when it has one,
+    * else by Spark's runtime bloom-filter defaults.
+    */
+  private def estimated(creation: LogicalPlan)(h: Expression): BloomFilterAggregate =
+    creation.stats.rowCount.map(_.longValue).filter(_ > 0L) match {
+      case Some(n) => new BloomFilterAggregate(h, n)
+      case None => new BloomFilterAggregate(h)
+    }
+
+  /** `j` with its LEFT side prefiltered by a bloom over the right side's
+    * keys (the first equi conjunct), of `expectedKeys` items and
+    * `numBits` bits — Spark caps both at its runtime bloom-filter
+    * maxima. Unconditional: the caller asked for the prefilter.
+    */
+  private[graft] def prefilter(j: Join, expectedKeys: Long, numBits: Long): Join = {
+    val (lk, rk) = equiKeys(j).headOption.getOrElse(
+      throw new IllegalArgumentException(s"bloom prefilter needs an equi-join, got ${j.condition}"))
+    j.copy(left = inject(j.left, lk, j.right, rk) { h =>
+      new BloomFilterAggregate(h, Literal(expectedKeys), Literal(numBits))
+    })
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
-      case j @ Join(left, right, joinType, Some(cond), hint)
+      case j @ Join(left, right, joinType, Some(_), hint)
           if joinType == Inner || joinType == LeftSemi =>
-        val equiKeys = splitConjunctive(cond).collect {
-          case EqualTo(l, r)
-              if l.references.nonEmpty && l.references.subsetOf(left.outputSet) &&
-                 r.references.subsetOf(right.outputSet) => (l, r)
-          case EqualTo(l, r)
-              if r.references.nonEmpty && r.references.subsetOf(left.outputSet) &&
-                 l.references.subsetOf(right.outputSet) => (r, l)
-        }
         def size(p: LogicalPlan): BigInt = p.stats.sizeInBytes
         // prefilter the LEFT side from the RIGHT (both join types keep
         // left rows only on match), and — for inner — the reverse too
         var newLeft = left
         var newRight = right
-        equiKeys.headOption.foreach { case (lk, rk) =>
+        equiKeys(j).headOption.foreach { case (lk, rk) =>
           if (hasSelectiveFilter(right) && !alreadyBloomed(left, lk) &&
-              size(right) <= creationThreshold && size(left) >= size(right) * sizeRatio &&
+              size(right) <= CreationThreshold && size(left) >= size(right) * SizeRatio &&
               willShuffle(size(right), hint))
-            newLeft = inject(left, lk, right, rk)
+            newLeft = inject(left, lk, right, rk)(estimated(right))
           if (joinType == Inner &&
               hasSelectiveFilter(left) && !alreadyBloomed(right, rk) &&
-              size(left) <= creationThreshold && size(right) >= size(left) * sizeRatio &&
+              size(left) <= CreationThreshold && size(right) >= size(left) * SizeRatio &&
               willShuffle(size(left), hint))
-            newRight = inject(right, rk, left, lk)
+            newRight = inject(right, rk, left, lk)(estimated(left))
         }
         if (newLeft.eq(left) && newRight.eq(right)) j
         else j.copy(left = newLeft, right = newRight)
     }
-  }
-}
-
-/** Runtime registration for sessions built without
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (the
-  * `experimental.extraOptimizations` public hook — same pattern as
-  * [[Asof.ensureRegistered]]).
-  */
-object BloomJoin {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(BloomJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ BloomJoinRule
-  }
 }

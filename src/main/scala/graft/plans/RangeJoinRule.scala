@@ -1,14 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, Cast, Concat, EqualNullSafe, EqualTo, Explode, Expression, Greatest, GreaterThan, GreaterThanOrEqual, If, IntegralDivide, Least, LessThan, LessThanOrEqual, Literal, Pmod, RaiseError, Sequence, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, Cast, Concat, EqualNullSafe, EqualTo, Explode, Expression, Greatest, GreaterThan, GreaterThanOrEqual, If, Least, LessThan, LessThanOrEqual, Literal, RaiseError, Sequence, Subtract}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
-/** Planner-tier binned range join (the rule form of
-  * `Scale.binnedRangeJoin`): a join whose condition is ONLY a band —
+/** Planner-tier binned range join: a join whose condition is ONLY a band —
   * `point >= start AND point < end` with the point expression on one
   * side and both bounds on the other, no equi conjunct — has no
   * hash-partitionable key, so Spark plans a broadcast-nested-loop or
@@ -44,7 +43,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   *     plans a hash join and the band rides along as a post-filter);
   *   - point and both bounds are integral types (cast timestamps to
   *     an epoch integer first). Bins are computed with integral
-  *     floor-division (`(x - pmod(x, bin)) div bin`), exact over the
+  *     floor-division (`Math.floorDiv(x, bin)`), exact over the
   *     whole Long range — epoch-ns values above 2^53, where a
   *     double-division floor would bin inexactly and silently drop
   *     boundary pairs, are safe.
@@ -52,28 +51,35 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * Converges in a fixed-point batch by construction: the rewritten
   * join HAS an equi conjunct, so the rule never matches its own output.
   *
+  * The explicit `Scale.binnedRangeJoin` / `Scale.binnedOverlapJoin`
+  * calls are this same rewrite ([[rewrite]]) with a per-call `binSize`
+  * instead of the session conf; where the rewrite declines (a
+  * non-integral bound) they raise instead of planning a nested loop.
+  *
   * ALSO handles the other keyless band shape — interval × interval
   * OVERLAP (`lStart < rEnd AND rStart < lEnd`, strict or inclusive):
-  * both sides explode to the bins of their [least(s,e), greatest(s,e)]
-  * span and meet in a bin equi-join, with the original condition as
-  * residual plus a charge-once conjunct that keeps only the bin holding
+  * both sides explode to the bins of their [least(s,e'), greatest(s,e')]
+  * span — e' the closed end, `end - 1` under a strict bound — and meet
+  * in a bin equi-join, with the original condition as residual plus a
+  * charge-once conjunct that keeps only the bin holding
   * `greatest(lStart, rStart)`. Result-identical for ALL inputs:
   *   - a pair satisfying the overlap has its later start inside both
   *     intervals' least/greatest spans (if m = rStart > lStart then
-  *     rStart < lEnd ≤ greatest(lStart, lEnd), and symmetrically), so
+  *     rStart ≤ lEnd' ≤ greatest(lStart, lEnd') — over integers a strict
+  *     `rStart < lEnd` is `rStart ≤ lEnd - 1` — and symmetrically), so
   *     the charged bin exists on both exploded sides — exactly one
   *     emission;
   *   - inverted (end < start) and empty intervals are NOT special-cased
   *     away: the least/greatest span over-approximates and the original
-  *     condition decides, so semantics never change (unlike the
-  *     explicit `Scale.binnedOverlapJoin` API, which documents an
-  *     end>start precondition);
+  *     condition decides, so semantics never change (the explicit
+  *     `Scale.binnedOverlapJoin` ANDs `start < end` for both sides into
+  *     its condition, so there they match nothing);
   *   - null bounds make the span null → `explode` yields no rows, and
   *     the original condition would have been null anyway.
   * Inner joins only (both sides change multiplicity under the explode).
   *
-  * Overlap-rewrite CONTRACT (same as `Scale.binnedOverlapJoin`): each
-  * row is replicated once per bin of its least/greatest span, so
+  * Overlap-rewrite CONTRACT (the explicit `Scale.binnedOverlapJoin`
+  * too): each row is replicated once per bin of its least/greatest span, so
   * `binSize` must be chosen near the TYPICAL interval width — a span of
   * many multiples of binSize multiplies that side's row count by
   * span/binSize. A mis-sized binSize therefore cannot fail SILENTLY:
@@ -87,8 +93,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * mixed or unknown, disable the overlap path with
   * `spark.graft.rangeJoin.overlap.enabled=false` (the point-in-interval
   * rewrite stays on — its point side is always exactly one bin) and
-  * fall back to the explicit `Scale.binnedOverlapJoin` API after
-  * inspecting the width distribution.
+  * call `Scale.binnedOverlapJoin` — the same rewrite — with a `binSize`
+  * chosen for that join after inspecting its width distribution.
   *
   * With MULTIPLE overlap dimensions in one condition (e.g. 2-D box
   * intersection) exactly ONE dimension is binned and the rest ride in
@@ -195,17 +201,18 @@ object RangeJoinRule extends Rule[LogicalPlan] {
       (a.references.nonEmpty && a.references.subsetOf(right.outputSet) &&
         b.references.nonEmpty && b.references.subsetOf(left.outputSet))
 
-  /** floor(e / bin) in pure Long arithmetic: `e - pmod(e, bin)` is the
-    * largest multiple of bin ≤ e (pmod is non-negative for bin > 0), so
-    * the integral division is exact and truncation direction is moot.
-    * Unlike a double-division floor this is exact for ALL longs — epoch
+  /** floor(e / bin) in pure Long arithmetic (`Math.floorDiv`). Unlike a
+    * double-division floor this is exact for ALL longs — epoch
     * nanoseconds sit above 2^53, where doubles can no longer represent
     * every integer and a point near a bin boundary would bin wrongly.
+    * It references `e` once: the sequence and its guard repeat each
+    * bin, and generated code grown past the JIT's 8000-byte
+    * huge-method limit runs the whole stage interpreted (measured with
+    * `e - pmod(e, bin) div bin`: q_join_overlap at sf0.1 on 4 vCPUs ~30 ms slower
+    * per run, and not under -XX:-DontCompileHugeMethods).
     */
-  private def floorBin(e: Expression, bin: Long): Expression = {
-    val x = Cast(e, LongType)
-    IntegralDivide(Subtract(x, Pmod(x, Literal(bin))), Literal(bin))
-  }
+  private def floorBin(e: Expression, bin: Long): Expression =
+    StaticInvoke(classOf[Math], LongType, "floorDiv", Seq(Cast(e, LongType), Literal(bin)))
 
   private def maxBinsPerRow: Long = {
     val raw = conf.getConfString("spark.graft.rangeJoin.maxBinsPerRow",
@@ -237,67 +244,92 @@ object RangeJoinRule extends Rule[LogicalPlan] {
         Literal("graft RangeJoinRule: one row's interval spans "),
         Cast(nBins, StringType),
         Literal(" bins, over spark.graft.rangeJoin.maxBinsPerRow=" + maxBins +
-          ". Raise spark.graft.rangeJoin.binSize toward the typical " +
-          "interval width, raise maxBinsPerRow (0 = unlimited), or turn " +
-          "the rewrite off (spark.graft.rangeJoin.overlap.enabled=false " +
-          "for the overlap path, binSize=0 for the rule).")))
+          ". Raise the binSize (spark.graft.rangeJoin.binSize for the rule, " +
+          "the binSize argument of an explicit Scale call) toward the " +
+          "typical interval width, raise maxBinsPerRow (0 = unlimited), or " +
+          "turn the rule off (spark.graft.rangeJoin.overlap.enabled=false " +
+          "for the overlap path, binSize=0 for both).")))
       If(LessThanOrEqual(nBins, Literal(maxBins)), hiBin,
         Cast(new RaiseError(msg), LongType))
     }
+    // Sequence is TimeZoneAwareExpression: it is unresolved (and fails
+    // plan validation) until a zone is pinned, even over longs
     Sequence(loBin, hi, Some(Literal(1L)), Some(conf.sessionLocalTimeZone))
   }
+
+  /** `child` with one row per bin of its `[lo, hi]` span, the bin id in
+    * `attr` (never null: a null bound explodes to no rows).
+    */
+  private def explodeBins(child: LogicalPlan, lo: Expression, hi: Expression,
+                          bin: Long, attr: AttributeReference): LogicalPlan =
+    Generate(Explode(guardedSeq(floorBin(lo, bin), floorBin(hi, bin), maxBinsPerRow)),
+      unrequiredChildIndex = Nil, outer = false, qualifier = None,
+      generatorOutput = Seq(attr), child = child)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val bin = binSize
     if (bin <= 0) return plan
-    plan.transformUp {
-      case j @ Join(left, right, joinType, Some(cond), hint)
-          if joinType == Inner || joinType == LeftSemi =>
-        val conjuncts = splitConjunctive(cond)
-        val bs = bounds(conjuncts, left, right)
-        val candidates = bs.filter(_.lower).flatMap { lb =>
-          bs.find(b => !b.lower && b.pointOnLeft == lb.pointOnLeft &&
-            b.point.semanticEquals(lb.point)).map((lb, _))
-        }
-        val candidate =
-          if (candidates.isEmpty) None
-          else Some(candidates.maxBy { case (lb, ub) =>
-            plainness(lb.point) * 2 + plainness(lb.bound) + plainness(ub.bound)
-          })
-        candidate match {
-          case Some((lb, ub))
-              if !hasCrossEqui(conjuncts, left, right) &&
-                // a semi join must not explode its left (multiplicity) side
-                (joinType == Inner || lb.pointOnLeft) =>
-            val (pointPlan, intervalPlan) =
-              if (lb.pointOnLeft) (left, right) else (right, left)
-            // point side: one bin per row
-            val pbinAlias = Alias(floorBin(lb.point, bin), "__graft_pbin")()
-            val pPlan = Project(pointPlan.output :+ pbinAlias, pointPlan)
-            // interval side: strictness-adjusted [lo, hi], drop empties
-            // (they match nothing; sequence rejects descending bounds)
-            val loL = if (lb.inclusive) Cast(lb.bound, LongType)
-              else Add(Cast(lb.bound, LongType), Literal(1L))
-            val hiL = if (ub.inclusive) Cast(ub.bound, LongType)
-              else Subtract(Cast(ub.bound, LongType), Literal(1L))
-            val nonEmpty = Filter(LessThanOrEqual(loL, hiL), intervalPlan)
-            // Sequence is TimeZoneAwareExpression: it is unresolved (and
-            // fails plan validation) until a zone is pinned, even over longs
-            val seq = guardedSeq(floorBin(loL, bin), floorBin(hiL, bin),
-              maxBinsPerRow)
-            val ibinAttr = AttributeReference("__graft_ibin", LongType)()
-            val gen = Generate(Explode(seq), unrequiredChildIndex = Nil,
-              outer = false, qualifier = None,
-              generatorOutput = Seq(ibinAttr), child = nonEmpty)
-            val newCond = And(EqualTo(pbinAlias.toAttribute, ibinAttr), cond)
-            val (newLeft, newRight) =
-              if (lb.pointOnLeft) (pPlan, gen) else (gen: LogicalPlan, pPlan: LogicalPlan)
-            Project(j.output, Join(newLeft, newRight, joinType, Some(newCond), hint))
-          case _ =>
-            rewriteOverlap(j, conjuncts, bs, bin).getOrElse(j)
-        }
-    }
+    val overlap = overlapEnabled
+    plan.transformUp { case j: Join => rewrite(j, bin, overlap).getOrElse(j) }
   }
+
+  /** The binned rewrite of one keyless band join at bin width `bin`:
+    * the point-in-interval rewrite when the condition pairs a lower and
+    * an upper bound on one point expression, else (when `overlap`) the
+    * interval×interval overlap rewrite. `None` when neither applies —
+    * an equi conjunct, a non-integral bound, a join type the rewrite
+    * would change. [[apply]] calls it with the session's conf; the
+    * explicit `Scale.binnedRangeJoin` / `Scale.binnedOverlapJoin` calls
+    * with their own `binSize`.
+    */
+  private[graft] def rewrite(j: Join, bin: Long,
+                             overlap: Boolean = true): Option[LogicalPlan] = j match {
+    case Join(left, right, joinType, Some(cond), hint)
+        if bin > 0 && (joinType == Inner || joinType == LeftSemi) =>
+      val conjuncts = splitConjunctive(cond)
+      val bs = bounds(conjuncts, left, right)
+      val candidates = bs.filter(_.lower).flatMap { lb =>
+        bs.find(b => !b.lower && b.pointOnLeft == lb.pointOnLeft &&
+          b.point.semanticEquals(lb.point)).map((lb, _))
+      }
+      val candidate =
+        if (candidates.isEmpty) None
+        else Some(candidates.maxBy { case (lb, ub) =>
+          plainness(lb.point) * 2 + plainness(lb.bound) + plainness(ub.bound)
+        })
+      candidate match {
+        case Some((lb, ub))
+            if !hasCrossEqui(conjuncts, left, right) &&
+              // a semi join must not explode its left (multiplicity) side
+              (joinType == Inner || lb.pointOnLeft) =>
+          val (pointPlan, intervalPlan) =
+            if (lb.pointOnLeft) (left, right) else (right, left)
+          // point side: one bin per row
+          val pbinAlias = Alias(floorBin(lb.point, bin), "__graft_pbin")()
+          val pPlan = Project(pointPlan.output :+ pbinAlias, pointPlan)
+          // interval side: strictness-adjusted [lo, hi], drop empties
+          // (they match nothing; sequence rejects descending bounds)
+          val loL = if (lb.inclusive) Cast(lb.bound, LongType)
+            else Add(Cast(lb.bound, LongType), Literal(1L))
+          val nonEmpty = Filter(LessThanOrEqual(loL, closedEnd(ub)), intervalPlan)
+          val ibinAttr = AttributeReference("__graft_ibin", LongType, nullable = false)()
+          val gen = explodeBins(nonEmpty, loL, closedEnd(ub), bin, ibinAttr)
+          val newCond = And(EqualTo(pbinAlias.toAttribute, ibinAttr), cond)
+          val (newLeft, newRight) =
+            if (lb.pointOnLeft) (pPlan, gen) else (gen: LogicalPlan, pPlan: LogicalPlan)
+          Some(Project(j.output, Join(newLeft, newRight, joinType, Some(newCond), hint)))
+        case _ if overlap => rewriteOverlap(j, conjuncts, bs, bin)
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** An upper bound as the last value it admits: `point < end` admits
+    * at most `end - 1` (integral domain), `point <= end` admits `end`.
+    */
+  private def closedEnd(ub: Bound): Expression =
+    if (ub.inclusive) Cast(ub.bound, LongType)
+    else Subtract(Cast(ub.bound, LongType), Literal(1L))
 
   /** The interval×interval OVERLAP rewrite (see object scaladoc): fires
     * when the band conjuncts contain two UPPER bounds whose point
@@ -307,8 +339,7 @@ object RangeJoinRule extends Rule[LogicalPlan] {
   private def rewriteOverlap(j: Join, conjuncts: Seq[Expression],
                              bs: Seq[Bound], bin: Long): Option[LogicalPlan] = {
     val Join(left, right, joinType, Some(cond), hint) = j: @unchecked
-    if (joinType != Inner || hasCrossEqui(conjuncts, left, right) ||
-      !overlapEnabled) return None
+    if (joinType != Inner || hasCrossEqui(conjuncts, left, right)) return None
     val uppers = bs.filterNot(_.lower)
     val pairs = for {
       b1 <- uppers if b1.pointOnLeft
@@ -323,35 +354,21 @@ object RangeJoinRule extends Rule[LogicalPlan] {
           plainness(b2.point) + plainness(b2.bound)
       })
     pair.map { case (b1, b2) =>
-      val (ls, le) = (Cast(b1.point, LongType), Cast(b2.bound, LongType))
-      val (rs, re) = (Cast(b2.point, LongType), Cast(b1.bound, LongType))
-      val lbinAttr = AttributeReference("__graft_lbin", LongType)()
-      val rbinAttr = AttributeReference("__graft_rbin", LongType)()
-      val maxBins = maxBinsPerRow
+      // each side's span is [least(s, e'), greatest(s, e')] with e' its
+      // closed end: a strict end on a bin boundary adds no bin
+      val (ls, le) = (Cast(b1.point, LongType), closedEnd(b2))
+      val (rs, re) = (Cast(b2.point, LongType), closedEnd(b1))
+      val lbinAttr = AttributeReference("__graft_lbin", LongType, nullable = false)()
+      val rbinAttr = AttributeReference("__graft_rbin", LongType, nullable = false)()
       def spanGen(child: LogicalPlan, s: Expression, e: Expression,
-                  attr: AttributeReference): LogicalPlan = {
-        val seq = guardedSeq(floorBin(Least(Seq(s, e)), bin),
-          floorBin(Greatest(Seq(s, e)), bin), maxBins)
-        Generate(Explode(seq), unrequiredChildIndex = Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(attr), child = child)
-      }
+                  attr: AttributeReference): LogicalPlan =
+        explodeBins(child, Least(Seq(s, e)), Greatest(Seq(s, e)), bin, attr)
       val newLeft = spanGen(left, ls, le, lbinAttr)
       val newRight = spanGen(right, rs, re, rbinAttr)
       // charge-once: only the bin holding the later start emits the pair
       val charge = EqualTo(lbinAttr, floorBin(Greatest(Seq(ls, rs)), bin))
-      val newCond = And(And(EqualTo(lbinAttr, rbinAttr), charge), cond)
+      val newCond = And(And(EqualTo(lbinAttr, rbinAttr), cond), charge)
       Project(j.output, Join(newLeft, newRight, Inner, Some(newCond), hint))
     }
-  }
-}
-
-/** Runtime registration for sessions built without
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-object RangeJoin {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(RangeJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RangeJoinRule
   }
 }

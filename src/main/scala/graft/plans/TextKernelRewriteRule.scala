@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -69,7 +68,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * All rewrites are pure expression substitutions — no shape change,
   * null-for-null identical — registered in the post-optimization user
   * batch via [[graft.functions.GraftExtensions]] or
-  * [[TextKernelRewrite.ensureRegistered]].
+  * `GraftSession.install`.
   */
 object TextKernelRewriteRule extends Rule[LogicalPlan] {
 
@@ -174,15 +173,4 @@ object TextKernelRewriteRule extends Rule[LogicalPlan] {
         Cast(GetStructField(
           graft.functions.WordStats(c, Nil), 1, Some("n_distinct")), IntegerType)
     }
-}
-
-object TextKernelRewrite {
-  /** Session-hook registration (the [[BloomJoin.ensureRegistered]]
-    * pattern, for sessions not built with the extensions class).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(TextKernelRewriteRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ TextKernelRewriteRule
-  }
 }

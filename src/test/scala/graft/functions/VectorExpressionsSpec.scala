@@ -56,6 +56,17 @@ class VectorExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("Vec columns resolve in a session that is not the active one") {
+    // a fresh session shares the SparkContext but not the function
+    // registry of the active session; a Vec column must not depend on it
+    val s2 = spark.newSession()
+    val row = s2.range(1)
+      .select(Vec.normText(lit("  Hello, World!  ")).as("n"),
+        Vec.dot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("d"))
+      .head()
+    assert(row.getString(0) == "hello world" && row.getDouble(1) == 11.0, s"row: $row")
+  }
+
   test("SigMatch ≡ interpreted aggregate/zip_with estimator, exact") {
     // The retired hot-path formulation stays here as the parity
     // reference (same role TextExpressionsSpec gives the UDF kernels).

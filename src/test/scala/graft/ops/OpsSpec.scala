@@ -1048,6 +1048,21 @@ class OpsSpec extends AnyFunSuite {
     // exactly-once: no pair may be emitted per-overlapping-bin
     val n = Scale.binnedRangeJoin(points, intervals, "pt", "start", "end", B).count()
     assert(n == want.size, s"each pair exactly once: got $n rows for ${want.size} pairs")
+    // fractional bounds cannot be binned exactly: refused, not joined wrong
+    val dpts = Seq(1.2, -0.5).toDF("pt")
+    val divs = Seq((0.5, 1.5), (-1.0, -0.2)).toDF("start", "end")
+    intercept[IllegalArgumentException] {
+      Scale.binnedRangeJoin(dpts, divs, "pt", "start", "end", 1L)
+    }
+    // an interval spanning more bins than maxBinsPerRow raises the guard
+    val wide = Seq((9L, 0L, 1000000L)).toDF("iid", "start", "end")
+    try {
+      spark.conf.set("spark.graft.rangeJoin.maxBinsPerRow", "1000")
+      val e = intercept[Exception] {
+        Scale.binnedRangeJoin(points, wide, "pt", "start", "end", B).collect()
+      }
+      assert(e.getMessage.contains("maxBinsPerRow"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.rangeJoin.maxBinsPerRow")
   }
 
   test("binnedRangeJoin: exact at epoch-ns magnitude (> 2^53) and on negative domains") {

@@ -237,6 +237,21 @@ class ScaleSpec extends AnyFunSuite {
         .select("lid", "rid").as[(Long, Long)].collect().sorted.toSeq
       assert(got == want, s"binSize=$binSize: ${got.size} pairs vs ${want.size} expected")
     }
+    // fractional bounds cannot be binned exactly: refused, not joined wrong
+    val dl = Seq((0.5, 1.5)).toDF("ls", "le")
+    val dr = Seq((1.2, 2.5)).toDF("rs", "re")
+    intercept[IllegalArgumentException] {
+      Scale.binnedOverlapJoin(dl, dr, "ls", "le", "rs", "re", 1L)
+    }
+    // an interval spanning more bins than maxBinsPerRow raises the guard
+    val wide = Seq((0L, 0L, 1000000L)).toDF("lid", "ls", "le")
+    try {
+      spark.conf.set("spark.graft.rangeJoin.maxBinsPerRow", "1000")
+      val e = intercept[Exception] {
+        Scale.binnedOverlapJoin(wide, right, "ls", "le", "rs", "re", 7L).collect()
+      }
+      assert(e.getMessage.contains("maxBinsPerRow"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.rangeJoin.maxBinsPerRow")
   }
 
   test("iterative loops release superseded checkpoints (bounded executor storage)") {
@@ -400,6 +415,20 @@ class ScaleSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("match-only join type"))
     }
+    // the bloom is built by the query that runs the join, not by the call
+    val sc = spark.sparkContext
+    org.apache.spark.SparkTestHooks.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      Scale.bloomPrefilterJoin(fact, dim, "l_partkey", "p_partkey", 1000L, 0.01)
+      org.apache.spark.SparkTestHooks.drainListeners(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0, s"bloomPrefilterJoin fired ${jobs.get} jobs when called")
   }
 
   test("dedupKeepFirst keeps exactly the min-tiebreaker row per key") {

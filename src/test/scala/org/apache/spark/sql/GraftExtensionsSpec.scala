@@ -22,8 +22,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val rules = ext.buildOptimizerRules(classic).map(_.ruleName)
     assert(rules.exists(_.contains("BloomJoinRule")), s"rules: $rules")
     assert(rules.exists(_.contains("RangeJoinRule")), s"rules: $rules")
+    assert(rules.exists(_.contains("TextKernelRewriteRule")), s"rules: $rules")
     val strategies = ext.buildPlannerStrategies(classic).map(_.toString)
     assert(strategies.exists(_.contains("AsofJoinStrategy")), s"strategies: $strategies")
+    // GraftSession.install (the test session's wiring) registers the same
+    // rules and strategies through the runtime hooks
+    assert(classic.experimental.extraOptimizations.map(_.ruleName) == rules)
+    assert(classic.experimental.extraStrategies.map(_.toString) == strategies)
     // the injected functions are observable only through registration
     // side effects, so assert on the public surface: every graft_* SQL
     // function resolves in a session wired with the same list
