@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextKernels {
 
   // ---- minhash permutation family (shared with the UDF reference
-  // implementation in graft.ops.Llm so the two cannot drift) -----------
+  // implementations in TextExpressionsSpec so the two cannot drift) ----
 
   final val NumHashes = 32
 
@@ -82,7 +82,7 @@ object TextKernels {
 
   /** 32-component minhash signature over 3-word shingles; fewer than 3
     * words falls back to a whole-text shingle. Mirrors the UDF reference
-    * (`Llm.minhashSigUdf`) component for component.
+    * (`TextExpressionsSpec.minhashSigUdf`) component for component.
     */
   def minhashSig(u0: UTF8String): ArrayData = {
     val u = if (u0 == null) UTF8String.EMPTY_UTF8 else u0
@@ -247,9 +247,9 @@ object TextKernels {
   }
 
   /** 64-bit SimHash: sign of per-bit ±1 votes over splitmix-mixed FNV
-    * word hashes. Mirrors the UDF reference (`Llm.simhashUdf`): a NULL
-    * document casts no votes (sig 0), an empty document votes once for
-    * its single empty token.
+    * word hashes. Mirrors the UDF reference
+    * (`TextExpressionsSpec.simhashUdf`): a NULL document casts no votes
+    * (sig 0), an empty document votes once for its single empty token.
     */
   def simhash(u: UTF8String): Long = {
     if (u == null) return 0L
@@ -313,7 +313,7 @@ object TextKernels {
 
   /** Winnowing fingerprints (the MOSS scheme): rolling k-gram hashes,
     * minimum per w-window, first-occurrence-ordered dedup. Mirrors the
-    * UDF reference (`Llm.winnowUdf`).
+    * UDF reference (`TextExpressionsSpec.winnowUdf`).
     */
   def winnow(u0: UTF8String): ArrayData = {
     val u = if (u0 == null) UTF8String.EMPTY_UTF8 else u0

@@ -235,7 +235,7 @@ case class SigMatch(left: Expression, right: Expression) extends BinaryExpressio
   * dispatch, no UTF-8 → String decode, no reflective output
   * re-encoding). NEVER null on output: a null document hashes like the
   * empty document, exactly as the UDF reference implementations in
-  * `graft.ops.Llm` behave (asserted by TextExpressionsSpec parity).
+  * `TextExpressionsSpec` behave (asserted by its parity tests).
   */
 abstract class TextKernelExpression extends UnaryExpression {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -291,7 +291,7 @@ case class WinnowFingerprints(child: Expression) extends TextKernelExpression {
 /** Static kernel behind [[HyperplaneSig]]: the random-hyperplane LSH
   * signature of an `array<double>` embedding. The Planes×Dim matrix is
   * deterministic from splitmix64 (components uniform in [-1, 1]) and
-  * shared with the UDF reference implementation in `graft.ops.Llm`.
+  * shared with the UDF reference `TextExpressionsSpec.embSigUdf`.
   */
 object VecKernels {
   final val Planes = 12
@@ -320,7 +320,8 @@ object VecKernels {
 /** 64-bit SimHash of a document as a codegen expression (static
   * [[TextKernels.simhash]] kernel; same structure as
   * [[TextKernelExpression]] but scalar-valued). Never null: a null
-  * document casts no votes and hashes to 0, matching the UDF reference.
+  * document casts no votes and hashes to 0, matching the UDF reference
+  * `TextExpressionsSpec.simhashUdf`.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -356,7 +357,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
 /** Random-hyperplane LSH signature of an `array<double>` embedding as a
   * codegen expression. NULL embedding → NULL signature (the row drops
-  * out of the bucket join), matching the UDF reference.
+  * out of the bucket join), matching the UDF reference
+  * `TextExpressionsSpec.embSigUdf`.
   */
 case class HyperplaneSig(child: Expression) extends UnaryExpression {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -386,7 +388,7 @@ case class HyperplaneSig(child: Expression) extends UnaryExpression {
   * the byte-level [[TextKernels.wordNGrams]] kernel. `n`/`stride` are
   * plan-time constants (they parameterize the generated call site
   * directly). Never null: a null document yields an empty gram array,
-  * matching the UDF references in `graft.ops.Llm`.
+  * matching the UDF references in `TextExpressionsSpec`.
   */
 case class WordNGrams(child: Expression, n: Int, stride: Int) extends UnaryExpression {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -746,7 +748,7 @@ final class BpeModel(pairs: Array[String]) extends Serializable {
     * merge rank until none applies. Symbols outside the merge
     * vocabulary (id −1, including null elements) pass through untouched
     * and never match a pair — exactly the UDF reference's
-    * `getOrElse(MaxValue)`.
+    * `getOrElse(MaxValue)` (`TextExpressionsSpec.bpeEncodeUdf`).
     */
   def encode(syms: ArrayData): ArrayData = {
     val (symId, pairRank, mergeL, mergeR, outId, outStr) = lookups

@@ -50,78 +50,13 @@ object Llm {
 
   // ---- MinHash + LSH near-dedup --------------------------------------
 
-  private val NumHashes = 32
   private val Bands = 8
-  private val RowsPerBand = NumHashes / Bands
+  private val RowsPerBand = graft.functions.TextKernels.NumHashes / Bands
 
-  /** splitmix64 — deterministic pseudo-random constants for the minhash
-    * permutation family (public-domain mixing constants).
-    */
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
-  /** Odd 30-bit multipliers + 32-bit offsets: sig_j = min over shingles
-    * of a_j*(h & 0xffffffff) + b_j. Bit widths chosen so the product
-    * stays ≤ 2^62 — no 64-bit overflow (ANSI mode throws on wraparound).
-    * Shared with the native kernel so the two implementations use one
-    * permutation family.
-    */
-  private val HashA: Array[Long] = graft.functions.TextKernels.HashA
-  private val HashB: Array[Long] = graft.functions.TextKernels.HashB
-
-  /** FNV-1a 64 over a string's UTF-16 code units — fixed, portable. */
-  private def fnv1a(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-    h
-  }
-
-  /** Whole-signature kernel: 3-word shingles → 32 minhash components.
-    * Shingle hashes are mixes of per-word hashes (no shingle-string
-    * allocation); component minima come from linear permutations
-    * a_j*h + b_j of the single 32-bit shingle hash.
-    *
-    * This UDF is the REFERENCE implementation the native codegen kernel
-    * (`graft.functions.TextKernels.minhashSig`, used by the production
-    * path below) is parity-tested against — two independent formulations
-    * of the same signature, cross-validated in TextExpressionsSpec.
-    */
-  private[graft] val minhashSigUdf = udf { text: String =>
-    val ws = if (text == null) Array.empty[String] else text.split(' ')
-    val sigs = Array.fill(NumHashes)(Long.MaxValue)
-    @inline def addShingle(h0: Long): Unit = {
-      val h = h0 & 0xffffffffL
-      var j = 0
-      while (j < NumHashes) {
-        val v = HashA(j) * h + HashB(j)
-        if (v < sigs(j)) sigs(j) = v
-        j += 1
-      }
-    }
-    if (ws.length < 3) {
-      addShingle(splitmix64(fnv1a(if (text == null) "" else text)))
-    } else {
-      val wh = ws.map(fnv1a)
-      val seen = new java.util.HashSet[java.lang.Long]()
-      var i = 0
-      while (i + 2 < wh.length) {
-        val sh = splitmix64(wh(i) ^ splitmix64(wh(i + 1) ^ splitmix64(wh(i + 2))))
-        if (seen.add(sh)) addShingle(sh)
-        i += 1
-      }
-    }
-    sigs
-  }
-
-  /** doc_id, sigs: array<long> of NumHashes minhashes over 3-word
-    * shingles. Pure map work, no shuffle; the signature kernel is a
-    * native codegen expression (`graft_minhash`), so it runs inside the
-    * whole-stage-generated loop — no UDF dispatch or String decode.
+  /** doc_id, sigs: array<long> of `TextKernels.NumHashes` minhashes over
+    * 3-word shingles. Pure map work, no shuffle; the signature kernel is
+    * a native codegen expression (`graft_minhash`), so it runs inside
+    * the whole-stage-generated loop — no UDF dispatch or String decode.
     */
   private def minhashSigs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.Vec.minhash(col("text")).as("sigs"))
@@ -226,15 +161,15 @@ object Llm {
         // native matched-component count, not aggregate/zip_with HOF
         // lambdas (interpreted at ≈40×/element, PERF.md Finding 1)
         (Vec.sigMatch(Vec.minhash(col("t1")), Vec.minhash(col("t2")))
-          .cast("double") / NumHashes).as("est_jaccard"),
+          .cast("double") / graft.functions.TextKernels.NumHashes).as("est_jaccard"),
         col("jaccard"))
       .orderBy("id1", "id2")
   }
 
-  /** One row per (doc, band): the LSH bucket key stream both
-    * [[minhashPairs]] and [[minhashBucketStats]] aggregate. `sigs` is
-    * read only by [[contaminationFuzzy]]'s band-meet estimate; the other
-    * consumers project it away before their exchange.
+  /** One row per (doc, band): the LSH bucket key stream that
+    * [[minhashPairs]], [[minhashBucketStats]] and [[contaminationFuzzy]]
+    * read. `sigs` is read only by [[contaminationFuzzy]]'s band-meet
+    * estimate; the other two project it away before their exchange.
     */
   private def minhashExploded(docs: DataFrame): DataFrame =
     minhashSigs(docs)
@@ -243,10 +178,6 @@ object Llm {
           b => struct(b.as("band"),
             xxhash64(slice(col("sigs"), b * RowsPerBand + 1, lit(RowsPerBand))).as("bsig")))).as("bk"))
       .select(col("doc_id"), col("sigs"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-
-  /** Per-bucket occupancy stream (diagnostics; LshProbe). */
-  private[graft] def minhashBucketSizes(docs: DataFrame): DataFrame =
-    minhashExploded(docs).groupBy("band", "bsig").agg(count(lit(1)).as("n"))
 
   /** Observability companion to [[minhashPairs]]: one summary row of the
     * LSH bucket-size distribution — total buckets, max/p-ish sizes, and
@@ -375,30 +306,6 @@ object Llm {
       .orderBy("doc_id")
   }
 
-  /** Simhash REFERENCE implementation (sign of per-bit ±1 votes over
-    * splitmix-mixed FNV word hashes) — parity target for the native
-    * codegen kernel `graft_simhash` used by the production path
-    * (TextExpressionsSpec).
-    */
-  private[graft] val simhashUdf = udf { text: String =>
-    val ws = if (text == null) Array.empty[String] else text.split(' ')
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < ws.length) {
-      val h = splitmix64(fnv1a(ws(i)))
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
-
   /** Reusable transform: 64-bit simhash signature per `(doc_id, text)`
     * (native codegen kernel — runs inside the whole-stage loop).
     */
@@ -496,15 +403,6 @@ object Llm {
 
   // ---- embedding-cosine near-dup via random-hyperplane LSH ------------
 
-  private val Planes = graft.functions.VecKernels.Planes
-  private val Dim = graft.functions.VecKernels.Dim
-
-  /** Random hyperplane matrix (Planes × Dim, flattened), deterministic
-    * from splitmix64, components uniform in [-1, 1] — shared with the
-    * native kernel so both implementations sign against one matrix.
-    */
-  private val PlanesFlat: Array[Double] = graft.functions.VecKernels.PlanesFlat
-
   /** Near-duplicate embedding pairs: 12-bit random-hyperplane signature
     * → bucket equi-join → exact cosine ≥ 0.95. The brute-force n² cross
     * join never happens; candidate volume is |bucket|² summed, controlled
@@ -512,27 +410,6 @@ object Llm {
     * signs, bucket cap, and exact cosine replicate in order-exact
     * list_reduce SQL ([[graft.OracleSql.dedupEmbed]]).
     */
-  /** Hyperplane-signature REFERENCE implementation — parity target for
-    * the native codegen kernel `graft_embsig` used by the production
-    * path (TextExpressionsSpec).
-    */
-  private[graft] val embSigUdf = udf { e: Seq[Double] =>
-    if (e == null) None // null embedding → null sig → row drops from the bucket join
-    else {
-      var sig = 0L
-      var j = 0
-      while (j < Planes) {
-        var dot = 0.0
-        var c = 0
-        val base = j * Dim
-        while (c < Dim && c < e.length) { dot += e(c) * PlanesFlat(base + c); c += 1 }
-        if (dot > 0) sig |= (1L << j)
-        j += 1
-      }
-      Some(sig)
-    }
-  }
-
   def q_dedup_embed(s: SparkSession, d: String): DataFrame = {
     val emb = col("embedding").cast("array<double>")
     val base = embeddings(s, d).withColumn("e", emb).select(col("vec_id"), col("e"))
@@ -737,50 +614,6 @@ object Llm {
 
   // ---- winnowing fingerprints ----------------------------------------
 
-  private val WinnowK = 5 // k-gram length (words)
-  private val WinnowW = 4 // window size
-
-  /** Winnowing document fingerprints (the MOSS scheme): rolling k-gram
-    * hashes, then the minimum hash of every w-length window, deduplicated.
-    * Guarantee: any shared substring of ≥ w+k-1 words between two
-    * documents yields at least one shared fingerprint. Pure map work.
-    * REFERENCE implementation for the native codegen kernel
-    * (`graft.functions.TextKernels.winnow`, the production path) —
-    * cross-validated in TextExpressionsSpec.
-    */
-  private[graft] val winnowUdf = udf { text: String =>
-    val ws = if (text == null) Array.empty[String] else text.split(' ')
-    if (ws.length < WinnowK) Array(splitmix64(fnv1a(if (text == null) "" else text)))
-    else {
-      val grams = new Array[Long](ws.length - WinnowK + 1)
-      var i = 0
-      while (i < grams.length) {
-        var h = 0L
-        var j = 0
-        while (j < WinnowK) { h = splitmix64(h ^ fnv1a(ws(i + j))); j += 1 }
-        grams(i) = h
-        i += 1
-      }
-      val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-      var w = 0
-      val nWin = math.max(1, grams.length - WinnowW + 1)
-      while (w < nWin) {
-        var m = grams(w)
-        var j = 1
-        while (j < WinnowW && w + j < grams.length) {
-          if (grams(w + j) < m) m = grams(w + j)
-          j += 1
-        }
-        out += m
-        w += 1
-      }
-      out.toArray
-    }
-  }
-
-  /** doc_id, fingerprints array, fingerprint count. Rows-only check;
-    * sharing guarantee asserted in OpsSpec.
-    */
   /** Gate-facing view of [[winnowFingerprints]]: the fingerprint array
     * is surfaced as scalars (count, min/max, digest of the canonical
     * CSV) — the driver's pandas compare can't hash array cells
@@ -800,6 +633,13 @@ object Llm {
           .as("fp_digest"))
       .orderBy("doc_id")
 
+  /** Winnowing document fingerprints (the MOSS scheme): rolling k-gram
+    * hashes, then the minimum hash of every w-length window, deduplicated
+    * (`graft_winnow`, k = 5 words, w = 4). Guarantee: any shared
+    * substring of ≥ w+k-1 words between two documents yields at least
+    * one shared fingerprint (asserted in OpsSpec). Pure map work. Output
+    * `doc_id, fingerprints, n_fp`.
+    */
   def winnowFingerprints(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.Vec.winnow(col("text")).as("fingerprints"))
       .withColumn("n_fp", size(col("fingerprints")).cast("long")) // single kernel eval
@@ -1011,25 +851,6 @@ object Llm {
 
   // ---- BPE tokenizer training ----------------------------------------
 
-  /** Greedy non-overlapping merge of one adjacent symbol pair — the
-    * per-word apply step of a BPE round. UDF reference implementation
-    * for the single-rule `graft_bpe_apply` form used by [[bpeTrain]]
-    * (one greedy pass with one rule ≡ this fold: merging (a,b) → a+b
-    * can never create a new (a,b) adjacency, so the kernel's
-    * repeat-until-done loop terminates after one effective pass) —
-    * TextExpressionsSpec holds the parity.
-    */
-  private[graft] val bpeMergeUdf = udf { (syms: Seq[String], a: String, b: String) =>
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-        out += a + b; i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.toSeq
-  }
-
   /** Distributed BPE merge-rule training (Sennrich et al. 2016,
     * arXiv:1508.07909) — the tokenizer-training step of a pretraining
     * pipeline, in its scale-correct formulation: the corpus collapses
@@ -1103,7 +924,7 @@ object Llm {
     *
     * Shape at 100 TB: the kernel runs once per DISTINCT word
     * (Zipf-bounded vocabulary, same collapse as training), with the
-    * merge-rank map shipped in the UDF closure (broadcast-sized: the
+    * merge-rank table baked into the kernel's plan (broadcast-sized: the
     * merge list IS the tokenizer model, ~30k entries). Documents then
     * pick up their words' token arrays through an equi-join on the word
     * (vocabulary side broadcastable) and a per-doc positional
@@ -1115,7 +936,7 @@ object Llm {
     // sides of the parity invariant (encode(vocab) == trained word
     // table) start from identical symbol arrays by construction; the
     // greedy merge loop is the native codegen graft_bpe_apply kernel
-    // (UDF reference kept below for TextExpressionsSpec parity)
+    // (its UDF reference lives in TextExpressionsSpec)
     val vocab = docs
       .select(explode(split(col(textCol), " ")).as("__w"))
       .filter(length(col("__w")) > 0).distinct()
@@ -1135,45 +956,6 @@ object Llm {
       .join(tokRows, col(idCol) === col("__id"), "left")
       .select(col(idCol),
         coalesce(col("tokens"), array().cast("array<string>")).as("tokens"))
-  }
-
-  /** UDF reference implementation of the BPE greedy decoder — the
-    * independent formulation `graft_bpe_apply` must match
-    * symbol-for-symbol (TextExpressionsSpec parity; same role as
-    * [[bigramsUdf]]/[[winnowUdf]] for their kernels). Not on any hot
-    * path.
-    */
-  private[graft] def bpeEncodeUdf(merges: Seq[(String, String)])
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val ranks: Map[(String, String), Int] =
-      merges.zipWithIndex.map { case ((l, r), i) => ((l, r), i) }.toMap
-    udf { (syms0: Seq[String]) =>
-      var syms = syms0.toVector
-      var done = syms.length < 2
-      while (!done) {
-        var best = Int.MaxValue
-        var i = 0
-        while (i < syms.length - 1) {
-          val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-          if (r < best) best = r
-          i += 1
-        }
-        if (best == Int.MaxValue) done = true
-        else {
-          val (a, b) = merges(best)
-          val out = Vector.newBuilder[String]
-          var j = 0
-          while (j < syms.length) {
-            if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
-              out += a + b; j += 2
-            } else { out += syms(j); j += 1 }
-          }
-          syms = out.result()
-          done = syms.length < 2
-        }
-      }
-      syms
-    }
   }
 
   /** Gate query for [[bpeTrain]]+[[bpeEncode]]: train 30 merges on the
@@ -1235,7 +1017,8 @@ object Llm {
     *
     * Production path is the ONE-PASS `graft_charstats` codegen kernel:
     * per-doc entropy is a per-ROW scalar, so exploding every character
-    * into a shuffle row (the [[charEntropyExplodeRef]] reference form —
+    * into a shuffle row (the explode(split(text, "")) form that
+    * TextExpressionsSpec keeps as the parity reference —
     * 3 billion rows and a giant (doc,char) hash agg at sf100, the
     * largest decade ratio on the r12 board) buys nothing. The kernel
     * keeps the whole computation inside the scan stage: no shuffle but
@@ -1251,27 +1034,6 @@ object Llm {
         col("cs.n_chars_split").as("n_chars_split"),
         col("cs.entropy_micro").as("entropy_micro"))
       .orderBy("doc_id")
-
-  /** Parity REFERENCE for [[q_char_entropy]]: the original
-    * explode(split(text, "")) formulation (kept verbatim — the spec
-    * asserts the kernel path is bit-identical on the gate corpus).
-    */
-  private[graft] def charEntropyExplodeRef(docs: DataFrame): DataFrame = {
-    val wd = Window.partitionBy("doc_id")
-    docs
-      .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
-      .filter(col("c") =!= "")
-      .groupBy("doc_id", "c").agg(count(lit(1)).as("cnt"))
-      .withColumn("n", sum("cnt").over(wd))
-      .withColumn("p", col("cnt").cast("double") / col("n").cast("double"))
-      .withColumn("term",
-        round(-col("p") * log(col("p")) * 1000000 + lit(1e-9), 0)
-          .cast(org.apache.spark.sql.types.DecimalType(18, 0)))
-      .groupBy("doc_id")
-      .agg(max("n").as("n_chars_split"),
-        sum(col("term")).cast("long").as("entropy_micro"))
-      .orderBy("doc_id")
-  }
 
   /** Gate query for [[bpeTrain]]: the first 10 merge rules learned from
     * the documents corpus, with rank and corpus frequency. Exact
@@ -1818,24 +1580,6 @@ object Llm {
   }
 
   private val ChunkW = 8 // words per chunk for cross-doc chunk dedup
-
-  /** Chunker REFERENCE implementation (consecutive non-overlapping
-    * `ChunkW`-word chunks, trailing partial dropped) — parity target
-    * for the native `graft_word_ngrams(n=8, stride=8)` kernel used by
-    * the production path (TextExpressionsSpec).
-    */
-  private[graft] val chunk8Udf = udf { text: String =>
-    if (text == null) Array.empty[String]
-    else {
-      val w = text.split(' ')
-      Array.tabulate(w.length / ChunkW) { i =>
-        val b = new StringBuilder(w(i * ChunkW))
-        var j = 1
-        while (j < ChunkW) { b.append(' ').append(w(i * ChunkW + j)); j += 1 }
-        b.toString
-      }
-    }
-  }
 
   /** C4-style cross-document chunk dedup census: split every document
     * into fixed 8-word chunks and count, per document, how many of its
@@ -2565,19 +2309,6 @@ object Llm {
         col("top_cnt").cast("long").as("top_cnt"))
       .orderBy("doc_id")
 
-  /** Bigram REFERENCE implementation — parity target for the native
-    * `graft_word_ngrams(n=2, stride=1)` kernel used by the production
-    * path (TextExpressionsSpec).
-    */
-  private[graft] val bigramsUdf = udf { text: String =>
-    if (text == null) Array.empty[String]
-    else {
-      val w = text.split(' ')
-      if (w.length < 2) Array.empty[String]
-      else Array.tabulate(w.length - 1)(i => w(i) + " " + w(i + 1))
-    }
-  }
-
   /** Global n-gram heavy hitters — the corpus-statistics op behind
     * boilerplate detection and contamination checks. explode happens
     * inside the scan stage; the only shuffle carries (bigram, partial
@@ -2605,24 +2336,6 @@ object Llm {
       .orderBy("c_custkey")
 
   private val ContamN = 5 // word n-gram length for contamination checks
-
-  /** Word-5-gram REFERENCE implementation — parity target for the
-    * native `graft_word_ngrams(n=5, stride=1)` kernel
-    * (TextExpressionsSpec).
-    */
-  private[graft] val ngram5Udf = udf { text: String =>
-    if (text == null) Array.empty[String]
-    else {
-      val w = text.split(' ')
-      if (w.length < ContamN) Array.empty[String]
-      else Array.tabulate(w.length - ContamN + 1) { i =>
-        val b = new StringBuilder(w(i))
-        var j = 1
-        while (j < ContamN) { b.append(' ').append(w(i + j)); j += 1 }
-        b.toString
-      }
-    }
-  }
 
   /** Benchmark-contamination check: count the distinct word 5-grams each
     * corpus document shares with a benchmark set (here: the `src0`
@@ -2688,7 +2401,7 @@ object Llm {
         // Same codegen kernel as minhashPairs — the train×eval band-meet
         // is the other candidate-volume hot loop (see PERF.md Finding 1).
         (graft.functions.Vec.sigMatch(col("tsigs"), col("esigs"))
-          .cast("double") / NumHashes).as("est_jaccard"))
+          .cast("double") / graft.functions.TextKernels.NumHashes).as("est_jaccard"))
       .dropDuplicates("train_id", "eval_id")
       .filter(col("est_jaccard") >= threshold)
       .orderBy("train_id", "eval_id")

@@ -4,13 +4,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native codegen text kernels (graft_minhash / graft_winnow) must
-  * agree component-for-component with the independent UDF reference
-  * implementations in `graft.ops.Llm` — on the fixture corpus and on
-  * the tokenizer edge cases (`String.split(' ')` semantics: interior
-  * empties kept, trailing empties dropped, "" → [""], null ≡ empty).
+/** The native codegen text and vector kernels must agree
+  * component-for-component with independent reference formulations —
+  * the UDFs and the explode form in the companion object, or the Spark
+  * SQL expression chains the kernels replaced — on the fixture corpus
+  * and on the tokenizer edge cases (`String.split(' ')` semantics:
+  * interior empties kept, trailing empties dropped, "" → [""], null ≡
+  * empty).
   */
 class TextExpressionsSpec extends AnyFunSuite {
+  import TextExpressionsSpec._
+
   lazy val spark = graft.TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -31,7 +35,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .unionByName(Seq.empty[String].toDF("text")) // keep schema nullable
     val diff = docs.select(
       Vec.minhash(col("text")).as("nat"),
-      graft.ops.Llm.minhashSigUdf(col("text")).as("ref"))
+      minhashSigUdf(col("text")).as("ref"))
       .filter(not(col("nat") === col("ref"))).count()
     assert(diff == 0)
   }
@@ -42,7 +46,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .unionByName(edgeCases.toDF("text"))
     val diff = docs.select(
       Vec.winnow(col("text")).as("nat"),
-      graft.ops.Llm.winnowUdf(col("text")).as("ref"))
+      winnowUdf(col("text")).as("ref"))
       .filter(not(col("nat") === col("ref"))).count()
     assert(diff == 0)
   }
@@ -53,7 +57,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .unionByName((edgeCases.map(Option(_)) :+ None).toDF("text"))
     val diff = docs.select(
       Vec.simhash(col("text")).as("nat"),
-      graft.ops.Llm.simhashUdf(col("text")).as("ref"))
+      simhashUdf(col("text")).as("ref"))
       .filter(not(col("nat") <=> col("ref"))).count()
     assert(diff == 0)
     // null casts no votes → sig 0 (matches the UDF's empty word array)
@@ -68,7 +72,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .unionByName(Seq(Option.empty[Seq[Double]]).toDF("e"))
     val diff = emb.select(
       Vec.embSig(col("e")).as("nat"),
-      graft.ops.Llm.embSigUdf(col("e")).as("ref"))
+      embSigUdf(col("e")).as("ref"))
       .filter(not(col("nat") <=> col("ref"))).count()
     assert(diff == 0)
     assert(Seq(Option.empty[Seq[Double]]).toDF("e")
@@ -81,11 +85,11 @@ class TextExpressionsSpec extends AnyFunSuite {
       .unionByName((edgeCases.map(Option(_)) :+ None).toDF("text"))
     val diff = docs.select(
       Vec.wordNGrams(col("text"), 2).as("n2"),
-      graft.ops.Llm.bigramsUdf(col("text")).as("r2"),
+      bigramsUdf(col("text")).as("r2"),
       Vec.wordNGrams(col("text"), 5).as("n5"),
-      graft.ops.Llm.ngram5Udf(col("text")).as("r5"),
+      ngram5Udf(col("text")).as("r5"),
       Vec.wordNGrams(col("text"), 8, 8).as("n8"),
-      graft.ops.Llm.chunk8Udf(col("text")).as("r8"))
+      chunk8Udf(col("text")).as("r8"))
       .filter(not(col("n2") === col("r2")) or
         not(col("n5") === col("r5")) or
         not(col("n8") === col("r8"))).count()
@@ -420,7 +424,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .filter(col("cs").isNotNull)
       .select(col("doc_id"), col("cs.n_chars_split").as("n_chars_split"),
         col("cs.entropy_micro").as("entropy_micro"))
-    val ref = graft.ops.Llm.charEntropyExplodeRef(docs)
+    val ref = charEntropyExplodeRef(docs)
     assert(kernel.count() == ref.count())
     assert(kernel.except(ref).isEmpty && ref.except(kernel).isEmpty)
     // empty text: explode form emits no row; kernel must return null
@@ -451,7 +455,7 @@ class TextExpressionsSpec extends AnyFunSuite {
       .withColumn("syms", concat(split(col("w"), ""), array(lit("</w>"))))
     val diff = vocab.select(
       Vec.bpeApply(col("syms"), merges).as("nat"),
-      graft.ops.Llm.bpeEncodeUdf(merges)(col("syms")).as("ref"))
+      bpeEncodeUdf(merges)(col("syms")).as("ref"))
       .filter(not(col("nat") === col("ref"))).count()
     assert(diff == 0)
     // single-rule form ≡ the one-pair merge UDF used as bpeTrain's
@@ -460,7 +464,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val (l0, r0) = merges.head
     val diff1 = vocab.select(
       Vec.bpeApply(col("syms"), Seq((l0, r0))).as("nat"),
-      graft.ops.Llm.bpeMergeUdf(col("syms"), lit(l0), lit(r0)).as("ref"))
+      bpeMergeUdf(col("syms"), lit(l0), lit(r0)).as("ref"))
       .filter(not(col("nat") === col("ref"))).count()
     assert(diff1 == 0)
     // pathological inputs: empty array, single symbol, unknown symbols,
@@ -471,7 +475,7 @@ class TextExpressionsSpec extends AnyFunSuite {
     val rules = Seq(("a", "b"), ("ab", "a"), ("a", "b"))
     val dw = weird.select(
       Vec.bpeApply(col("syms"), rules).as("nat"),
-      graft.ops.Llm.bpeEncodeUdf(rules)(col("syms")).as("ref"))
+      bpeEncodeUdf(rules)(col("syms")).as("ref"))
       .filter(not(col("nat") === col("ref"))).count()
     assert(dw == 0)
   }
@@ -497,5 +501,255 @@ class TextExpressionsSpec extends AnyFunSuite {
       TextKernels.minhashSig(UTF8String.fromString(s)).toLongArray().toSeq
     assert(mh("alpha beta gamma delta") == mh("alpha beta gamma delta   "))
     assert(mh("alpha  beta gamma") != mh("alpha beta gamma"))
+  }
+}
+
+/** The parity references: independent JVM formulations of the native
+  * kernels, run as Scala UDFs (or, for `graft_charstats`, as the
+  * original explode(split) plan). They read the constants the kernels
+  * share — `TextKernels.splitmix64`, `HashA`, `HashB`, `NumHashes` and
+  * `VecKernels.Planes`, `Dim`, `PlanesFlat` — but hash words with their
+  * own String FNV-1a over UTF-16 code units and keep their own window,
+  * chunk and n-gram widths, so each stays a separate formulation of its
+  * kernel rather than a second call into it.
+  */
+object TextExpressionsSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
+  import org.apache.spark.sql.types.DecimalType
+  import TextKernels.{HashA, HashB, NumHashes, splitmix64}
+  import VecKernels.{Dim, Planes, PlanesFlat}
+
+  private val WinnowK = 5 // k-gram length (words)
+  private val WinnowW = 4 // window size
+  private val ChunkW = 8  // words per chunk
+  private val NGramN = 5  // contamination n-gram length (words)
+
+  /** FNV-1a 64 over a string's UTF-16 code units — fixed, portable. */
+  private def fnv1a(s: String): Long = {
+    var h = 0xcbf29ce484222325L
+    var i = 0
+    while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+    h
+  }
+
+  /** `graft_minhash`: 3-word shingles → `NumHashes` minhash components.
+    * Shingle hashes are mixes of per-word hashes; component minima come
+    * from the linear permutations a_j*h + b_j of the 32-bit shingle
+    * hash. Fewer than 3 words hash the whole text as one shingle.
+    */
+  val minhashSigUdf: UserDefinedFunction = udf { text: String =>
+    val ws = if (text == null) Array.empty[String] else text.split(' ')
+    val sigs = Array.fill(NumHashes)(Long.MaxValue)
+    @inline def addShingle(h0: Long): Unit = {
+      val h = h0 & 0xffffffffL
+      var j = 0
+      while (j < NumHashes) {
+        val v = HashA(j) * h + HashB(j)
+        if (v < sigs(j)) sigs(j) = v
+        j += 1
+      }
+    }
+    if (ws.length < 3) {
+      addShingle(splitmix64(fnv1a(if (text == null) "" else text)))
+    } else {
+      val wh = ws.map(fnv1a)
+      val seen = new java.util.HashSet[java.lang.Long]()
+      var i = 0
+      while (i + 2 < wh.length) {
+        val sh = splitmix64(wh(i) ^ splitmix64(wh(i + 1) ^ splitmix64(wh(i + 2))))
+        if (seen.add(sh)) addShingle(sh)
+        i += 1
+      }
+    }
+    sigs
+  }
+
+  /** `graft_simhash`: sign of per-bit ±1 votes over splitmix-mixed FNV
+    * word hashes.
+    */
+  val simhashUdf: UserDefinedFunction = udf { text: String =>
+    val ws = if (text == null) Array.empty[String] else text.split(' ')
+    val votes = new Array[Int](64)
+    var i = 0
+    while (i < ws.length) {
+      val h = splitmix64(fnv1a(ws(i)))
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
+      }
+      i += 1
+    }
+    var sig = 0L
+    var b = 0
+    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
+    sig
+  }
+
+  /** `graft_embsig`: one bit per hyperplane of `PlanesFlat`, set when the
+    * embedding's dot product with the plane is positive.
+    */
+  val embSigUdf: UserDefinedFunction = udf { e: Seq[Double] =>
+    if (e == null) None // null embedding → null sig → row drops from the bucket join
+    else {
+      var sig = 0L
+      var j = 0
+      while (j < Planes) {
+        var dot = 0.0
+        var c = 0
+        val base = j * Dim
+        while (c < Dim && c < e.length) { dot += e(c) * PlanesFlat(base + c); c += 1 }
+        if (dot > 0) sig |= (1L << j)
+        j += 1
+      }
+      Some(sig)
+    }
+  }
+
+  /** `graft_winnow` (the MOSS scheme): rolling k-gram hashes, then the
+    * minimum hash of every w-length window, deduplicated in first
+    * occurrence order. Fewer than k words hash the whole text.
+    */
+  val winnowUdf: UserDefinedFunction = udf { text: String =>
+    val ws = if (text == null) Array.empty[String] else text.split(' ')
+    if (ws.length < WinnowK) Array(splitmix64(fnv1a(if (text == null) "" else text)))
+    else {
+      val grams = new Array[Long](ws.length - WinnowK + 1)
+      var i = 0
+      while (i < grams.length) {
+        var h = 0L
+        var j = 0
+        while (j < WinnowK) { h = splitmix64(h ^ fnv1a(ws(i + j))); j += 1 }
+        grams(i) = h
+        i += 1
+      }
+      val out = scala.collection.mutable.LinkedHashSet.empty[Long]
+      var w = 0
+      val nWin = math.max(1, grams.length - WinnowW + 1)
+      while (w < nWin) {
+        var m = grams(w)
+        var j = 1
+        while (j < WinnowW && w + j < grams.length) {
+          if (grams(w + j) < m) m = grams(w + j)
+          j += 1
+        }
+        out += m
+        w += 1
+      }
+      out.toArray
+    }
+  }
+
+  /** Single-rule `graft_bpe_apply`: greedy non-overlapping merge of one
+    * adjacent symbol pair, the per-word apply step of a BPE round.
+    */
+  val bpeMergeUdf: UserDefinedFunction = udf { (syms: Seq[String], a: String, b: String) =>
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+        out += a + b; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.toSeq
+  }
+
+  /** `graft_bpe_apply`: the greedy BPE decoder — repeatedly merge the
+    * adjacent pair with the lowest merge rank until none applies.
+    * Duplicate rules keep the last rank (`toMap`).
+    */
+  def bpeEncodeUdf(merges: Seq[(String, String)]): UserDefinedFunction = {
+    val ranks: Map[(String, String), Int] =
+      merges.zipWithIndex.map { case ((l, r), i) => ((l, r), i) }.toMap
+    udf { (syms0: Seq[String]) =>
+      var syms = syms0.toVector
+      var done = syms.length < 2
+      while (!done) {
+        var best = Int.MaxValue
+        var i = 0
+        while (i < syms.length - 1) {
+          val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
+          if (r < best) best = r
+          i += 1
+        }
+        if (best == Int.MaxValue) done = true
+        else {
+          val (a, b) = merges(best)
+          val out = Vector.newBuilder[String]
+          var j = 0
+          while (j < syms.length) {
+            if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
+              out += a + b; j += 2
+            } else { out += syms(j); j += 1 }
+          }
+          syms = out.result()
+          done = syms.length < 2
+        }
+      }
+      syms
+    }
+  }
+
+  /** `graft_word_ngrams(n = 8, stride = 8)`: consecutive non-overlapping
+    * `ChunkW`-word chunks, trailing partial chunk dropped.
+    */
+  val chunk8Udf: UserDefinedFunction = udf { text: String =>
+    if (text == null) Array.empty[String]
+    else {
+      val w = text.split(' ')
+      Array.tabulate(w.length / ChunkW) { i =>
+        val b = new StringBuilder(w(i * ChunkW))
+        var j = 1
+        while (j < ChunkW) { b.append(' ').append(w(i * ChunkW + j)); j += 1 }
+        b.toString
+      }
+    }
+  }
+
+  /** `graft_word_ngrams(n = 2, stride = 1)`: word bigrams. */
+  val bigramsUdf: UserDefinedFunction = udf { text: String =>
+    if (text == null) Array.empty[String]
+    else {
+      val w = text.split(' ')
+      if (w.length < 2) Array.empty[String]
+      else Array.tabulate(w.length - 1)(i => w(i) + " " + w(i + 1))
+    }
+  }
+
+  /** `graft_word_ngrams(n = 5, stride = 1)`: word 5-grams. */
+  val ngram5Udf: UserDefinedFunction = udf { text: String =>
+    if (text == null) Array.empty[String]
+    else {
+      val w = text.split(' ')
+      if (w.length < NGramN) Array.empty[String]
+      else Array.tabulate(w.length - NGramN + 1) { i =>
+        val b = new StringBuilder(w(i))
+        var j = 1
+        while (j < NGramN) { b.append(' ').append(w(i + j)); j += 1 }
+        b.toString
+      }
+    }
+  }
+
+  /** `graft_charstats` as the original `q_char_entropy` plan: every
+    * character exploded into a row, per-(doc, char) counts, and the
+    * −p·ln p terms rounded to micro-nat integers before the per-doc sum.
+    */
+  def charEntropyExplodeRef(docs: DataFrame): DataFrame = {
+    val wd = Window.partitionBy("doc_id")
+    docs
+      .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
+      .filter(col("c") =!= "")
+      .groupBy("doc_id", "c").agg(count(lit(1)).as("cnt"))
+      .withColumn("n", sum("cnt").over(wd))
+      .withColumn("p", col("cnt").cast("double") / col("n").cast("double"))
+      .withColumn("term",
+        round(-col("p") * log(col("p")) * 1000000 + lit(1e-9), 0)
+          .cast(DecimalType(18, 0)))
+      .groupBy("doc_id")
+      .agg(max("n").as("n_chars_split"),
+        sum(col("term")).cast("long").as("entropy_micro"))
+      .orderBy("doc_id")
   }
 }

@@ -452,6 +452,39 @@ class ScaleSpec extends AnyFunSuite {
     val upserted = updates.upsertInto(ords, Seq("o_orderkey"))
     assert(upserted.count() == ords.count())
     assert(upserted.filter(col("o_totalprice") === 0.0).count() == 10)
+
+    // collected, not exceptAll: Spark cannot plan exceptAll over a
+    // dropDuplicates(subset) frame (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    def sameRows(a: DataFrame, b: DataFrame): Boolean =
+      a.collect().map(_.toString).sorted.sameElements(b.collect().map(_.toString).sorted)
+    val fact = Tables.lineitem(spark, sf).select("l_orderkey", "l_linenumber", "l_partkey")
+    val dim = Tables.part(spark, sf).filter(col("p_size") <= 10).select("p_partkey", "p_brand")
+    val bloomed = fact.bloomJoin(dim, "l_partkey", "p_partkey", expectedKeys = 1000L)
+    assert(!bloomed.isEmpty)
+    assert(sameRows(bloomed,
+      Scale.bloomPrefilterJoin(fact, dim, "l_partkey", "p_partkey", expectedKeys = 1000L)))
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val few = docs.filter(col("doc_id") <= 100)
+    val similar = few.setSimSelfJoin("doc_id", "text", 0.5)
+    assert(!similar.isEmpty)
+    assert(sameRows(similar, Llm.setSimJoin(few, "doc_id", "text", 0.5)))
+    val train = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+    val eval_ = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+      .unionByName(train.orderBy("doc_id").limit(1).withColumn("doc_id", lit(-1L)))
+    val leaks = train.fuzzyDecontaminate(eval_, 0.5)
+    assert(!leaks.isEmpty)
+    assert(sameRows(leaks, Llm.contaminationFuzzy(train, eval_, 0.5)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_syntax_").toString
+    try {
+      ords.writeRangeSorted(s"$dir/range_syntax", "o_orderdate", 4)
+      Sinks.rangeSortedParquet(ords, s"$dir/range_direct", "o_orderdate", 4)
+      assert(sameRows(spark.read.parquet(s"$dir/range_syntax"),
+        spark.read.parquet(s"$dir/range_direct")))
+      ords.writeZOrdered(s"$dir/z_syntax", "o_custkey", "o_totalprice", 4)
+      Sinks.zOrderedParquet(ords, s"$dir/z_direct", "o_custkey", "o_totalprice", 4)
+      assert(sameRows(spark.read.parquet(s"$dir/z_syntax"),
+        spark.read.parquet(s"$dir/z_direct")))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("pageRank: deterministic, root-heavy, leaves at the (1-d) floor, mass bounded") {

@@ -21,10 +21,16 @@ The candidate is ALWAYS the current working tree's compiled classes
 (target/scala-2.13/classes — compile first). The control ref is exported
 with `git archive` into <workdir>/graft_ab_<sha> and compiled there once
 (reused on re-runs while its compile marker names the same commit).
+Each leg's classpath puts its own tree's src/main/resources ahead of its
+classes and the Spark jars: `sbt compile` does not copy resources into
+the classes dir, so without it a control leg would run without the
+tree's log4j2.properties (logging at INFO) while a candidate whose
+classes went through `sbt test` logs at WARN.
 
 Outputs: <out-prefix>.json holding every leg's full Bench JSON line
 (`control` and `candidate` lists, in run order) and the per-gate summary,
-plus the same summary on stdout.
+plus the same summary on stdout. Each leg's console output goes to
+<workdir>/ab_leg_r<round>_<side>.log.
 """
 import argparse
 import json
@@ -49,6 +55,12 @@ def sh(cmd, **kw):
     return subprocess.run(cmd, check=True, **kw)
 
 
+def leg_classpath(tree):
+    return ":".join([os.path.join(tree, "src/main/resources"),
+                     os.path.join(tree, "target/scala-2.13/classes"),
+                     "/opt/spark/jars/*"])
+
+
 def prepare_control(ref, workdir, skip_compile):
     want = subprocess.run(["git", "-C", REPO, "rev-parse", ref],
                           capture_output=True, text=True,
@@ -62,7 +74,7 @@ def prepare_control(ref, workdir, skip_compile):
     marker = os.path.join(tree, "target", ".graft_ab_compiled")
     if os.path.isdir(classes) and os.path.isfile(marker) and \
             open(marker).read().strip() == want:
-        return classes
+        return tree
     if skip_compile:
         sys.exit(f"--skip-compile: no verified compile marker for {want}"
                  f" in {tree} — run once without --skip-compile first")
@@ -75,10 +87,10 @@ def prepare_control(ref, workdir, skip_compile):
     sh(["sbt", "-batch", "compile"], cwd=tree)
     with open(marker, "w") as f:
         f.write(want + "\n")
-    return classes
+    return tree
 
 
-def run_bench(classes, out_file, args):
+def run_bench(tree, out_file, args):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=args.sf,
                SPARK_GRAFT_CPUS=str(args.cpus),
@@ -89,10 +101,11 @@ def run_bench(classes, out_file, args):
     cmd = (["java"] + ADD_OPENS +
            [f"-Xmx{args.heap}", "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
-            "-cp", f"{classes}:/opt/spark/jars/*", "graft.Bench"])
+            "-cp", leg_classpath(tree), "graft.Bench"])
     print("+ bench ->", out_file, flush=True)
-    subprocess.run(cmd, check=True, env=env,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    with open(os.path.splitext(out_file)[0] + ".log", "w") as log:
+        subprocess.run(cmd, check=True, env=env,
+                       stdout=log, stderr=subprocess.STDOUT)
     with open(out_file) as f:
         return json.loads(f.readline())
 
@@ -157,16 +170,16 @@ def main():
         print("candidate classes missing — run `sbt compile` first",
               file=sys.stderr)
         return 1
-    ctrl_classes = prepare_control(args.control, args.workdir, args.skip_compile)
+    ctrl_tree = prepare_control(args.control, args.workdir, args.skip_compile)
 
     control, candidate = [], []
     for r in range(args.rounds):
         # alternate which side runs first, so a drifting box loads both
-        order = [("control", ctrl_classes, control),
-                 ("candidate", cand_classes, candidate)]
-        for side, classes, legs in (order if r % 2 == 0 else order[::-1]):
+        order = [("control", ctrl_tree, control),
+                 ("candidate", REPO, candidate)]
+        for side, tree, legs in (order if r % 2 == 0 else order[::-1]):
             leg = os.path.join(args.workdir, f"ab_leg_r{r}_{side}.json")
-            legs.append(run_bench(classes, leg, args))
+            legs.append(run_bench(tree, leg, args))
     gates = summarize(control, candidate)
     out = os.path.join(REPO, f"{args.out_prefix}.json")
     with open(out, "w") as f:
