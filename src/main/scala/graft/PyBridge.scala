@@ -69,9 +69,9 @@ object PyBridge {
   def snapshotReadVersion(spark: SparkSession, path: String, version: Int): DataFrame =
     ops.Sinks.Snapshots.read(spark, path, Some(version))
 
-  /** Bind a SQL-addressable name for [[snapshotMergeSql]]. */
-  def snapshotRegisterTable(name: String, path: String): Unit =
-    ops.Sinks.Snapshots.registerTable(name, path)
+  /** Bind a SQL-addressable name for [[snapshotMergeSql]] in `spark`. */
+  def snapshotRegisterTable(spark: SparkSession, name: String, path: String): Unit =
+    ops.Sinks.Snapshots.registerTable(spark, name, path)
 
   /** Route a verbatim SQL `MERGE INTO` statement (conditional clauses,
     * SET lists, and DELETE included) to the snapshot tier's CDC fold.

@@ -3038,24 +3038,6 @@ object Llm {
   private val MixFractions: Seq[(String, String)] = // lang -> 2-hex-digit threshold / 256
     Seq("en" -> "e6", "de" -> "80", "fr" -> "80", "es" -> "40", "zh" -> "40")
 
-  /** Temperature-based multilingual rebalancing (the mBERT/XLM α-
-    * sampling scheme, α = 0.5): language quotas ∝ share^α — flattening
-    * the Zipf of languages so low-resource ones are upsampled relative
-    * to proportional sampling — then a deterministic md5-ranked draw of
-    * each language's quota. Everything derives from the data in three
-    * tiny aggregations (language census → α-weights → normalized
-    * quotas, all broadcast); the corpus is touched by ONE ranked window
-    * on the language key. α-weights round to 12 digits and sum as
-    * DECIMAL so normalization is engine- and order-exact; quotas use
-    * floor(x + 0.5) — both sides of the oracle compute identical
-    * doubles (sqrt is IEEE-correctly-rounded, unlike pow).
-    *
-    * Scale caveat: languages are FEW, so the exact-quota rank funnels a
-    * language through one task. At 100 TB use the same two-phase draw
-    * as `q_sample_group`'s scaladoc: md5-threshold prefilter to ~2× the
-    * quota in the scan stage, rank only survivors — same selected set
-    * with overwhelming probability, verifiable by a count-check.
-    */
   /** Deterministic WEIGHTED sample (Efraimidis–Spirakis 2006 A-Res):
     * each doc draws u ∈ (0,1] from the md5 of its id (the suite's
     * cross-engine uniform) and the reservoir key is ln(u)/w with
@@ -3087,6 +3069,27 @@ object Llm {
       .limit(20)
       .drop("k")
 
+  /** Temperature-based multilingual rebalancing (the mBERT/XLM α-
+    * sampling scheme, α = 0.5): language quotas ∝ share^α — flattening
+    * the Zipf of languages so low-resource ones are upsampled relative
+    * to proportional sampling — then a deterministic md5-ranked draw of
+    * each language's quota. Everything derives from the data in three
+    * tiny aggregations (language census → α-weights → normalized
+    * quotas), collected as one local relation. α-weights round to 12
+    * digits and sum as DECIMAL so normalization is engine- and
+    * order-exact; quotas use floor(x + 0.5) — both sides of the oracle
+    * compute identical doubles (sqrt is IEEE-correctly-rounded, unlike
+    * pow).
+    *
+    * The draw is [[graft.ops.Scale.quotaSample]] with that relation as
+    * both its quotas and its group counts, so no task ranks a whole
+    * language and the sampler adds one corpus read (its survivor
+    * prefilter) to the census: an md5-threshold prefilter cuts each
+    * language to ~2× its quota and a count check falls back to the
+    * whole-language rank only on a miss. The null-`lang` census row is
+    * dropped, so null-`lang` docs drop at the sampler's stats join, as
+    * they did at the old quota join (a null key never matches).
+    */
   def q_temperature_sample(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val target = 200
@@ -3102,13 +3105,12 @@ object Llm {
       .withColumn("quota",
         floor(lit(target) * (col("w").cast("double") / col("w_sum").cast("double")) +
           lit(0.5)).cast("long"))
-      .select("lang", "quota")
-    val w = Window.partitionBy("lang")
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    docs.join(broadcast(quotas), "lang")
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= col("quota"))
-      .select("doc_id", "lang", "rn", "quota")
+      .filter(col("lang").isNotNull)
+      .select(col("lang"), col("quota").as("n_h"), col("n_l").as("__grp_n"))
+    val alloc = s.createDataFrame(java.util.Arrays.asList(quotas.collect(): _*), quotas.schema)
+    Scale.quotaSample(docs, Seq("lang"), md5(col("doc_id").cast("string")), Seq(col("doc_id")),
+      Right(alloc.select("lang", "n_h")), groupCounts = Some(alloc.select("lang", "__grp_n")))
+      .select(col("doc_id"), col("lang"), col("rn"), col("n_h").as("quota"))
       .orderBy("doc_id")
   }
 
@@ -3430,18 +3432,15 @@ object Llm {
     * never an empty source). Emits the KEPT rows — the trimmed corpus,
     * budget-bounded by construction.
     *
-    * Scale shape (the [[graft.ops.Scale.quotaSample]] treatment, token
-    * flavor): the running-prefix window would otherwise funnel each
-    * whole source through one task, so a scan-stage md5-threshold
-    * prefilter sized to ~2× the budget IN EXPECTED TOKENS (fraction
-    * 2·budget/total_tokens + a 16-doc small-source cushion, from one
-    * tiny per-source aggregate) cuts each source to a budget-bounded
-    * survivor set first; the survivors are a downward-closed PREFIX of
-    * the hash order, so their running sums are the true running sums,
-    * and the trim is EXACT whenever the budget exhausts inside the
-    * survivor set (or the source kept every doc) — checked per source,
-    * with the whole-source window as the fallback for only the rare
-    * misses.
+    * Scale shape: the running-prefix window would otherwise funnel each
+    * whole source through one task, so the trim is
+    * [[graft.ops.Scale.prefixCut]] with the token count as the weight
+    * and the budget as the flat quota: a scan-stage md5-threshold
+    * prefilter sized to ~2× the budget in expected tokens, the exact
+    * running sums over that hash-order prefix, and the whole-source
+    * window only for the rare source whose survivors neither reach the
+    * budget nor cover the source. `cum_tokens` is the running token sum
+    * including the row.
     */
   private val TrimBudget = 1000L
 
@@ -3450,65 +3449,13 @@ object Llm {
 
   /** The prefiltered trim behind [[q_budget_trim]]. */
   private[ops] def budgetTrim(docs: DataFrame, budget: Long): DataFrame =
-    budgetTrimCut(docs, budget, oversample = 2.0, cushionDocs = 16.0)
-
-  /** [[budgetTrim]] with its survivor threshold sized as
-    * `oversample · budget` tokens plus `cushionDocs` docs per source.
-    * Specs pass an under-cut (oversample 0) to force every source
-    * through the exact fallback.
-    */
-  private[graft] def budgetTrimCut(docs: DataFrame, budget: Long,
-                                   oversample: Double, cushionDocs: Double): DataFrame = {
-    val s = docs.sparkSession
-    val base = docs
-      .select(col("doc_id"), col("source"),
-        graft.functions.Vec.wordCount(col("text")).as("n_tokens"))
-    val h = md5(col("doc_id").cast("string"))
-    val hexSpan = lit(1152921504606846976L) // 16^15 = 2^60
-    val stats = base.groupBy("source")
-      .agg(count(lit(1)).as("__n"), sum("n_tokens").as("__tok"))
-      .withColumn("__thresh",
-        least(lit(1.0),
-          lit(oversample * budget) / col("__tok").cast("double")
-            + lit(cushionDocs) / col("__n").cast("double"))
-          .multiply(hexSpan.cast("double")).cast("long"))
-      .localCheckpoint() // one row per source
-    val hv = conv(substring(h, 1, 15), 16, 10).cast("long")
-    val surv = base.join(broadcast(stats), "source")
-      .filter(hv < col("__thresh"))
-      .localCheckpoint() // ~2× budget tokens per source: budget-bounded
-    val w = Window.partitionBy("source").orderBy(h, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = surv.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-    // exact iff the budget exhausts INSIDE the survivors (the first
-    // over-budget survivor proves every later row — survivor or not —
-    // is beyond budget too, because survivors are a hash-order prefix)
-    // or the source kept every doc
-    val miss = stats.join(
-        ranked.groupBy("source").agg(
-          count(lit(1)).as("__got"),
-          max(col("cum_tokens") - col("n_tokens")).as("__before")),
-        Seq("source"), "left")
-      .filter(coalesce(col("__got"), lit(0L)) < col("__n") &&
-        coalesce(col("__before"), lit(0L)) < budget)
-      .select("source").collect().map(_.getString(0))
-    val keepCols = Seq(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens"))
-    val kept0 = ranked.filter(col("cum_tokens") - col("n_tokens") < lit(budget))
-      .select(keepCols: _*)
-    val kept =
-      if (miss.isEmpty) kept0
-      else {
-        import s.implicits._
-        val missDf = miss.toSeq.toDF("source")
-        val exact = base.join(broadcast(missDf), Seq("source"), "left_semi")
-          .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-          .filter(col("cum_tokens") - col("n_tokens") < lit(budget))
-          .select(keepCols: _*)
-        kept0.join(broadcast(missDf), Seq("source"), "left_anti")
-          .unionByName(exact)
-      }
-    kept.orderBy("doc_id")
-  }
+    Scale.prefixCut(
+      docs.select(col("doc_id"), col("source"),
+        graft.functions.Vec.wordCount(col("text")).as("n_tokens")),
+      Seq("source"), md5(col("doc_id").cast("string")), Seq(col("doc_id")),
+      Left(budget), weight = Some(col("n_tokens")))
+      .select(col("doc_id"), col("source"), col("n_tokens"), col("rn").as("cum_tokens"))
+      .orderBy("doc_id")
 
   /** Rendezvous (highest-random-weight) shard assignment: each doc
     * hashes once per candidate shard and lands on the shard with the

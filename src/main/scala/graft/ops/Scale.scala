@@ -45,39 +45,19 @@ object Scale {
     * strata through single window tasks. The naive plan sorts each
     * group's ENTIRE partition to keep n_h rows — with few groups a 5 TB
     * stratum becomes one spilling task (measured: skew 2.3 at sf100).
-    *
-    * Shape: (1) the per-group counts (one scan-stage aggregate, unless
-    * the caller supplies them) and the quota relation are collected —
-    * both are group-cardinality-sized by contract — and the driver
-    * joins them, checks the allocation hygiene, and sizes a per-group
-    * hash THRESHOLD at ~2× the quota plus a small-group cushion;
-    * (2) the prefilter keeps only rows whose hash prefix falls below it
-    * — a scan-stage cut against the broadcast stats table, so the
-    * per-group rank window sees ~2·n_h rows instead of the stratum;
-    * (3) the draw is still EXACT: the survivor
-    * set is downward-closed in the hash order (a 60-bit numeric prefix
-    * of the md5 hex is order-consistent with it), so the n_h lowest
-    * survivors ARE the n_h lowest rows whenever the group kept ≥
-    * min(n_h, group size) survivors — which a per-group COUNT CHECK
-    * verifies, falling back to the exact whole-group rank for only the
-    * (overwhelmingly rare: the cut is Binomial with mean 2·n_h + 16)
-    * groups that miss. The check is one grouped count over the survivor
-    * checkpoint, compared on the driver; the fallback branch never
-    * enters the plan when no group misses.
-    *
-    * Actions: the survivor checkpoint and the miss check, plus the count
-    * aggregate when `groupCounts` is absent; a local-relation quota or
-    * count input (the Neyman allocation) is read without a job. In the
-    * release pipeline the sampling step (allocation + sampler) fires 8
-    * jobs per warm run over sf0.001, where the checkpointed stats table,
-    * its two hygiene actions and a miss-check join made it 20.
+    * This is the row unit of [[prefixCut]], the engine's one per-group
+    * hash-prefix cut (also behind `Llm.budgetTrim` and
+    * `Llm.q_temperature_sample`); the shape, the exactness argument and
+    * the actions are documented there.
     *
     * `quotas`: Left(k) = flat per-group quota; Right(df) = per-group
     * allocation relation (groupCols + `n_h`), one row per group — it
     * must COVER every group in the data exactly once: a missing or
     * duplicated allocation row fails loudly (a silent inner join here
     * would shrink or duplicate the sample with no signal). Group keys
-    * match with SQL equality, so a null key never finds its quota.
+    * match with SQL equality, so a null key never finds its quota: a
+    * null-key group is dropped under a flat quota and fails the
+    * coverage check under an allocation relation.
     * Returns the input columns plus
     * `n_h` and the in-group rank `rn` (1 ≤ rn ≤ min(n_h, group size)),
     * ordered by (`hash`, `tie`) within the group. Shuffles: the count
@@ -94,41 +74,78 @@ object Scale {
   def quotaSample(df: DataFrame, groupCols: Seq[String], hash: Column,
                   tie: Seq[Column], quotas: Either[Long, DataFrame],
                   groupCounts: Option[DataFrame] = None): DataFrame =
-    quotaSampleCut(df, groupCols, hash, tie, quotas, groupCounts,
-      oversample = 2.0, cushion = 16.0)
+    prefixCut(df, groupCols, hash, tie, quotas, weight = None, groupCounts)
 
-  /** [[quotaSample]] with its survivor threshold sized as
-    * `n_h · oversample + cushion` rows per group. Specs pass an
-    * under-cut (oversample 0) to force every group through the exact
-    * fallback.
+  /** The per-group hash-prefix cut: in (`hash`, `tie`) order, a row is
+    * kept while the weight summed BEFORE it is below its group's quota
+    * `n_h`. `weight` is a non-negative integral column of `df`; None is
+    * the row unit (weight 1, so `rn − 1 < n_h` is `rn ≤ n_h`). Output:
+    * the input columns plus `n_h` and `rn`, the running weight up to and
+    * including the row (the in-group rank for rows, the running token
+    * sum for `Llm.budgetTrim`).
+    *
+    * Shape: (1) the per-group row counts n and total weights W (one
+    * scan-stage aggregate; for rows W = n, so caller-supplied
+    * `groupCounts` skip it) and the quota relation are collected — both
+    * are group-cardinality-sized by contract — and the driver joins
+    * them, checks the allocation hygiene, and sizes a per-group hash
+    * THRESHOLD, the fraction least(1, (n_h·2 + 16·W/n) / W) of the hash
+    * span: ~2× the quota in expected weight plus a 16-row small-group
+    * cushion; (2) the prefilter keeps only rows whose hash prefix falls
+    * below it — a scan-stage cut against the broadcast stats table, so
+    * the per-group running window sees ~2× the quota instead of the
+    * stratum; (3) the cut is still EXACT: the survivor set is
+    * downward-closed in the hash order (a 60-bit numeric prefix of the
+    * hex hash is order-consistent with it), so survivors' running sums
+    * are the true ones, and a group is exact iff it kept every row or
+    * its survivors' weight reaches n_h (then every later row starts at
+    * or past the quota) — a per-group COUNT CHECK over the survivor
+    * checkpoint, compared on the driver, that falls back to the exact
+    * whole-group window for only the (overwhelmingly rare: for rows the
+    * cut is Binomial with mean 2·n_h + 16) groups that miss. The
+    * fallback branch never enters the plan when no group misses.
+    * Null-key groups never match the stats join, so a flat quota drops
+    * them before the stats (they would otherwise always miss).
+    *
+    * Actions: the survivor checkpoint and the miss check, plus the count
+    * aggregate when `groupCounts` is absent; a local-relation quota or
+    * count input (the Neyman allocation) is read without a job. In the
+    * release pipeline the sampling step (allocation + sampler) fires 8
+    * jobs per warm run over sf0.001, where the checkpointed stats table,
+    * its two hygiene actions and a miss-check join made it 20.
     */
-  private[graft] def quotaSampleCut(df: DataFrame, groupCols: Seq[String], hash: Column,
-                                    tie: Seq[Column], quotas: Either[Long, DataFrame],
-                                    groupCounts: Option[DataFrame],
-                                    oversample: Double, cushion: Double): DataFrame = {
-    import org.apache.spark.sql.types.LongType
+  private[graft] def prefixCut(df: DataFrame, groupCols: Seq[String], hash: Column,
+                               tie: Seq[Column], quotas: Either[Long, DataFrame],
+                               weight: Option[Column],
+                               groupCounts: Option[DataFrame] = None): DataFrame = {
     val spark = df.sparkSession
     val grp = groupCols.map(col)
     val k = groupCols.size
     def key(r: Row): Seq[Any] = (0 until k).map(r.get)
+    def long(v: Any): Long = if (v == null) 0L else v.asInstanceOf[Number].longValue
+    val w = weight.getOrElse(lit(1L))
+    // the row unit's weight sum is its row count (one aggregate buffer)
+    val wsum = weight.fold(count(lit(1)))(sum(_))
+    // (key, __grp_n, __grp_w)
     val counts = groupCounts.getOrElse(
-      df.groupBy(grp: _*).agg(count(lit(1)).as("__grp_n")))
-      .select(grp :+ col("__grp_n"): _*)
+      df.groupBy(grp: _*).agg(count(lit(1)).as("__grp_n"), wsum.as("__grp_w")))
+      .select(grp ++ Seq(col("__grp_n").cast(LongType).as("__grp_n"),
+        weight.fold(col("__grp_n"))(_ => col("__grp_w")).cast(LongType).as("__grp_w")): _*)
     val keyFields = counts.schema.fields.take(k).toSeq
     // the left join of the counts with the quotas, on the driver:
-    // (key, __grp_n, n_h) with a null n_h where no quota row matched
+    // (count row, n_h) with a null n_h where no quota row matched
     val (nhField, joined) = quotas match {
       case Left(q) =>
         (StructField("n_h", LongType, nullable = false),
-          counts.collect().toSeq.map(r => (key(r), r.get(k), q: Any)))
+          counts.collect().toSeq.filterNot(r => key(r).contains(null)).map(r => (r, q: Any)))
       case Right(q) =>
         val qdf = q.select(grp :+ col("n_h"): _*)
         val byKey = qdf.collect().toSeq.groupBy(key)
         (qdf.schema("n_h"), counts.collect().toSeq.flatMap { r =>
           val g = key(r)
           val hits = if (g.contains(null)) Nil else byKey.getOrElse(g, Nil)
-          if (hits.isEmpty) Seq((g, r.get(k), null))
-          else hits.map(h => (g, r.get(k), h.get(k)))
+          if (hits.isEmpty) Seq((r, null))
+          else hits.map(h => (r, h.get(k)))
         })
     }
     // allocation-relation hygiene: a group the quota relation missed
@@ -137,34 +154,33 @@ object Scale {
     // the sample SILENTLY
     def groupList(gs: Seq[Seq[Any]]): String = gs.take(5).map(_.mkString("/")).mkString(", ")
     if (quotas.isRight) {
-      val bad = joined.collect { case (g, _, null) => g }
+      val bad = joined.collect { case (r, null) => key(r) }
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"quotaSample: quota relation is missing allocation rows for groups " +
           s"${groupList(bad)} ... — every group in " +
           "the data needs exactly one n_h row")
-      val dup = joined.groupBy(_._1).collect { case (g, rs) if rs.size > 1 => g }.toSeq
+      val dup = joined.groupBy(j => key(j._1)).collect { case (g, rs) if rs.size > 1 => g }.toSeq
       if (dup.nonEmpty) throw new IllegalArgumentException(
         s"quotaSample: quota relation has duplicate allocation rows for groups " +
           s"${groupList(dup)} ... — the join would " +
           "duplicate survivors")
     }
-    // __needed = least(n_h, __grp_n); __thresh is the 60-bit hash cut:
-    // least(1.0, (n_h·oversample + cushion) / __grp_n) · 16^15 as a long
-    // (the first 15 hex chars of the md5 as an integer; equal-length
-    // lowercase hex compares identically as string or number). The same
-    // double operations as the SQL expressions, so the same bits; NaN
-    // orders above 1.0 there, as in Spark's least.
+    // __thresh is the 60-bit hash cut: the threshold fraction · 16^15 as
+    // a long (the first 15 hex chars of the hash as an integer;
+    // equal-length lowercase hex compares identically as string or
+    // number). For rows W = n, and 16·n/n is exactly 16. NaN (an empty
+    // or all-zero-weight group) orders above 1.0, as in Spark's least.
     val hexSpan = 1152921504606846976L // 16^15 = 2^60
-    val statRows = joined.map { case (g, grpN, nh) =>
-      val n = grpN.asInstanceOf[Number].longValue
-      val h = nh.asInstanceOf[Number]
-      val frac = (h.doubleValue * oversample + cushion) / n.toDouble
+    val statRows = joined.map { case (r, nh) =>
+      val n = r.getLong(k).toDouble
+      val tot = long(r.get(k + 1)).toDouble
+      val frac = (nh.asInstanceOf[Number].doubleValue * 2.0 + 16.0 * tot / n) / tot
       val cut = if (frac.isNaN || frac > 1.0) 1.0 else frac
-      Row.fromSeq(g ++ Seq(grpN, nh, math.min(h.longValue, n), (cut * hexSpan.toDouble).toLong))
+      Row.fromSeq(key(r) ++ Seq(r.get(k), r.get(k + 1), nh, (cut * hexSpan.toDouble).toLong))
     }
     val stats = spark.createDataFrame(java.util.Arrays.asList(statRows: _*),
-      StructType(keyFields ++ Seq(counts.schema("__grp_n"), nhField,
-        StructField("__needed", LongType), StructField("__thresh", LongType))))
+      StructType(keyFields ++ Seq(StructField("__grp_n", LongType),
+        StructField("__grp_w", LongType), nhField, StructField("__thresh", LongType))))
     val hv = conv(substring(hash, 1, 15), 16, 10).cast("long")
     // the survivor cut is ~ groups·(2·n_h+16) rows — dim-sized by
     // construction, so one checkpoint lets the rank, the count check,
@@ -173,32 +189,36 @@ object Scale {
       .join(broadcast(stats), groupCols)
       .filter(hv < col("__thresh"))
       .localCheckpoint()
-    val w = Window.partitionBy(grp: _*).orderBy(hash +: tie: _*)
-    val ranked = surv
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= col("__needed"))
-    // count check: a group is exact iff it kept at least `needed`
-    // survivors (downward-closure makes the lowest `needed` global)
-    val got = surv.groupBy(grp: _*).agg(count(lit(1)))
-      .collect().map(r => key(r) -> r.getLong(k)).toMap
-    val missRows = statRows.filter(r => got.getOrElse(key(r), 0L) < r.getLong(k + 2))
-      .map(r => Row.fromSeq(key(r)))
+    val win = Window.partitionBy(grp: _*).orderBy(hash +: tie: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // rn ≤ __grp_w caps the row unit at the (caller-supplied) group
+    // size; true weights never exceed their total
+    def cut(rows: DataFrame): DataFrame = rows
+      .withColumn("rn", sum(w).over(win).cast(LongType))
+      .filter(col("rn") - w < col("n_h") && col("rn") <= col("__grp_w"))
+    val ranked = cut(surv)
+    // count check: a group is exact iff it kept every row or its
+    // survivors' weight reaches the quota
+    val got = surv.groupBy(grp: _*).agg(count(lit(1)), wsum)
+      .collect().map(r => key(r) -> (r.getLong(k), long(r.get(k + 1)))).toMap
+    val missRows = statRows.filter { r =>
+      val (kept, wt) = got.getOrElse(key(r), (0L, 0L))
+      kept < r.getLong(k) && wt < long(r.get(k + 2))
+    }.map(r => Row.fromSeq(key(r)))
     val out =
       if (missRows.isEmpty) ranked
       else {
-        // exact fallback for ONLY the missed groups: whole-group rank,
+        // exact fallback for ONLY the missed groups: whole-group window,
         // fed through a broadcast semi-join BELOW the window
         val missDf = spark.createDataFrame(
           java.util.Arrays.asList(missRows: _*), StructType(keyFields))
-        val exact = df
+        val exact = cut(df
           .join(broadcast(missDf), groupCols, "left_semi")
-          .join(broadcast(stats), groupCols)
-          .withColumn("rn", row_number().over(w).cast("long"))
-          .filter(col("rn") <= col("__needed"))
+          .join(broadcast(stats), groupCols))
         ranked.join(broadcast(missDf), groupCols, "left_anti")
           .unionByName(exact)
       }
-    out.drop("__grp_n", "__needed", "__thresh")
+    out.drop("__grp_n", "__grp_w", "__thresh")
   }
 
   /** Monotone double proxy of a fixed-width lowercase/uppercase HEX

@@ -445,15 +445,19 @@ object Sinks {
               keys: Seq[String]): Int =
       commit(spark, Scale.upsert(read(spark, path), delta, keys), path)
 
-    /** name → snapshot path bindings for the SQL MERGE text form. */
-    private val sqlTables = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-    /** Bind a SQL-addressable name to a snapshot-table path, so a
-      * migrating user's `MERGE INTO name ...` statement works verbatim
-      * through [[mergeSql]].
+    /** Runtime-conf key of a name → snapshot path binding for the SQL
+      * MERGE text form: session state, so a binding lives and dies with
+      * the session that made it (`newSession()` starts with none).
       */
-    def registerTable(name: String, path: String): Unit =
-      sqlTables.put(name.toLowerCase(java.util.Locale.ROOT), path)
+    private def tableKey(name: String): String =
+      "spark.graft.snapshotTable." + name.toLowerCase(java.util.Locale.ROOT)
+
+    /** Bind a SQL-addressable name to a snapshot-table path in `spark`,
+      * so a migrating user's `MERGE INTO name ...` statement works
+      * verbatim through [[mergeSql]] in that session.
+      */
+    def registerTable(spark: SparkSession, name: String, path: String): Unit =
+      spark.conf.set(tableKey(name), path)
 
     /** SQL `MERGE INTO` text form over the snapshot tier. Spark's
       * parser accepts MERGE syntax for any statement but executes it
@@ -514,10 +518,10 @@ object Sinks {
         case other => throw new IllegalArgumentException(
           s"MERGE target must be a table name, got ${other.nodeName}; $supported")
       }
-      val path = Option(sqlTables.get(targetName.toLowerCase(java.util.Locale.ROOT)))
+      val path = spark.conf.getOption(tableKey(targetName))
         .getOrElse(throw new IllegalArgumentException(
           s"'$targetName' is not a registered snapshot table — bind it first " +
-            s"with Snapshots.registerTable(\"$targetName\", path)"))
+            s"with Snapshots.registerTable(spark, \"$targetName\", path)"))
       val (sourceAlias, sourceRel) = stripAlias(m.sourceTable)
       val sourceName = sourceRel match {
         case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")

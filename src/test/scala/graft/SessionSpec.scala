@@ -64,11 +64,16 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("concurrent release and near-dup pipelines in one session match the serial results") {
-    // the release and near-dup pipelines, and the iterative operators
-    // that make and free their own scratch blocks mid-call
+    // the release and near-dup pipelines, the iterative operators that
+    // make and free their own scratch blocks mid-call, and the samplers
+    // that share Scale.prefixCut's driver-side collects and survivor
+    // checkpoint
     val pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)] = Seq(
       "q_pipeline_release" -> graft.ops.Llm.q_pipeline_release,
+      "q_budget_trim" -> graft.ops.Llm.q_budget_trim,
+      "q_temperature_sample" -> graft.ops.Llm.q_temperature_sample,
+      "q_sample_neyman" -> graft.ops.Relational.q_sample_neyman,
       "q_dedup_minhash" -> graft.ops.Llm.q_dedup_minhash,
       "q_dedup_clusters" -> graft.ops.Llm.q_dedup_clusters,
       "q_select_cover" -> graft.ops.Llm.q_select_cover,

@@ -874,10 +874,20 @@ class OpsSpec extends AnyFunSuite {
         .select("doc_id", "source", "n_tokens", "cum_tokens")
         .collect().map(_.toSeq).toSet
       assert(got == want, s"prefiltered trim diverges at budget=$budget")
-      // oversample 0 + half-doc cushion: every source under-cuts, the
-      // exact whole-source fallback must reproduce the same trim
-      val forced = Llm.budgetTrimCut(docs, budget, oversample = 0.0, cushionDocs = 0.5)
-        .select("doc_id", "source", "n_tokens", "cum_tokens")
+      // budgetTrim's cut over an "ff"-led hash (same order, every 60-bit
+      // prefix above 255/256 of the span): at budget 200 every source's
+      // ~0.93 threshold keeps no survivor, so every source under-cuts and
+      // the exact whole-source fallback must reproduce the same trim; at
+      // budget 1000 every threshold is 1 and the survivors are the source
+      val forcedDf = Scale.prefixCut(
+        docs.select(col("doc_id"), col("source"),
+          graft.functions.Vec.wordCount(col("text")).as("n_tokens")),
+        Seq("source"), concat(lit("ff"), h), Seq(col("doc_id")),
+        Left(budget), weight = Some(col("n_tokens")))
+      assert(ScaleSpec.fallbackRan(forcedDf) == (budget == 200L),
+        s"the forced under-cut must take the fallback exactly at budget 200 (budget=$budget)")
+      val forced = forcedDf.select(col("doc_id"), col("source"), col("n_tokens"),
+          col("rn").as("cum_tokens"))
         .collect().map(_.toSeq).toSet
       assert(forced == want, s"fallback trim diverges at budget=$budget")
     }

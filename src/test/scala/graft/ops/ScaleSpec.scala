@@ -88,11 +88,15 @@ class ScaleSpec extends AnyFunSuite {
     val got = Scale.quotaSample(ev, Seq("event_type"), hash, Seq(col("event_id")), Left(20L))
       .select("event_type", "rn", "event_id", "value").collect().map(_.toSeq).toSet
     assert(got == want, "prefiltered draw must equal the whole-group rank")
-    // forced under-cut: oversample 0 + cushion 0.5 keeps ~0.5 expected
-    // survivors per group — every group misses its count check and must
-    // route through the exact whole-group fallback, same rows out
-    val forced = Scale.quotaSampleCut(ev, Seq("event_type"), hash, Seq(col("event_id")),
-      Left(20L), groupCounts = None, oversample = 0.0, cushion = 0.5)
+    // forced under-cut: a constant "ff" lead keeps the hash order but puts
+    // every 60-bit prefix above 255/256 of the span, past each group's
+    // ~0.28 threshold — no group keeps a survivor, every group misses its
+    // count check and must route through the exact whole-group fallback,
+    // same rows out
+    val forcedDf = Scale.quotaSample(ev, Seq("event_type"), concat(lit("ff"), hash),
+      Seq(col("event_id")), Left(20L))
+    assert(ScaleSpec.fallbackRan(forcedDf), "the forced under-cut must take the fallback")
+    val forced = forcedDf
       .select("event_type", "rn", "event_id", "value").collect().map(_.toSeq).toSet
     assert(forced == want, "the count-check fallback must reproduce the exact draw")
     // per-group quota relation (the Neyman shape): quotas differ by group
@@ -124,6 +128,101 @@ class ScaleSpec extends AnyFunSuite {
       .select("c").collect().map(_.getLong(0)).toSet
     assert(perGroup == Set(1L),
       "groupCounts must be consumed in place of the internal count scan")
+  }
+
+  test("quotaSample: a null-key group is dropped before the stats, not sent to the fallback") {
+    import graft.ExecutedPlans.Adaptive
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), when(col("source") =!= "src0", col("source")).as("source"))
+    // the caller-supplied counts (a local relation, read without a job)
+    // hold the null-key group
+    val agg = docs.groupBy("source").agg(count(lit(1)).as("__grp_n"))
+    val aggRows = agg.collect()
+    assert(aggRows.count(_.isNullAt(0)) == 1)
+    val counts = spark.createDataFrame(java.util.Arrays.asList(aggRows: _*), agg.schema)
+    val hash = md5(col("doc_id").cast("string"))
+    val (got, plans) = graft.ExecutedPlans.of(spark) {
+      val out = Scale.quotaSample(docs, Seq("source"), hash, Seq(col("doc_id")), Left(3L),
+        groupCounts = Some(counts))
+      // the sampler must not build a fallback branch for the null group
+      // (the optimizer would prune it from the executed plan, as a null
+      // key cannot match, so the analyzed plan is where it shows)
+      assert(out.queryExecution.analyzed.collectFirst { case u: Union => u }.isEmpty,
+        "a null-key group must not be routed to the exact fallback")
+      out.select("source", "rn", "doc_id").collect()
+    }
+    assert(!plans.exists(p => Adaptive.collect(p) { case u: UnionExec => u }.nonEmpty),
+      "no executed plan may hold the fallback union")
+    val scans = plans.map(p => Adaptive.collect(p) { case f: FileSourceScanExec => f }.size).sum
+    assert(scans == 1, s"the input must be scanned once (the survivor cut), scanned $scans times")
+    val want = docs.filter(col("source").isNotNull)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("source").orderBy(hash, col("doc_id"))).cast("long"))
+      .filter(col("rn") <= 3).select("source", "rn", "doc_id").collect().toSet
+    assert(got.toSet == want)
+  }
+
+  test("prefixCut ≡ whole-group running window: rows (flat and relation quotas) and token weights") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import spark.implicits._
+    // groups of 0–60 rows under keys g0–g3 or null; hashes are 32 hex
+    // chars whose 15-char prefixes (the cut's numeric part) and whole
+    // values repeat; weights 0–4
+    val hex = Gen.listOfN(15, Gen.hexChar).map(_.mkString.toLowerCase)
+    val frames = for {
+      prefixes <- Gen.listOfN(4, hex)
+      sizes <- Gen.listOfN(5, Gen.frequency(1 -> Gen.const(0), 3 -> Gen.choose(1, 60)))
+      n = sizes.sum
+      keys = sizes.zipWithIndex.flatMap { case (m, i) =>
+        Seq.fill(m)(if (i == 4) Option.empty[String] else Some(s"g$i")) }
+      hashes <- Gen.listOfN(n, for {
+        p <- Gen.frequency(1 -> Gen.oneOf(prefixes), 3 -> hex)
+        t <- Gen.frequency(1 -> Gen.const("0" * 17),
+          3 -> Gen.listOfN(17, Gen.hexChar).map(_.mkString.toLowerCase))
+      } yield p + t)
+      ws <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.choose(1L, 4L)))
+      flat <- Gen.choose(0L, 70L)
+      perGroup <- Gen.listOfN(4, Gen.choose(0L, 70L))
+    } yield (keys.indices.map(i => (keys(i), i.toLong, hashes(i), ws(i))), flat, perGroup)
+    val win = Window.partitionBy("g").orderBy(col("h"), col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def rows(df: DataFrame) = df.select("g", "id", "n_h", "rn").collect().toSet
+    // no shrinking: each shrink step re-runs every Spark query of the frame
+    val prop = Prop.forAllNoShrink(frames) { case (data, flat, perGroup) =>
+      val df = data.toDF("g", "id", "h", "w")
+      val alloc = perGroup.zipWithIndex.map { case (q, i) => (s"g$i", q) }.toDF("g", "n_h")
+      val keyed = df.filter(col("g").isNotNull)
+      // the reference: the whole-group running window over non-null groups
+      def ref(w: org.apache.spark.sql.Column, quota: Either[Long, DataFrame]) = {
+        val withQ = quota.fold(q => keyed.withColumn("n_h", lit(q)), a => keyed.join(a, "g"))
+        rows(withQ.withColumn("rn", sum(w).over(win)).filter(col("rn") - w < col("n_h")))
+      }
+      val cases = Seq(
+        ("rows, flat", None, Left(flat), df),
+        ("rows, relation", None, Right(alloc), keyed),
+        ("tokens, flat", Some(col("w")), Left(flat), df))
+      val checks = for ((what, weight, quota, in) <- cases) yield {
+        val want = ref(weight.getOrElse(lit(1L)), quota)
+        // the plain hash, and the "ff"-led one that empties every survivor
+        // set whose threshold is below 1
+        val gots = Seq(col("h"), concat(lit("ff"), col("h"))).map { h =>
+          val out = Scale.prefixCut(in, Seq("g"), h, Seq(col("id")), quota, weight)
+          try rows(out) finally Scratch.release(out)
+        }
+        gots.forall(_ == want) :| s"$what: got ${gots.map(_.size)} rows, want ${want.size}"
+      }
+      val nullRelation =
+        data.forall(_._1.isDefined) || scala.util.Try(Scale.quotaSample(df, Seq("g"), col("h"),
+          Seq(col("id")), Right(alloc))).failed.toOption
+          .exists(_.getMessage.contains("missing allocation rows"))
+      (checks.reduce(_ && _) && (nullRelation :| "a null-key group must fail the relation's coverage")) :|
+        s"frame=$data flat=$flat perGroup=$perGroup"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("quotaSample fails loudly on a malformed quota relation (missing or duplicate groups)") {
@@ -578,4 +677,14 @@ class ScaleSpec extends AnyFunSuite {
     assert(gotCensus == wantCensus,
       s"census diverges: got $gotCensus want $wantCensus")
   }
+}
+
+object ScaleSpec {
+  /** Whether `df`'s executed plan holds a `Union`: the count-check
+    * fallback of [[Scale.prefixCut]] is the only union its callers build.
+    */
+  def fallbackRan(df: DataFrame): Boolean =
+    graft.ExecutedPlans.Adaptive.collect(df.queryExecution.executedPlan) {
+      case u: org.apache.spark.sql.execution.UnionExec => u
+    }.nonEmpty
 }

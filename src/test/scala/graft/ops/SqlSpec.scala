@@ -84,7 +84,7 @@ class SqlSpec extends AnyFunSuite {
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v")
     assert(Sinks.Snapshots.commit(spark, base, path) == 1)
-    Sinks.Snapshots.registerTable("accounts", path)
+    Sinks.Snapshots.registerTable(spark, "accounts", path)
     Seq((2L, "b2", 99.0), (4L, "d", 40.0)).toDF("k", "name", "v")
       .createOrReplaceTempView("staged_accounts")
 
@@ -135,13 +135,30 @@ class SqlSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path).getParentFile)
   }
 
+  test("MERGE INTO: a snapshot table name binds in its own session only") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_mergesql3_").toString + "/t"
+    assert(Sinks.Snapshots.commit(spark, Seq((1L, "a")).toDF("k", "name"), path) == 1)
+    Sinks.Snapshots.registerTable(spark, "session_bound", path)
+    val merge = """MERGE INTO session_bound t USING staged_bound s ON t.k = s.k
+                  |WHEN MATCHED THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    val other = spark.newSession()
+    Seq((2L, "b")).toDF("k", "name").createOrReplaceTempView("staged_bound")
+    other.createDataFrame(Seq((2L, "b"))).toDF("k", "name").createOrReplaceTempView("staged_bound")
+    val unbound = intercept[IllegalArgumentException] { Sinks.Snapshots.mergeSql(other, merge) }
+    assert(unbound.getMessage.contains("not a registered snapshot table"))
+    assert(Sinks.Snapshots.mergeSql(spark, merge) == 2)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path).getParentFile)
+  }
+
   test("MERGE INTO: conditional clauses, SET lists, DELETE route through the CDC fold") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft_mergesql2_").toString + "/t"
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0), (5L, "e", 50.0))
       .toDF("k", "name", "v")
     assert(Sinks.Snapshots.commit(spark, base, path) == 1)
-    Sinks.Snapshots.registerTable("accounts2", path)
+    Sinks.Snapshots.registerTable(spark, "accounts2", path)
     // k=1: matched, v_new < 100  -> conditional UPDATE SET list fires
     // k=2: matched, op='D'       -> DELETE clause fires (first-true order)
     // k=3: matched, v_new >= 100 AND op<>'D' -> NO clause fires -> untouched
