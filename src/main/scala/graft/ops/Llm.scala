@@ -80,14 +80,14 @@ object Llm {
     */
   def unpersistCandidates(): Unit = ()
 
-  /** Default LSH bucket cap: a bucket of n candidates emits n·(n-1)/2
-    * pairs, so 256 bounds any single bucket at ~32k pairs and bounds the
-    * `collect_list` buffer at 256 doc ids (2 KB). Buckets above the cap
-    * are degenerate by construction — at corpus scale only
-    * boilerplate/empty documents collide thousands deep, and those carry
-    * no near-dup signal worth a quadratic blowup.
+  /** LSH bucket cap of the near-dup operators ([[Scale.capBuckets]]): a
+    * bucket of n candidates emits n·(n-1)/2 pairs, so 256 bounds any
+    * single bucket at ~32k pairs and bounds the `collect_list` buffer at
+    * 256 rows. Buckets above the cap are degenerate by construction — at
+    * corpus scale only boilerplate/empty documents collide thousands
+    * deep, and those carry no near-dup signal worth a quadratic blowup.
     */
-  val DefaultMaxBucket = 256
+  val MaxBucket = 256
 
   /** Reusable transform: near-duplicate pairs of any `(doc_id, text)`
     * DataFrame via MinHash-LSH banding, verified on the texts. Output
@@ -96,14 +96,12 @@ object Llm {
     *
     * Filter, then refine:
     *  - Candidates. ONE scan computes the signatures and explodes them
-    *    into `(doc_id, band, bsig)` rows; ONE exchange on (band, bsig)
-    *    serves both the bucket window and the groupBy; each bucket's
-    *    `collect_list` of doc ids expands into its id pairs by a double
-    *    explode, made distinct across bands. Only ids and bucket keys
-    *    cross the exchange: ~160 B per document before compression,
-    *    where the 32-long signature on each of the 8 band rows would
-    *    move ~2.2 KB. Candidate volume is Σ|bucket|², inherent to LSH
-    *    and controlled by the band width, never n².
+    *    into `(doc_id, band, bsig)` rows, whose [[Scale.bucketPairs]]
+    *    (capped at [[MaxBucket]]) are made distinct across bands. Only
+    *    ids and bucket keys cross its one exchange: ~160 B per document
+    *    before compression, where the 32-long signature on each of the 8
+    *    band rows would move ~2.2 KB. Candidate volume is Σ|bucket|²,
+    *    inherent to LSH and controlled by the band width, never n².
     *  - Verify. The distinct pairs join `(doc_id, text)` on id1, then on
     *    id2, and keep the pairs whose exact shingle-set Jaccard
     *    (`graft_shingle_jaccard`, one pass per text) reaches
@@ -119,32 +117,16 @@ object Llm {
     *
     * The whole transform runs inside the consumer's action: no cache,
     * no checkpoint, no session-wide state, so concurrent callers in one
-    * session cannot free each other's blocks.
-    *
-    * Skew safety (the 100 TB case): bucket sizes are counted with a
-    * whole-partition WINDOW count — `WindowExec` buffers each partition
-    * in a spillable row buffer, so even a 10M-row degenerate bucket
-    * (boilerplate docs sharing a band signature) cannot OOM an executor
-    * — and buckets over `maxBucket` are dropped BEFORE the
-    * `collect_list`, whose aggregation buffer does NOT spill. The cap
-    * also bounds the quadratic pair volume of a hot bucket. Dropped
-    * buckets are observable via [[minhashBucketStats]] (the production
+    * session cannot free each other's blocks. The buckets the cap drops
+    * are observable via [[minhashBucketStats]] (the production
     * monitoring hook: run it alongside the dedup to log how much signal
     * the cap discarded).
     */
-  def minhashPairs(docs: DataFrame, threshold: Double,
-                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
+  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
     import graft.functions.Vec
-    val wb = Window.partitionBy("band", "bsig")
-    val cand = minhashExploded(docs).select("doc_id", "band", "bsig")
-      .withColumn("__bn", count(lit(1)).over(wb))
-      .filter(col("__bn") <= maxBucket)
-      .groupBy("band", "bsig")
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id1"), col("ids"))
-      .select(col("id1"), explode(col("ids")).as("id2"))
-      .filter(col("id1") < col("id2"))
+    val cand = Scale.bucketPairs(minhashExploded(docs).select("doc_id", "band", "bsig"),
+        Seq("band", "bsig"), "doc_id", MaxBucket)
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .distinct()
     val text = docs.select("doc_id", "text")
     cand
@@ -181,22 +163,22 @@ object Llm {
 
   /** Observability companion to [[minhashPairs]]: one summary row of the
     * LSH bucket-size distribution — total buckets, max/p-ish sizes, and
-    * how many buckets (and candidate docs) the `maxBucket` cap dropped.
+    * how many buckets (and candidate docs) the [[MaxBucket]] cap of
+    * [[minhashPairs]] dropped.
     * This is the "dropped-bucket metric" a production dedup run logs
     * next to its output; it reuses the bucket aggregation's fixed-size
     * buffers (count/max/sum), so it is safe at any skew. Hash-exact
     * DuckDB oracle ([[graft.OracleSql.dedupBucketStats]]).
     */
-  def minhashBucketStats(docs: DataFrame,
-                         maxBucket: Int = DefaultMaxBucket): DataFrame =
+  def minhashBucketStats(docs: DataFrame): DataFrame =
     minhashExploded(docs)
       .groupBy("band", "bsig").agg(count(lit(1)).as("n"))
       .agg(
         count(lit(1)).as("buckets"),
         max(col("n")).as("max_bucket"),
         sum(when(col("n") > 1, col("n") * (col("n") - 1) / 2).otherwise(0)).as("candidate_pairs"),
-        count(when(col("n") > maxBucket, 1)).as("dropped_buckets"),
-        coalesce(sum(when(col("n") > maxBucket, col("n"))), lit(0)).as("dropped_doc_slots"))
+        count(when(col("n") > MaxBucket, 1)).as("dropped_buckets"),
+        coalesce(sum(when(col("n") > MaxBucket, col("n"))), lit(0)).as("dropped_doc_slots"))
 
   /** End-to-end near-dup resolution: minhash candidate pairs → connected
     * components → canonical doc per cluster (min doc_id). This is the
@@ -427,37 +409,21 @@ object Llm {
     * of any `(vec_id, e)` DataFrame via 12-bit hyperplane signature →
     * bucket equi-join → exact cosine ≥ threshold.
     *
-    * One scan + one shuffle: group per LSH bucket, pairs via double
-    * explode. Same skew guard as minhashPairs: a spillable window count
-    * drops degenerate buckets (e.g. zero/constant embeddings all
-    * hashing to one signature) BEFORE the non-spilling collect_list
-    * buffer, bounding both memory and the quadratic pair volume.
-    * Recall floor vs brute-force cosine ground truth is asserted in
-    * OpsSpec on planted near-dups (single-table 12-plane LSH: collision
-    * probability (1 − θ/π)^12, deterministic — the plane matrix and the
-    * fixture are both fixed).
+    * One scan + one shuffle: the [[Scale.bucketPairs]] of each signature
+    * (capped at [[MaxBucket]]: zero/constant embeddings all hash to one
+    * signature). Recall floor vs brute-force cosine ground truth is
+    * asserted in OpsSpec on planted near-dups (single-table 12-plane
+    * LSH: collision probability (1 − θ/π)^12, deterministic — the plane
+    * matrix and the fixture are both fixed).
     */
-  def embedPairs(vecs: DataFrame, threshold: Double,
-                 maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val withSig = vecs
-      .withColumn("sig", graft.functions.Vec.embSig(col("e")))
-      .select(col("vec_id"), col("e"), col("sig"))
-    val wb = Window.partitionBy("sig")
-    withSig
-      .withColumn("__bn", count(lit(1)).over(wb))
-      .filter(col("__bn") <= maxBucket)
-      .drop("__bn")
-      .groupBy("sig")
-      .agg(collect_list(struct(col("vec_id"), col("e"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(col("items")).as("a"), col("items"))
-      .select(col("a"), explode(col("items")).as("b"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
+  def embedPairs(vecs: DataFrame, threshold: Double): DataFrame =
+    Scale.bucketPairs(
+        vecs.select(col("vec_id"), col("e"), graft.functions.Vec.embSig(col("e")).as("sig")),
+        Seq("sig"), "vec_id", MaxBucket)
       .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
         round(cosine(col("a.e"), col("b.e")), 6).as("cos"))
       .filter(col("cos") >= threshold)
       .orderBy("id1", "id2")
-  }
 
   // ---- similarity search ---------------------------------------------
 
@@ -1450,24 +1416,27 @@ object Llm {
     * the only driver materialization is the one-row-per-source card.
     */
   def q_pipeline_release(s: SparkSession, d: String): DataFrame = {
-    val (p, base) = releasePipeline(s, d)
-    // the result is a local relation: free the checkpoints behind every
-    // stage slot (the bench runs this gate repeatedly — blocks must not
-    // accumulate)
-    Scratch.release(p.snapshot.values.toSeq: _*)
-    // the publish stage already read the committed card back into a
-    // local relation (one row per source), so the whole scratch tree —
-    // corpus snapshot AND card snapshot — can go before returning;
+    // the publish stage reads the committed card back into a local
+    // relation, so the whole scratch tree — corpus snapshot AND card
+    // snapshot — can go before returning, and goes when a step throws:
     // repeated Verify/Bench/smoke runs must not accumulate directories
     // under java.io.tmpdir
-    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    p("result")
+    val base = java.nio.file.Files.createTempDirectory("graft_release_")
+    try {
+      val p = releasePipeline(s, d, base)
+      // the result is a local relation: free the checkpoints behind every
+      // stage slot (the bench runs this gate repeatedly — blocks must not
+      // accumulate)
+      Scratch.release(p.snapshot.values.toSeq: _*)
+      p("result")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
-  /** Builds and RUNS the release composition, returning the pipeline
-    * context (every stage slot inspectable — PipelineDataSpec counts
-    * corpus-snapshot rescans in the composed plan) and the scratch base
-    * the caller must delete. [[q_pipeline_release]] is the gate wrapper.
+  /** Builds and RUNS the release composition with its snapshots under
+    * `base`, returning the pipeline context (every stage slot
+    * inspectable — PipelineDataSpec counts corpus-snapshot rescans in the
+    * composed plan). The caller owns `base`; [[q_pipeline_release]] is
+    * the gate wrapper.
     *
     * Shape: every per-source decision is one Spark action whose small
     * result the driver holds — the Neyman allocation, the sampler's
@@ -1483,9 +1452,8 @@ object Llm {
     * (SessionSpec).
     */
   private[graft] def releasePipeline(
-      s: SparkSession, d: String): (graft.pipeline.DPP, java.nio.file.Path) = {
+      s: SparkSession, d: String, base: java.nio.file.Path): graft.pipeline.DPP = {
     import graft.pipeline._
-    val base = java.nio.file.Files.createTempDirectory("graft_release_")
     val corpusSnap = s"$base/corpus_snapshot"
     val cardSnap = s"$base/release_card"
     val p = DPP("raw" -> documents(s, d))
@@ -1532,7 +1500,7 @@ object Llm {
         val back = Sinks.Snapshots.read(s, cardSnap)
         sortedBySource(back.collect(), back.schema, s)
       } >> p.result)
-    (p, base)
+    p
   }
 
   /** The release pipeline's exact dedup: of the rows sharing a
@@ -2363,9 +2331,9 @@ object Llm {
     * leakage that [[q_contamination]]'s exact n-gram intersection misses.
     * Both sides band their signatures and meet in a shuffle equi-join on
     * (band, bucket-signature) — candidates are Σ|train-bucket|·|eval-
-    * bucket|, never train × eval — with the same spillable-window bucket
-    * cap as [[minhashPairs]] guarding degenerate buckets on the large
-    * (train) side. The eval side is benchmark-sized at 100 TB, so AQE
+    * bucket|, never train × eval — with [[Scale.capBuckets]] at
+    * [[MaxBucket]] guarding degenerate buckets on the large (train) side.
+    * The eval side is uncapped: benchmark-sized at 100 TB, so AQE
     * broadcasts its exploded bands; train bytes never shuffle twice.
     * Hash-exact DuckDB oracle ([[graft.OracleSql.contaminationFuzzy]]);
     * OpsSpec plants a paraphrased eval doc and asserts it is caught and
@@ -2385,12 +2353,8 @@ object Llm {
   }
 
   def contaminationFuzzy(train: DataFrame, eval_ : DataFrame,
-                         threshold: Double,
-                         maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val wb = Window.partitionBy("band", "bsig")
-    val t = minhashExploded(train)
-      .withColumn("__bn", count(lit(1)).over(wb))
-      .filter(col("__bn") <= maxBucket)
+                         threshold: Double): DataFrame = {
+    val t = Scale.capBuckets(minhashExploded(train), Seq("band", "bsig"), MaxBucket)
       .select(col("doc_id").as("train_id"), col("sigs").as("tsigs"),
         col("band"), col("bsig"))
     val e = minhashExploded(eval_)
@@ -2422,8 +2386,8 @@ object Llm {
     * intersect/union check decide. One candidate pair can share several
     * prefix tokens → `dropDuplicates` before the verify.
     *
-    * `maxToken` (opt-in) applies the [[minhashPairs]] spillable window
-    * cap to degenerate prefix tokens. Default = no cap, because unlike
+    * `maxToken` (opt-in) applies the [[Scale.capBuckets]] skew guard to
+    * degenerate prefix tokens. Default = no cap, because unlike
     * the LSH ops this join's contract is EXACTNESS — capping trades
     * recall for skew-safety and is only for corpora whose df ranking
     * has already collapsed (boilerplate floods). The gate query keeps
@@ -2447,11 +2411,7 @@ object Llm {
       .select(col("id"), col("toks"), col("n"),
         explode(slice(col("toks"), lit(1), col("plen"))).as("w"))
     val capped =
-      if (maxToken == Int.MaxValue) prefix
-      else prefix
-        .withColumn("__wn", count(lit(1)).over(Window.partitionBy("w")))
-        .filter(col("__wn") <= maxToken)
-        .drop("__wn")
+      if (maxToken == Int.MaxValue) prefix else Scale.capBuckets(prefix, Seq("w"), maxToken)
     val a = capped.select(col("w"), col("id").as("id1"),
       col("toks").as("t1"), col("n").as("n1"))
     val b = capped.select(col("w"), col("id").as("id2"),
@@ -3073,13 +3033,9 @@ object Llm {
     * sampling scheme, α = 0.5): language quotas ∝ share^α — flattening
     * the Zipf of languages so low-resource ones are upsampled relative
     * to proportional sampling — then a deterministic md5-ranked draw of
-    * each language's quota. Everything derives from the data in three
-    * tiny aggregations (language census → α-weights → normalized
-    * quotas), collected as one local relation. α-weights round to 12
-    * digits and sum as DECIMAL so normalization is engine- and
-    * order-exact; quotas use floor(x + 0.5) — both sides of the oracle
-    * compute identical doubles (sqrt is IEEE-correctly-rounded, unlike
-    * pow).
+    * each language's quota. Everything derives from one collected
+    * language census: [[temperatureQuotas]] turns it into a local
+    * relation on the driver, with the oracle's arithmetic.
     *
     * The draw is [[graft.ops.Scale.quotaSample]] with that relation as
     * both its quotas and its group counts, so no task ranks a whole
@@ -3091,27 +3047,36 @@ object Llm {
     * they did at the old quota join (a null key never matches).
     */
   def q_temperature_sample(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val target = 200
+    import s.implicits._
     val docs = documents(s, d)
-    val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
-    val tot = counts.agg(sum("n_l").as("n_tot"))
-    val weights = counts.crossJoin(broadcast(tot))
-      .withColumn("w",
-        round(sqrt(col("n_l").cast("double") / col("n_tot")) + lit(1e-15), 12)
-          .cast(DecimalType(16, 12)))
-    val norm = weights.agg(sum("w").as("w_sum"))
-    val quotas = weights.crossJoin(broadcast(norm))
-      .withColumn("quota",
-        floor(lit(target) * (col("w").cast("double") / col("w_sum").cast("double")) +
-          lit(0.5)).cast("long"))
-      .filter(col("lang").isNotNull)
-      .select(col("lang"), col("quota").as("n_h"), col("n_l").as("__grp_n"))
-    val alloc = s.createDataFrame(java.util.Arrays.asList(quotas.collect(): _*), quotas.schema)
+    val census = docs.groupBy("lang").agg(count(lit(1))).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1)))
+    val alloc = temperatureQuotas(census.toSeq, target = 200).toDF("lang", "n_h", "__grp_n")
     Scale.quotaSample(docs, Seq("lang"), md5(col("doc_id").cast("string")), Seq(col("doc_id")),
       Right(alloc.select("lang", "n_h")), groupCounts = Some(alloc.select("lang", "__grp_n")))
       .select(col("doc_id"), col("lang"), col("rn"), col("n_h").as("quota"))
       .orderBy("doc_id")
+  }
+
+  /** The α = 0.5 quotas of [[q_temperature_sample]] from a language
+    * census `(lang, n_l)`: `(lang, quota, n_l)` per non-null language.
+    * The arithmetic is the oracle's SQL, step for step: w =
+    * round(sqrt(n_l / n_tot) + 1e-15, 12) as DECIMAL(16,12), summed
+    * exactly, quota = floor(target · w / Σw + 0.5) on doubles (sqrt is
+    * IEEE-correctly-rounded, unlike pow). `n_tot` and Σw include the
+    * null-`lang` row, whose quota is then dropped.
+    */
+  private[graft] def temperatureQuotas(census: Seq[(Option[String], Long)],
+                                       target: Int): Seq[(String, Long, Long)] = {
+    import java.math.{BigDecimal => JBig, RoundingMode}
+    val nTot = census.map(_._2).sum.toDouble
+    // Spark's round(double, 12) and its double → DECIMAL(16,12) cast
+    def dec12(x: Double) = JBig.valueOf(x).setScale(12, RoundingMode.HALF_UP)
+    val w = census.map { case (l, n) =>
+      (l, n, dec12(dec12(math.sqrt(n / nTot) + 1e-15).doubleValue)) }
+    val wSum = w.map(_._3).foldLeft(JBig.ZERO)(_ add _).doubleValue
+    w.collect { case (Some(l), n, wl) =>
+      (l, math.floor(target * (wl.doubleValue / wSum) + 0.5).toLong, n) }
   }
 
   def q_mix_sample(s: SparkSession, d: String): DataFrame = {

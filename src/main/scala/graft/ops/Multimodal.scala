@@ -292,11 +292,12 @@ object Multimodal {
     * candidate pairs via 4×16-bit band buckets — by pigeonhole, two
     * hashes within hamming distance 3 share at least one exact 16-bit
     * band, so the ≤3 screen has FULL recall while candidate volume
-    * stays Σ|bucket|², never n². Same spill-safe bucket cap as the LSH
-    * dedups; `bit_count(xor)` is the exact hamming check. Planted
-    * canary (doc −1 = copy of the smallest doc's hash) keeps the gate
-    * non-vacuous — the fixture has no duplicate payloads. Rows-only
-    * (stub decode isn't SQL); pair invariants in OpsSpec.
+    * stays Σ|bucket|², never n²: the [[Scale.bucketPairs]] of each
+    * band, capped at `Llm.MaxBucket`; `bit_count(xor)` is the exact
+    * hamming check. Planted canary (doc −1 = copy of the smallest doc's
+    * hash) keeps the gate non-vacuous — the fixture has no duplicate
+    * payloads. Hash-exact DuckDB oracle ([[graft.OracleSql.mmPhash]]);
+    * pair invariants in OpsSpec.
     */
   def q_mm_phash(s: SparkSession, d: String): DataFrame = {
     val base = phashes(s, d)
@@ -308,17 +309,7 @@ object Multimodal {
     val banded = all.select(col("doc_id"), col("phash"),
       explode(array(bands: _*)).as("bk"))
       .select(col("doc_id"), col("phash"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val wb = org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")
-    banded
-      .withColumn("__bn", count(lit(1)).over(wb))
-      .filter(col("__bn") <= graft.ops.Llm.DefaultMaxBucket)
-      .drop("__bn")
-      .groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc_id"), col("phash"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(col("items")).as("a"), col("items"))
-      .select(col("a"), explode(col("items")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
+    Scale.bucketPairs(banded, Seq("band", "bkey"), "doc_id", Llm.MaxBucket)
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
         bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).cast("long").as("hamming"))
       .filter(col("hamming") <= 3)

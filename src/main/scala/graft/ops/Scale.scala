@@ -929,6 +929,54 @@ object Scale {
           s"binned join needs integral bounds (cast timestamps to an epoch integer): ${j.condition.get.sql}"))
     }
 
+  /** Largest k-means cluster [[semanticDedup]] pairs within; the
+    * members of a larger cluster are all kept (the [[capBuckets]] guard).
+    */
+  val MaxCluster = 4096
+
+  /** The rows of `df` whose bucket — the rows sharing the `bucket`
+    * values, null keys included — holds at most `cap` rows: the skew
+    * guard of every bucket-pair operator ([[bucketPairs]], and alone the
+    * train side of `Llm.contaminationFuzzy` and `Llm.setSimJoin`'s opt-in
+    * token cap).
+    *
+    * Bucket sizes are counted with a whole-partition window: `WindowExec`
+    * buffers a partition in a spillable row buffer, so even a 10M-row
+    * degenerate bucket (boilerplate documents sharing a band signature, a
+    * constant embedding column) cannot OOM an executor. A `collect_list`
+    * aggregation buffer does NOT spill, so the cap must run before any
+    * per-bucket `collect_list`; it also bounds a hot bucket's quadratic
+    * pair volume. Shuffles: one on `bucket`, which a following
+    * `groupBy(bucket)` reuses.
+    */
+  private[graft] def capBuckets(df: DataFrame, bucket: Seq[String], cap: Int): DataFrame =
+    df.withColumn("__bn", count(lit(1)).over(Window.partitionBy(bucket.map(col): _*)))
+      .filter(col("__bn") <= cap)
+      .drop("__bn")
+
+  /** The engine's one capped bucket-pair expander, the candidate step of
+    * the near-dup operators (`Llm.minhashPairs`, `Llm.embedPairs`,
+    * [[semanticDedup]], `Multimodal.q_mm_phash`): every two rows of `df`
+    * that share a bucket of at most `cap` rows ([[capBuckets]]). Output:
+    * two structs `a` and `b` of df's non-bucket columns with
+    * `a.<id> < b.<id>`, so a null id pairs with nothing. Two rows that
+    * share several buckets pair once per bucket.
+    *
+    * The window count and the `groupBy(bucket)` share one exchange, which
+    * carries `df`'s columns: callers project their payload first. Each
+    * bucket's `collect_list` expands into its pairs by a double explode;
+    * pair volume is Σ|bucket|², never n².
+    */
+  private[graft] def bucketPairs(df: DataFrame, bucket: Seq[String], id: String,
+                                 cap: Int): DataFrame =
+    capBuckets(df, bucket, cap)
+      .groupBy(bucket.map(col): _*)
+      .agg(collect_list(struct(df.columns.filterNot(bucket.contains).map(col): _*)).as("items"))
+      .filter(size(col("items")) > 1)
+      .select(explode(col("items")).as("a"), col("items"))
+      .select(col("a"), explode(col("items")).as("b"))
+      .filter(col(s"a.$id") < col(s"b.$id"))
+
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): k-means-cluster the embedding corpus, then
     * within each cluster drop every item that has a cosine-similar
@@ -938,11 +986,8 @@ object Scale {
     * (SemDeDup itself runs k in the tens of thousands at
     * billion-sample scale for exactly this reason).
     *
-    * Skew safety: clusters over `maxCluster` are EXCLUDED from pair
-    * generation (their members are all kept) via a spillable window
-    * count before the non-spilling `collect_list`, the same guard as
-    * the LSH dedup buckets — a degenerate cluster (e.g. a constant
-    * embedding column) cannot OOM an executor or go quadratic. A
+    * Candidates are the [[bucketPairs]] of each cluster: a cluster over
+    * [[MaxCluster]] yields no pair, so its members are all kept. A
     * well-sized k keeps real clusters far under the cap.
     *
     * Keep rule (standard SemDeDup screening, not transitive-closure
@@ -954,8 +999,7 @@ object Scale {
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     k: Int, threshold: Double,
-                    maxIters: Int = 5,
-                    maxCluster: Int = 4096): DataFrame = {
+                    maxIters: Int = 5): DataFrame = {
     val assigned = kMeans(
       df.select(col(idCol), col(vecCol).cast("array<double>").as("__v")),
       "__v", k, maxIters)
@@ -963,17 +1007,8 @@ object Scale {
       // pair generation reads this twice (pairs + left join back) and it
       // costs a full k×dim scan per row to recompute — materialize once
       .localCheckpoint()
-    val wc = Window.partitionBy("cluster")
-    val dropped = assigned
-      .withColumn("__cn", count(lit(1)).over(wc))
-      .filter(col("__cn") <= maxCluster)
-      .drop("__cn")
-      .groupBy("cluster")
-      .agg(collect_list(struct(col(idCol), col("__v"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(col("items")).as("a"), col("items"))
-      .select(col("a"), explode(col("items")).as("b"))
-      .filter(col(s"a.$idCol") < col(s"b.$idCol"))
+    val dropped = bucketPairs(assigned.select(col(idCol), col("__v"), col("cluster")),
+        Seq("cluster"), idCol, MaxCluster)
       .filter(graft.functions.Vec.cosine(col("a.__v"), col("b.__v")) >= threshold)
       .select(col(s"b.$idCol").as("__dup_id")).distinct()
     assigned.join(dropped, col(idCol) === col("__dup_id"), "left")

@@ -61,8 +61,8 @@ object syntax {
 
     /** [[Scale.semanticDedup]]: SemDeDup k-means-bucketed cosine screen. */
     def semanticDedup(idCol: String, vecCol: String, k: Int, threshold: Double,
-                      maxIters: Int = 5, maxCluster: Int = 4096): DataFrame =
-      Scale.semanticDedup(df, idCol, vecCol, k, threshold, maxIters, maxCluster)
+                      maxIters: Int = 5): DataFrame =
+      Scale.semanticDedup(df, idCol, vecCol, k, threshold, maxIters)
 
     /** [[Scale.triangleCount]] over `df` as an edge list. */
     def triangleCount(srcCol: String, dstCol: String): DataFrame =

@@ -100,7 +100,7 @@ class NeymanAllocSpec extends AnyFunSuite {
       strata <- Gen.listOfN(k, stratum)
       budget <- Gen.oneOf(Gen.chooseNum(0L, 40L), Gen.const(1000L))
     } yield (strata.flatMap { case (s, cs) => cs.map(c => (s, c)) }, budget)
-    check(Prop.forAll(gen) { case (docs, budget) =>
+    check(Prop.forAllNoShrink(gen) { case (docs, budget) =>
       val m = mismatch(docs, budget)
       m.isEmpty :| m.getOrElse("")
     }, n = 25)

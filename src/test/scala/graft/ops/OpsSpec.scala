@@ -288,12 +288,12 @@ class OpsSpec extends AnyFunSuite {
     val real = "the quick brown fox jumps over the lazy dog again and again today " * 3
     val docs = ((1L to 1000L).map(i => (i, boiler)) ++
       Seq((2001L, real), (2002L, real.replace("lazy", "sleepy")))).toDF("doc_id", "text")
-    val pairs = Llm.minhashPairs(docs, threshold = 0.5, maxBucket = 256)
+    val pairs = Llm.minhashPairs(docs, threshold = 0.5)
       .select("id1", "id2").as[(Long, Long)].collect()
     assert(pairs.toSet == Set((2001L, 2002L)),
       s"expected only the real near-dup pair, got ${pairs.length} pairs")
     // the observability companion reports what the cap discarded
-    val stats = Llm.minhashBucketStats(docs, maxBucket = 256)
+    val stats = Llm.minhashBucketStats(docs)
       .select("dropped_buckets", "max_bucket").as[(Long, Long)].head()
     assert(stats._1 >= 1 && stats._2 >= 1000)
   }
@@ -2123,6 +2123,47 @@ class OpsSpec extends AnyFunSuite {
     assert(byLang(hi).toDouble / total < corpus(hi) / nTot, s"$hi not flattened")
     assert(byLang(lo).toDouble / total > corpus(lo) / nTot, s"$lo not boosted")
     assert(Llm.q_temperature_sample(spark, sf).collect().toSeq == rows.toSeq)
+  }
+
+  test("temperatureQuotas ≡ the SQL quota chain on random language censuses") {
+    import org.apache.spark.sql.types.DecimalType
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import spark.implicits._
+    // the gate's former all-SQL quotas: census → n_tot → DECIMAL(16,12)
+    // α-weights → their sum → floor(200·w/Σw + 0.5), null lang dropped
+    def sqlQuotas(census: Seq[(Option[String], Long)]) = {
+      val counts = census.toDF("lang", "n_l")
+      val tot = counts.agg(sum("n_l").as("n_tot"))
+      val weights = counts.crossJoin(broadcast(tot))
+        .withColumn("w",
+          round(sqrt(col("n_l").cast("double") / col("n_tot")) + lit(1e-15), 12)
+            .cast(DecimalType(16, 12)))
+      val norm = weights.agg(sum("w").as("w_sum"))
+      weights.crossJoin(broadcast(norm))
+        .withColumn("quota",
+          floor(lit(200) * (col("w").cast("double") / col("w_sum").cast("double")) +
+            lit(0.5)).cast("long"))
+        .filter(col("lang").isNotNull)
+        .select(col("lang"), col("quota"), col("n_l")).as[(String, Long, Long)].collect().toSet
+    }
+    // 1–12 languages plus, half the time, a null-lang row; counts from
+    // singletons to 10^12, so shares span twelve decades
+    val n = Gen.frequency(1 -> Gen.choose(1L, 5L), 2 -> Gen.choose(1L, 100000L),
+      1 -> Gen.choose(1L, 1000000000000L))
+    val censuses = for {
+      k <- Gen.choose(1, 12)
+      ns <- Gen.listOfN(k, n)
+      nullRow <- Gen.option(n)
+    } yield ns.zipWithIndex.map { case (c, i) => (Option(s"l$i"), c) } ++
+      nullRow.map(c => (Option.empty[String], c))
+    // no shrinking: each shrink step re-runs the Spark reference
+    val prop = Prop.forAllNoShrink(censuses) { census =>
+      val got = Llm.temperatureQuotas(census, target = 200)
+      (got.toSet == sqlQuotas(census)) :| s"census=$census got=$got"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("q_basket_lift: pair lifts match a driver-side replay") {

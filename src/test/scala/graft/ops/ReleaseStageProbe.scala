@@ -62,7 +62,8 @@ object ReleaseStageProbe {
 
     // rescans of the corpus snapshot inside the PRODUCTION (un-barriered)
     // composition — what the 100 TB story actually pays per stage slot
-    val (p, base2) = Llm.releasePipeline(s, "/root/testdata/sf0.001")
+    val base2 = java.nio.file.Files.createTempDirectory("graft_release_")
+    val p = Llm.releasePipeline(s, "/root/testdata/sf0.001", base2)
     for (slot <- Seq("normed", "kept", "uniq", "deduped", "sampled", "result")) {
       val n = p(slot).queryExecution.optimizedPlan.collect {
         case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] &&

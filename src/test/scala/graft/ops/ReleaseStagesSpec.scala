@@ -30,7 +30,7 @@ class ReleaseStagesSpec extends AnyFunSuite {
       ks <- Gen.listOfN(n, keys)
       texts <- Gen.listOfN(n, Gen.oneOf("a b", "c", "", "d e f"))
     } yield ids.toSeq.zip(ks).zip(texts).map { case ((id, k), t) => (id, t, k) }
-    val prop = Prop.forAll(frames) { docs =>
+    val prop = Prop.forAllNoShrink(frames) { docs =>
       val df = docs.toDF("doc_id", "text", "norm_key")
       val got = Llm.releaseDedupExact(df)
       val want = Scale.dedupKeepFirst(df, Seq(col("norm_key")), Seq(col("doc_id")))

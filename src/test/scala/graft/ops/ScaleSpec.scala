@@ -225,6 +225,52 @@ class ScaleSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("bucketPairs ≡ null-safe self-join of the capped buckets; capBuckets ≡ count-and-filter") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import spark.implicits._
+    val cap = 3
+    // up to 6 distinct two-column bucket keys (either column may be
+    // null) of 1 to cap + 2 rows, mostly exactly cap or cap + 1; ids are
+    // null or drawn from a small range, so they repeat within a bucket
+    val keys = for (k1 <- Seq(None, Some("a"), Some("b")); k2 <- Seq(None, Some(0), Some(1)))
+      yield (k1, k2)
+    val frames = for {
+      m <- Gen.choose(0, 6)
+      picked <- Gen.pick(m, keys)
+      sizes <- Gen.listOfN(m, Gen.frequency(2 -> Gen.oneOf(cap, cap + 1), 1 -> Gen.choose(1, cap + 2)))
+      rows = picked.toSeq.zip(sizes).flatMap { case (k, n) => Seq.fill(n)(k) }
+      ids <- Gen.listOfN(rows.size, Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+        4 -> Gen.choose(0L, 6L).map(Option(_))))
+    } yield rows.indices.map(i => (rows(i)._1, rows(i)._2, ids(i), s"r$i"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // no shrinking: each shrink step re-runs every Spark query of the frame
+    val prop = Prop.forAllNoShrink(frames) { data =>
+      val df = data.toDF("k1", "k2", "id", "v")
+      def sameKey(l: String, r: String) =
+        col(s"$l.k1") <=> col(s"$r.k1") && col(s"$l.k2") <=> col(s"$r.k2")
+      // the reference: bucket sizes by a grouped count, rows of buckets
+      // within the cap by a null-safe join, pairs by a null-safe self-join
+      val small = df.as("r").join(df.groupBy("k1", "k2").count().as("s"), sameKey("r", "s"))
+        .filter(col("count") <= cap).select("r.*")
+      val want = small.as("a").join(small.as("b"), sameKey("a", "b") && col("a.id") < col("b.id"))
+        .select("a.id", "a.v", "b.id", "b.v")
+      val got = Scale.bucketPairs(df, Seq("k1", "k2"), "id", cap)
+        .select("a.id", "a.v", "b.id", "b.v")
+      ((rows(got) == rows(want)) :| "bucketPairs" &&
+        (rows(Scale.capBuckets(df, Seq("k1", "k2"), cap)) == rows(small)) :| "capBuckets") :|
+        s"frame=$data"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+    // the output is the two structs of the non-bucket columns
+    val one = Seq((Option("a"), Option(0), Option(1L), "x")).toDF("k1", "k2", "id", "v")
+    val out = Scale.bucketPairs(one, Seq("k1", "k2"), "id", cap)
+    assert(out.columns.toSeq == Seq("a", "b"))
+    assert(out.select("a.*").columns.toSeq == Seq("id", "v"))
+    assert(Scale.bucketPairs(one.limit(0), Seq("k1", "k2"), "id", cap).isEmpty)
+  }
+
   test("quotaSample fails loudly on a malformed quota relation (missing or duplicate groups)") {
     val ev = Tables.events(spark, sf).select("event_id", "event_type", "value")
     val hash = md5(concat_ws(":", col("event_type"), col("event_id")))

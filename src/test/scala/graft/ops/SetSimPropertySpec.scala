@@ -33,7 +33,7 @@ class SetSimPropertySpec extends AnyFunSuite {
       docs <- Gen.listOfN(n, doc)
       t <- Gen.oneOf(0.3, 0.5, 0.7, 0.9, 1.0)
     } yield (docs, t)
-    check(Prop.forAll(gen) { case (docs, t) =>
+    check(Prop.forAllNoShrink(gen) { case (docs, t) =>
       val df = docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }
         .toDF("doc_id", "text")
       val sets = docs.map(_.split(" ").toSet).zipWithIndex

@@ -71,8 +71,9 @@ class PipelineDataSpec extends AnyFunSuite {
     // LSH pairs themselves read the survivor-text checkpoint); the sampling
     // stage's internal localCheckpoint barrier cuts lineage, so
     // everything downstream (incl. the published card) reads it 0 times.
-    val (p, base) = graft.ops.Llm.releasePipeline(spark, sf)
+    val base = java.nio.file.Files.createTempDirectory("graft_release_")
     try {
+      val p = graft.ops.Llm.releasePipeline(spark, sf, base)
       def snapScans(slot: String): Int =
         p(slot).queryExecution.optimizedPlan.collect {
           case r: org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -104,8 +105,10 @@ class PipelineDataSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.ExecutedPlans.Adaptive
     // the steps run as the pipeline is built; the result is a local relation
-    val ((p, base), plans) = graft.ExecutedPlans.of(spark)(graft.ops.Llm.releasePipeline(spark, sf))
+    val base = java.nio.file.Files.createTempDirectory("graft_release_")
     try {
+      val (p, plans) =
+        graft.ExecutedPlans.of(spark)(graft.ops.Llm.releasePipeline(spark, sf, base))
       val textExchanges = plans.flatMap(Adaptive.collect(_) {
         case e: ShuffleExchangeExec if e.output.exists(_.name == "text") => e
       })
@@ -120,6 +123,20 @@ class PipelineDataSpec extends AnyFunSuite {
       assert(p("result").collect().nonEmpty)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("release pipeline: a step that throws leaves no scratch directory behind") {
+    // a missing input throws at the first step; q_pipeline_release owns
+    // the snapshot directory and deletes it however the run ends
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_release_")).toSet
+    val before = scratchDirs
+    val noDocs = java.nio.file.Files.createTempDirectory("graft_no_documents_")
+    try {
+      intercept[Exception](graft.ops.Llm.q_pipeline_release(spark, noDocs.toString))
+      assert((scratchDirs -- before).isEmpty, s"left behind: ${scratchDirs -- before}")
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(noDocs.toFile)
   }
 
   test("laziness: pipeline steps build ONE fused Catalyst plan (no mid-pipeline actions)") {

@@ -35,7 +35,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: common(xs, fn, ys) is a pointwise map") {
-    check(Prop.forAll(smallInts) { vs =>
+    check(Prop.forAllNoShrink(smallInts) { vs =>
       val names = vs.indices.map(i => s"v$i")
       val p = DPP(names.zip(vs.map(scalarI)).toMap)
       p.common(names.map(Ref(_)), addOne, names.map(n => Ref(s"o_$n")))
@@ -46,7 +46,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: sequence(s1, s2) ≡ sequence(s1); sequence(s2)") {
-    check(Prop.forAll(Gen.chooseNum(-100, 100)) { v =>
+    check(Prop.forAllNoShrink(Gen.chooseNum(-100, 100)) { v =>
       val p1 = DPP("x" -> scalarI(v))
       p1.sequence(p1.x >> addOne >> p1.a, Prev >> double_ >> p1.b)
       val p2 = DPP("x" -> scalarI(v))
@@ -57,7 +57,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: PREV ≡ explicit naming") {
-    check(Prop.forAll(Gen.chooseNum(-100, 100)) { v =>
+    check(Prop.forAllNoShrink(Gen.chooseNum(-100, 100)) { v =>
       val pa = DPP("x" -> scalarI(v))
       pa.common(pa.x >> addOne >> pa.mid)
       pa.common(Prev >> double_ >> pa.out)
@@ -69,7 +69,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: ALL >> id >> ALL is identity on the initial environment") {
-    check(Prop.forAll(smallInts) { vs =>
+    check(Prop.forAllNoShrink(smallInts) { vs =>
       val names = vs.indices.map(i => s"v$i")
       val p = DPP(names.zip(vs.map(scalarI)).toMap)
       p.common(All >> fn("id")(df => df) >> All)
@@ -78,7 +78,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: select runs exactly the first true branch") {
-    check(Prop.forAll(Gen.listOfN(4, Gen.oneOf(true, false))) { conds =>
+    check(Prop.forAllNoShrink(Gen.listOfN(4, Gen.oneOf(true, false))) { conds =>
       val p = DPP("x" -> scalarI(0))
       val branches = conds.zipWithIndex.map { case (c, i) =>
         (p.x >> fn(s"set$i")(_.select(lit(i + 1).as("value"))) >> p.x,
@@ -94,7 +94,7 @@ class PipelineLawsSpec extends AnyFunSuite {
   }
 
   test("law: branch(Last) takes the last write; Merge.First keeps the first") {
-    check(Prop.forAll(Gen.chooseNum(-50, 50), Gen.chooseNum(-50, 50)) { (a, b) =>
+    check(Prop.forAllNoShrink(Gen.chooseNum(-50, 50), Gen.chooseNum(-50, 50)) { (a, b) =>
       val setA = fn("setA")(_.select(lit(a).as("value")))
       val setB = fn("setB")(_.select(lit(b).as("value")))
       val pLast = DPP("x" -> scalarI(0))

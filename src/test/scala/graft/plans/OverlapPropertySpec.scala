@@ -38,7 +38,7 @@ class OverlapPropertySpec extends AnyFunSuite {
       bin <- Gen.oneOf(1L, 7L, 64L, 100L, 1000L)
       inclusive <- Gen.oneOf(true, false)
     } yield (ls, rs, bin, inclusive)
-    check(Prop.forAll(gen) { case (ls, rs, bin, inclusive) =>
+    check(Prop.forAllNoShrink(gen) { case (ls, rs, bin, inclusive) =>
       val l = ls.zipWithIndex.map { case ((s, e), i) => (i.toLong, s, e) }
         .toDF("lid", "ls", "le")
       val r = rs.zipWithIndex.map { case ((s, e), i) => (i.toLong, s, e) }
@@ -81,7 +81,7 @@ class OverlapPropertySpec extends AnyFunSuite {
       boundType <- Gen.oneOf("int", "bigint")
     } yield (pts, ivs, bin, lowerIncl, upperIncl, lowerFlip, upperFlip,
       lowerFirst, ptLeft, ptType, boundType)
-    check(Prop.forAll(gen) { case (pts, ivs, bin, lowerIncl, upperIncl,
+    check(Prop.forAllNoShrink(gen) { case (pts, ivs, bin, lowerIncl, upperIncl,
         lowerFlip, upperFlip, lowerFirst, ptLeft, ptType, boundType) =>
       val points = pts.zipWithIndex.map { case (p, i) => (i.toLong, p) }
         .toDF("pid", "pt0")
@@ -130,7 +130,7 @@ class OverlapPropertySpec extends AnyFunSuite {
       rs <- Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, validInterval))
       bin <- Gen.oneOf(1L, 32L, 100L)
     } yield (ls, rs, bin)
-    check(Prop.forAll(gen) { case (ls, rs, bin) =>
+    check(Prop.forAllNoShrink(gen) { case (ls, rs, bin) =>
       val l = ls.zipWithIndex.map { case ((s, e), i) => (i.toLong, s, e) }
         .toDF("lid", "ls", "le")
       val r = rs.zipWithIndex.map { case ((s, e), i) => (i.toLong, s, e) }
