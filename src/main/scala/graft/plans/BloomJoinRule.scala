@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, BloomFilterMightContain, EqualTo, Expression, IsNotNull, Literal, ScalarSubquery, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, BloomFilterMightContain, EqualTo, ExprId, Expression, IsNotNull, Literal, ScalarSubquery, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.optimizer.ColumnPruning
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
@@ -33,7 +33,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * The explicit `Scale.bloomPrefilterJoin` is the same injection
   * ([[prefilter]]), sized by the caller's key count and fpp instead of
   * the creation side's row-count estimate, and applied without the
-  * size and selectivity checks below.
+  * size and selectivity checks below. That call puts its probe into the
+  * ANALYZED plan, so `InferFiltersFromConstraints` copies it through the
+  * join key onto the creation side, where it can drop no row; this rule
+  * runs after inference and removes such copies ([[dropProbeCopies]]),
+  * so both paths run one probe, on the fact side.
   */
 object BloomJoinRule extends Rule[LogicalPlan] {
 
@@ -106,13 +110,14 @@ object BloomJoinRule extends Rule[LogicalPlan] {
     }
 
   /** `app` filtered by a bloom over `creationKey`'s hashes; `bloom`
-    * builds the sized aggregate over those hashes.
+    * builds the sized aggregate over those hashes, output as `name`.
     */
   private def inject(app: LogicalPlan, appKey: Expression,
                      creation: LogicalPlan, creationKey: Expression)
-                    (bloom: Expression => BloomFilterAggregate): LogicalPlan = {
+                    (bloom: Expression => BloomFilterAggregate,
+                     name: String = "graft_bloom"): LogicalPlan = {
     val agg = bloom(new XxHash64(Seq(creationKey)))
-    val alias = Alias(agg.toAggregateExpression(), "graft_bloom")()
+    val alias = Alias(agg.toAggregateExpression(), name)()
     // prune the creation side to the key column before it runs as a
     // standalone subquery job (the main optimizer will not revisit it)
     val aggregate = ColumnPruning(Aggregate(Nil, Seq(alias), creation))
@@ -129,6 +134,9 @@ object BloomJoinRule extends Rule[LogicalPlan] {
       case None => new BloomFilterAggregate(h)
     }
 
+  /** The name of the bloom [[prefilter]] builds, which marks its probe. */
+  private val ExplicitBloom = "graft_bloom_explicit"
+
   /** `j` with its LEFT side prefiltered by a bloom over the right side's
     * keys (the first equi conjunct), of `expectedKeys` items and
     * `numBits` bits — Spark caps both at its runtime bloom-filter
@@ -137,12 +145,40 @@ object BloomJoinRule extends Rule[LogicalPlan] {
   private[graft] def prefilter(j: Join, expectedKeys: Long, numBits: Long): Join = {
     val (lk, rk) = equiKeys(j).headOption.getOrElse(
       throw new IllegalArgumentException(s"bloom prefilter needs an equi-join, got ${j.condition}"))
-    j.copy(left = inject(j.left, lk, j.right, rk) { h =>
-      new BloomFilterAggregate(h, Literal(expectedKeys), Literal(numBits))
-    })
+    j.copy(left = inject(j.left, lk, j.right, rk)(
+      h => new BloomFilterAggregate(h, Literal(expectedKeys), Literal(numBits)), ExplicitBloom))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
+  /** The subquery ids of the probes in `plan` on blooms that
+    * [[prefilter]] built.
+    */
+  private def explicitProbes(plan: LogicalPlan): Set[ExprId] = plan.collect {
+    case Filter(cond, _) => splitConjunctive(cond).collect {
+      case BloomFilterMightContain(s: ScalarSubquery, _)
+          if s.plan.output.map(_.name) == Seq(ExplicitBloom) => s.exprId
+    }
+  }.flatten.toSet
+
+  /** `plan` without the inferred copies of [[prefilter]]'s probes:
+    * where a join's right side probes a bloom its left side probes too,
+    * the right one is the copy (the creation side's own keys).
+    */
+  private def dropProbeCopies(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(left, right, _, _, _) =>
+      val copies = explicitProbes(left).intersect(explicitProbes(right))
+      def copy(e: Expression) = e match {
+        case BloomFilterMightContain(s: ScalarSubquery, _) => copies.contains(s.exprId)
+        case _ => false
+      }
+      if (copies.isEmpty) j
+      else j.copy(right = right.transformUp {
+        case Filter(cond, child) if splitConjunctive(cond).exists(copy) =>
+          splitConjunctive(cond).filterNot(copy).reduceOption(And)
+            .fold(child)(Filter(_, child))
+      })
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = dropProbeCopies(
     plan.transformUp {
       case j @ Join(left, right, joinType, Some(_), hint)
           if joinType == Inner || joinType == LeftSemi =>
@@ -164,5 +200,5 @@ object BloomJoinRule extends Rule[LogicalPlan] {
         }
         if (newLeft.eq(left) && newRight.eq(right)) j
         else j.copy(left = newLeft, right = newRight)
-    }
+    })
 }

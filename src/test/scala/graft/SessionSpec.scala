@@ -10,6 +10,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  test("the status store keeps only the newest finished SQL executions, jobs and stages") {
+    val sc = spark.sparkContext
+    val sql = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.statusStore
+    for (_ <- 1 to 5) {
+      graft.ops.Tables.documents(spark, TestSpark.sf0001).groupBy("lang").count().collect()
+      spark.range(100).repartition(4).collect()
+    }
+    SparkTestHooks.drainListeners(sc)
+    // the store trims on its own worker thread after each write
+    val r = GraftSession.UiRetained
+    def counts = {
+      val (jobs, stages) = SparkTestHooks.statusJobsAndStages(sc)
+      Seq(sql.executionsCount(), jobs.toLong, stages.toLong)
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (counts.exists(_ > r) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(counts.forall(_ <= r), s"status store holds (executions, jobs, stages) $counts, retained $r")
+  }
+
   test("warm re-runs of the release pipeline find their generated classes cached") {
     def compiles(): Long = {
       val c0 = SparkTestHooks.codegenCompiles

@@ -2,6 +2,7 @@ package graft.ops
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -442,6 +443,56 @@ class SinksSpec extends AnyFunSuite {
     val sizes = dirs.toMap.view.mapValues(bytes).toMap
     assert(sizes("zstd") < sizes("none") && sizes("snappy") < sizes("none"),
       s"compression must shrink files: $sizes")
+  }
+
+  /** The codec of every column chunk of every parquet file in `dir`,
+    * read from the footers.
+    */
+  private def chunkCodecs(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSet.flatMap {
+      (f: java.io.File) =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), conf))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+        finally r.close()
+    }
+  }
+
+  test("codec policy: engine default zstd over a snappy version; time travel, compact, vacuum") {
+    val key = "spark.sql.parquet.compression.codec"
+    assert(graft.GraftSession.conf(key) == "zstd" && spark.conf.get(key) == "zstd")
+    val path = Files.createTempDirectory("graft_codec_").toString + "/t"
+    val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
+    val v1rows = docs.filter(col("doc_id") % 2 === 0).repartition(4)
+    val v2rows = docs.repartition(4)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    spark.conf.set(key, "snappy")
+    try assert(Sinks.Snapshots.commit(spark, v1rows, path) == 1)
+    finally spark.conf.set(key, graft.GraftSession.conf(key))
+    assert(Sinks.Snapshots.commit(spark, v2rows, path) == 2)
+    val Array(v1dir, v2dir) = new java.io.File(s"$path/data").listFiles()
+      .map(_.getPath).sorted
+    assert(chunkCodecs(v1dir) == Set("SNAPPY"))
+    assert(chunkCodecs(v2dir) == Set("ZSTD"), "a commit under the engine default writes zstd pages")
+    // both versions read; time travel resolves the snappy one
+    val (want1, want2) = (rows(v1rows), rows(v2rows))
+    assert(rows(Sinks.Snapshots.read(spark, path, Some(1))) == want1)
+    assert(rows(Sinks.Snapshots.read(spark, path)) == want2)
+    assert(Sinks.Snapshots.readLog(spark, path).count() == want1.size + want2.size)
+    // compaction rewrites the snappy version under the engine default
+    for (dir <- Seq(v1dir, v2dir)) {
+      val (before, after) = Sinks.compact(spark, dir, targetBytes = 512L << 20)
+      assert(before == 4 && after == 1, s"$dir: $before -> $after files")
+      assert(chunkCodecs(dir) == Set("ZSTD"))
+    }
+    assert(rows(Sinks.Snapshots.read(spark, path, Some(1))) == want1)
+    assert(rows(Sinks.Snapshots.read(spark, path, Some(2))) == want2)
+    Sinks.Snapshots.vacuum(spark, path, keepLast = 1)
+    assert(Sinks.Snapshots.versions(spark, path) == Seq(2))
+    assert(rows(Sinks.Snapshots.read(spark, path)) == want2)
   }
 
   test("file-size governance: maxRecordsPerFile bounds every output file") {

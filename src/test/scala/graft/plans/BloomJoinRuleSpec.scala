@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -54,6 +55,38 @@ class BloomJoinRuleSpec extends AnyFunSuite {
     val n = "might_contain".r.findAllIn(plan.toLowerCase).size
     assert(n == 1, s"expected exactly 1 bloom probe, got $n:\n$plan")
     df.collect() // and the plan executes cleanly end to end
+  }
+
+  /** Bloom probes in the optimized plan of `df`: (fact side, dim side)
+    * of its first join, and in total.
+    */
+  private def probeSides(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    def probes(p: LogicalPlan): Int = p.collect { case n =>
+      n.expressions.map(_.collect { case m: BloomFilterMightContain => m }.size).sum
+    }.sum
+    val plan = df.queryExecution.optimizedPlan
+    val j = plan.collectFirst { case j: Join => j }.getOrElse(fail(s"no join in\n$plan"))
+    (probes(j.left), probes(j.right), probes(plan))
+  }
+
+  test("explicit bloomPrefilterJoin: one probe, on the fact side (no inferred dim copy)") {
+    val lineitem = graft.ops.Tables.lineitem(spark, sf)
+    val dim = graft.ops.Tables.part(spark, sf)
+      .filter(col("p_size") <= 10).select(col("p_partkey"), col("p_brand"))
+    val bloomed = graft.ops.Scale.bloomPrefilterJoin(lineitem, dim, "l_partkey", "p_partkey",
+      expectedKeys = 1000L)
+    assert(probeSides(bloomed) == ((1, 0, 1)))
+    assert(probeSides(bloomed.groupBy("p_brand").count()) == ((1, 0, 1)))
+    // the rule path, for comparison
+    assert(probeSides(graft.ops.Relational.q_join_bloom(spark, sf)) == ((1, 0, 1)))
+    // string keys through an aliased, aggregated dim of the same table
+    val cust = graft.ops.Tables.customer(spark, sf)
+    val segs = cust.select(col("c_mktsegment").as("seg")).distinct().filter(col("seg") < "F")
+    val bloomedS = graft.ops.Scale.bloomPrefilterJoin(
+      cust.select("c_custkey", "c_mktsegment"), segs, "c_mktsegment", "seg", 100L)
+    assert(probeSides(bloomedS) == ((1, 0, 1)))
+    val plainS = cust.join(segs, col("c_mktsegment") === col("seg"))
+    assert(bloomedS.count() == plainS.count())
   }
 
   test("no injection on outer joins (unmatched fact rows must survive)") {

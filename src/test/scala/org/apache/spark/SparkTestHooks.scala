@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Test-side window onto two `private[spark]` hooks: the codegen
-  * compile counter and the listener-bus drain.
+/** Test-side window onto `private[spark]` hooks: the codegen compile
+  * counter, the listener-bus drain and the app status store.
   */
 object SparkTestHooks {
 
@@ -11,4 +11,8 @@ object SparkTestHooks {
 
   /** Blocks until every event posted so far reached the listeners. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Jobs and stages the app status store holds. */
+  def statusJobsAndStages(sc: SparkContext): (Int, Int) =
+    (sc.statusStore.jobsList(null).size, sc.statusStore.stageList(null).size)
 }
